@@ -114,7 +114,9 @@ def connected_components(
             CheckpointManager,
         )
 
-        ckpt = CheckpointManager(spark, checkpoint_dir, {"algo": "cc"})
+        ckpt = CheckpointManager(
+            spark, checkpoint_dir, {"algo": "cc", "format": 1}
+        )
         if resume and (last := ckpt.last_complete_step()) is not None:
             man = ckpt.manifest(last)
             p = ckpt.load_tables(last, ["pairs"])["pairs"]

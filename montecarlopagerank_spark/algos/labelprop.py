@@ -66,7 +66,9 @@ def label_propagation(
             CheckpointManager,
         )
 
-        ckpt = CheckpointManager(spark, checkpoint_dir, {"algo": "lpa"})
+        ckpt = CheckpointManager(
+            spark, checkpoint_dir, {"algo": "lpa", "format": 1}
+        )
         if resume and (last := ckpt.last_complete_step()) is not None:
             labels = ckpt.load_tables(last, ["labels"])["labels"]
             done = bool(ckpt.manifest(last)["metrics"].get("converged"))

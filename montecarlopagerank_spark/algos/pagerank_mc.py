@@ -22,10 +22,9 @@ vertex (the reference's ``0 to currentCount`` inclusive loop inflates by
 one trial per occupied vertex per step) and exactly ``iterations``
 supersteps.
 
-Scale shape — the scratch fast path compiles the ENTIRE superstep loop
-(in segments of ``fuse_steps``) into ONE Spark job with EXACTLY ONE
-shuffle per superstep; the checkpointed durable path pays one job and
-two shuffles per step, the price of resumable parquet state:
+Scale shape — ONE superstep loop, checkpointed or not: the loop runs in
+segments of ``fuse_steps`` supersteps, each compiled into ONE Spark job
+with EXACTLY ONE shuffle per superstep:
 
 1. each superstep is ONE stage: [complete (block_id, rkey) coalescing
    agg → sort → grouped-map walk kernel → expression route → exchange
@@ -71,10 +70,15 @@ two shuffles per step, the price of resumable parquet state:
    ``CollectMetrics`` on the ζ branches (extinction check without an
    ``isEmpty`` job, at segment granularity).
 
-With ``checkpoint_dir`` the state goes to parquet per step instead
-(durable, resumable) — parquet erases partitioning, so that path pays
-the classic two exchanges per step (groupBy(dst) coalesce + next step's
-routing exchange), the price of durability.
+Each segment ends in ONE write of a tagged ``(tag, block_id, rkey, c)``
+table: the segment's ζ accumulator (tag 1) and the carry-over coupon
+state (tag 0). Without ``checkpoint_dir`` it goes to the scratch
+``StateStore``; with it, ``CheckpointManager.save_step`` commits it as
+step ``seg[-1]`` — so a resumable run commits once per SEGMENT (up to
+``fuse_steps`` supersteps), and ``resume=True`` reads the last committed
+table back and continues at ``seg[-1] + 1``. Segment boundaries never
+change the walks (the RNG is seeded per logical (block, step)), so
+checkpointed, scratch and resumed runs give byte-identical ranks.
 
 ζ is NOT re-aggregated per step (the reference's ``union+reduceByKey``
 over the full visit history, MonteCarloPageRank.scala:122, doubles
@@ -88,13 +92,15 @@ folds hub replicas back together at finalize.
 Skew (north_star "hub vertices split across ≥2 blocks"): the block plan
 (operators/adjacency.py::plan_walk_blocks) splits any vertex whose
 out-degree exceeds ``edges_per_block`` into replicas carrying disjoint
-neighbour subsets. A hub's coupons are routed to its replicas with an
-exact multinomial draw ∝ replica size (seeded per (seed, step, v) — a
-tiny Arrow kernel over hub rows only), each replica walks its slice
-uniformly, and the ordinary groupBy(dst) coalescing re-reduces the
-partials — so totals are conserved exactly and P(dst) = 1/deg exactly.
-Hub coupons are peeled off the expression-routing path with a literal
-``isin`` filter (hub ids are known at plan time and few by definition).
+neighbour subsets. The walk kernel that produces a block's arrivals at
+a hub also splits them across the hub's replicas with an exact
+multinomial draw ∝ replica size (``_split_hubs``, from the block's own
+(seed, block_id, step) generator; hubs are few by definition, so their
+replica table rides in the kernel closure). Each replica walks its
+slice uniformly, so totals are conserved exactly and P(dst) = 1/deg
+exactly — and replica rkeys route through the same boundary expression
+as every other coupon: a hub adds no branch, join or exchange to the
+superstep plan.
 
 Randomness is **parallelism-invariant**: one ``numpy.random.Generator``
 per (seed, block_id, superstep) — a stable *logical* block id, not the
@@ -119,7 +125,6 @@ from functools import reduce
 from typing import Any
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyarrow import fs as pafs
@@ -443,9 +448,35 @@ def warm_csr_workers(spark: SparkSession, csr_path: str) -> None:
     spark.range(0, n_slots, 1, n_slots).mapInArrow(warm, "id long").count()
 
 
-def _walk_kernel(csr_path: str, eps: float, seed: int, step: int):
+def _split_hubs(dst: np.ndarray, cnt: np.ndarray, hubs: tuple | None, rng):
+    """Coalesced arrivals (dst, cnt) → (rkey, cnt). A non-hub vertex keeps
+    its one row at rkey = dst << REPLICA_BITS; a hub's count is split
+    across its replicas with an exact multinomial ∝ replica size (each
+    walk picks replica r w.p. rsize_r / deg, then a uniform neighbour of
+    that replica: P(dst) = 1/deg, and the count is conserved exactly).
+    ``hubs`` = (vids, offsets, rkeys, probs): sorted hub ids, and per hub
+    i its replicas' rkeys/probabilities at ``offsets[i]:offsets[i + 1]``."""
+    rkey = dst.astype(np.int64) << REPLICA_BITS
+    if hubs is None:
+        return rkey, cnt
+    vids, offsets, rkeys, probs = hubs
+    pos = np.minimum(np.searchsorted(vids, dst), len(vids) - 1)
+    is_hub = vids[pos] == dst
+    out_rkey, out_cnt = [rkey[~is_hub]], [cnt[~is_hub]]
+    for i in np.flatnonzero(is_hub):
+        lo, hi = offsets[pos[i]], offsets[pos[i] + 1]
+        parts = rng.multinomial(cnt[i], probs[lo:hi])
+        keep = parts > 0
+        out_rkey.append(rkeys[lo:hi][keep])
+        out_cnt.append(parts[keep])
+    return np.concatenate(out_rkey), np.concatenate(out_cnt)
+
+
+def _walk_kernel(csr_path: str, eps: float, seed: int, step: int,
+                 hubs: tuple | None = None):
     """Grouped-map Arrow kernel: routed coupons of ONE block → coalesced
-    arrivals (dst, cnt). The block's CSR slice comes from the worker-
+    arrivals (rkey, cnt), hub arrivals already split across replicas
+    (``_split_hubs``). The block's CSR slice comes from the worker-
     resident cache (see ``_CSR_CACHE``), NOT through the Arrow exchange.
     Deterministic in (seed, block_id, step). Coupons are keyed by rkey
     (= v << REPLICA_BITS | replica); rkeys not present in the block's CSR
@@ -455,7 +486,7 @@ def _walk_kernel(csr_path: str, eps: float, seed: int, step: int):
 
     def kernel(coupons_t: pa.Table) -> pa.Table:
         empty = pa.table(
-            {"dst": pa.array([], pa.int64()), "cnt": pa.array([], pa.int64())}
+            {"rkey": pa.array([], pa.int64()), "cnt": pa.array([], pa.int64())}
         )
         if coupons_t.num_rows == 0:
             return empty
@@ -504,41 +535,15 @@ def _walk_kernel(csr_path: str, eps: float, seed: int, step: int):
             pick = (rng.random(total) * lens).astype(np.int64)
         dest = indices[starts + pick]
         dst, cnt = np.unique(dest, return_counts=True)  # per-block coalescing
+        rkey, cnt = _split_hubs(dst, cnt, hubs, rng)
         return pa.table(
             {
-                "dst": pa.array(dst.astype(np.int64), pa.int64()),
+                "rkey": pa.array(rkey, pa.int64()),
                 "cnt": pa.array(cnt.astype(np.int64), pa.int64()),
             }
         )
 
     return kernel
-
-
-def _route_kernel(seed: int, step: int):
-    """Grouped-map kernel over ONE hub vertex's replica rows: split the
-    vertex's coupon count c across replicas with an exact multinomial draw
-    ∝ replica size — conserves Σc and keeps P(dst) = 1/deg exactly.
-    Deterministic in (seed, step, v)."""
-
-    def route(pdf: pd.DataFrame) -> pd.DataFrame:
-        v = int(pdf["v"].iloc[0])
-        c = int(pdf["c"].iloc[0])
-        pdf = pdf.sort_values("rkey", kind="mergesort")  # determinism
-        sizes = pdf["rsize"].to_numpy(dtype=np.float64)
-        rng = np.random.default_rng(
-            np.random.SeedSequence([seed, 0x517, step, v])
-        )
-        parts = rng.multinomial(c, sizes / sizes.sum())
-        keep = parts > 0
-        return pd.DataFrame(
-            {
-                "block_id": pdf["block_id"].to_numpy()[keep],
-                "rkey": pdf["rkey"].to_numpy(dtype=np.int64)[keep],
-                "c": parts[keep].astype(np.int64),
-            }
-        )
-
-    return route
 
 
 def pagerank_monte_carlo(
@@ -553,7 +558,7 @@ def pagerank_monte_carlo(
     checkpoint_dir: str | None = None,
     resume: bool = False,
     state_root: str | None = None,
-    fuse_steps: int | None = None,
+    fuse_steps: int = 6,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """Returns (``ranks(v:long, rank:double)``, info). Rank = ζ_v / Σζ.
 
@@ -564,24 +569,22 @@ def pagerank_monte_carlo(
     therefore varies with cluster size — pass an explicit value when
     outputs must be identical across different clusters.
 
-    ``fuse_steps`` (fast path only) is how many supersteps are compiled
-    into ONE Spark job before the superstep chain is materialized; it
-    bounds logical-plan size, not correctness — any value ≥ 1 produces
+    ``fuse_steps`` is how many supersteps are compiled into ONE Spark job
+    (a segment) before the superstep chain is materialized — and, with
+    ``checkpoint_dir``, committed, so it is also the resume granularity;
+    it bounds logical-plan size, not correctness — any value ≥ 1 produces
     identical ranks (the RNG is seeded per logical (block, step), never
-    per job). Default (None) derives it from the block plan: 6 on
-    hub-free graphs, 1 when hub splitting is active. The fused plan is a
-    logical TREE, not a DAG: each step's exchange is consumed by the next
-    step's agg AND the segment's ζ branch (×2/step), and the hub router
-    splits the arrivals into a non-hub and a hub branch (×3/step with
-    hubs) — ReusedExchange dedups execution but the ANALYZER walks the
-    un-deduped tree, so DeduplicateRelations pays O(2^k) (hub-free) or
-    O(3^k) (hubs) per segment. k=6 hub-free is ~seconds of driver CPU at
-    any data size; k=8 with split hubs was measured >8 min of pure
-    analysis on a 230k-edge graph. Raise it only for hub-free graphs
-    whose per-step work dwarfs the per-job fixed cost.
+    per job). The fused plan is a logical TREE, not a DAG: each step's
+    exchange is consumed by the next step's agg AND the segment's ζ
+    branch (×2/step) — ReusedExchange dedups execution but the ANALYZER
+    walks the un-deduped tree, so DeduplicateRelations pays O(2^k) per
+    segment. The default k=6 is ~seconds of driver CPU at any data size
+    (hub splits add no plan branches: they happen inside the walk
+    kernel). Raise it only for graphs whose per-step work dwarfs the
+    per-job fixed cost.
 
-    ``state_root`` relocates the scratch state (CSR side-files + per-step
-    coupon tables). It may be a filesystem URI (``file://``, ``hdfs://``,
+    ``state_root`` relocates the scratch state (CSR side-files + segment
+    state tables). It may be a filesystem URI (``file://``, ``hdfs://``,
     ``s3://``): the workers' resident-CSR reads resolve it through
     ``pyarrow.fs`` (``_resolve_fs``), so superstep state can live on DFS —
     the real-cluster deployment shape. Caller owns cleanup of a given
@@ -613,11 +616,22 @@ def pagerank_monte_carlo(
         publish_root=_resolve_fs(csr_path)[1] if _is_local(csr_path) else None,
     )
     edges_per_block = plan_meta["edges_per_block"]
-    if fuse_steps is None:
-        # analyzer cost is exponential in segment length (see docstring):
-        # base 3 with hub splitting, base 2 without — keep k where the
-        # driver-side analysis stays in the noise
-        fuse_steps = 1 if plan_meta["has_hubs"] else 6
+    ckpt = None
+    last = None
+    if checkpoint_dir:
+        # the committed block_ids depend on edges_per_block, and format 2
+        # is the per-segment (tag, block_id, rkey, c) table: a checkpoint
+        # of any other run configuration or layout is refused on resume,
+        # before the CSR write
+        ckpt = CheckpointManager(
+            spark, checkpoint_dir,
+            {"algo": "pagerank_mc", "format": 2, "K": K, "eps": eps,
+             "seed": seed, "edges_per_block": edges_per_block},
+        )
+        if resume:
+            last = ckpt.last_complete_step()
+        else:
+            ckpt.clear()
     t_plan1 = time.time()
     # NO repartition before the write: the pack kernel's own groupBy
     # exchange already produced block_id-partitioned output (64 fat rows),
@@ -643,17 +657,16 @@ def pagerank_monte_carlo(
     bounds = plan_meta["bounds"]
     block_ids = plan_meta["block_ids"]
     has_hubs = plan_meta["has_hubs"]
+    hubs = None
     if has_hubs:
-        # hub replicas are few by definition (out_deg > edges_per_block);
-        # their ids become a literal filter and their replica table a
-        # broadcast — nothing hub-related ever shuffles
-        hub_reps = blocks_assign.filter("n_rep > 1").select(
-            "v", "block_id", "rkey", "rsize"
-        )
-        hub_reps = hub_reps.persist(StorageLevel.MEMORY_AND_DISK)
-        hub_ids = sorted({r["v"] for r in hub_reps.select("v").distinct().collect()})
-    else:
-        hub_reps, hub_ids = None, []
+        # hub replicas are few by definition (out_deg > edges_per_block):
+        # their table rides in the walk kernel's closure (_split_hubs)
+        rows = blocks_assign.filter("n_rep > 1").select("v", "rkey", "rsize")
+        hub_v, hub_rkeys, rsize = np.array(sorted(rows.collect()), np.int64).T
+        hub_ids, first = np.unique(hub_v, return_index=True)
+        offsets = np.append(first, len(hub_v))
+        probs = rsize / np.repeat(np.add.reduceat(rsize, first), np.diff(offsets))
+        hubs = (hub_ids, offsets, hub_rkeys, probs)
     # vertex set: srcs come free from the planner's cached O(V) degree
     # table; only the dst side pays a distinct over the cached
     # src-partitioned edges — the raw edge source is never re-read
@@ -667,43 +680,14 @@ def pagerank_monte_carlo(
         .distinct()
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    def _routed(arr: DataFrame, route_step: int) -> DataFrame:
-        """(v, c) rows → (block_id, rkey, c). Duplicate v rows are allowed
-        (the fast path's arrivals carry one row per emitting block).
-        Non-hub rows route via the pure boundary expression; hub rows are
-        totalled per vertex first — the multinomial must split each
-        vertex's TOTAL exactly once — then split across replicas
-        (seeded per (seed, route_step, v), so the fast path's
-        route-at-production and the durable path's route-at-consumption
-        draw the same splits for the same logical superstep)."""
-        rkey = F.shiftleft(F.col("v"), REPLICA_BITS)
-        base = arr
-        if has_hubs:
-            base = arr.filter(~F.col("v").isin(hub_ids))
-        r = base.select(
-            route_expr(rkey, bounds, block_ids).alias("block_id"),
-            rkey.alias("rkey"),
-            "c",
-        )
-        if has_hubs:
-            split = (
-                arr.filter(F.col("v").isin(hub_ids))
-                .groupBy("v").agg(F.sum("c").alias("c"))
-                .join(F.broadcast(hub_reps), "v")
-                .select("v", "block_id", "rkey", "rsize", "c")
-                .groupBy("v")
-                .applyInPandas(
-                    _route_kernel(seed, route_step),
-                    schema="block_id int, rkey long, c long",
-                )
-            )
-            r = r.unionByName(split)
-        return r
+    # the routing expression is loop-invariant: built once, not once per
+    # superstep (a B-block chain is ~3B py4j calls)
+    route = route_expr(F.col("rkey"), bounds, block_ids).alias("block_id")
 
-    def _build_state(r: DataFrame, obs: Observation | None) -> DataFrame:
-        """Init state (fast path): routed init coupons → ONE exchange by
-        block_id; the (block_id, rkey) coalescing aggregate runs on that
-        same partitioning (hash(block_id) clusters every (block_id, rkey)
+    def _build_state(r: DataFrame) -> DataFrame:
+        """Init state: routed init coupons → ONE exchange by block_id; the
+        (block_id, rkey) coalescing aggregate runs on that same
+        partitioning (hash(block_id) clusters every (block_id, rkey)
         pair — no second exchange). The caller materializes the result to
         scratch PARQUET, not ``localCheckpoint``: a checkpointed RDD's
         preserved hashpartitioning holds attribute ids that go stale when
@@ -713,203 +697,154 @@ def pagerank_monte_carlo(
         ReusedExchange, O(steps²) kernel recompute. A parquet scan
         canonicalizes cleanly; the one hash(block_id) exchange the kernel
         inserts above it is itself reused across all consumers."""
-        st = (
+        return (
             r.repartition(n_parts, "block_id")
             .groupBy("block_id", "rkey")
             .agg(F.sum("c").alias("c"))
         )
-        if obs is not None:
-            st = st.observe(obs, F.sum("c").alias("total"))
-        return st
 
-    ckpt = None
-    start_step = 0
-    step_coupons: list[DataFrame] = []  # arrivals per superstep (+ init ζ=K)
-    if checkpoint_dir:
-        ckpt = CheckpointManager(
-            spark, checkpoint_dir,
-            {"algo": "pagerank_mc", "K": K, "eps": eps, "seed": seed},
+    def _unpack(seg_out: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """Segment table → (ζ accumulator (rkey, c), carry-over coupon
+        state (block_id, rkey, c))."""
+        return (
+            seg_out.filter("tag = 1").select("rkey", "c"),
+            seg_out.filter("tag = 0").select("block_id", "rkey", "c"),
         )
-        if resume:
-            last = ckpt.last_complete_step()
-            if last is not None:
-                step_coupons = [
-                    ckpt.load_tables(s, ["coupons"])["coupons"]
-                    for s in range(-1, last + 1)
-                ]
-                coupons = step_coupons[-1]
-                start_step = last + 1
-        else:
-            ckpt.clear()
-    fast = ckpt is None  # scratch path: in-memory partition-preserving
-    # superstep chain (see _build_state); the durable path keeps the
-    # parquet-per-step flow so checkpoints stay resumable files
-    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if fast:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    if start_step == 0:
-        init = verts.select("v", F.lit(int(K)).cast("long").alias("c"))
-        if ckpt:
-            coupons = ckpt.save_step(-1, {"coupons": init}, {"init": True})[
-                "coupons"
-            ]
-            step_coupons = [coupons]
-        else:
-            state = store.materialize(_build_state(_routed(init, 0), None),
-                                      "mcstate")
 
-    for df in plan_meta["cached"]:  # planner pins (edges exchange, degree
-        df.unpersist()  # table, block assignment) end with setup — the
-        # loop reads only the CSR side-files, bounds, and hub broadcast
+    start_step = 0 if last is None else last + 1
+    # the loop plan is fully static (see the module docstring), and AQE
+    # would hide the checkpointed partitionings it relies on
+    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     steps_run = start_step
-    step_secs: list[float] = []  # fast: per-SEGMENT wall; durable: per-step
+    step_secs: list[float] = []  # per-SEGMENT wall
     step_totals: list[int] = []  # surviving walks per superstep (observed)
-    t_loop = time.time()
     try:
-        if fast:
-            # WHOLE-LOOP FUSION: ``fuse_steps`` supersteps compile into ONE
-            # Spark job. Per step the plan is [complete (block_id, rkey)
-            # agg → sort → walk kernel → expression route → exchange by
-            # block_id] — a single stage, because the agg and the grouped-
-            # map kernel both run on the hash(block_id) partitioning the
-            # step's one exchange established (clustering by a subset of
-            # the grouping keys needs no second exchange). Each step's
-            # exchange is consumed TWICE in the same plan — by the next
-            # step's agg and by the segment's ζ union — which costs one
-            # shuffle, not two: ReusedExchange dedupes the identical
-            # subtree (asserted by tests/test_pagerank.py fused-plan
-            # test). Versus the round-2 per-step-job design this removes,
-            # per superstep: one stage barrier, one job submit/teardown
-            # gap, and one localCheckpoint store+rescan — fixed costs that
-            # dominated the 4N-core legs of the scaling run (measured
-            # utilization 0.78 at 8 cores vs 0.98 at 2 with per-step jobs).
-            # Per-step surviving-walk totals ride the segment job as
-            # CollectMetrics on the ζ branches; extinction therefore
-            # short-circuits at segment granularity (a post-extinction
-            # step inside a segment walks an empty state — a no-op).
-            z_acc = state.select("rkey", "c")  # init arrivals: ζ = K
-            agged = state
-            step = start_step
-            while step < iterations:
-                t_seg = time.time()
-                seg = list(range(step, min(step + fuse_steps, iterations)))
-                obs_by_step: dict[int, Observation] = {}
-                branches = [z_acc]
-                for s in seg:
-                    moved = agged.groupBy("block_id").applyInArrow(
-                        _walk_kernel(csr_path, eps, seed, s),
-                        schema="dst long, cnt long",
-                    )
-                    exch = _routed(
-                        moved.select(
-                            F.col("dst").alias("v"), F.col("cnt").alias("c")
-                        ),
-                        s + 1,  # consumed by the NEXT superstep
-                    ).repartition(n_parts, "block_id")
-                    obs = Observation(f"mc_step_{s}")
-                    obs_by_step[s] = obs
-                    branches.append(
-                        exch.observe(obs, F.sum("c").alias("total"))
-                        .select("rkey", "c")
-                    )
-                    agged = exch.groupBy("block_id", "rkey").agg(
-                        F.sum("c").alias("c")
-                    )
-                # ζ partial: rows with equal rkey share a block, hence a
-                # partition — the partial agg fully coalesces each branch
-                # before the hash(rkey) exchange
-                z_seg = (
-                    reduce(DataFrame.unionByName, branches)
-                    .groupBy("rkey").agg(F.sum("c").alias("c"))
+        if last is None:
+            init = verts.select(
+                F.shiftleft("v", REPLICA_BITS).alias("rkey"),
+                F.lit(int(K)).cast("long").alias("c"),
+            )
+            if hubs is not None:  # a hub's K coupons start on its replicas
+                rk, c = _split_hubs(
+                    hub_ids, np.full(len(hub_ids), K, np.int64), hubs,
+                    np.random.default_rng(np.random.SeedSequence([seed, 0x517])),
                 )
-                # ONE action materializes the segment: ζ partial plus (if
-                # the loop continues) the carry-over state, tagged into one
-                # table so a single job computes every kernel exactly once
-                seg_out = z_seg.select(
-                    F.lit(1).alias("tag"), F.lit(-1).alias("block_id"),
-                    "rkey", "c",
-                )
-                if seg[-1] != iterations - 1:
-                    seg_out = seg_out.unionByName(
-                        agged.select(
-                            F.lit(0).alias("tag"), "block_id", "rkey", "c"
-                        )
-                    )
-                seg_out = store.materialize(seg_out, "mcstate")
-                z_acc = seg_out.filter("tag = 1").select("rkey", "c")
-                # parquet erases partitioning, so the next segment's first
-                # kernel re-exchanges the carry-over state — one small
-                # (O(occupied vertices)) exchange per SEGMENT, the price
-                # of bounding plan size (see _build_state for why parquet,
-                # not localCheckpoint, backs the segment boundary)
-                agged = seg_out.filter("tag = 0").select(
-                    "block_id", "rkey", "c"
-                )
-                step_secs.append(round(time.time() - t_seg, 3))
-                extinct = False
-                for s in seg:
-                    tot = int(obs_by_step[s].get["total"] or 0)
-                    step_totals.append(tot)
-                    steps_run = s + 1
-                    if tot == 0:  # extinction — nothing left to walk
-                        extinct = True
-                        break
-                if extinct:
-                    break
-                step = seg[-1] + 1
+                init = init.filter(
+                    ~F.shiftright("rkey", REPLICA_BITS).isin(hub_ids.tolist())
+                ).unionByName(spark.createDataFrame(
+                    list(zip(rk.tolist(), c.tolist())), "rkey long, c long"
+                ))
+            state = store.materialize(
+                _build_state(init.select(route, "rkey", "c")), "mcstate"
+            )
+            z_acc, agged = state.select("rkey", "c"), state  # ζ = K
         else:
-            for step in range(start_step, iterations):
-                t_step = time.time()
-                obs = Observation(f"mc_step_{step}")
-                # narrow expression routing: coupon → (block_id, rkey) with
-                # zero joins; hub coupons peel off to the multinomial splitter
-                routed = _routed(coupons, step)
-                moved = routed.groupBy("block_id").applyInArrow(
-                    _walk_kernel(csr_path, eps, seed, step),
-                    schema="dst long, cnt long",
+            z_acc, agged = _unpack(ckpt.load_tables(last, ["state"])["state"])
+        for df in plan_meta["cached"]:  # planner pins (edges exchange,
+            df.unpersist()  # degree table, block assignment) end with
+            # setup — the loop reads only the CSR side-files and bounds
+        t_loop = time.time()
+        # WHOLE-LOOP FUSION: ``fuse_steps`` supersteps compile into ONE
+        # Spark job. Per step the plan is [complete (block_id, rkey) agg →
+        # sort → walk kernel (hub splits included) → expression route →
+        # exchange by block_id] — a single stage, because the agg and the
+        # grouped-map kernel both run on the hash(block_id) partitioning
+        # the step's one exchange established (clustering by a subset of
+        # the grouping keys needs no second exchange). Each step's
+        # exchange is consumed TWICE in the same plan — by the next step's
+        # agg and by the segment's ζ union — which costs one shuffle, not
+        # two: ReusedExchange dedupes the identical subtree (asserted by
+        # tests/test_pagerank.py fused-plan test). Versus the round-2
+        # per-step-job design this removes, per superstep: one stage
+        # barrier, one job submit/teardown gap, and one localCheckpoint
+        # store+rescan — fixed costs that dominated the 4N-core legs of
+        # the scaling run (measured utilization 0.78 at 8 cores vs 0.98 at
+        # 2 with per-step jobs). Per-step surviving-walk totals ride the
+        # segment job as CollectMetrics on the ζ branches; extinction
+        # therefore short-circuits at segment granularity (a
+        # post-extinction step inside a segment walks an empty state — a
+        # no-op).
+        step = start_step
+        while step < iterations:
+            t_seg = time.time()
+            seg = list(range(step, min(step + fuse_steps, iterations)))
+            obs_by_step: dict[int, Observation] = {}
+            branches = [z_acc]
+            for s in seg:
+                moved = agged.groupBy("block_id").applyInArrow(
+                    _walk_kernel(csr_path, eps, seed, s, hubs),
+                    schema="rkey long, cnt long",
                 )
-                # global coalescing: partial+final hash agg (reference
-                # reduceByKey :119) — also the re-reduce of hub partials
-                new_coupons = (
-                    moved.groupBy(F.col("dst").alias("v"))
-                    .agg(F.sum("cnt").alias("c"))
+                exch = moved.select(
+                    route, "rkey", F.col("cnt").alias("c")
+                ).repartition(n_parts, "block_id")
+                obs = Observation(f"mc_step_{s}")
+                obs_by_step[s] = obs
+                branches.append(
+                    exch.observe(obs, F.sum("c").alias("total"))
+                    .select("rkey", "c")
                 )
-                # surviving-walk total rides the write job as an observed
-                # metric — extinction check costs no extra job
-                observed = new_coupons.observe(obs, F.sum("c").alias("total"))
-                coupons = ckpt.save_step(
-                    step, {"coupons": observed}, {"superstep": step}
-                )["coupons"]
-                step_coupons.append(coupons)
-                steps_run = step + 1
-                step_secs.append(round(time.time() - t_step, 3))
-                tot = int(obs.get["total"] or 0)
+                agged = exch.groupBy("block_id", "rkey").agg(
+                    F.sum("c").alias("c")
+                )
+            # ζ partial: rows with equal rkey share a block, hence a
+            # partition — the partial agg fully coalesces each branch
+            # before the hash(rkey) exchange
+            z_seg = (
+                reduce(DataFrame.unionByName, branches)
+                .groupBy("rkey").agg(F.sum("c").alias("c"))
+            )
+            # ONE action materializes the segment: ζ partial plus the
+            # carry-over state, tagged into one table so a single job
+            # computes every kernel exactly once. A scratch run's last
+            # segment drops the carry-over; a checkpointed run keeps it so
+            # the committed run can later be resumed to more supersteps
+            seg_out = z_seg.select(
+                F.lit(1).alias("tag"), F.lit(-1).alias("block_id"),
+                "rkey", "c",
+            )
+            if ckpt or seg[-1] != iterations - 1:
+                seg_out = seg_out.unionByName(
+                    agged.select(F.lit(0).alias("tag"), "block_id", "rkey", "c")
+                )
+            if ckpt:
+                seg_out = ckpt.save_step(
+                    seg[-1], {"state": seg_out}, {"segment": seg}
+                )["state"]
+            else:
+                seg_out = store.materialize(seg_out, "mcstate")
+            # parquet erases partitioning, so the next segment's first
+            # kernel re-exchanges the carry-over state — one small
+            # (O(occupied vertices)) exchange per SEGMENT, the price of
+            # bounding plan size (see _build_state for why parquet, not
+            # localCheckpoint, backs the segment boundary)
+            z_acc, agged = _unpack(seg_out)
+            step_secs.append(round(time.time() - t_seg, 3))
+            extinct = False
+            for s in seg:
+                tot = int(obs_by_step[s].get["total"] or 0)
                 step_totals.append(tot)
-                if tot == 0:  # extinction — nothing to walk
+                steps_run = s + 1
+                if tot == 0:  # extinction — nothing left to walk
+                    extinct = True
                     break
-    finally:
-        if fast:  # never leak AQE-off into the caller's session
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
+            if extinct:
+                break
+            step = seg[-1] + 1
+    finally:  # never leak AQE-off into the caller's session
+        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 
     t_loop_end = time.time()
-    # ζ = K + Σ arrivals. Fast path: the segment jobs already folded every
-    # step's arrivals into the checkpointed (rkey, c) accumulator — the
-    # finalize below only folds hub replicas (v = rkey >> REPLICA_BITS;
-    # the multinomial conserves each vertex's total, so per-v sums equal
-    # the durable path's exactly) and normalizes. Durable path: ONE
-    # union+groupBy over the per-step parquet tables, never a per-step
-    # re-aggregation (the reference union+reduceByKey's doubled shuffle,
-    # MonteCarloPageRank.scala:122).
-    if fast:
-        all_arrivals = z_acc.select(
-            F.shiftright("rkey", REPLICA_BITS).alias("v"),
-            F.col("c").alias("z"),
-        )
-    else:
-        all_arrivals = reduce(
-            DataFrame.unionByName,
-            [df.select("v", F.col("c").alias("z")) for df in step_coupons],
-        )
+    # ζ = K + Σ arrivals: the segment jobs already folded every step's
+    # arrivals into the (rkey, c) accumulator — finalize only folds hub
+    # replicas (v = rkey >> REPLICA_BITS) and normalizes. Never a
+    # per-step re-aggregation (the reference union+reduceByKey's doubled
+    # shuffle, MonteCarloPageRank.scala:122).
+    all_arrivals = z_acc.select(
+        F.shiftright("rkey", REPLICA_BITS).alias("v"),
+        F.col("c").alias("z"),
+    )
     obs_total = Observation("mc_total")
     visits = store.materialize(
         all_arrivals.groupBy("v")
@@ -931,8 +866,6 @@ def pagerank_monte_carlo(
     ranks.count()  # pin; the scratch root (ranks' recompute source) is
     # reclaimed at interpreter exit (state.py atexit registry)
     verts.unpersist()
-    if hub_reps is not None:
-        hub_reps.unpersist()
     info = {
         "iterations": steps_run, "K": K, "seed": seed,
         "total_visits": int(total), "eps": eps,
@@ -942,7 +875,7 @@ def pagerank_monte_carlo(
         "loop_secs": round(t_loop_end - t_loop, 3),
         "step_secs": step_secs,
         "step_walk_totals": step_totals,
-        "fuse_steps": fuse_steps if fast else 1,
+        "fuse_steps": fuse_steps,
         # setup breakdown: plan = out_deg agg + bounds collect jobs;
         # csr_write = the edge shuffle + Arrow pack + parquet side-files
         # (the O(E) part); rest = hub collect + init-coupon write

@@ -172,16 +172,17 @@ def pagerank_power(
     contrib_edges = contrib_edges.repartition(n_parts, "src").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # vflag is the SETUP-TIME flag source only (state init, resume
-    # backfill, personalization weights): since r4 the dang flag rides
-    # the state table itself, so the superstep loop never joins vflag —
-    # see the module docstring for why exchange reuse still holds with
-    # dang in the state. The explicit repartition at the cache boundary
-    # makes hash(v) partitioning visible through the cache (AQE hides it
-    # otherwise); the superstep's single write job yields the next
-    # dangling mass as an observed metric (no per-step lookup job — the
-    # reference pays a full lookup(-1) action per superstep,
-    # PowerIterationPageRank.scala:111)
+    # vflag is the SETUP-TIME flag source (state init, personalization
+    # weights): since r4 the dang flag rides the state table itself, so a
+    # standard run's superstep loop never joins vflag — see the module
+    # docstring for why exchange reuse still holds with dang in the
+    # state. Personalized runs still join its is_src column (co-
+    # partitioned, no exchange) on every superstep. The explicit
+    # repartition at the cache boundary makes hash(v) partitioning
+    # visible through the cache (AQE hides it otherwise); the superstep's
+    # single write job yields the next dangling mass as an observed
+    # metric (no per-step lookup job — the reference pays a full
+    # lookup(-1) action per superstep, PowerIterationPageRank.scala:111)
     vaux = deg.select("v", (F.col("out_deg") == 0).alias("dang"))
     if sources is not None:
         # personalization flag joins ONCE at setup into the same cached
@@ -224,22 +225,19 @@ def pagerank_power(
     deltas: list[float] = []
     m = None  # dangling mass of the *current* rank vector
     if checkpoint_dir:
+        # format 2: the state table carries (v, rank, dang); the round-3
+        # (v, rank)-only checkpoints lack the key and are refused
         ckpt = CheckpointManager(
-            spark, checkpoint_dir, {"algo": "pagerank_power", "eps": eps, "tol": tol}
+            spark, checkpoint_dir,
+            {"algo": "pagerank_power", "format": 2, "eps": eps, "tol": tol,
+             "weight_col": weight_col, "personalized": sources is not None},
         )
         if resume:
             last = ckpt.last_complete_step()
             if last is not None:
-                loaded = ckpt.load_tables(last, ["state"])["state"]
-                if "dang" in loaded.columns:
-                    state = loaded.select("v", "rank", "dang")
-                else:
-                    # round-3-era checkpoints carry (v, rank) only:
-                    # re-attach the loop-invariant flag from the cached
-                    # co-partitioned side table — ONE setup-time join
-                    state = loaded.select("v", "rank").join(
-                        vflag.select("v", "dang").hint("shuffle_hash"), "v"
-                    )
+                state = ckpt.load_tables(last, ["state"])["state"].select(
+                    "v", "rank", "dang"
+                )
                 man = ckpt.manifest(last) or {}
                 deltas = list(man.get("metrics", {}).get("deltas", []))
                 m = man.get("metrics", {}).get("next_dangling_mass")
@@ -291,7 +289,8 @@ def pagerank_power(
                 )
             )
             m = crow["nsd"] / ns  # π0 = p → dangling mass of the source set
-    if m is None:  # resumed from a pre-upgrade manifest: one recovery job
+    if m is None:  # run killed between a step's commit and its metrics
+        # update: one recovery job
         m = (
             state.filter("dang")
             .agg(F.sum("rank").alias("m")).collect()[0]["m"] or 0.0

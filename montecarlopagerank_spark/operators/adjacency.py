@@ -136,9 +136,11 @@ def plan_walk_blocks(
     Returns ``(blocks_assign, csr_blocks, meta)``:
 
     * ``blocks_assign(v, replica, rkey, rsize, n_rep, block_id)`` — one row
-      per replica. Walk drivers route a vertex's coupons to its replicas
-      with an exact multinomial split ∝ rsize (see pagerank_mc), so the
-      per-destination distribution stays exactly uniform over out-edges:
+      per non-empty replica; ``n_rep`` is the planned replica count R
+      (1 = unsplit), so a split vertex may have fewer than R rows. Walk
+      drivers route a vertex's coupons to its replicas with an exact
+      multinomial split ∝ rsize (see pagerank_mc), so the per-destination
+      distribution stays exactly uniform over out-edges:
       P(dst) = (rsize/deg) · (1/rsize) = 1/deg.
     * ``csr_blocks(block_id, vids=rkeys, indptr, indices)`` — CSR rows keyed
       by rkey. Totals are exact because the multinomial split conserves
@@ -229,6 +231,7 @@ def plan_walk_blocks(
         ).select(
             "src",
             "dst",
+            "n_rep",
             F.when(
                 F.col("n_rep") > 1,
                 F.pmod(F.xxhash64("dst", F.lit(7)), F.col("n_rep")).cast("int"),
@@ -237,14 +240,13 @@ def plan_walk_blocks(
             .alias("replica"),
         )
         # actual replica sizes (hash assignment → recount; empty replicas
-        # never materialize and get no coupons routed)
-        rsizes = edge_rep.groupBy(F.col("src").alias("v"), "replica").agg(
-            F.count("*").alias("rsize")
-        )
-        w_rep = Window.partitionBy("v")
-        replicas = rsizes.withColumn(
-            "n_rep", F.count("*").over(w_rep).cast("int")
-        ).withColumn(
+        # never materialize and get no coupons routed). n_rep stays the
+        # PLANNED count: a split vertex whose out-edges all hash into one
+        # replica r != 0 must still be routed as a hub — a recount to 1
+        # would send its coupons to replica 0, which has no CSR row
+        replicas = edge_rep.groupBy(
+            F.col("src").alias("v"), "replica", "n_rep"
+        ).agg(F.count("*").alias("rsize")).withColumn(
             "rkey",
             F.shiftleft(F.col("v"), REPLICA_BITS) + F.col("replica"),
         )

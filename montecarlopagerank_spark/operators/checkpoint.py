@@ -3,11 +3,16 @@
 The reference grows one unbounded RDD lineage across all iterations (no
 checkpoint/localCheckpoint anywhere; SURVEY.md §4.1 anti-patterns), which
 both blows up the DAG at depth and makes every run all-or-nothing. Here
-every iterative algorithm writes its state table(s) per superstep to
+every iterative algorithm writes its state table(s) per superstep (per
+fused segment for MC PageRank) to
 ``<root>/step=<i>/<name>`` as parquet plus a JSON manifest recording the
-step, convergence metrics, input fingerprints, and completion — Iceberg
-snapshot semantics reproduced on plain files. Resuming = find the max
-complete step, read its tables, continue. Reading the checkpoint back also
+step, convergence metrics, the run configuration, and completion —
+Iceberg snapshot semantics reproduced on plain files. Resuming = find the
+max complete step, check that it was written under the same run
+configuration (algorithm, state-table ``format`` and every parameter the
+committed state depends on), read its tables, continue. Input
+fingerprints are NOT recorded (one more Spark job per call): resuming on
+a different graph is the caller's error. Reading the checkpoint back also
 truncates lineage (each superstep starts from a fresh scan).
 
 The manifest is written *after* the parquet commit, so a killed run leaves
@@ -83,7 +88,9 @@ class CheckpointManager:
             return json.load(f)
 
     def last_complete_step(self) -> int | None:
-        """Max step with a committed manifest, or None."""
+        """Max step with a committed manifest, or None. Raises ValueError
+        if that step was committed under a different run configuration —
+        resuming would misread (or silently continue) a foreign run."""
         if not os.path.isdir(self.root):
             return None
         steps = []
@@ -92,7 +99,16 @@ class CheckpointManager:
                 s = int(d.split("=", 1)[1])
                 if os.path.exists(self._manifest_path(s)):
                     steps.append(s)
-        return max(steps) if steps else None
+        if not steps:
+            return None
+        last = max(steps)
+        found = self.manifest(last).get("run_config")
+        if found != self.run_config:
+            raise ValueError(
+                f"checkpoint {self.root} step {last} was written with run "
+                f"config {found}, not {self.run_config}; refusing to resume"
+            )
+        return last
 
     def clear(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)

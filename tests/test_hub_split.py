@@ -3,22 +3,21 @@ blocks, partial-aggregated then re-reduced").
 
 A vertex with out_deg > edges_per_block is split into replicas carrying
 disjoint neighbour subsets (operators/adjacency.py::plan_walk_blocks);
-coupons are routed to replicas by an exact multinomial ∝ replica size
-(algos/pagerank_mc.py::_route_kernel), so totals are conserved exactly
-and the per-destination law stays uniform: these tests pin conservation,
-block spread, statistical agreement with PI, and parallelism invariance
-of the split path.
+the walk kernel splits its arrivals at a hub across the replicas by an
+exact multinomial ∝ replica size (algos/pagerank_mc.py::_split_hubs),
+so totals are conserved exactly and the per-destination law stays
+uniform: these tests pin conservation, block spread, statistical
+agreement with PI, and parallelism invariance of the split path.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from montecarlopagerank_spark.algos.pagerank_mc import (
-    _route_kernel,
+    _split_hubs,
     pagerank_monte_carlo,
 )
 from montecarlopagerank_spark.algos.pagerank_power import pagerank_power
@@ -62,6 +61,33 @@ def test_plan_walk_blocks_splits_hub(spark, hub_graph):
     assert sorted(hub_neighbours) == list(range(1, 401))
 
 
+def test_mc_single_nonzero_replica_hub_keeps_walks(spark):
+    """A split vertex whose out-edges all hash into ONE replica r != 0 is
+    still a hub: its coupons must reach replica r, which holds the edges.
+    10 parallel edges 0→d (out_deg 10 > edges_per_block 4 → 3 planned
+    replicas): with K=1000 and one superstep, dangling d collects its own
+    1000 plus ~850 arrivals. Regression: recounting n_rep as non-empty
+    replicas (1) dropped vertex 0 from the hub list, its coupons went to
+    rkey 0<<REPLICA_BITS|0 (no CSR row), and d got exactly 1000."""
+    reps = spark.range(1, 64).select(
+        "id", F.pmod(F.xxhash64("id", F.lit(7)), F.lit(3)).alias("r")
+    ).filter("r != 0").orderBy("id").first()
+    d = int(reps["id"])
+    e = spark.createDataFrame([(0, d)] * 10, "src long, dst long")
+    ranks, info = pagerank_monte_carlo(
+        spark, e, walks_per_vertex=1000, iterations=1, seed=1,
+        edges_per_block=4)
+    assert info["has_hub_splits"]
+    visits_d = round(ranks_dict(ranks)[d] * info["total_visits"])
+    assert 1780 <= visits_d <= 1920  # 1000 + Binomial(1000, 0.85) ± 6σ
+    assign, _, meta = plan_walk_blocks(e, edges_per_block=4)
+    row = assign.filter("v = 0").collect()
+    assert len(row) == 1 and row[0]["replica"] == reps["r"]
+    assert row[0]["n_rep"] == 3  # the planned count, not the recount
+    for df in meta["cached"]:
+        df.unpersist()
+
+
 def test_plan_walk_blocks_no_split_below_threshold(spark, hub_graph):
     assign, _, meta = plan_walk_blocks(hub_graph, edges_per_block=10_000)
     assert not meta["has_hubs"]
@@ -69,25 +95,34 @@ def test_plan_walk_blocks_no_split_below_threshold(spark, hub_graph):
     assert assign.filter("v = 0").count() == 1
 
 
-def test_route_kernel_exact_conservation():
-    pdf = pd.DataFrame(
-        {
-            "v": [7, 7, 7],
-            "block_id": [2, 5, 9],
-            "rkey": [(7 << REPLICA_BITS) + r for r in range(3)],
-            "rsize": [100, 50, 25],
-            "c": [1000, 1000, 1000],  # same vertex count on every row
-        }
+def test_split_hubs_exact_conservation():
+    """Hub 7 (replica sizes 100/50/25) and hub 9 (one replica, r=2) split
+    their arrival counts exactly; non-hub arrivals keep one row at
+    replica 0."""
+    hubs = (
+        np.array([7, 9]),
+        np.array([0, 3, 4]),
+        np.array([(7 << REPLICA_BITS) + r for r in range(3)]
+                 + [(9 << REPLICA_BITS) + 2]),
+        np.array([100 / 175, 50 / 175, 25 / 175, 1.0]),
     )
-    out1 = _route_kernel(seed=1234, step=3)(pdf.copy())
-    out2 = _route_kernel(seed=1234, step=3)(pdf.copy())
-    assert int(out1["c"].sum()) == 1000  # multinomial conserves exactly
-    pd.testing.assert_frame_equal(out1, out2)  # deterministic
-    out3 = _route_kernel(seed=1234, step=4)(pdf.copy())
-    assert not out1.equals(out3)  # new draw per superstep
+    dst, cnt = np.array([3, 7, 9]), np.array([5, 1000, 40])
+
+    def split(seed):
+        rk, c = _split_hubs(dst, cnt, hubs, np.random.default_rng(seed))
+        return dict(zip(rk.tolist(), c.tolist()))
+
+    out = split(1234)
+    assert out == split(1234)  # deterministic in the generator
+    assert out != split(1235)  # a new draw per generator
+    assert out[3 << REPLICA_BITS] == 5
+    assert out[(9 << REPLICA_BITS) + 2] == 40
+    hub7 = [out.get((7 << REPLICA_BITS) + r, 0) for r in range(3)]
+    assert sum(hub7) == 1000 and len(out) == 2 + sum(x > 0 for x in hub7)
     # expectation proportional to replica sizes (loose 5-sigma check)
-    frac = out1.set_index("block_id")["c"].get(2, 0) / 1000
-    assert abs(frac - 100 / 175) < 5 * np.sqrt(0.57 * 0.43 / 1000) + 0.02
+    assert abs(hub7[0] / 1000 - 100 / 175) < 5 * np.sqrt(0.57 * 0.43 / 1000)
+    assert _split_hubs(dst, cnt, None, None)[0].tolist() == [
+        v << REPLICA_BITS for v in (3, 7, 9)]
 
 
 def test_mc_hub_split_agrees_with_pi(spark, hub_graph):
@@ -153,12 +188,13 @@ def test_auto_hub_threshold_decoupled_from_block_size(spark):
 
 
 def test_auto_fuse_steps_follows_hub_plan(spark, hub_graph, gnutella_mini):
-    """fuse_steps=None derives the segment length from the block plan:
-    1 with split hubs (3^k analyzer tree), 6 hub-free (2^k)."""
+    """The default segment length is 6 with or without split hubs: the
+    walk kernel splits hub arrivals itself, so hubs add no router
+    branches to the fused plan (no 3^k analyzer tree)."""
     _, i_hub = pagerank_monte_carlo(
         spark, hub_graph, walks_per_vertex=4, iterations=3, seed=7,
         edges_per_block=64)
-    assert i_hub["has_hub_splits"] and i_hub["fuse_steps"] == 1
+    assert i_hub["has_hub_splits"] and i_hub["fuse_steps"] == 6
     _, i_flat = pagerank_monte_carlo(
         spark, gnutella_mini, walks_per_vertex=4, iterations=3, seed=7)
     assert not i_flat["has_hub_splits"] and i_flat["fuse_steps"] == 6

@@ -398,40 +398,46 @@ def test_mc_fused_kernel_runs_once_per_step(spark, gnutella_mini,
                                             monkeypatch, tmp_path):
     """The fused segment plan consumes each step's routed exchange twice
     (next step's agg + the ζ union); ReusedExchange must dedupe it so the
-    walk kernel of step s executes exactly n_blocks(s) times, not
-    O(steps - s) times (exponential recompute if a leaf fails to
-    canonicalize — the localCheckpoint stale-partitioning trap documented
-    in _build_state)."""
+    walk kernel of step s executes once per block, not O(steps - s) times
+    (exponential recompute if a leaf fails to canonicalize — the
+    localCheckpoint stale-partitioning trap documented in _build_state).
+    Hub-free (13 blocks) and split-hub (edges_per_block=8) plans, each
+    with a mid-loop segment boundary; a hub router that forked the
+    kernel's output into branches without a shared exchange would run
+    every kernel once per branch."""
     import json
     import montecarlopagerank_spark.algos.pagerank_mc as mc
-    log = tmp_path / "kernel_calls.jsonl"
     orig = mc._walk_kernel
 
-    def counting(csr_path, eps, seed, step):
-        k = orig(csr_path, eps, seed, step)
+    def counting(csr_path, eps, seed, step, *rest):
+        k = orig(csr_path, eps, seed, step, *rest)
 
         def wrapped(t):
             with open(log, "a") as f:
-                f.write(json.dumps({"step": step}) + "\n")
+                f.write(json.dumps(
+                    [step, t.column("block_id")[0].as_py()]) + "\n")
             return k(t)
 
         return wrapped
 
     monkeypatch.setattr(mc, "_walk_kernel", counting)
-    _, info = mc.pagerank_monte_carlo(
-        spark, gnutella_mini, walks_per_vertex=4, iterations=4, seed=3,
-        fuse_steps=8)
-    per_step = {}
-    with open(log) as f:
-        for line in f:
-            s = json.loads(line)["step"]
+    for epb, fuse in ((64, 3), (8, 2)):
+        log = tmp_path / f"kernel_calls_{epb}.jsonl"
+        _, info = mc.pagerank_monte_carlo(
+            spark, gnutella_mini, walks_per_vertex=4, iterations=4, seed=3,
+            edges_per_block=epb, fuse_steps=fuse)
+        assert info["has_hub_splits"] == (epb == 8)
+        calls = [tuple(json.loads(line)) for line in log.open()]
+        per_step = {}
+        for s, _ in calls:
             per_step[s] = per_step.get(s, 0) + 1
-    n_blocks = info["n_blocks"]
-    assert set(per_step) == {0, 1, 2, 3}
-    for s, n in per_step.items():
-        assert n <= n_blocks, (
-            f"step {s} kernel ran {n}× for {n_blocks} blocks — "
-            "exchange reuse is broken (recompute per consumer)")
+        assert set(per_step) == {0, 1, 2, 3}
+        assert len(set(calls)) == len(calls), (
+            f"edges_per_block={epb}: a block's kernel ran more than once "
+            "in one step — exchange reuse is broken (recompute per "
+            "consumer)")
+        for s, n in per_step.items():
+            assert n <= info["n_blocks"]
 
 
 def test_pi_warm_start_incremental(spark, gnutella_mini, gnutella_mini_pairs):

@@ -72,9 +72,6 @@ def main(path: str) -> None:
                     srm.get("Local Bytes Read", 0) + srm.get("Remote Bytes Read", 0)
                 ) / 1e6
                 a["sh_write_mb"] += swm.get("Shuffle Bytes Written", 0) / 1e6
-                pym = {x["Name"]: x for x in ev.get("Task Executor Metrics", [])} \
-                    if isinstance(ev.get("Task Executor Metrics"), list) else {}
-                del pym
 
     rows = sorted(agg.items(), key=lambda kv: -kv[1]["task_s"])
     hdr = (
