@@ -111,9 +111,13 @@ run double as a determinism check. The default ``edges_per_block``
 derives from the cluster's core count, so pass an explicit value when
 outputs must match across different cluster sizes.
 
-The walk step itself is fully vectorized numpy over CSR slices: binomial
-survivor draws, then one uniform draw per surviving walk mapped through
-(indptr, indices) with np.repeat — no per-walk Python.
+The walk step pays per EDGE, not per walk (``_walk_kernel``): a row's
+survivors are one binomial draw, and its arrivals are drawn over its
+edge slots exactly — one multinomial when the survivors cover the row
+(s ≥ k), else s uniform integer picks. Arrivals coalesce with one
+bincount over block-local destination ids, so work and temporaries are
+O(Σ min(s, k)) ≤ O(block edges) at any walk count: the per-edge form of
+sampling the coupons ⋈ adjacency join (Zhao et al., SIGMOD 2018).
 """
 
 from __future__ import annotations
@@ -201,21 +205,43 @@ def route_expr(
 # and N× the resident bytes). For non-local roots (hdfs://, s3://) the
 # in-memory decode path remains (mmap needs a local file), LRU-bounded.
 _CSR_CACHE: OrderedDict[tuple[str, int], tuple] = OrderedDict()
-_CSR_CACHE_BYTES = [0]  # counts only in-memory (non-mmap) entries
+_CSR_CACHE_BYTES = [0]  # in-memory (non-mmap) entries + _LOCAL_IDS arrays
 _CSR_CACHE_CAP = int(os.environ.get("SPARK_GRAFT_CSR_CACHE_BYTES", 4 << 30))
 _CSR_ARRAYS = ("vids", "indptr", "indices")
 
+# Block-local destination ids for the walk kernel's bincount coalescing:
+# (csr_path, block_id) → (indices, dsts, local), where ``dsts`` are the
+# block's sorted distinct neighbour ids and ``indices[j] ==
+# dsts[local[j]]``. Computed once per block per worker. An entry keeps
+# the ``indices`` array it was computed from and is recomputed when the
+# cached block holds a different one, so a replaced ``_CSR_CACHE`` entry
+# never gets another block's ids. The arrays are resident even for mmap
+# blocks, so they count in ``_CSR_CACHE_BYTES`` and leave with their
+# block.
+_LOCAL_IDS: dict[tuple[str, int], tuple] = {}
+
 
 def _strip_file_scheme(path: str) -> str | None:
-    """``file:`` URI → plain local path, else None. Handles BOTH slash
-    forms: ``file:///p`` / ``file://p`` AND the Hadoop/Spark-normalized
-    single-slash ``file:/p`` (``Path.toString`` emits that form), which
-    has no ``://`` and previously fell through both ``_resolve_fs`` and
-    the publish-root stripping — so ``_publish_block`` os.makedirs'd a
-    literal cwd-relative ``file:`` directory (the r4 junk-dir bug)."""
+    """``file:`` URI → plain local path, else None. Accepts the absolute
+    forms ``file:///p``, ``file://localhost/p`` and the Hadoop/Spark-
+    normalized single-slash ``file:/p`` (``Path.toString`` emits that
+    form), which has no ``://`` and once fell through both
+    ``_resolve_fs`` and the publish-root stripping — so ``_publish_block``
+    os.makedirs'd a literal cwd-relative ``file:`` directory (the r4
+    junk-dir bug). Raises ``ValueError`` for a remote authority
+    (``file://host/p``) and a relative path (``file:rel/p``) instead of
+    silently turning them into ``/host/p`` and ``/rel/p``."""
     if not path.startswith("file:"):
         return None
-    return "/" + path[5:].lstrip("/")
+    rest = path[5:]
+    if rest.startswith("//"):
+        host, _, rest = rest[2:].partition("/")
+        if host not in ("", "localhost"):
+            raise ValueError(f"file URI names a remote host {host!r}: {path}")
+        return "/" + rest.lstrip("/")
+    if not rest.startswith("/"):
+        raise ValueError(f"file URI with a relative path: {path}")
+    return "/" + rest.lstrip("/")
 
 
 def _resolve_fs(path: str) -> tuple[pafs.FileSystem, str]:
@@ -315,10 +341,23 @@ def _entry_bytes(entry: tuple) -> int:
     return 0 if isinstance(entry[0], np.memmap) else sum(a.nbytes for a in entry)
 
 
+def _drop_ids(key: tuple[str, int]) -> None:
+    ids = _LOCAL_IDS.pop(key, None)
+    if ids is not None:
+        _CSR_CACHE_BYTES[0] -= ids[1].nbytes + ids[2].nbytes
+
+
+def _drop(key: tuple[str, int]) -> None:
+    """Remove a block and its local destination ids from the caches."""
+    old = _CSR_CACHE.pop(key, None)
+    if old is not None:
+        _CSR_CACHE_BYTES[0] -= _entry_bytes(old)
+    _drop_ids(key)
+
+
 def _evict_lru() -> None:
     while _CSR_CACHE_BYTES[0] > _CSR_CACHE_CAP and len(_CSR_CACHE) > 1:
-        _, old = _CSR_CACHE.popitem(last=False)
-        _CSR_CACHE_BYTES[0] -= _entry_bytes(old)
+        _drop(next(iter(_CSR_CACHE)))
 
 
 def _purge_other_roots(csr_path: str) -> None:
@@ -327,9 +366,22 @@ def _purge_other_roots(csr_path: str) -> None:
     keep every run's full decoded graph resident (distinct csr_path keys
     never hit again → unbounded growth past the cap between warm passes;
     mmap entries cost only fds/address space but are dropped too)."""
-    for key in [k for k in _CSR_CACHE if k[0] != csr_path]:
-        old = _CSR_CACHE.pop(key)
-        _CSR_CACHE_BYTES[0] -= _entry_bytes(old)
+    for key in {k for k in (*_CSR_CACHE, *_LOCAL_IDS) if k[0] != csr_path}:
+        _drop(key)
+
+
+def _local_ids(key: tuple[str, int], indices: np.ndarray):
+    """(dsts, local) for the block cached at ``key`` (see ``_LOCAL_IDS``)."""
+    hit = _LOCAL_IDS.get(key)
+    if hit is not None and hit[0] is indices:
+        return hit[1], hit[2]
+    _drop_ids(key)  # computed for a block that has since been replaced
+    dsts, local = np.unique(indices, return_inverse=True)
+    local = local.astype(np.int32)  # a block holds < 2^31 edges
+    _LOCAL_IDS[key] = (indices, dsts, local)
+    _CSR_CACHE_BYTES[0] += dsts.nbytes + local.nbytes
+    _evict_lru()
+    return dsts, local
 
 
 def _preload_all(csr_path: str) -> None:
@@ -482,7 +534,17 @@ def _walk_kernel(csr_path: str, eps: float, seed: int, step: int,
     (= v << REPLICA_BITS | replica); rkeys not present in the block's CSR
     rows (dangling vertices routed here by the pure-expression router)
     contribute nothing — their walks die, which is the reference's
-    dangling semantics (MonteCarloPageRank.scala:73)."""
+    dangling semantics (MonteCarloPageRank.scala:73).
+
+    A row's c coupons survive as one binomial draw s; the s survivors then
+    move to uniformly random edge slots of the row's k edges, drawn
+    exactly and per edge slot, never per walk: a row with s ≥ k takes one
+    ``multinomial(s, [1/k] * k)`` (rows grouped by degree, one draw per
+    group), a row with s < k takes s integer picks in [0, k). A duplicated
+    neighbour owns two slots, so it gets twice the mass. Arrivals
+    coalesce with one bincount over the block-local destination ids
+    (``_LOCAL_IDS``), so the call's work and temporaries are
+    O(Σ min(s, k)) ≤ O(block edges) however many walks it moves."""
 
     def kernel(coupons_t: pa.Table) -> pa.Table:
         empty = pa.table(
@@ -507,40 +569,34 @@ def _walk_kernel(csr_path: str, eps: float, seed: int, step: int,
 
         rng = np.random.default_rng(np.random.SeedSequence([seed, block_id, step]))
         survivors = rng.binomial(c, 1.0 - eps)  # exactly c trials, not c+1
-        survivors = np.where(k > 0, survivors, 0)  # dangling walks die
-        total = int(survivors.sum())
-        if total == 0:
+        live = np.flatnonzero((k > 0) & (survivors > 0))  # dangling walks die
+        if len(live) == 0:
             return empty
-        # Per-WALK temp arrays dominate the loop's DRAM traffic (the
-        # stage is memory-bound: BENCH/BASELINE.md's 2→8-core task-time
-        # inflation). indptr[locc] and k are per-ROW (small) — downcast
-        # them BEFORE the per-walk np.repeat so starts/lens/pick are all
-        # 4-byte and the uniform draws are float32, halving bytes/walk.
-        # Guards: int32 offsets need < 2^31 edges in the block (true by
-        # construction, blocks are ~2/slot), float32 picks need every
-        # degree < 2^24 so idx*lens keeps unit precision. The branch
-        # depends only on block content → identical at any parallelism
-        # (the invariance BENCH/scaling.json proves byte-for-byte).
-        if len(indices) < (1 << 31) and int(k.max()) < (1 << 24):
-            starts = np.repeat(indptr[locc].astype(np.int32), survivors)
-            lens = np.repeat(k.astype(np.int32), survivors)
-            pick = (rng.random(total, dtype=np.float32) * lens).astype(
-                np.int32
-            )
-            # f32 product rounding can land exactly on lens — clamp
-            np.minimum(pick, lens - 1, out=pick)
-        else:
-            starts = np.repeat(indptr[locc], survivors)
-            lens = np.repeat(k, survivors)
-            pick = (rng.random(total) * lens).astype(np.int64)
-        dest = indices[starts + pick]
-        dst, cnt = np.unique(dest, return_counts=True)  # per-block coalescing
-        rkey, cnt = _split_hubs(dst, cnt, hubs, rng)
+        s, deg, start = survivors[live], k[live], indptr[locc[live]]
+        dsts, local = _local_ids((csr_path, block_id), indices)
+        # s ≥ k: one multinomial over the row's k edge slots per row, one
+        # call per distinct degree
+        dense = np.flatnonzero(s >= deg)
+        dense = dense[np.argsort(deg[dense], kind="stable")]
+        degs, first = np.unique(deg[dense], return_index=True)
+        slots, counts = [], []
+        for d, rows in zip(degs.tolist(), np.split(dense, first[1:])):
+            slots.append((start[rows, None] + np.arange(d)).ravel())
+            counts.append(rng.multinomial(s[rows], np.full(d, 1.0 / d)).ravel())
+        # s < k: s exact uniform picks among the row's k edge slots
+        sparse = s < deg
+        picks = np.repeat(start[sparse], s[sparse])
+        picks += rng.integers(0, np.repeat(deg[sparse], s[sparse]))
+        cnt = np.bincount(local[picks], minlength=len(dsts))
+        if slots:  # float64 weights sum integer counts exactly (< 2^53)
+            cnt += np.bincount(
+                local[np.concatenate(slots)], np.concatenate(counts),
+                minlength=len(dsts),
+            ).astype(np.int64)
+        hit = np.flatnonzero(cnt)
+        rkey, cnt = _split_hubs(dsts[hit], cnt[hit], hubs, rng)
         return pa.table(
-            {
-                "rkey": pa.array(rkey, pa.int64()),
-                "cnt": pa.array(cnt.astype(np.int64), pa.int64()),
-            }
+            {"rkey": pa.array(rkey, pa.int64()), "cnt": pa.array(cnt, pa.int64())}
         )
 
     return kernel

@@ -3152,16 +3152,16 @@ def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pca_project_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k=8 PCA projection of the embedding corpus (rows-only: DuckDB has
-    no eigensolver — tests/test_embeddings.py pins the values against
-    numpy's full PCA, whitened covariance ≈ I, and sign determinism)."""
+    """k=8 PCA projection of the embedding corpus, one scalar row per
+    (vec_id, dim) (rows-only: DuckDB has no eigensolver —
+    tests/test_embeddings.py pins the values against numpy's full PCA,
+    whitened covariance ≈ I, and sign determinism)."""
     from montecarlopagerank_spark.pipeline.embeddings import pca_project
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     out, _ = pca_project(spark, emb, k=8)
-    return out.select(
-        "vec_id",
-        F.transform(F.col("pc"), lambda x: F.round(x, 4)).alias("pc_r4"),
+    return out.select("vec_id", F.posexplode("pc").alias("dim", "pc")).select(
+        "vec_id", "dim", F.round("pc", 4).alias("val_r4")
     )
 
 

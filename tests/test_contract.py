@@ -135,3 +135,24 @@ def test_registry_window_covers_oracled_queries():
     missing = [k for k in head
                if k not in ORACLE_SQL and k not in allowed_rows_only]
     assert not missing, missing
+
+
+def test_pca_project_embeddings_scalar_rows(spark):
+    """The PCA query returns one scalar (vec_id, dim, val_r4) row per
+    component: no Array/Map/Struct column (a typed row canonicalizer
+    cannot hash them) and 8 rows per vector."""
+    import __spark_entry__ as entry
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    df = entry.queries()["pca_project_embeddings"](spark, SF_DIR)
+    assert df.columns == ["vec_id", "dim", "val_r4"]
+    assert not [f for f in df.schema.fields
+                if isinstance(f.dataType, (ArrayType, MapType, StructType))]
+    per_vec = df.groupBy("vec_id").agg(
+        F.count("*").alias("n"), F.countDistinct("dim").alias("dims"),
+        F.min("dim").alias("lo"), F.max("dim").alias("hi"),
+    ).collect()
+    n_vecs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()
+    assert len(per_vec) == n_vecs > 0
+    assert {(r.n, r.dims, r.lo, r.hi) for r in per_vec} == {(8, 8, 0, 7)}

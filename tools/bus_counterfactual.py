@@ -10,7 +10,7 @@ dispositive by removing Spark entirely:
   * Run the EXACT production kernel body (``pagerank_mc._walk_kernel``)
     on identical synthetic CSR blocks, as 1 process vs P concurrent
     processes, each process doing the SAME per-process work.
-  * Two working-set sizes: DRAM-sized (blocks + per-walk temps far
+  * Two working-set sizes: DRAM-sized (blocks + kernel temps far
     exceed L3) and cache-sized (everything fits comfortably in L3).
   * Report per-process kernel seconds and the inflation ratio
     time(P procs) / time(1 proc). Perfect hardware scaling = 1.0.
@@ -113,10 +113,10 @@ def main() -> None:
                     default=os.path.join(REPO, "BENCH",
                                          "bus_counterfactual.json"))
     # DRAM-sized: ~2M vertices x 16 avg deg = 32M edges/block copy
-    # (~128MB indices + ~16MB indptr + per-walk temps ~600MB at K=16:
-    # far beyond the 260MB shared L3 at 4 copies). Cache-sized: 40K
-    # vertices x 16 = 640K edges (~2.5MB indices; all temps ~12MB across
-    # 4 copies — comfortably inside L3).
+    # (~128MB indices + ~16MB indptr + ~128MB cached local destination
+    # ids + O(block edges) kernel temps: far beyond the 260MB shared L3
+    # at 4 copies). Cache-sized: 40K vertices x 16 = 640K edges (~2.5MB
+    # indices; everything ~10MB per copy — inside L3).
     ap.add_argument("--big-vertices", type=int, default=2_000_000)
     ap.add_argument("--small-vertices", type=int, default=40_000)
     ap.add_argument("--walks", type=int, default=16)

@@ -87,6 +87,15 @@ def main() -> None:
         "  (secs(N) / secs(4N)) / 4 — i.e. throughput(4N) /",
         "  (4 × throughput(N)) with both throughputs from the same window.",
         "",
+        "**Kernel vintage.** The scaling windows (`BENCH/scaling*.json`) and",
+        "the bus counterfactual (`BENCH/bus_counterfactual.json`) below were",
+        "measured with the round-5 per-walk kernel (one float32 pick per",
+        "walk, `np.unique` coalescing). The walk kernel now draws arrivals",
+        "per edge slot (one multinomial per covered row, integer picks",
+        "otherwise, bincount coalescing) from a different RNG stream, so new",
+        "windows must not be merged into these (`tools/merge_scaling.py`):",
+        "re-measure both from scratch.",
+        "",
         "## Results (steady-state superstep loop)",
         "",
         "| job | local[N] | local[4N] | efficiency | target |",
