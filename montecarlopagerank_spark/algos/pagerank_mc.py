@@ -39,28 +39,21 @@ with EXACTLY ONE shuffle per superstep:
    adaptive planning hides checkpointed partitionings and would
    re-exchange the segment carry-over state; the loop is fully static
    so AQE has nothing to add. The graph itself is
-   **host-resident**: CSR blocks are written ONCE at setup as parquet
-   side-files partitioned by block_id, and the PACK KERNEL ITSELF
-   publishes each block's decoded numpy arrays as ``.npy`` files under
-   ``_decoded/`` at pack time (atomic dir rename; it has the arrays in
-   hand at that moment, so the warm pass never re-reads the parquet it
-   just wrote — measured sub-second at any core count). Every worker
-   serves from ``np.memmap`` views of those files (``_CSR_CACHE``) —
-   one decode and one page-cache copy per block per HOST, not per
-   worker. On a multi-host cluster the packing host is pre-published;
-   other hosts lazily decode+publish on first touch (the earlier
-   per-worker in-memory caches decoded the graph N_workers× and held
-   N_workers copies: the anti-scaling warm phase of round 3's
-   BENCH/scaling.json — 8 s at 2 cores vs 48 s at 8 on 100M edges).
-   Earlier still, designs cogrouped a JVM-cached CSR table into the
-   kernel, which re-shipped the whole graph JVM→Arrow→Python EVERY
-   superstep — measured 429 MB/step at 100M edges, pure memory-bandwidth
-   burn that capped N-vs-4N scaling efficiency at ~0.71 (the contended
-   4N side pays more per byte). Pregel-style resident graph state is
-   also the honest 10^12-edge design: on a real cluster each executor's
-   workers converge on their partition's blocks (stable hash
-   partitioning), so the side-file fetch+decode is one-time per host,
-   amortized across all supersteps of all queries. The kernel is
+   **host-resident**: the setup job that packs the CSR writes each
+   block's arrays ONCE as ``.npy`` files (``_write_block``), the only
+   copy of the graph, and every worker serves its blocks from them
+   (``_CSR_CACHE``): ``np.memmap`` views on a local root — one
+   page-cache copy per block per HOST, not per worker — and an LRU of
+   in-memory reads on a DFS root. A worker loads a block on first
+   touch; there is no separate warm job. Earlier designs cogrouped a
+   JVM-cached CSR table into the kernel, which re-shipped the whole
+   graph JVM→Arrow→Python EVERY superstep — measured 429 MB/step at
+   100M edges, pure memory-bandwidth burn that capped N-vs-4N scaling
+   efficiency at ~0.71 (the contended 4N side pays more per byte).
+   Pregel-style resident graph state is also the honest 10^12-edge
+   design: on a real cluster each executor's workers converge on their
+   partition's blocks (stable hash partitioning), so the block read is
+   one-time per host, amortized across all supersteps. The kernel is
    ``applyInArrow`` with int32 neighbour ids when the vertex space fits;
 2. arrivals route to THEIR OWN blocks — a vertex's block is a pure
    chained-comparison **expression** over the block boundaries
@@ -130,7 +123,6 @@ from typing import Any
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.parquet as pq
 from pyarrow import fs as pafs
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -163,7 +155,7 @@ def route_expr(
     ``block_ids`` matters because planner ids can SKIP values (row weight
     rsize+1 → the prefix floor-division jumps an id when out_deg ==
     edges_per_block, and hub replicas can jump further): the CSR
-    side-files are partitioned by the actual ids, so routing by the
+    block files are named by the actual ids, so routing by the
     positional boundary index would address nonexistent block dirs and
     silently kill those walks (tests/test_pagerank.py::
     test_route_expr_skipped_block_ids). ``None`` = dense ids 0..B-1."""
@@ -192,18 +184,15 @@ def route_expr(
 
 
 # Host-resident CSR blocks: (csr_path, block_id) → (vids, indptr,
-# indices) numpy triples. For a LOCAL csr root the triples are np.memmap
-# views of decoded ``.npy`` side-files under ``<root>/_decoded`` (the
-# underscore prefix hides them from Spark/pyarrow dataset discovery):
-# the FIRST worker to need a block decodes it and publishes the arrays
-# with an atomic dir rename; every other worker on the host mmaps the
-# same files, so the host pays ONE decode per block and ONE page-cache
-# copy total, regardless of worker count. The earlier per-worker
-# in-memory caches decoded the full graph N_workers times — measured as
-# the anti-scaling warm phase of BENCH/scaling.json (8 s at 2 cores vs
-# 48 s at 8 on 100M edges: more cores meant strictly more decode work
-# and N× the resident bytes). For non-local roots (hdfs://, s3://) the
-# in-memory decode path remains (mmap needs a local file), LRU-bounded.
+# indices) numpy triples, read from the ``.npy`` files the pack job wrote
+# under ``<csr_path>/_decoded/b<block_id>`` (``_write_block``; the
+# underscore prefix hides them from Spark/pyarrow dataset discovery). For
+# a LOCAL csr root the triples are np.memmap views, so every worker on the
+# host shares ONE page-cache copy per block and keeps ~0 resident bytes
+# (the earlier per-worker in-memory caches held N_workers copies: the
+# anti-scaling warm phase of BENCH/scaling.json, 8 s at 2 cores vs 48 s
+# at 8 on 100M edges). For non-local roots (hdfs://, s3://) mmap needs a
+# local file, so the arrays are read into memory, LRU-bounded.
 _CSR_CACHE: OrderedDict[tuple[str, int], tuple] = OrderedDict()
 _CSR_CACHE_BYTES = [0]  # in-memory (non-mmap) entries + _LOCAL_IDS arrays
 _CSR_CACHE_CAP = int(os.environ.get("SPARK_GRAFT_CSR_CACHE_BYTES", 4 << 30))
@@ -263,29 +252,20 @@ def _is_local(csr_path: str) -> bool:
     return csr_path.startswith("file:") or "://" not in csr_path
 
 
-def _decode_part(fs, part: str):
-    """One block's parquet dir → (vids, indptr, indices) numpy triple, or
-    None for an empty/missing block."""
-    if fs.get_file_info(part).type != pafs.FileType.Directory:
-        return None  # block exists for every routed id by construction;
-        # missing dir => dangling-only range
-    tbl = pq.read_table(part, columns=list(_CSR_ARRAYS), filesystem=fs)
-    if tbl.num_rows == 0:
-        return None
-    return tuple(
-        tbl.column(c).combine_chunks().values.to_numpy(zero_copy_only=False)
-        for c in _CSR_ARRAYS
-    )
+def _block_dir(root: str, block_id: int) -> str:
+    return f"{root.rstrip('/')}/_decoded/b{block_id}"
 
 
 def _publish_block(root: str, block_id: int, entry: tuple) -> None:
-    """Atomically publish a decoded block as mmap-able ``.npy`` files:
-    write to a pid-suffixed tmp dir, rename into place. If another worker
-    already won the race the rename fails and the tmp dir is discarded —
-    both outcomes leave a complete, immutable published dir."""
+    """Atomically publish a block as mmap-able ``.npy`` files: write to a
+    pid-suffixed tmp dir, rename into place. A retried or speculative
+    task that finds the block already published discards its tmp dir —
+    the winner's dir is complete and immutable. Any other failure (a
+    failed save, a failed rename with no published dir) raises: the
+    files are the only copy of the block, so the pack task must fail."""
     import shutil
 
-    dest = f"{root.rstrip('/')}/_decoded/b{block_id}"
+    dest = _block_dir(root, block_id)
     tmp = f"{dest}.tmp.{os.getpid()}"
     try:
         os.makedirs(tmp, exist_ok=True)
@@ -294,44 +274,61 @@ def _publish_block(root: str, block_id: int, entry: tuple) -> None:
         os.rename(tmp, dest)
     except OSError:
         shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.isdir(dest):
+            raise
 
 
 def _mmap_block(root: str, block_id: int):
-    """Published-decoded-block dir → memmap triple, or None if absent."""
-    dest = f"{root.rstrip('/')}/_decoded/b{block_id}"
-    try:
-        return tuple(
-            np.load(os.path.join(dest, f"{name}.npy"), mmap_mode="r")
-            for name in _CSR_ARRAYS
-        )
-    except (FileNotFoundError, OSError, ValueError):
-        return None
+    """Published block dir → memmap triple."""
+    dest = _block_dir(root, block_id)
+    return tuple(
+        np.load(os.path.join(dest, f"{name}.npy"), mmap_mode="r")
+        for name in _CSR_ARRAYS
+    )
+
+
+def _write_block(csr_path: str, block_id: int, entry: tuple) -> None:
+    """The pack kernel's write of one block's arrays: local roots publish
+    through ``_publish_block``'s atomic rename, other roots write the same
+    ``.npy`` files through ``pyarrow.fs``."""
+    fs, root = _resolve_fs(csr_path)
+    if _is_local(csr_path):
+        _publish_block(root, block_id, entry)
+        return
+    dest = _block_dir(root, block_id)
+    fs.create_dir(dest, recursive=True)
+    for name, arr in zip(_CSR_ARRAYS, entry):
+        with fs.open_output_stream(f"{dest}/{name}.npy") as f:
+            np.save(f, arr)
+
+
+def _read_block(fs: pafs.FileSystem, root: str, block_id: int):
+    """A non-local root's block → in-memory triple."""
+    dest = _block_dir(root, block_id)
+    out = []
+    for name in _CSR_ARRAYS:
+        with fs.open_input_file(f"{dest}/{name}.npy") as f:
+            out.append(np.load(f))
+    return tuple(out)
 
 
 def _load_block(csr_path: str, block_id: int):
+    """Cached triple for a block. Every routed block id has files (the
+    pack job's own rows are the routing bounds), so a missing or
+    unreadable block raises — the task fails and is retried — rather
+    than silently killing the block's walks."""
     key = (csr_path, block_id)
     hit = _CSR_CACHE.get(key)
     if hit is not None:
         _CSR_CACHE.move_to_end(key)
         return hit
+    _purge_other_roots(csr_path)  # stale runs' graphs must not pile up
     fs, root = _resolve_fs(csr_path)
-    local = _is_local(csr_path)
-    entry = _mmap_block(root, block_id) if local else None
-    if entry is None:
-        entry = _decode_part(fs, f"{root.rstrip('/')}/block_id={block_id}")
-        if entry is None:
-            return None
-        if local:
-            # publish for the host's other workers, then serve the mmap
-            # (keeps this worker's resident bytes at ~0 too)
-            _publish_block(root, block_id, entry)
-            entry = _mmap_block(root, block_id) or entry
-    if isinstance(entry[0], np.memmap):
-        _CSR_CACHE[key] = entry  # address space, not RSS: never counted
-    else:
-        _CSR_CACHE[key] = entry
-        _CSR_CACHE_BYTES[0] += sum(a.nbytes for a in entry)
-        _evict_lru()
+    entry = (_mmap_block(root, block_id) if _is_local(csr_path)
+             else _read_block(fs, root, block_id))
+    _CSR_CACHE[key] = entry
+    _CSR_CACHE_BYTES[0] += _entry_bytes(entry)
+    _evict_lru()
     return entry
 
 
@@ -363,9 +360,9 @@ def _evict_lru() -> None:
 def _purge_other_roots(csr_path: str) -> None:
     """Drop cached blocks belonging to OTHER runs' csr_paths. A long-lived
     Python worker serving many pagerank_monte_carlo calls would otherwise
-    keep every run's full decoded graph resident (distinct csr_path keys
-    never hit again → unbounded growth past the cap between warm passes;
-    mmap entries cost only fds/address space but are dropped too)."""
+    keep every run's full graph resident (distinct csr_path keys never
+    hit again → unbounded growth; mmap entries cost only fds/address
+    space but are dropped too). ``_load_block`` calls it on every miss."""
     for key in {k for k in (*_CSR_CACHE, *_LOCAL_IDS) if k[0] != csr_path}:
         _drop(key)
 
@@ -382,122 +379,6 @@ def _local_ids(key: tuple[str, int], indices: np.ndarray):
     _CSR_CACHE_BYTES[0] += dsts.nbytes + local.nbytes
     _evict_lru()
     return dsts, local
-
-
-def _preload_all(csr_path: str) -> None:
-    """Warm this worker's resident cache with every CSR block of
-    ``csr_path``. LOCAL roots use the shared decoded side-files: each
-    block is decoded ONCE on the host by whichever worker reaches it
-    first (workers iterate the block list rotated by their pid so
-    concurrent warm tasks start on DIFFERENT blocks) and published under
-    ``_decoded/``; every other worker just mmaps the published arrays.
-    Total host work ≈ one decode of the graph + N_workers× mmap setup —
-    this is what makes the warm phase scale with cores instead of
-    against them (the old per-worker bulk decode was N× the work AND N×
-    the resident bytes; measured 8 s at 2 cores vs 48 s at 8 on 100M
-    edges). Non-local (DFS) roots keep the ONE vectorized per-worker
-    parquet read, cap-guarded, since mmap needs a local file. On a real
-    cluster the dataset dir holds only the executor's shard (stable hash
-    partitioning), so either way this is the Pregel graph-load phase,
-    amortized over all supersteps."""
-    _purge_other_roots(csr_path)  # stale runs' graphs must not pile up
-    fs, root = _resolve_fs(csr_path)
-    try:
-        infos = fs.get_file_info(pafs.FileSelector(root, recursive=False))
-    except (FileNotFoundError, OSError):
-        infos = []
-    dir_ids = sorted(
-        int(i.base_name.split("=", 1)[1])
-        for i in infos
-        if i.type == pafs.FileType.Directory
-        and i.base_name.startswith("block_id=")
-    )
-    if not dir_ids and _is_local(csr_path):
-        # defensive hardening only: the parquet CSR write is
-        # unconditional, so block_id= dirs should always exist — but if
-        # the listing failed or came back empty (partial purge, racing
-        # filesystem), the pack-time-published mmap dirs are a usable
-        # fallback block list on local roots
-        try:
-            dir_ids = sorted(
-                int(d[1:])
-                for d in os.listdir(f"{root.rstrip('/')}/_decoded")
-                if d.startswith("b") and d[1:].isdigit()
-            )
-        except (FileNotFoundError, OSError):
-            return
-    if not dir_ids:
-        return
-    if all((csr_path, b) in _CSR_CACHE for b in dir_ids):
-        return  # already warm: a repeat warm pass (or a warm task landing
-        # on an already-warm worker) must not re-walk the dataset
-    if _is_local(csr_path):
-        off = os.getpid() % len(dir_ids)
-        for b in dir_ids[off:] + dir_ids[:off]:
-            if (csr_path, b) not in _CSR_CACHE:
-                _load_block(csr_path, b)  # mmap-if-published else
-                # decode+publish — at most ~one decode per block per host
-        return
-    total = sum(
-        i.size or 0
-        for i in fs.get_file_info(pafs.FileSelector(root, recursive=True))
-        if i.is_file and not i.base_name.startswith("_")
-    )
-    if total == 0 or total * 3 > _CSR_CACHE_CAP:  # empty graph, or the
-        return  # decoded arrays (≈2-3× zstd parquet) would thrash the LRU
-    try:
-        tbl = pq.read_table(
-            root,
-            columns=["block_id", *_CSR_ARRAYS],
-            filesystem=fs,
-        )
-    except (pa.lib.ArrowInvalid, KeyError, OSError):
-        # e.g. a zero-row write leaves a schema-only part file with no
-        # block_id= hive dirs; the lazy per-block path serves instead
-        return
-    for i in range(tbl.num_rows):
-        bid = int(tbl.column("block_id")[i].as_py())
-        key = (csr_path, bid)
-        if key in _CSR_CACHE:
-            continue
-        entry = tuple(
-            tbl.column(c)[i].values.to_numpy(zero_copy_only=False)
-            for c in _CSR_ARRAYS
-        )
-        _CSR_CACHE[key] = entry
-        _CSR_CACHE_BYTES[0] += sum(a.nbytes for a in entry)
-    _evict_lru()  # same bound as the lazy path (the 3× estimate above is
-    # a heuristic; actual decoded bytes must respect the cap too)
-
-
-def warm_csr_workers(spark: SparkSession, csr_path: str) -> None:
-    """One ~simultaneous Arrow task per core slot: each reused Python
-    worker preloads the CSR side-files before superstep 0. Without this,
-    every worker pays its cold block reads inside the first superstep —
-    a cost proportional to workers × blocks that anti-scales with the
-    cluster (measured: step 0 at 8 cores ran 3.9× the steady-state step,
-    and only 1.65× at 2 cores). Warm wall-time is ≈ constant in core
-    count: all slots load concurrently. Workers the pass happens to miss
-    (or later evictions) fall back to lazy per-block loads."""
-    # ONE task per actual core slot — NOT defaultParallelism, which the
-    # session pins to the shuffle-partition count independent of cluster
-    # size. With defaultParallelism tasks the warm job cost was
-    # slots-invariant (32 tasks × full-graph decode at every cluster
-    # size: a pure anti-scaling term measured at 23-38s of MC setup on a
-    # 100M-edge graph); with totalCores tasks it is one decode wave at
-    # any size (~2s, and the repeat-warm guard in _preload_all makes
-    # tasks that land on an already-warm worker near-free).
-    sc = spark.sparkContext
-    try:
-        n_slots = int(sc._jsc.sc().schedulerBackend().totalCores())
-    except Exception:  # non-standard backend: fall back, over-warming is
-        n_slots = sc.defaultParallelism  # correct (just slower)
-
-    def warm(batches):
-        _preload_all(csr_path)
-        yield from batches  # pass-through; one tiny row per task
-
-    spark.range(0, n_slots, 1, n_slots).mapInArrow(warm, "id long").count()
 
 
 def _split_hubs(dst: np.ndarray, cnt: np.ndarray, hubs: tuple | None, rng):
@@ -553,10 +434,7 @@ def _walk_kernel(csr_path: str, eps: float, seed: int, step: int,
         if coupons_t.num_rows == 0:
             return empty
         block_id = int(coupons_t.column("block_id")[0].as_py())
-        blk = _load_block(csr_path, block_id)
-        if blk is None:
-            return empty
-        vids, indptr, indices = blk
+        vids, indptr, indices = _load_block(csr_path, block_id)
         rk = coupons_t.column("rkey").to_numpy(zero_copy_only=False)
         c = coupons_t.column("c").to_numpy(zero_copy_only=False)
         order = np.argsort(rk)  # rkeys unique per block → total order
@@ -639,77 +517,55 @@ def pagerank_monte_carlo(
     kernel). Raise it only for graphs whose per-step work dwarfs the
     per-job fixed cost.
 
-    ``state_root`` relocates the scratch state (CSR side-files + segment
+    ``state_root`` relocates the scratch state (CSR blocks + segment
     state tables). It may be a filesystem URI (``file://``, ``hdfs://``,
-    ``s3://``): the workers' resident-CSR reads resolve it through
-    ``pyarrow.fs`` (``_resolve_fs``), so superstep state can live on DFS —
-    the real-cluster deployment shape. Caller owns cleanup of a given
-    root; the default mkdtemp scratch is reclaimed at interpreter exit."""
+    ``s3://``): the CSR writes and the workers' resident-CSR reads resolve
+    it through ``pyarrow.fs`` (``_resolve_fs``), so superstep state can
+    live on DFS — the real-cluster deployment shape. The CSR is re-packed
+    on every call and never read across calls. Caller owns cleanup of a
+    given root; the default mkdtemp scratch is reclaimed at interpreter
+    exit."""
     t_setup = time.time()
     K = max(walks_per_vertex, 1)  # MonteCarloPageRank.scala:101
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    t_plan0 = time.time()
-    # flat per-superstep materializer (state.py) — created BEFORE the
-    # block plan so the pack kernel knows the CSR root and can publish
-    # each block's decoded arrays at pack time (mmap side-files under
-    # <csr>/_decoded): the warm pass then only mmaps, never re-decodes
+    # flat per-superstep materializer (state.py); its root also holds the
+    # CSR blocks the pack job writes (module docstring, item 1), so the
+    # graph never re-crosses the JVM→Arrow boundary per superstep
     store = StateStore(spark, root=state_root)
-    # the loop-invariant CSR goes to block_id-partitioned parquet ONCE;
-    # the walk kernel's workers load + cache their blocks from these
-    # side-files (DFS on a real cluster), so the graph never re-crosses
-    # the JVM→Arrow boundary per superstep (module docstring, item 2)
     csr_path = store.root.rstrip("/") + "/csr"
-    # edges_per_block=None → the planner derives the ≈2-blocks-per-slot
-    # default from the degree aggregate it computes anyway (no extra pass)
-    blocks_assign, csr, plan_meta = plan_walk_blocks(
-        edges,
-        edges_per_block=edges_per_block,
-        n_partitions=n_parts,
-        # pack-time publication needs a local (host-shared) root; DFS
-        # roots keep the lazy decode+publish path on first touch. The
-        # SCHEME-STRIPPED path is what _publish_block/_mmap_block key on
-        # (a raw file:// URI would os.makedirs a literal "file:" dir)
-        publish_root=_resolve_fs(csr_path)[1] if _is_local(csr_path) else None,
-    )
-    edges_per_block = plan_meta["edges_per_block"]
     ckpt = None
     last = None
     if checkpoint_dir:
         # the committed block_ids depend on edges_per_block, and format 2
         # is the per-segment (tag, block_id, rkey, c) table: a checkpoint
-        # of any other run configuration or layout is refused on resume,
-        # before the CSR write
+        # of any other run configuration or layout is refused on resume —
+        # before the csr dir is cleared and the O(E) pack runs. An auto
+        # edges_per_block is known only after planning, so it alone is
+        # checked then.
         ckpt = CheckpointManager(
             spark, checkpoint_dir,
             {"algo": "pagerank_mc", "format": 2, "K": K, "eps": eps,
              "seed": seed, "edges_per_block": edges_per_block},
         )
         if resume:
-            last = ckpt.last_complete_step()
+            last = ckpt.last_complete_step(
+                ignore=("edges_per_block",) if edges_per_block is None else ())
         else:
             ckpt.clear()
-    t_plan1 = time.time()
-    # NO repartition before the write: the pack kernel's own groupBy
-    # exchange already produced block_id-partitioned output (64 fat rows),
-    # and re-exchanging them shuffles the entire packed CSR (~4.3 GB/TB of
-    # edges) a second time for zero layout benefit — the dynamic-partition
-    # writer handles the ~2 blocks per task directly
-    # snappy for the side-files: they're scratch (read back by every
-    # worker's resident-cache load), and snappy halves the encode CPU in
-    # the 32 pack tasks for ~1.33× bytes — the right trade for a file
-    # whose lifetime is one run and whose read path is decode-bound.
-    # (A noop-sink variant that skipped this parquet write on single-host
-    # scratch runs was measured at 100M edges and bought nothing: the
-    # csr_write phase is the edge exchange + Arrow pack + publication,
-    # not the parquet encode — so the durable side-files stay
-    # unconditional.)
-    csr.write.option("compression", "snappy").partitionBy(
-        "block_id"
-    ).mode("overwrite").parquet(csr_path)
-    t_write = time.time()
-    warm_csr_workers(spark, csr_path)  # Pregel graph-load: resident
-    # caches fill once per worker here, not inside superstep 0
-    t_csr = time.time()
+    # re-packed on every call: clear a reused root's blocks first, or a
+    # packed block's rename would lose to a stale one (_publish_block)
+    fs, csr_dir = _resolve_fs(csr_path)
+    fs.delete_dir_contents(csr_dir, missing_dir_ok=True)
+    # edges_per_block=None → the planner derives the ≈2-blocks-per-slot
+    # default from the degree aggregate it computes anyway (no extra pass)
+    blocks_assign, plan_meta = plan_walk_blocks(
+        edges, csr_path, edges_per_block=edges_per_block, n_partitions=n_parts,
+    )
+    if ckpt and edges_per_block is None:
+        ckpt.run_config["edges_per_block"] = plan_meta["edges_per_block"]
+        if resume:
+            last = ckpt.last_complete_step()
+    edges_per_block = plan_meta["edges_per_block"]
     bounds = plan_meta["bounds"]
     block_ids = plan_meta["block_ids"]
     has_hubs = plan_meta["has_hubs"]
@@ -799,7 +655,7 @@ def pagerank_monte_carlo(
             z_acc, agged = _unpack(ckpt.load_tables(last, ["state"])["state"])
         for df in plan_meta["cached"]:  # planner pins (edges exchange,
             df.unpersist()  # degree table, block assignment) end with
-            # setup — the loop reads only the CSR side-files and bounds
+            # setup — the loop reads only the CSR blocks and bounds
         t_loop = time.time()
         # WHOLE-LOOP FUSION: ``fuse_steps`` supersteps compile into ONE
         # Spark job. Per step the plan is [complete (block_id, rkey) agg →
@@ -822,7 +678,10 @@ def pagerank_monte_carlo(
         # post-extinction step inside a segment walks an empty state — a
         # no-op).
         step = start_step
-        while step < iterations:
+        # an edgeless graph packs no blocks: every walk is dangling and
+        # dies in the first superstep, so there is nothing to walk (and
+        # no block files for the kernel to load)
+        while step < iterations and block_ids:
             t_seg = time.time()
             seg = list(range(step, min(step + fuse_steps, iterations)))
             obs_by_step: dict[int, Observation] = {}
@@ -932,14 +791,18 @@ def pagerank_monte_carlo(
         "step_secs": step_secs,
         "step_walk_totals": step_totals,
         "fuse_steps": fuse_steps,
-        # setup breakdown: plan = out_deg agg + bounds collect jobs;
-        # csr_write = the edge shuffle + Arrow pack + parquet side-files
-        # (the O(E) part); rest = hub collect + init-coupon write
+        # setup breakdown: plan = the degree job (+ the replica totals
+        # with hubs); csr_write = the pack job — edge shuffle, assign
+        # kernel and Arrow pack writing the blocks (the O(E) part); warm
+        # = 0.0, there is no warm job any more (the key stays for
+        # existing readers); rest = everything else (scratch and
+        # checkpoint setup, hub collect, init-coupon write)
         "setup_phases": {
-            "plan": round(t_plan1 - t_plan0, 3),
-            "csr_write": round(t_write - t_plan1, 3),
-            "warm": round(t_csr - t_write, 3),
-            "rest": round(t_loop - t_csr, 3),
+            "plan": plan_meta["plan_secs"],
+            "csr_write": plan_meta["pack_secs"],
+            "warm": 0.0,
+            "rest": round(t_loop - t_setup - plan_meta["plan_secs"]
+                          - plan_meta["pack_secs"], 3),
         },
     }
     return ranks, info

@@ -17,29 +17,25 @@ Two forms (SURVEY.md §1.4):
   block splits" skew handling from BASELINE.json's north_star.
 
 Assigning blocks by cumulative degree needs a prefix sum over vid order;
-a single global window would serialize on one task at 10^12 scale, so we
-use the same two-level trick as the vertex dictionary: coarse vid ranges →
-per-range sums → broadcast offsets → within-range window.
+a single global window would serialize on one task at 10^12 scale, so it
+is two-level: per-coarse-vid-range weight totals (one small collect) give
+each range its offset, and one Arrow task per range finishes the prefix
+sum with ``np.cumsum`` (``_assign_by_prefix``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import time
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 CSR_BLOCK_SCHEMA = (
     "block_id int, vids array<long>, indptr array<long>, indices array<long>"
-)
-# walk blocks carry int32 neighbour ids when the vertex space fits — halves
-# the Arrow volume shipped into the walk kernel every superstep
-CSR_BLOCK_SCHEMA_I32 = (
-    "block_id int, vids array<long>, indptr array<long>, indices array<int>"
 )
 
 # replica id lives in the low bits of the CSR row key: rkey = v << 20 | r.
@@ -69,32 +65,39 @@ def build_adjacency(edges: DataFrame, vertices: DataFrame | None = None) -> Data
     return adj.withColumn("deg", F.size("neighbours"))
 
 
-def _prefix_offsets(per_key: DataFrame, key: str, val: str, coarse: int) -> DataFrame:
-    """Deterministic scalable prefix sum of ``val`` in ``key`` order.
+def _coarse_range(v: str, coarse: int):
+    """Coarse vid range of a vertex: monotone in v, so ranges in order
+    and keys in order within a range give the global key order."""
+    return F.expr(f"{v} div {int(coarse)}").alias("rng")
 
-    Returns per-key ``prefix`` (sum of val for all keys strictly before).
-    Two-level: coarse range = key // coarse; per-range totals (small) get a
-    driver-size window, then a within-range window finishes the job.
-    """
-    ranged = per_key.withColumn("rng", (F.col(key) / coarse).cast("long"))
-    range_tot = ranged.groupBy("rng").agg(F.sum(val).alias("tot"))
-    range_off = range_tot.withColumn(
-        "rng_off",
-        F.coalesce(
-            F.sum("tot").over(
-                Window.orderBy("rng").rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ),
-    ).select("rng", "rng_off")
-    w_in = (
-        Window.partitionBy("rng").orderBy(key).rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        ranged.join(F.broadcast(range_off), "rng")
-        .withColumn("prefix", F.col("rng_off") + F.coalesce(F.sum(val).over(w_in), F.lit(0)))
-        .drop("rng", "rng_off")
-    )
+
+def _range_offsets(totals: list) -> dict[int, int]:
+    """``(rng, tot)`` rows → per-range exclusive prefix of the totals."""
+    offsets, acc = {}, 0
+    for rng, tot in sorted((int(r[0]), int(r[1])) for r in totals):
+        offsets[rng] = acc
+        acc += tot
+    return offsets
+
+
+def _assign_by_prefix(
+    weighted: DataFrame, key: str, offsets: dict[int, int],
+    edges_per_block: int, schema: str,
+) -> DataFrame:
+    """``weighted(rng, key, w, ...)`` → ``(..., block_id)`` with block_id
+    = floor(prefix / edges_per_block), where prefix is the sum of ``w``
+    over all keys strictly before (keys unique). One Arrow task per coarse
+    range sorts by key and adds its ``np.cumsum`` to the range's offset."""
+
+    def kernel(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.take(np.argsort(tbl.column(key).to_numpy(), kind="stable"))
+        w = tbl.column("w").to_numpy()
+        prefix = offsets[int(tbl.column("rng")[0].as_py())] + np.cumsum(w) - w
+        return tbl.drop_columns(["rng", "w"]).append_column(
+            "block_id", pa.array(prefix // edges_per_block, pa.int32())
+        )
+
+    return weighted.groupBy("rng").applyInArrow(kernel, schema=schema)
 
 
 def assign_blocks(
@@ -104,24 +107,26 @@ def assign_blocks(
     block_id = floor(prefix_edges / edges_per_block). Each vertex also
     counts 1 so empty-degree runs still split. Deterministic in vid order."""
     weighted = degrees_df.select(
-        F.col("v"), (F.col("out_deg") + F.lit(1)).alias("w")
+        _coarse_range("v", coarse), "v", (F.col("out_deg") + F.lit(1)).alias("w")
     )
-    pre = _prefix_offsets(weighted, "v", "w", coarse)
-    return pre.select(
-        "v", (F.col("prefix") / F.lit(edges_per_block)).cast("int").alias("block_id")
+    totals = weighted.groupBy("rng").agg(F.sum("w")).collect()
+    return _assign_by_prefix(
+        weighted, "v", _range_offsets(totals), edges_per_block,
+        "v long, block_id int",
     )
 
 
 def plan_walk_blocks(
     edges: DataFrame,
+    csr_root: str,
     edges_per_block: int | None = 1 << 20,
     coarse: int = 1 << 16,
     n_partitions: int | None = None,
-    publish_root: str | None = None,
-) -> tuple[DataFrame, DataFrame, dict]:
+) -> tuple[DataFrame, dict]:
     """Degree-aware block plan WITH hub-vertex splitting (north_star:
     "hub vertices split across ≥2 blocks, partial-aggregated then
-    re-reduced").
+    re-reduced"), packed into the walk kernel's CSR blocks under
+    ``csr_root``.
 
     Any vertex with out_deg > the hub threshold is split into
     R = ceil(out_deg / threshold) *replicas* (threshold = edges_per_block
@@ -133,7 +138,7 @@ def plan_walk_blocks(
     ``rkey = v << REPLICA_BITS | replica`` and packed into blocks by
     cumulative edge count exactly like unsplit vertices.
 
-    Returns ``(blocks_assign, csr_blocks, meta)``:
+    Returns ``(blocks_assign, meta)``:
 
     * ``blocks_assign(v, replica, rkey, rsize, n_rep, block_id)`` — one row
       per non-empty replica; ``n_rep`` is the planned replica count R
@@ -142,20 +147,24 @@ def plan_walk_blocks(
       multinomial split ∝ rsize (see pagerank_mc), so the per-destination
       distribution stays exactly uniform over out-edges:
       P(dst) = (rsize/deg) · (1/rsize) = 1/deg.
-    * ``csr_blocks(block_id, vids=rkeys, indptr, indices)`` — CSR rows keyed
-      by rkey. Totals are exact because the multinomial split conserves
-      coupon counts (the "partial-aggregated then re-reduced" step is the
-      ordinary groupBy(dst) coalescing downstream of the kernel).
-    * ``meta = {"has_hubs": bool, "max_out_deg": int}``.
+    * the CSR itself: one job packs each block's rows keyed by rkey
+      (``vids`` = rkeys, ``indptr``, ``indices``) and writes them as
+      ``.npy`` files under ``csr_root`` (``pagerank_mc._write_block``),
+      where the walk kernels read them (``pagerank_mc._load_block``).
+    * ``meta`` — ``has_hubs``, ``max_out_deg``, ``edges_per_block``,
+      ``int32_indices``, and ``bounds``/``block_ids``: each packed
+      block's min rkey and id, ascending, taken from the rows of the pack
+      job itself, so every routed block id has its arrays.
 
     Fast path: when max(out_deg) ≤ edges_per_block (no hubs — the common
     case once blocks are sized for the cluster), the per-edge replica
-    assignment, recount, and per-vertex window are skipped entirely; the
-    plan is one groupBy + the prefix-sum + one src-keyed join, and the
-    one-row max() aggregate that picks the path is the only extra job.
+    assignment and recount are skipped entirely: one degree job returns
+    every planning scalar and the per-range weight totals, and the pack
+    job does the rest.
     """
+    t0 = time.time()
     cached: list[DataFrame] = []  # pinned plans; meta["cached"] — the
-    # caller unpersists after materializing the CSR blocks
+    # caller unpersists after the walk state is initialized
     if n_partitions:
         # ONE up-front exchange by src, then PINNED: the degree
         # aggregation, the replica recount, and the edge⋈assignment join
@@ -168,29 +177,32 @@ def plan_walk_blocks(
             StorageLevel.MEMORY_AND_DISK
         )
         cached.append(edges)
-    # (v, out_deg) is O(V) — pin it too; bounds/hub/default-sizing reads
-    # then never touch the edge table again
+    # (v, out_deg) is O(V) — pin it too; hub/default-sizing/vertex-set
+    # reads then never touch the edge table again
     out_deg = (
         edges.groupBy(F.col("src").alias("v"))
         .agg(F.count("*").alias("out_deg"), F.max("dst").alias("_mx_dst"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     cached.append(out_deg)
-    mrow = out_deg.agg(  # ONE job fills the edge + degree caches and
-        F.max("out_deg").alias("d"),  # returns every planning scalar
+    # ONE job fills the edge + degree caches and returns every planning
+    # scalar plus the per-coarse-range weight totals Σ(out_deg + 1) that
+    # offset the hub-free prefix sum (one row per range: O(V / coarse))
+    ranges = out_deg.groupBy(_coarse_range("v", coarse)).agg(
+        F.max("out_deg").alias("d"),
         F.max("_mx_dst").alias("mx"),  # only dst feeds the int32 indices
-        F.sum("out_deg").alias("e"),
-        F.count("*").alias("nsrc"),
-    ).collect()[0]
+        F.sum(F.col("out_deg") + 1).alias("w"),
+    ).collect()
     out_deg = out_deg.drop("_mx_dst")
-    max_deg = mrow["d"] or 0
+    max_deg = max((r["d"] for r in ranges), default=0)
+    max_dst = max((r["mx"] for r in ranges), default=0)
     hub_threshold = edges_per_block
     if edges_per_block is None:
         # default block sizing ≈ 2 blocks per core slot (min 4k edges):
         # derived from the degree table already in hand — no extra pass.
         # Vertex weight uses the src count (dangling-only vertices carry
         # no edges, so their exclusion barely moves this heuristic).
-        total_w = int(mrow["e"] or 0) + int(mrow["nsrc"] or 0)
+        total_w = sum(int(r["w"]) for r in ranges)
         slots = edges.sparkSession.sparkContext.defaultParallelism
         edges_per_block = max(total_w // max(2 * slots, 1) + 1, 1 << 12)
         # DECOUPLED hub threshold under auto sizing: block size answers
@@ -216,6 +228,7 @@ def plan_walk_blocks(
             F.col("out_deg").alias("rsize"),
             F.lit(1).alias("n_rep"),
         )
+        totals = [(r["rng"], r["w"]) for r in ranges]
     else:
         nrep = out_deg.select(
             "v",
@@ -249,18 +262,25 @@ def plan_walk_blocks(
         ).agg(F.count("*").alias("rsize")).withColumn(
             "rkey",
             F.shiftleft(F.col("v"), REPLICA_BITS) + F.col("replica"),
-        )
+        ).persist(StorageLevel.MEMORY_AND_DISK)  # read by the totals
+        cached.append(replicas)  # collect and the assign kernel
+        # a split vertex weighs rsize + 1 per non-empty replica, so its
+        # range's total needs the recount: one small aggregate
+        totals = replicas.groupBy(_coarse_range("v", coarse)).agg(
+            F.sum(F.col("rsize") + 1)
+        ).collect()
+    t_pack = time.time()
+    plan_secs = round(t_pack - t0, 3)
 
     weighted = replicas.select(
-        "v", "replica", "rkey", "rsize", "n_rep",
+        _coarse_range("v", coarse), "v", "replica", "rkey", "rsize", "n_rep",
         (F.col("rsize") + F.lit(1)).alias("w"),
     )
-    pre = _prefix_offsets(weighted, "rkey", "w", coarse * (1 << REPLICA_BITS))
-    blocks_assign = pre.select(
-        "v", "replica", "rkey", "rsize", "n_rep",
-        (F.col("prefix") / F.lit(edges_per_block)).cast("int").alias("block_id"),
+    blocks_assign = _assign_by_prefix(
+        weighted, "rkey", _range_offsets(totals), edges_per_block,
+        "v long, replica int, rkey long, rsize long, n_rep int, block_id int",
     ).persist(StorageLevel.MEMORY_AND_DISK)  # O(V·replicas); read by the
-    cached.append(blocks_assign)  # CSR join, bounds collect, hub lookup
+    cached.append(blocks_assign)  # pack join and the caller's hub lookup
 
     # shuffle_hash on the O(V·replicas) assignment side: sort-merge would
     # sort the full (cached) edge table; the hint streams edges in place
@@ -280,127 +300,67 @@ def plan_walk_blocks(
         ).select("block_id", "rkey", "dst")
 
     # int32 neighbour ids when the id space fits (dense dictionary ids
-    # always do until ~2.1B vertices); halves per-superstep Arrow volume.
-    # The max-dst scalar rode the degree aggregation above — no extra scan.
-    use_i32 = (mrow["mx"] or 0) < (1 << 31)
-    idx_np = np.int32 if use_i32 else np.int64
-    idx_pa = pa.int32() if use_i32 else pa.int64()
+    # always do until ~2.1B vertices): halves the block's bytes.
+    # The max-dst scalar rode the degree job above — no extra scan.
+    idx_np = np.int32 if (max_dst or 0) < (1 << 31) else np.int64
 
     def pack(tbl: pa.Table) -> pa.Table:
-        # Arrow-native pack: zero pandas, list columns built straight from
-        # offset/value buffers
-        rkeys = tbl.column("rkey").to_numpy(zero_copy_only=False)
-        dsts = tbl.column("dst").to_numpy(zero_copy_only=False)
+        # Arrow-native pack: zero pandas; the arrays go straight to the
+        # block's files — the only copy of the CSR. Runtime import:
+        # pagerank_mc imports this module at load time.
+        from montecarlopagerank_spark.algos.pagerank_mc import _write_block
+
+        rkeys = tbl.column("rkey").to_numpy()
+        dsts = tbl.column("dst").to_numpy()
         order = np.lexsort((dsts, rkeys))
         rkeys = rkeys[order]
         indices = dsts[order].astype(idx_np)
         vids, counts = np.unique(rkeys, return_counts=True)
         indptr = np.concatenate(([0], np.cumsum(counts)))
         bid = int(tbl.column("block_id")[0].as_py())
-        if publish_root is not None:
-            # pack-time publication: the decoded arrays are in hand RIGHT
-            # NOW — publish them as the host's mmap side-files so the warm
-            # pass never re-reads + re-decodes the parquet it just wrote
-            # (the decode half of the anti-scaling warm phase in
-            # BENCH/scaling.json). Best-effort locality: on a multi-host
-            # cluster only the packing host is pre-published; other hosts
-            # fall back to the lazy decode+publish path. Runtime import —
-            # pagerank_mc imports this module at load time.
-            from montecarlopagerank_spark.algos.pagerank_mc import (
-                _publish_block,
-            )
+        _write_block(csr_root, bid, (vids, indptr, indices))
+        return pa.table({
+            "block_id": pa.array([bid], pa.int32()),
+            "lo": pa.array([vids[0]], pa.int64()),
+        })
 
-            _publish_block(publish_root, bid, (vids, indptr, indices))
-
-        def one_list(values: np.ndarray, typ) -> pa.ListArray:
-            return pa.ListArray.from_arrays(
-                pa.array([0, len(values)], pa.int32()), pa.array(values, typ)
-            )
-
-        return pa.table(
-            {
-                "block_id": pa.array([bid], pa.int32()),
-                "vids": one_list(vids, pa.int64()),
-                "indptr": one_list(indptr, pa.int64()),
-                "indices": one_list(indices, idx_pa),
-            }
-        )
-
-    schema = CSR_BLOCK_SCHEMA_I32 if use_i32 else CSR_BLOCK_SCHEMA
-    csr = joined.groupBy("block_id").applyInArrow(pack, schema=schema)
     # block boundaries: blocks pack CONTIGUOUS rkey ranges (block_id is a
     # monotone step function of rkey by construction of the prefix sum), so
     # the per-superstep coupon→block routing is a pure expression over these
     # boundaries (see pagerank_mc.route_expr) — no routing-table join and no
-    # extra shuffle per step. One small collect at plan time; the boundary
-    # count is the block count (sized ~2-3x total cores, so ≤ ~10^4 even on
-    # a 1000-executor cluster — fine as a driver list / literal).
+    # extra shuffle per step. The pack job returns them, one row per block
+    # (sized ~2-3x total cores, so ≤ ~10^4 even on a 1000-executor cluster
+    # — fine as a driver list / literal).
     # NOTE: block ids can SKIP values — row weight is rsize+1, so a vertex
     # with out_deg == edges_per_block advances the prefix by epb+1 and the
     # floor-division jumps past an id (hub replicas can jump further via
     # xxhash64 imbalance). Routing must therefore map a coupon to the
     # ACTUAL id of its block (these literals), never to the positional
     # index of its boundary — a positional id would address a nonexistent
-    # CSR side-file and the walks would silently die.
-    brows = (
-        blocks_assign.groupBy("block_id")
-        .agg(F.min("rkey").alias("lo"))
-        .orderBy("block_id")
-        .collect()
+    # CSR block and the walks would silently die.
+    brows = sorted(
+        tuple(r) for r in joined.groupBy("block_id")
+        .applyInArrow(pack, schema="block_id int, lo long").collect()
     )
-    bounds = [r["lo"] for r in brows]
-    block_ids = [int(r["block_id"]) for r in brows]
     meta = {
         "has_hubs": has_hubs,
         "max_out_deg": int(max_deg),
-        "bounds": bounds,
-        "block_ids": block_ids,
-        "int32_indices": use_i32,
+        "bounds": [lo for _, lo in brows],
+        "block_ids": [bid for bid, _ in brows],
+        "int32_indices": idx_np is np.int32,
         "edges_per_block": edges_per_block,
+        "plan_secs": plan_secs,  # degree job (+ hub replica totals)
+        "pack_secs": round(time.time() - t_pack, 3),  # assign + pack job
         # src-partitioned cached edge table + O(V) degree table, for
         # callers that need further graph passes (e.g. the vertex set)
         # without re-paying the source exchange
         "edges_src_partitioned": edges,
         "out_deg": out_deg,
-        # pinned plans backing blocks_assign/csr; callers unpersist these
-        # once the CSR blocks are materialized
+        # pinned plans backing blocks_assign; callers unpersist these
+        # once they are done with the assignment and the vertex set
         "cached": cached,
     }
-    return blocks_assign, csr, meta
-
-
-def build_csr_blocks_from_edges(
-    edges: DataFrame, block_assign: DataFrame
-) -> DataFrame:
-    """Edge pairs + block assignment → CSR block rows, skipping the
-    relational adjacency intermediate (one shuffle less than
-    ``build_adjacency`` → ``build_csr_blocks``).
-
-    Only vertices WITH out-edges get CSR rows: walk kernels inner-join
-    coupons against the block assignment first, so coupons at dangling
-    vertices never reach a kernel — they die, which is exactly the
-    reference's dangling-walk semantics (MonteCarloPageRank.scala:73).
-    """
-    joined = edges.join(
-        block_assign.withColumnRenamed("v", "src"), "src"
-    ).select("block_id", "src", "dst")
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["src", "dst"], kind="mergesort")
-        src = pdf["src"].to_numpy(dtype=np.int64)
-        indices = pdf["dst"].to_numpy(dtype=np.int64)
-        vids, counts = np.unique(src, return_counts=True)
-        indptr = np.concatenate(([0], np.cumsum(counts)))
-        return pd.DataFrame(
-            {
-                "block_id": [int(pdf["block_id"].iloc[0])],
-                "vids": [vids],
-                "indptr": [indptr],
-                "indices": [indices],
-            }
-        )
-
-    return joined.groupBy("block_id").applyInPandas(pack, schema=CSR_BLOCK_SCHEMA)
+    return blocks_assign, meta
 
 
 def build_csr_blocks(

@@ -87,10 +87,12 @@ class CheckpointManager:
         with open(p) as f:
             return json.load(f)
 
-    def last_complete_step(self) -> int | None:
+    def last_complete_step(self, ignore: tuple[str, ...] = ()) -> int | None:
         """Max step with a committed manifest, or None. Raises ValueError
         if that step was committed under a different run configuration —
-        resuming would misread (or silently continue) a foreign run."""
+        resuming would misread (or silently continue) a foreign run.
+        ``ignore`` names config keys left out of the comparison, for a
+        caller that checks the rest before it can compute those keys."""
         if not os.path.isdir(self.root):
             return None
         steps = []
@@ -103,7 +105,11 @@ class CheckpointManager:
             return None
         last = max(steps)
         found = self.manifest(last).get("run_config")
-        if found != self.run_config:
+
+        def known(cfg):
+            return cfg and {k: v for k, v in cfg.items() if k not in ignore}
+
+        if known(found) != known(self.run_config):
             raise ValueError(
                 f"checkpoint {self.root} step {last} was written with run "
                 f"config {found}, not {self.run_config}; refusing to resume"

@@ -124,14 +124,26 @@ def test_pi_resume_refuses_foreign_checkpoint(spark, cycle5, tmp_path):
 
 def test_mc_resume_refuses_foreign_checkpoint(spark, cycle5, tmp_path):
     ck = str(tmp_path / "mc")
+    st = tmp_path / "st"
     pagerank_monte_carlo(spark, cycle5, walks_per_vertex=4, iterations=2,
-                         seed=5, edges_per_block=64, checkpoint_dir=ck)
+                         seed=5, edges_per_block=64, checkpoint_dir=ck,
+                         state_root=str(st))
+    csr = {p: p.stat().st_mtime_ns for p in (st / "csr").rglob("*")}
+    assert any(p.suffix == ".npy" for p in csr)
     for kw in ({"seed": 6}, {"edges_per_block": 32}):
         args = {"seed": 5, "edges_per_block": 64, **kw}
         with pytest.raises(ValueError, match="run config"):
             pagerank_monte_carlo(spark, cycle5, walks_per_vertex=4,
                                  iterations=4, checkpoint_dir=ck,
-                                 resume=True, **args)
+                                 resume=True, state_root=str(st), **args)
+        # refused before the csr dir is cleared and the pack job runs:
+        # the reused root's blocks are untouched, none are rewritten
+        assert {p: p.stat().st_mtime_ns
+                for p in (st / "csr").rglob("*")} == csr
+    # an auto edges_per_block is checked after planning
+    with pytest.raises(ValueError, match="run config"):
+        pagerank_monte_carlo(spark, cycle5, walks_per_vertex=4, iterations=4,
+                             seed=5, checkpoint_dir=ck, resume=True)
     # the per-step layout (one "coupons" table per superstep, no format)
     old = str(tmp_path / "mc_per_step")
     _foreign_checkpoint(

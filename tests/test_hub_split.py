@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from montecarlopagerank_spark.algos.pagerank_mc import (
+    _load_block,
     _split_hubs,
     pagerank_monte_carlo,
 )
@@ -41,8 +42,9 @@ def hub_graph(spark):
     return spark.createDataFrame(rows, "src long, dst long").persist()
 
 
-def test_plan_walk_blocks_splits_hub(spark, hub_graph):
-    assign, csr, meta = plan_walk_blocks(hub_graph, edges_per_block=64)
+def test_plan_walk_blocks_splits_hub(spark, hub_graph, tmp_path):
+    csr_root = str(tmp_path / "csr")
+    assign, meta = plan_walk_blocks(hub_graph, csr_root, edges_per_block=64)
     assert meta["has_hubs"] and meta["max_out_deg"] == 400
     hub = assign.filter("v = 0").collect()
     assert len(hub) >= 2, "hub must be split across >=2 replicas"
@@ -52,16 +54,15 @@ def test_plan_walk_blocks_splits_hub(spark, hub_graph):
     # non-hub vertices stay unsplit
     assert assign.filter("v > 0 and n_rep > 1").count() == 0
     # CSR rows are keyed by rkey and partition the hub's neighbours
-    blocks = {b["block_id"]: b for b in csr.collect()}
     hub_neighbours = []
     for r in hub:
-        b = blocks[r["block_id"]]
-        i = list(b["vids"]).index(r["rkey"])
-        hub_neighbours += list(b["indices"][b["indptr"][i]:b["indptr"][i + 1]])
+        vids, indptr, indices = _load_block(csr_root, r["block_id"])
+        i = list(vids).index(r["rkey"])
+        hub_neighbours += list(indices[indptr[i]:indptr[i + 1]])
     assert sorted(hub_neighbours) == list(range(1, 401))
 
 
-def test_mc_single_nonzero_replica_hub_keeps_walks(spark):
+def test_mc_single_nonzero_replica_hub_keeps_walks(spark, tmp_path):
     """A split vertex whose out-edges all hash into ONE replica r != 0 is
     still a hub: its coupons must reach replica r, which holds the edges.
     10 parallel edges 0→d (out_deg 10 > edges_per_block 4 → 3 planned
@@ -80,7 +81,7 @@ def test_mc_single_nonzero_replica_hub_keeps_walks(spark):
     assert info["has_hub_splits"]
     visits_d = round(ranks_dict(ranks)[d] * info["total_visits"])
     assert 1780 <= visits_d <= 1920  # 1000 + Binomial(1000, 0.85) ± 6σ
-    assign, _, meta = plan_walk_blocks(e, edges_per_block=4)
+    assign, meta = plan_walk_blocks(e, str(tmp_path), edges_per_block=4)
     row = assign.filter("v = 0").collect()
     assert len(row) == 1 and row[0]["replica"] == reps["r"]
     assert row[0]["n_rep"] == 3  # the planned count, not the recount
@@ -88,8 +89,9 @@ def test_mc_single_nonzero_replica_hub_keeps_walks(spark):
         df.unpersist()
 
 
-def test_plan_walk_blocks_no_split_below_threshold(spark, hub_graph):
-    assign, _, meta = plan_walk_blocks(hub_graph, edges_per_block=10_000)
+def test_plan_walk_blocks_no_split_below_threshold(spark, hub_graph, tmp_path):
+    assign, meta = plan_walk_blocks(
+        hub_graph, str(tmp_path), edges_per_block=10_000)
     assert not meta["has_hubs"]
     assert assign.filter("n_rep > 1").count() == 0
     assert assign.filter("v = 0").count() == 1
@@ -167,7 +169,7 @@ def test_mc_hub_split_parallelism_invariance(spark, hub_graph):
     assert d1 == d2  # byte-identical through the split path
 
 
-def test_auto_hub_threshold_decoupled_from_block_size(spark):
+def test_auto_hub_threshold_decoupled_from_block_size(spark, tmp_path):
     """Under AUTO block sizing the hub-split trigger is floored at 2^18
     edges: a 6k-degree vertex on a small graph must NOT be treated as a
     hub (the auto block size lands far below its degree), while an
@@ -177,10 +179,12 @@ def test_auto_hub_threshold_decoupled_from_block_size(spark):
     analyzer tree in the fused loop) into every superstep."""
     pairs = [(0, d) for d in range(1, 6001)] + [(d, 0) for d in range(1, 50)]
     e = spark.createDataFrame(pairs, "src long, dst long")
-    _, _, meta = plan_walk_blocks(e, edges_per_block=None, n_partitions=4)
+    _, meta = plan_walk_blocks(
+        e, str(tmp_path / "a"), edges_per_block=None, n_partitions=4)
     assert not meta["has_hubs"]
     assert meta["edges_per_block"] < 6000  # auto size IS below the degree
-    _, _, meta2 = plan_walk_blocks(e, edges_per_block=512, n_partitions=4)
+    _, meta2 = plan_walk_blocks(
+        e, str(tmp_path / "b"), edges_per_block=512, n_partitions=4)
     assert meta2["has_hubs"]
     for m in (meta, meta2):
         for df in m["cached"]:
@@ -198,3 +202,42 @@ def test_auto_fuse_steps_follows_hub_plan(spark, hub_graph, gnutella_mini):
     _, i_flat = pagerank_monte_carlo(
         spark, gnutella_mini, walks_per_vertex=4, iterations=3, seed=7)
     assert not i_flat["has_hub_splits"] and i_flat["fuse_steps"] == 6
+
+
+def test_plan_block_ids_match_numpy_prefix_sum(spark, tmp_path):
+    """The planner's block ids equal a numpy cumsum over the whole rkey
+    order: block_id = floor(Σ(rsize + 1) of earlier replicas /
+    edges_per_block). With coarse=4 every coarse range is a few vertices,
+    so blocks straddle range boundaries and every range's offset is used;
+    the graph has a split hub (out_deg 30 > 8) and an out_deg == 8
+    vertex whose weight 9 skips a block id. The packed blocks' ids and
+    min rkeys are the reference's too."""
+    gen = np.random.default_rng(5)
+    degs = {v: int(gen.integers(1, 7)) for v in range(41) if v % 7 != 3}
+    degs.update({10: 8, 21: 30, 33: 8})
+    pairs = [(v, int(d)) for v, k in degs.items()
+             for d in gen.choice(60, size=k, replace=False)]
+    e = spark.createDataFrame(pairs, "src long, dst long")
+    csr_root = str(tmp_path / "csr")
+    assign, meta = plan_walk_blocks(e, csr_root, edges_per_block=8, coarse=4)
+    rows = sorted((r["rkey"], r["v"], r["replica"], r["rsize"], r["block_id"])
+                  for r in assign.collect())
+    for df in meta["cached"]:
+        df.unpersist()
+    rkey, v, replica, rsize, got = (np.array(c, np.int64) for c in zip(*rows))
+    assert meta["has_hubs"] and (v == 21).sum() >= 2  # the hub split
+    assert np.array_equal(rkey, (v << REPLICA_BITS) + replica)
+    for u, k in degs.items():  # replicas partition each vertex's edges
+        assert rsize[v == u].sum() == k
+    w = rsize + 1
+    want = (np.cumsum(w) - w) // 8
+    assert np.array_equal(got, want)
+    ids = np.unique(want)
+    assert len(ids) < ids[-1] + 1, "premise: some block id is skipped"
+    assert any(len(np.unique(v[want == b] // 4)) > 1 for b in ids), (
+        "premise: some block straddles a coarse range boundary")
+    assert meta["block_ids"] == ids.tolist()
+    assert meta["bounds"] == [int(rkey[want == b].min()) for b in ids]
+    for b in ids:
+        vids = _load_block(csr_root, int(b))[0]
+        assert vids.tolist() == rkey[want == b].tolist()

@@ -175,3 +175,86 @@ def test_strip_file_scheme_local_forms(uri, path):
 def test_strip_file_scheme_rejects_host_and_relative(uri):
     with pytest.raises(ValueError):
         mc._strip_file_scheme(uri)
+
+
+def test_non_local_root_reads_into_counted_lru(monkeypatch):
+    """A DFS-style root: the pack's non-local write puts the block's
+    ``.npy`` files on the root's filesystem, ``_load_block`` reads them
+    back as in-memory arrays counted in ``_CSR_CACHE_BYTES``, and
+    ``_purge_other_roots`` drops them again. Every
+    ``FileSystem.from_uri("mock://…")`` is a fresh, empty filesystem, so
+    ``_resolve_fs`` is patched to hand out one shared instance."""
+    from pyarrow import fs as pafs
+
+    shared = pafs._MockFileSystem()
+    monkeypatch.setattr(
+        mc, "_resolve_fs", lambda p: (shared, p.split("://", 1)[1]))
+    root = "mock://csr-test/run"
+    entry = (
+        np.array([3, 7], np.int64) << REPLICA_BITS,
+        np.array([0, 2, 3], np.int64),
+        np.array([7, 9, 3], np.int32),
+    )
+    mc._write_block(root, 4, entry)
+    names = shared.get_file_info(pafs.FileSelector("csr-test/run/_decoded/b4"))
+    assert sorted(i.base_name for i in names) == [
+        "indices.npy", "indptr.npy", "vids.npy"]
+    with pytest.raises(FileNotFoundError):  # no files: a fault, no entry
+        mc._load_block(root, 5)
+    assert (root, 5) not in mc._CSR_CACHE
+    before = mc._CSR_CACHE_BYTES[0]
+    got = mc._load_block(root, 4)
+    for a, b in zip(got, entry):
+        assert not isinstance(a, np.memmap)
+        assert a.dtype == b.dtype and np.array_equal(a, b)
+    assert mc._CSR_CACHE[(root, 4)] is got
+    assert mc._CSR_CACHE_BYTES[0] - before == sum(a.nbytes for a in entry)
+    assert mc._load_block(root, 4) is got  # a hit, not a second read
+    mc._purge_other_roots("mock://csr-test/other")
+    assert (root, 4) not in mc._CSR_CACHE
+    assert mc._CSR_CACHE_BYTES[0] == before
+
+
+@pytest.mark.parametrize("fail", ["save", "rename"])
+def test_failed_publish_raises(tmp_path, monkeypatch, fail):
+    """The pack's ``.npy`` files are the only copy of a block, so a save
+    that fails (ENOSPC) or a rename that fails with no published dir
+    must fail the pack task — and leave no tmp or half-written dir."""
+    import errno
+    import os
+
+    def boom(*_a, **_k):
+        raise OSError(errno.ENOSPC, "No space left on device")
+
+    if fail == "save":
+        monkeypatch.setattr(np, "save", boom)
+    else:
+        monkeypatch.setattr(os, "rename", boom)
+    entry = (np.array([1 << REPLICA_BITS]), np.array([0, 1]), np.array([2]))
+    with pytest.raises(OSError, match="No space"):
+        mc._write_block(str(tmp_path), 3, entry)
+    assert os.listdir(tmp_path / "_decoded") == []
+
+
+def test_failed_read_fails_kernel(tmp_path, monkeypatch):
+    """A routed block always has files, so a block that cannot be read
+    fails the kernel call (the task is retried) instead of returning no
+    arrivals: a missing local block, and a non-local read error."""
+    coupons = pa.table({
+        "block_id": pa.array([7], pa.int32()),
+        "rkey": pa.array([1 << REPLICA_BITS], pa.int64()),
+        "c": pa.array([10], pa.int64()),
+    })
+    with pytest.raises(FileNotFoundError):
+        mc._walk_kernel(str(tmp_path), EPS, 1, 0)(coupons)
+
+    class FlakyFS:
+        def open_input_file(self, path):
+            raise OSError(f"transient read error: {path}")
+
+    monkeypatch.setattr(
+        mc, "_resolve_fs", lambda p: (FlakyFS(), p.split("://", 1)[1]))
+    root = "mock://csr-test/flaky"
+    with pytest.raises(OSError, match="transient"):
+        mc._walk_kernel(root, EPS, 1, 0)(coupons)
+    assert (root, 7) not in mc._CSR_CACHE

@@ -150,6 +150,17 @@ def test_mc_empty_graph(spark):
     assert info["total_visits"] == 0 and info["iterations"] == 0
 
 
+def test_mc_edgeless_graph_keeps_start_coupons(spark):
+    """No edges → no CSR blocks: every walk is dangling, so ζ stays at
+    the K start coupons and the ranks are uniform."""
+    empty = spark.createDataFrame([], "src long, dst long")
+    verts = spark.createDataFrame([(1,), (2,), (3,)], "vid long")
+    ranks, info = pagerank_monte_carlo(spark, empty, verts,
+                                       walks_per_vertex=4, iterations=3)
+    assert ranks_dict(ranks) == {1: 1 / 3, 2: 1 / 3, 3: 1 / 3}
+    assert info["n_blocks"] == 0 and info["total_visits"] == 12
+
+
 def test_route_expr_both_paths(spark):
     """Coupon->block expression routing (pagerank_mc.route_expr) against a
     numpy searchsorted oracle, through BOTH implementations: the chained
@@ -217,7 +228,7 @@ def test_route_expr_sparse_block_ids(spark):
             assert got[rk] == e, (nb, rk)
 
 
-def test_mc_skipped_block_id_walks_survive(spark):
+def test_mc_skipped_block_id_walks_survive(spark, tmp_path):
     """A vertex with out_deg == edges_per_block makes the prefix-sum
     floor-division SKIP a block id (weights 99,101,6 at epb=100 → ids
     0,0,2). Before the fix, expression routing emitted positional ids, so
@@ -232,7 +243,8 @@ def test_mc_skipped_block_id_walks_survive(spark):
     )
     edges = spark.createDataFrame(pairs, "src long, dst long")
     # premise guard: the plan really does skip an id at this block size
-    assign, _csr, meta = plan_walk_blocks(edges, edges_per_block=100)
+    assign, meta = plan_walk_blocks(
+        edges, str(tmp_path / "csr"), edges_per_block=100)
     ids = meta["block_ids"]
     for df in meta["cached"]:
         df.unpersist()
@@ -325,59 +337,6 @@ def test_publish_block_race_loser_discards(tmp_path):
     leftovers = [p for p in (tmp_path / "_decoded").iterdir()
                  if ".tmp." in p.name]
     assert leftovers == []
-
-
-def test_preload_all_decode_once_then_mmap(tmp_path, monkeypatch):
-    """Local-root warms decode each block's parquet AT MOST ONCE per
-    host: the first preload decodes + publishes ``_decoded/`` .npy files;
-    every later load — repeat warm, post-eviction reload, or a fresh
-    worker's cold cache — serves np.memmap views with ZERO parquet reads
-    (the shared-decode design that fixed the anti-scaling warm phase).
-    Pure pyarrow, no Spark session."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from montecarlopagerank_spark.algos import pagerank_mc as mc
-
-    root = str(tmp_path / "csr")
-    for bid in (0, 2):  # sparse ids, like the real planner's
-        d = tmp_path / "csr" / f"block_id={bid}"
-        d.mkdir(parents=True)
-        pq.write_table(
-            pa.table({
-                "vids": [[bid << 8, (bid << 8) + 1]],
-                "indptr": [[0, 1, 2]],
-                "indices": [[(bid << 8) + 1, bid << 8]],
-            }),
-            str(d / "part-0.parquet"),
-        )
-    mc._purge_other_roots("__nothing__")  # clean slate for this root
-    calls = {"n": 0}
-    real_read = pq.read_table
-
-    def counting_read(*a, **k):
-        calls["n"] += 1
-        return real_read(*a, **k)
-
-    monkeypatch.setattr(mc.pq, "read_table", counting_read)
-    mc._preload_all(root)
-    assert calls["n"] == 2  # one decode per block, published as .npy
-    assert (root, 0) in mc._CSR_CACHE and (root, 2) in mc._CSR_CACHE
-    assert isinstance(mc._CSR_CACHE[(root, 0)][0], np.memmap)
-    assert (tmp_path / "csr" / "_decoded" / "b0" / "vids.npy").exists()
-    mc._preload_all(root)  # second warm: guard fires, zero reads
-    assert calls["n"] == 2
-    # post-eviction reload and a cold cache (≈ another worker on the
-    # host) both serve from the published files — still zero reads
-    mc._CSR_CACHE.pop((root, 2))
-    mc._preload_all(root)
-    assert calls["n"] == 2
-    mc._purge_other_roots("__nothing__")
-    mc._preload_all(root)
-    assert calls["n"] == 2
-    got = mc._load_block(root, 2)
-    assert list(got[0]) == [2 << 8, (2 << 8) + 1]  # mmap content intact
 
 
 def test_mc_fuse_invariance(spark, gnutella_mini):
@@ -514,43 +473,47 @@ def test_pi_weighted_multiplicity_equals_multigraph(spark):
 
 
 def test_mc_pack_time_publication(spark, gnutella_mini, tmp_path):
-    """The pack kernel must publish each block's decoded arrays as mmap
-    side-files AT PACK TIME (under <csr>/_decoded), so the warm pass
-    only mmaps instead of re-reading + re-decoding a parquet round-trip
-    — the fix for the anti-scaling MC warm phase. A regression to
-    lazy-only publication would silently revive it."""
+    """The pack job writes the CSR once, as each block's three ``.npy``
+    arrays under <csr>/_decoded — one dir per block the run routes to,
+    and no parquet copy of the graph anywhere under the state root."""
     import glob
     import os
 
     root = str(tmp_path / "mc_state")
     r, info = pagerank_monte_carlo(
         spark, gnutella_mini, walks_per_vertex=20, iterations=3, seed=3,
-        edges_per_block=1 << 12, state_root=root,
+        edges_per_block=64, state_root=root,
     )
     assert info["total_visits"] > 0
-    blocks = glob.glob(os.path.join(root, "csr", "block_id=*"))
     published = glob.glob(os.path.join(root, "csr", "_decoded", "b*"))
-    assert blocks, "CSR parquet side-files missing"
-    assert len(published) == len(blocks)
+    assert info["n_blocks"] > 1
+    assert len(published) == info["n_blocks"]
     for d in published:
-        for name in ("vids", "indptr", "indices"):
-            assert os.path.exists(os.path.join(d, f"{name}.npy"))
+        assert sorted(os.listdir(d)) == [
+            "indices.npy", "indptr.npy", "vids.npy"]
+    assert not glob.glob(os.path.join(root, "csr", "**", "*.parquet"),
+                         recursive=True)
+    assert not glob.glob(os.path.join(root, "csr", "block_id=*"))
 
 
-def test_mc_checkpoint_run_keeps_parquet_csr(spark, gnutella_mini, tmp_path):
-    """A resumable run (checkpoint_dir) must still write the durable
-    parquet CSR side-files — the noop-sink shortcut is scratch-only."""
-    import glob
-    import os
+def test_mc_checkpoint_resume_repacks_csr(spark, gnutella_mini, tmp_path):
+    """The CSR is re-packed on every call and never read across calls: a
+    checkpointed run's state root can be deleted, and resuming to more
+    supersteps still gives the ranks of an uninterrupted run."""
+    import shutil
 
-    root = str(tmp_path / "mc_state")
-    r, info = pagerank_monte_carlo(
-        spark, gnutella_mini, walks_per_vertex=20, iterations=2, seed=3,
-        edges_per_block=1 << 12, state_root=root,
-        checkpoint_dir=str(tmp_path / "ck"),
-    )
-    assert info["total_visits"] > 0
-    blocks = glob.glob(os.path.join(root, "csr", "block_id=*"))
-    published = glob.glob(os.path.join(root, "csr", "_decoded", "b*"))
-    assert blocks, "resumable run must keep the parquet CSR"
-    assert len(published) == len(blocks)
+    kw = dict(walks_per_vertex=20, seed=3, edges_per_block=64)
+    root, ck = tmp_path / "mc_state", str(tmp_path / "ck")
+    _, info = pagerank_monte_carlo(
+        spark, gnutella_mini, iterations=2, state_root=str(root),
+        checkpoint_dir=ck, **kw)
+    assert info["iterations"] == 2
+    shutil.rmtree(root)
+    resumed, info_r = pagerank_monte_carlo(
+        spark, gnutella_mini, iterations=4, state_root=str(root),
+        checkpoint_dir=ck, resume=True, **kw)
+    full, info_f = pagerank_monte_carlo(
+        spark, gnutella_mini, iterations=4, **kw)
+    assert info_r["iterations"] == info_f["iterations"] == 4
+    assert info_r["total_visits"] == info_f["total_visits"]
+    assert ranks_dict(resumed) == ranks_dict(full)
