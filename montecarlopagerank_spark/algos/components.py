@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from montecarlopagerank_spark.operators.state import StateStore
+from montecarlopagerank_spark.operators.checkpoint import open_store
 
 _P1 = 1_000_000_007
 _P2 = 998_244_353
@@ -103,43 +103,34 @@ def connected_components(
     pagerank_power); ``resume=True`` continues from the last complete
     round — bit-identical final labels, since each round is a pure
     function of the committed pair set."""
-    store = StateStore(spark)  # flat per-round materializer (state.py)
+    # format 2: every committed round's manifest carries its fingerprint
+    store, last = open_store(
+        spark, checkpoint_dir, {"algo": "cc", "format": 2}, resume
+    )  # flat per-round materializer (state.py), durable with checkpoint_dir
+
     def fp(d: dict) -> tuple:
         return (d["n"], d["h1"], d["h2"])
 
-    ckpt = prev = p = None
     start, done = 0, False
-    if checkpoint_dir:
-        from montecarlopagerank_spark.operators.checkpoint import (
-            CheckpointManager,
-        )
-
-        ckpt = CheckpointManager(
-            spark, checkpoint_dir, {"algo": "cc", "format": 1}
-        )
-        if resume and (last := ckpt.last_complete_step()) is not None:
-            man = ckpt.manifest(last)
-            p = ckpt.load_tables(last, ["pairs"])["pairs"]
-            prev = tuple(man["metrics"]["fingerprint"])
-            done = bool(man["metrics"].get("converged"))
-            start = last + 1
-    if p is None:
+    if last is not None:
+        metrics = store.manifest(last)["metrics"]
+        p = store.load_tables(last, ["pairs"])["pairs"]
+        prev, done = tuple(metrics["fingerprint"]), metrics["converged"]
+        start = last + 1
+    else:
         obs0, cols0 = _pair_stats("cc_init")
         p = store.materialize(_pairs(edges).observe(obs0, *cols0), "pairs")
         prev = fp(obs0.get)
     for it in range(start, max_iters if not done else start):
         obs, cols = _pair_stats(f"cc_round_{it}")
         nxt = _small_star(_large_star(p)).observe(obs, *cols)
-        if ckpt:
-            # parquet write = the round's ONE job; manifest commits after
-            p = ckpt.save_step(it, {"pairs": nxt}, {"converged": False})["pairs"]
-        else:
-            p = store.materialize(nxt, "pairs")
+
+        def round_metrics() -> dict:
+            cur = fp(obs.get)  # ready once the write job has run
+            return {"fingerprint": list(cur), "converged": cur == prev}
+
+        p = store.save_step(it, {"pairs": nxt}, round_metrics)["pairs"]
         cur = fp(obs.get)
-        if ckpt:
-            ckpt.update_metrics(
-                it, {"fingerprint": list(cur), "converged": cur == prev}
-            )
         if cur == prev:  # fixpoint (see module docstring on checksum safety)
             break
         prev = cur

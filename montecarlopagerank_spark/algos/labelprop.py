@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from montecarlopagerank_spark.operators.state import StateStore
+from montecarlopagerank_spark.operators.checkpoint import open_store
 
 
 def label_propagation(
@@ -59,21 +59,15 @@ def label_propagation(
         if vertices is not None
         else sym.select("u").withColumnRenamed("u", "v").distinct()
     )
-    store = StateStore(spark)  # flat per-superstep materializer (state.py)
-    ckpt, labels, start, done = None, None, 0, False
-    if checkpoint_dir:
-        from montecarlopagerank_spark.operators.checkpoint import (
-            CheckpointManager,
-        )
-
-        ckpt = CheckpointManager(
-            spark, checkpoint_dir, {"algo": "lpa", "format": 1}
-        )
-        if resume and (last := ckpt.last_complete_step()) is not None:
-            labels = ckpt.load_tables(last, ["labels"])["labels"]
-            done = bool(ckpt.manifest(last)["metrics"].get("converged"))
-            start = last + 1
-    if labels is None:
+    store, last = open_store(
+        spark, checkpoint_dir, {"algo": "lpa", "format": 1}, resume
+    )  # flat per-superstep materializer (state.py), durable with checkpoint_dir
+    start, done = 0, False
+    if last is not None:
+        labels = store.load_tables(last, ["labels"])["labels"]
+        done = store.manifest(last)["metrics"]["converged"]
+        start = last + 1
+    else:
         labels = store.materialize(
             verts.select("v", F.col("v").alias("label")), "labels"
         )
@@ -119,17 +113,13 @@ def label_propagation(
         observed = updated.observe(
             obs, F.sum(F.when(F.col("changed"), 1).otherwise(0)).alias("nc")
         ).select("v", "label")
-        if ckpt:
-            # parquet write = the superstep's ONE job; manifest after
-            labels = ckpt.save_step(
-                it, {"labels": observed}, {"converged": False}
-            )["labels"]
-        else:
-            labels = store.materialize(observed, "labels")
-        nc = int(obs.get["nc"] or 0)
-        if ckpt:
-            ckpt.update_metrics(it, {"n_changed": nc, "converged": nc == 0})
-        if nc == 0:
+
+        def step_metrics() -> dict:
+            nc = int(obs.get["nc"] or 0)  # ready once the write job has run
+            return {"n_changed": nc, "converged": nc == 0}
+
+        labels = store.save_step(it, {"labels": observed}, step_metrics)["labels"]
+        if step_metrics()["converged"]:
             break
     sym.unpersist()
     return labels

@@ -65,9 +65,9 @@ with EXACTLY ONE shuffle per superstep:
 
 Each segment ends in ONE write of a tagged ``(tag, block_id, rkey, c)``
 table: the segment's ζ accumulator (tag 1) and the carry-over coupon
-state (tag 0). Without ``checkpoint_dir`` it goes to the scratch
-``StateStore``; with it, ``CheckpointManager.save_step`` commits it as
-step ``seg[-1]`` — so a resumable run commits once per SEGMENT (up to
+state (tag 0), committed by the run's one store as ``save_step(seg[-1],
+...)``: a scratch slot without ``checkpoint_dir``, a durable step with
+it — so a resumable run commits once per SEGMENT (up to
 ``fuse_steps`` supersteps), and ``resume=True`` reads the last committed
 table back and continues at ``seg[-1] + 1``. Segment boundaries never
 change the walks (the RNG is seeded per logical (block, step)), so
@@ -132,8 +132,15 @@ from montecarlopagerank_spark.operators.adjacency import (
     REPLICA_BITS,
     plan_walk_blocks,
 )
-from montecarlopagerank_spark.operators.checkpoint import CheckpointManager
-from montecarlopagerank_spark.operators.state import StateStore
+# both store classes stay bound here for perfbench/tracing.py's wrappers
+from montecarlopagerank_spark.operators.checkpoint import (  # noqa: F401
+    CheckpointManager,
+    open_store,
+)
+from montecarlopagerank_spark.operators.state import (  # noqa: F401
+    StateStore,
+    _resolve_fs,
+)
 
 EPS = 0.15
 
@@ -208,44 +215,6 @@ _CSR_ARRAYS = ("vids", "indptr", "indices")
 # blocks, so they count in ``_CSR_CACHE_BYTES`` and leave with their
 # block.
 _LOCAL_IDS: dict[tuple[str, int], tuple] = {}
-
-
-def _strip_file_scheme(path: str) -> str | None:
-    """``file:`` URI → plain local path, else None. Accepts the absolute
-    forms ``file:///p``, ``file://localhost/p`` and the Hadoop/Spark-
-    normalized single-slash ``file:/p`` (``Path.toString`` emits that
-    form), which has no ``://`` and once fell through both
-    ``_resolve_fs`` and the publish-root stripping — so ``_publish_block``
-    os.makedirs'd a literal cwd-relative ``file:`` directory (the r4
-    junk-dir bug). Raises ``ValueError`` for a remote authority
-    (``file://host/p``) and a relative path (``file:rel/p``) instead of
-    silently turning them into ``/host/p`` and ``/rel/p``."""
-    if not path.startswith("file:"):
-        return None
-    rest = path[5:]
-    if rest.startswith("//"):
-        host, _, rest = rest[2:].partition("/")
-        if host not in ("", "localhost"):
-            raise ValueError(f"file URI names a remote host {host!r}: {path}")
-        return "/" + rest.lstrip("/")
-    if not rest.startswith("/"):
-        raise ValueError(f"file URI with a relative path: {path}")
-    return "/" + rest.lstrip("/")
-
-
-def _resolve_fs(path: str) -> tuple[pafs.FileSystem, str]:
-    """Resolve a CSR root to (pyarrow FileSystem, fs-local path). Plain
-    paths and ``file:`` URIs (any slash count) stay on the local FS;
-    other URIs (``hdfs://``, ``s3://``) go through
-    ``FileSystem.from_uri`` — this is what makes the worker-resident CSR
-    design work when state lives on DFS (the 10^12-edge deployment
-    shape), not only when executors share the driver's disk."""
-    local = _strip_file_scheme(path)
-    if local is not None:
-        return pafs.LocalFileSystem(), local
-    if "://" in path:
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), path
 
 
 def _is_local(csr_path: str) -> bool:
@@ -528,30 +497,23 @@ def pagerank_monte_carlo(
     t_setup = time.time()
     K = max(walks_per_vertex, 1)  # MonteCarloPageRank.scala:101
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # flat per-superstep materializer (state.py); its root also holds the
-    # CSR blocks the pack job writes (module docstring, item 1), so the
-    # graph never re-crosses the JVM→Arrow boundary per superstep
-    store = StateStore(spark, root=state_root)
+    # ONE superstep store (state.py; durable with checkpoint_dir): its
+    # scratch root also holds the CSR blocks the pack job writes (module
+    # docstring, item 1), so the graph never re-crosses the JVM→Arrow
+    # boundary per superstep. The committed block_ids depend on
+    # edges_per_block, and format 2 is the per-segment (tag, block_id,
+    # rkey, c) table: a checkpoint of any other run configuration or
+    # layout is refused on resume — before the csr dir is cleared and the
+    # O(E) pack runs. An auto edges_per_block is known only after
+    # planning, so it alone is checked then.
+    store, last = open_store(
+        spark, checkpoint_dir,
+        {"algo": "pagerank_mc", "format": 2, "K": K, "eps": eps,
+         "seed": seed, "edges_per_block": edges_per_block},
+        resume, root=state_root,
+        ignore=("edges_per_block",) if edges_per_block is None else (),
+    )
     csr_path = store.root.rstrip("/") + "/csr"
-    ckpt = None
-    last = None
-    if checkpoint_dir:
-        # the committed block_ids depend on edges_per_block, and format 2
-        # is the per-segment (tag, block_id, rkey, c) table: a checkpoint
-        # of any other run configuration or layout is refused on resume —
-        # before the csr dir is cleared and the O(E) pack runs. An auto
-        # edges_per_block is known only after planning, so it alone is
-        # checked then.
-        ckpt = CheckpointManager(
-            spark, checkpoint_dir,
-            {"algo": "pagerank_mc", "format": 2, "K": K, "eps": eps,
-             "seed": seed, "edges_per_block": edges_per_block},
-        )
-        if resume:
-            last = ckpt.last_complete_step(
-                ignore=("edges_per_block",) if edges_per_block is None else ())
-        else:
-            ckpt.clear()
     # re-packed on every call: clear a reused root's blocks first, or a
     # packed block's rename would lose to a stale one (_publish_block)
     fs, csr_dir = _resolve_fs(csr_path)
@@ -561,10 +523,10 @@ def pagerank_monte_carlo(
     blocks_assign, plan_meta = plan_walk_blocks(
         edges, csr_path, edges_per_block=edges_per_block, n_partitions=n_parts,
     )
-    if ckpt and edges_per_block is None:
-        ckpt.run_config["edges_per_block"] = plan_meta["edges_per_block"]
+    if checkpoint_dir and edges_per_block is None:
+        store.run_config["edges_per_block"] = plan_meta["edges_per_block"]
         if resume:
-            last = ckpt.last_complete_step()
+            last = store.last_complete_step()
     edges_per_block = plan_meta["edges_per_block"]
     bounds = plan_meta["bounds"]
     block_ids = plan_meta["block_ids"]
@@ -648,11 +610,11 @@ def pagerank_monte_carlo(
                     list(zip(rk.tolist(), c.tolist())), "rkey long, c long"
                 ))
             state = store.materialize(
-                _build_state(init.select(route, "rkey", "c")), "mcstate"
+                _build_state(init.select(route, "rkey", "c")), "state"
             )
             z_acc, agged = state.select("rkey", "c"), state  # ζ = K
         else:
-            z_acc, agged = _unpack(ckpt.load_tables(last, ["state"])["state"])
+            z_acc, agged = _unpack(store.load_tables(last, ["state"])["state"])
         for df in plan_meta["cached"]:  # planner pins (edges exchange,
             df.unpersist()  # degree table, block assignment) end with
             # setup — the loop reads only the CSR blocks and bounds
@@ -719,16 +681,13 @@ def pagerank_monte_carlo(
                 F.lit(1).alias("tag"), F.lit(-1).alias("block_id"),
                 "rkey", "c",
             )
-            if ckpt or seg[-1] != iterations - 1:
+            if checkpoint_dir or seg[-1] != iterations - 1:
                 seg_out = seg_out.unionByName(
                     agged.select(F.lit(0).alias("tag"), "block_id", "rkey", "c")
                 )
-            if ckpt:
-                seg_out = ckpt.save_step(
-                    seg[-1], {"state": seg_out}, {"segment": seg}
-                )["state"]
-            else:
-                seg_out = store.materialize(seg_out, "mcstate")
+            seg_out = store.save_step(
+                seg[-1], {"state": seg_out}, {"segment": seg}
+            )["state"]
             # parquet erases partitioning, so the next segment's first
             # kernel re-exchanges the carry-over state — one small
             # (O(occupied vertices)) exchange per SEGMENT, the price of

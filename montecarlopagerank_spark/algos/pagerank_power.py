@@ -11,22 +11,27 @@ per SURVEY.md §2.6 "reference bugs":
   log-space dance (PowerIterationPageRank.scala:37-49) — unnecessary in
   double space, and `groupBy(dst).sum()` plans partial+final hash
   aggregation automatically (the reference's reduceByKey equivalent);
-* the dangling mass is a scalar aggregate carried via a broadcast 1-row
-  cross join — not the reference's `-1` sentinel row that pollutes the
-  vertex table and costs a `lookup(-1)` driver action per superstep
+* the dangling mass is a scalar: the previous superstep's write job
+  observes it, and the next update adds it as a driver-side literal —
+  not the reference's `-1` sentinel row that pollutes the vertex table
+  and costs a `lookup(-1)` driver action per superstep
   (PowerIterationPageRank.scala:88-89,111-119);
 * exactly `max_iters` supersteps with L∞ convergence stop (the reference
   has an inclusive-range off-by-one and no convergence control,
   PowerIterationPageRank.scala:78, Conf.scala:10).
 
-Scale shape: the loop-invariant (src, dst, inv_deg) edge table is hash-
-partitioned by src once and persisted; each superstep shuffles only the
-rank vector (one groupBy(dst) with map-side combine — the one unavoidable
-shuffle) and runs EXACTLY ONE Spark job: the state write, with the
-convergence delta and next step's dangling mass riding along as
-``DataFrame.observe`` metrics on the written frame (no separate per-step
-aggregate job — at high core counts a second job's fixed schedule+IO cost
-dominates the superstep and caps scaling efficiency). The state table is
+Scale shape: the loop-invariant (src, dst, inv_deg) edge table is
+hash-partitioned by src once and persisted; each superstep shuffles only
+the rank vector (one groupBy(dst) with map-side combine — the one
+unavoidable shuffle) and commits its state with ONE ``save_step``,
+scratch or durable at the same Spark jobs. That is not one job: with AQE
+on, each shuffle map stage runs as its own query-stage job before the
+write — 4 jobs per superstep in the local[4] test session
+(tests/test_checkpoint.py compares scratch and durable). The convergence
+delta and next step's dangling mass ride the write as
+``DataFrame.observe`` metrics (no separate per-step aggregate job — at
+high core counts a second job's fixed schedule+IO cost dominates the
+superstep and caps scaling efficiency). The state table is
 (v, rank, dang): carrying the loop-invariant dangling flag IN the state
 lets the update join read the observed-mass flag for free — no per-step
 side-table join at all (a cached co-partitioned vflag join, the round-3
@@ -53,8 +58,12 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from montecarlopagerank_spark.operators.checkpoint import CheckpointManager
-from montecarlopagerank_spark.operators.state import StateStore
+# both store classes stay bound here for perfbench/tracing.py's wrappers
+from montecarlopagerank_spark.operators.checkpoint import (
+    CheckpointManager,
+    open_store,
+)
+from montecarlopagerank_spark.operators.state import StateStore  # noqa: F401
 
 EPS = 0.15  # jump probability, MonteCarloPageRank.scala:28
 
@@ -132,8 +141,8 @@ def pagerank_power(
     """Returns (``ranks(v:long, rank:double)``, info dict with iterations/
     deltas/converged). With ``checkpoint_dir``, every superstep commits a
     resumable parquet snapshot + manifest; ``resume=True`` continues from
-    the last complete step. Without it, ``localCheckpoint`` truncates
-    lineage each step (not resumable, faster for benches).
+    the last complete step. Without it, each step goes to a scratch
+    parquet slot instead (state.py; lineage truncated, not resumable).
 
     ``sources`` (optional, one column ``v``) switches to PERSONALIZED
     PageRank: the teleport vector p is uniform over the source set instead
@@ -159,6 +168,14 @@ def pagerank_power(
     Dangling = no out-edges at all, as in the unweighted case. The loop
     shape is unchanged — only the cached per-edge fraction differs."""
     t_setup = time.time()
+    # format 3: every committed step's manifest carries the metrics resume
+    # reads (deltas, next_dangling_mass); format-2 steps could lack them
+    store, last = open_store(
+        spark, checkpoint_dir,
+        {"algo": "pagerank_power", "format": 3, "eps": eps, "tol": tol,
+         "weight_col": weight_col, "personalized": sources is not None},
+        resume,
+    )
     n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     verts, deg, contrib_edges, plan_cached = _prepare(
         edges, vertices, n_parts, weight_col
@@ -219,37 +236,18 @@ def pagerank_power(
         if not ns:
             raise ValueError("personalized PageRank: no source id is in the graph")
 
-    ckpt = None
-    store = StateStore(spark)  # scratch superstep materializer (state.py)
-    start_step = 0
+    start_step = 0 if last is None else last + 1
     deltas: list[float] = []
-    m = None  # dangling mass of the *current* rank vector
-    if checkpoint_dir:
-        # format 2: the state table carries (v, rank, dang); the round-3
-        # (v, rank)-only checkpoints lack the key and are refused
-        ckpt = CheckpointManager(
-            spark, checkpoint_dir,
-            {"algo": "pagerank_power", "format": 2, "eps": eps, "tol": tol,
-             "weight_col": weight_col, "personalized": sources is not None},
-        )
-        if resume:
-            last = ckpt.last_complete_step()
-            if last is not None:
-                state = ckpt.load_tables(last, ["state"])["state"].select(
-                    "v", "rank", "dang"
-                )
-                man = ckpt.manifest(last) or {}
-                deltas = list(man.get("metrics", {}).get("deltas", []))
-                m = man.get("metrics", {}).get("next_dangling_mass")
-                start_step = last + 1
-                if man.get("metrics", {}).get("converged"):
-                    return state.select("v", "rank"), {
-                        "iterations": last + 1, "converged": True,
-                        "deltas": deltas, "n": n, "resumed_at": last + 1,
-                    }
-        else:
-            ckpt.clear()
-    if start_step == 0:
+    if last is not None:  # m: dangling mass of the *current* rank vector
+        state = store.load_tables(last, ["state"])["state"]
+        metrics = store.manifest(last)["metrics"]
+        deltas, m = metrics["deltas"], metrics["next_dangling_mass"]
+        if metrics["converged"]:
+            return state.select("v", "rank"), {
+                "iterations": last + 1, "converged": True,
+                "deltas": deltas, "n": n, "resumed_at": last + 1,
+            }
+    else:
         if init_ranks is not None:
             # warm start: project the prior vector onto the current vertex
             # set (new vertices ← 1/n), renormalize to a distribution, and
@@ -289,13 +287,6 @@ def pagerank_power(
                 )
             )
             m = crow["nsd"] / ns  # π0 = p → dangling mass of the source set
-    if m is None:  # run killed between a step's commit and its metrics
-        # update: one recovery job
-        m = (
-            state.filter("dang")
-            .agg(F.sum("rank").alias("m")).collect()[0]["m"] or 0.0
-        )
-
     converged = False
     it = start_step
     step_secs: list[float] = []  # per-superstep wall time (diagnostic)
@@ -384,35 +375,26 @@ def pagerank_power(
             F.max("dv").alias("d"),
             F.sum(F.when(F.col("dang"), F.col("rank"))).alias("m"),
         ).select("v", "rank", "dang")
-        if ckpt:
-            # parquet write = the step's ONE (and only) job; manifest commits after
-            staged = ckpt.save_step(
-                it, {"state": observed},
-                {"deltas": deltas, "dangling_mass": m, "converged": False},
-            )["state"]
-        else:
-            staged = store.materialize(observed)
-        row = obs.get
-        delta = row["d"]
-        m = row["m"] or 0.0
-        deltas.append(float(delta))
+
+        def step_metrics() -> dict[str, Any]:
+            # observed metrics are ready once the write job has run
+            row = obs.get
+            d = float(row["d"])
+            return {"deltas": deltas + [d], "next_dangling_mass": row["m"] or 0.0,
+                    "converged": bool(d < tol)}
+
+        state = store.save_step(it, {"state": observed}, step_metrics)["state"]
+        metrics = step_metrics()
+        deltas, m = metrics["deltas"], metrics["next_dangling_mass"]
         step_secs.append(round(time.time() - t_step, 3))
-        state = staged
-        if ckpt:
-            # re-commit manifest with the convergence metric (cheap, no data)
-            ckpt.update_metrics(
-                it,
-                {"deltas": deltas, "next_dangling_mass": m,
-                 "converged": bool(delta < tol)},
-            )
-        if delta < tol:
+        if metrics["converged"]:
             converged = True
             break
 
     contrib_edges.unpersist()
     vflag.unpersist()
     ranks = state.select("v", "rank")
-    if ckpt and it >= start_step and max_iters > start_step:
+    if isinstance(store, CheckpointManager) and max_iters > start_step:
         store.close()  # final ranks read from the durable checkpoint dir
     else:
         # final ranks still scan the scratch slot: pin them and leave the

@@ -21,9 +21,15 @@ same-name write would delete the very files its own plan scans
 a plan passed to ``materialize(name)`` may reference the last two
 ``name`` results, never older ones.
 
-``CheckpointManager`` (checkpoint.py) is the *durable* variant of this —
-same write-then-reread shape plus a commit manifest. StateStore is the
-scratch variant for runs that don't need resumability.
+A superstep loop holds ONE store and commits each step with ONE call,
+``save_step(step, tables, metrics)``: here ``materialize`` per table.
+``CheckpointManager`` (checkpoint.py) is the durable subclass — the same
+scratch store plus a commit manifest: its ``save_step`` writes the tables
+under the checkpoint root, then commits one manifest carrying the step's
+observed metrics. ``checkpoint.open_store`` picks the store for a run.
+Scratch and checkpoint roots may be plain paths or ``file:``/DFS URIs;
+Spark takes them as given, and every other file operation (manifests,
+listings, clears, the MC CSR blocks) resolves them via ``_resolve_fs``.
 """
 
 from __future__ import annotations
@@ -32,7 +38,9 @@ import atexit
 import os
 import shutil
 import tempfile
+from typing import Callable
 
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 
 # scratch roots pending cleanup: results returned to callers may still scan
@@ -49,6 +57,45 @@ def _cleanup_scratch() -> None:
 
 
 atexit.register(_cleanup_scratch)
+
+
+def _strip_file_scheme(path: str) -> str | None:
+    """``file:`` URI → plain local path, else None. Accepts the absolute
+    forms ``file:///p``, ``file://localhost/p`` and the Hadoop/Spark-
+    normalized single-slash ``file:/p`` (``Path.toString`` emits that
+    form), which has no ``://`` and once fell through both
+    ``_resolve_fs`` and the publish-root stripping — so ``_publish_block``
+    os.makedirs'd a literal cwd-relative ``file:`` directory (the r4
+    junk-dir bug). Raises ``ValueError`` for a remote authority
+    (``file://host/p``) and a relative path (``file:rel/p``) instead of
+    silently turning them into ``/host/p`` and ``/rel/p``."""
+    if not path.startswith("file:"):
+        return None
+    rest = path[5:]
+    if rest.startswith("//"):
+        host, _, rest = rest[2:].partition("/")
+        if host not in ("", "localhost"):
+            raise ValueError(f"file URI names a remote host {host!r}: {path}")
+        return "/" + rest.lstrip("/")
+    if not rest.startswith("/"):
+        raise ValueError(f"file URI with a relative path: {path}")
+    return "/" + rest.lstrip("/")
+
+
+def _resolve_fs(path: str) -> tuple[pafs.FileSystem, str]:
+    """Resolve a state or checkpoint root to (pyarrow FileSystem,
+    fs-local path). Plain paths and ``file:`` URIs (any slash count) stay
+    on the local FS; other URIs (``hdfs://``, ``s3://``) go through
+    ``FileSystem.from_uri`` — this is what makes the worker-resident CSR
+    design and durable checkpoints work when state lives on DFS (the
+    10^12-edge deployment shape), not only when executors share the
+    driver's disk."""
+    local = _strip_file_scheme(path)
+    if local is not None:
+        return pafs.LocalFileSystem(), local
+    if "://" in path:
+        return pafs.FileSystem.from_uri(path)
+    return pafs.LocalFileSystem(), path
 
 
 class StateStore:
@@ -80,6 +127,16 @@ class StateStore:
         df.write.option("compression", "snappy").mode("overwrite").parquet(path)
         self._seq[name] = seq + 1
         return self.spark.read.parquet(path)
+
+    def save_step(
+        self, step: int, tables: dict[str, DataFrame],
+        metrics: dict | Callable[[], dict],
+    ) -> dict[str, DataFrame]:
+        """Commit superstep ``step``: materialize each table under its
+        name and return the re-read frames. ``metrics`` (a dict, or a
+        zero-argument callable returning one once the write has run) is
+        what the durable subclass records; scratch keeps nothing."""
+        return {name: self.materialize(df, name) for name, df in tables.items()}
 
     def close(self) -> None:
         if self._own:

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from montecarlopagerank_spark.algos.pagerank_mc import pagerank_monte_carlo
@@ -216,3 +218,123 @@ def test_lpa_resume_identical(spark, gnutella_mini, tmp_path):
         resume=True,
     )
     assert labels(resumed) == full
+
+
+@pytest.fixture(scope="module")
+def path41(spark):
+    """A 41-vertex path: 7 committed CC rounds (0-6), and LPA labels that
+    keep changing for far more supersteps than the tests below run."""
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "src long, dst long")
+
+
+def _cc(spark, edges, **kw):
+    from montecarlopagerank_spark.algos.components import connected_components
+
+    df = connected_components(spark, edges, **kw)
+    return {r["v"]: r["component"] for r in df.collect()}
+
+
+def _lpa(spark, edges, **kw):
+    from montecarlopagerank_spark.algos.labelprop import label_propagation
+
+    df = label_propagation(spark, edges, **kw)
+    return {r["v"]: r["label"] for r in df.collect()}
+
+
+def _pi(spark, edges, **kw):
+    return ranks_dict(pagerank_power(spark, edges, tol=0.0, **kw)[0])
+
+
+_RUNS = {"pi": _pi, "cc": _cc, "lpa": _lpa}
+
+
+@pytest.mark.parametrize("algo", sorted(_RUNS))
+def test_resume_after_interrupted_commit(spark, path41, tmp_path,
+                                         monkeypatch, algo):
+    """A run killed right after step 1's manifest commit resumes to the
+    uninterrupted result: the one commit carries every metric resume
+    reads (a manifest rewritten later with the step's metrics would be
+    missing them here)."""
+    run, ck = _RUNS[algo], str(tmp_path / algo)
+    full = run(spark, path41, max_iters=5)
+    save = CheckpointManager.save_step
+
+    def killed(self, step, tables, metrics):
+        out = save(self, step, tables, metrics)
+        if step == 1:
+            raise RuntimeError("killed after the commit of step 1")
+        return out
+
+    monkeypatch.setattr(CheckpointManager, "save_step", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        run(spark, path41, max_iters=5, checkpoint_dir=ck)
+    monkeypatch.undo()
+    assert os.path.isfile(f"{ck}/step=1/manifest.json")
+    assert not os.path.exists(f"{ck}/step=2")
+    resumed = run(spark, path41, max_iters=5, checkpoint_dir=ck, resume=True)
+    assert resumed == pytest.approx(full, abs=1e-12)
+
+
+@pytest.mark.parametrize("algo", ["cc", "lpa"])
+def test_fresh_run_owns_checkpoint_dir(spark, path41, tmp_path, algo):
+    """``resume=False`` clears the checkpoint dir: after a 41-vertex run
+    committed steps 0-6, a fresh 2-vertex run in the same dir commits
+    fewer steps, and resuming it must not pick up the stale step 6."""
+    run, ck = _RUNS[algo], str(tmp_path / algo)
+    run(spark, path41, max_iters=7, checkpoint_dir=ck)
+    assert os.path.isfile(f"{ck}/step=6/manifest.json")
+    pair = spark.createDataFrame([(0, 1)], "src long, dst long")
+    fresh = run(spark, pair, max_iters=2, checkpoint_dir=ck)
+    assert len(fresh) == 2
+    assert run(spark, pair, max_iters=2, checkpoint_dir=ck,
+               resume=True) == fresh
+
+
+def test_pi_file_uri_checkpoint_roots(spark, gnutella_mini, tmp_path,
+                                      monkeypatch):
+    """``file:`` checkpoint roots (Spark's single-slash form and the
+    triple-slash form) resolve to their absolute path: a run commits,
+    resumes to the uninterrupted ranks, and no cwd-relative ``file:``
+    entry appears. A ``file://host/`` root is refused before any Spark
+    job runs."""
+    monkeypatch.chdir(tmp_path)
+    full = _pi(spark, gnutella_mini, max_iters=4)
+    for i, uri in enumerate((f"file:{tmp_path}/ck0", f"file://{tmp_path}/ck1")):
+        _pi(spark, gnutella_mini, max_iters=2, checkpoint_dir=uri)
+        assert os.path.isfile(tmp_path / f"ck{i}" / "step=1" / "manifest.json")
+        resumed = _pi(spark, gnutella_mini, max_iters=4, checkpoint_dir=uri,
+                      resume=True)
+        assert resumed == pytest.approx(full, abs=1e-12)
+    assert not [p for p in os.listdir(tmp_path) if p.startswith("file:")]
+    sc = spark.sparkContext
+    sc.setJobGroup("file-host-root", "refused checkpoint root")
+    try:
+        with pytest.raises(ValueError, match="remote host"):
+            _pi(spark, gnutella_mini, max_iters=2,
+                checkpoint_dir="file://elsewhere/ck")
+        assert sc.statusTracker().getJobIdsForGroup("file-host-root") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.mark.parametrize("algo", sorted(_RUNS))
+def test_jobs_per_step_durable_equals_scratch(spark, path41, tmp_path, algo):
+    """A durable superstep costs the Spark jobs of a scratch one: the
+    jobs that steps 3-4 add to a 2-step run are the same with and without
+    a checkpoint dir (counted per job group with the status tracker)."""
+    run, sc, k = _RUNS[algo], spark.sparkContext, 2
+
+    def jobs(steps, **kw):
+        group = f"jobs-{algo}-{steps}-{bool(kw)}"
+        sc.setJobGroup(group, group)
+        try:
+            run(spark, path41, max_iters=steps, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    scratch = jobs(k + 2) - jobs(k)
+    durable = (jobs(k + 2, checkpoint_dir=str(tmp_path / "a"))
+               - jobs(k, checkpoint_dir=str(tmp_path / "b")))
+    assert scratch == durable > 0

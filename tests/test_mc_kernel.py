@@ -13,6 +13,7 @@ import pyarrow as pa
 import pytest
 
 from montecarlopagerank_spark.algos import pagerank_mc as mc
+from montecarlopagerank_spark.operators import state
 from montecarlopagerank_spark.operators.adjacency import REPLICA_BITS
 
 EPS = 0.15
@@ -168,13 +169,13 @@ def test_temporaries_do_not_grow_with_walks(block):
     ("file://localhost/p/x", "/p/x"),
 ])
 def test_strip_file_scheme_local_forms(uri, path):
-    assert mc._strip_file_scheme(uri) == path
+    assert state._strip_file_scheme(uri) == path
 
 
 @pytest.mark.parametrize("uri", ["file://host/p", "file:rel/p"])
 def test_strip_file_scheme_rejects_host_and_relative(uri):
     with pytest.raises(ValueError):
-        mc._strip_file_scheme(uri)
+        state._strip_file_scheme(uri)
 
 
 def test_non_local_root_reads_into_counted_lru(monkeypatch):

@@ -265,7 +265,7 @@ def test_mc_skipped_block_id_walks_survive(spark, tmp_path):
 def test_mc_state_root_file_uri(spark, gnutella_mini, tmp_path):
     """Worker-resident CSR reads must be filesystem-agnostic: with
     ``state_root`` given as a ``file://`` URI, every side-file read in the
-    walk kernels goes through pyarrow.fs (pagerank_mc._resolve_fs) instead
+    walk kernels goes through pyarrow.fs (state._resolve_fs) instead
     of os.path — the shape that works when superstep state lives on DFS.
     Output must be byte-identical to the plain-local-path run."""
     r_local, _ = pagerank_monte_carlo(
@@ -292,15 +292,15 @@ def test_mc_state_root_file_uri_single_slash(spark, gnutella_mini, tmp_path):
     was returned unstripped, so ``_publish_block`` recreated the literal
     ``file:`` junk dir under cwd (the exact bug 470f79c fixed for the
     double-slash form)."""
-    from montecarlopagerank_spark.algos import pagerank_mc as mc
+    from montecarlopagerank_spark.operators.state import _strip_file_scheme
 
-    assert mc._strip_file_scheme(f"file:{tmp_path}/x") == f"{tmp_path}/x"
-    assert mc._strip_file_scheme(f"file://{tmp_path}/x") == f"{tmp_path}/x"
-    assert mc._strip_file_scheme(f"file:///{tmp_path.name}") == (
+    assert _strip_file_scheme(f"file:{tmp_path}/x") == f"{tmp_path}/x"
+    assert _strip_file_scheme(f"file://{tmp_path}/x") == f"{tmp_path}/x"
+    assert _strip_file_scheme(f"file:///{tmp_path.name}") == (
         "/" + tmp_path.name
     )
-    assert mc._strip_file_scheme("/plain/path") is None
-    assert mc._strip_file_scheme("hdfs://nn/path") is None
+    assert _strip_file_scheme("/plain/path") is None
+    assert _strip_file_scheme("hdfs://nn/path") is None
     r_local, _ = pagerank_monte_carlo(
         spark, gnutella_mini, walks_per_vertex=20, iterations=5, seed=3,
         edges_per_block=1 << 12,
@@ -458,14 +458,18 @@ def test_pi_weighted_vs_python_oracle(spark):
 
 
 def test_pi_weighted_multiplicity_equals_multigraph(spark):
-    """Collapsed (src,dst,weight=multiplicity) == raw multigraph PI."""
+    """Collapsed (src,dst,weight=multiplicity) == raw multigraph PI. The
+    two have the same contribution fractions, so their iterates agree at
+    every step, and 20 fixed supersteps (tol=0) compare them without
+    running to the fixpoint."""
     dup = [(0, 1), (0, 1), (0, 2), (1, 2), (2, 0), (2, 0), (2, 0)]
     e = spark.createDataFrame(dup, "src long, dst long")
     w = e.groupBy("src", "dst").agg(F.count("*").cast("double").alias("weight"))
-    r1, _ = pagerank_power(spark, e, tol=1e-12, max_iters=300)
-    r2, _ = pagerank_power(
-        spark, w, tol=1e-12, max_iters=300, weight_col="weight"
+    r1, i1 = pagerank_power(spark, e, tol=0.0, max_iters=20)
+    r2, i2 = pagerank_power(
+        spark, w, tol=0.0, max_iters=20, weight_col="weight"
     )
+    assert i1["iterations"] == i2["iterations"] == 20
     a, b = ranks_dict(r1), ranks_dict(r2)
     assert set(a) == set(b)
     for v in a:
