@@ -13,9 +13,15 @@ hash-partitioned by src (consumed by the auth half-step) and once by dst
 (consumed by the hub half-step), so no superstep ever exchanges O(E) data —
 each half-step shuffles only the O(V) score vector into the matching edge
 partitioning via a shuffle_hash join (score vectors are never broadcast:
-O(V) driver-serial hash builds flatline core scaling). Each half-step is
-EXACTLY ONE Spark job: the score write, with its L1 norm riding along as an
-``observe`` metric. Scores are carried UNNORMALIZED and divided by the
+O(V) driver-serial hash builds flatline core scaling). Each half-step
+writes its scores once, with its L1 norm riding along as an ``observe``
+metric (no separate norm job). That is not one Spark job: a half-step
+runs 4 in the local[4] test session with AQE on — 2 adaptive
+query-stage jobs for its shuffle map stages, the write, and the schema
+inference of the scratch re-read (StateStore.materialize) — 8 per
+iteration (2 per half-step with AQE off; counted with a job group +
+``statusTracker`` on a 41-vertex path, 2 vs 4 iterations). Scores are
+carried UNNORMALIZED and divided by the
 previous half-step's observed norm at the point of use — mathematically
 identical to per-step normalization (pure scaling, and HITS is
 scale-invariant), so the final normalized vectors match a per-step-
@@ -73,7 +79,8 @@ def hits(
     hsum, asum = float(n), None
     a = None
     for it in range(iters):
-        # auth half-step: one job, norm observed on the write
+        # auth half-step: one write (4 jobs, see module docstring), norm
+        # observed on it
         obs_a = Observation(f"hits_a_{it}")
         araw = (
             e_src.join(
@@ -91,7 +98,7 @@ def hits(
         )
         a = store.materialize(a_next, "hits_a")
         asum = obs_a.get["t"]
-        # hub half-step: one job, norm observed on the write
+        # hub half-step: one write, norm observed on it
         obs_h = Observation(f"hits_h_{it}")
         hraw = (
             e_dst.join(

@@ -24,10 +24,12 @@ Scale shape: the loop-invariant (src, dst, inv_deg) edge table is
 hash-partitioned by src once and persisted; each superstep shuffles only
 the rank vector (one groupBy(dst) with map-side combine — the one
 unavoidable shuffle) and commits its state with ONE ``save_step``,
-scratch or durable at the same Spark jobs. That is not one job: with AQE
-on, each shuffle map stage runs as its own query-stage job before the
-write — 4 jobs per superstep in the local[4] test session
-(tests/test_checkpoint.py compares scratch and durable). The convergence
+scratch or durable at the same Spark jobs. That is not one job: 4 jobs
+per superstep in the local[4] test session with AQE on — 2 adaptive
+query-stage jobs for its shuffle map stages, the write, and the schema
+inference of re-reading the written state — and 2 with AQE off (counted
+with a job group + ``statusTracker`` on a 41-vertex path, 2 vs 4 steps;
+tests/test_checkpoint.py compares scratch and durable). The convergence
 delta and next step's dangling mass ride the write as
 ``DataFrame.observe`` metrics (no separate per-step aggregate job — at
 high core counts a second job's fixed schedule+IO cost dominates the
@@ -176,6 +178,24 @@ def pagerank_power(
          "weight_col": weight_col, "personalized": sources is not None},
         resume,
     )
+    resumed = store.manifest(last)["metrics"] if last is not None else None
+    if resumed and resumed["converged"]:
+        # a converged run resumes to its committed ranks: decided before
+        # any setup, so it caches nothing and skips the edge exchange. n
+        # is the state's row count (one row per vertex), summed from its
+        # parquet footers on the driver: no count job. Imported here: the
+        # module is imported by every worker that runs an algos kernel,
+        # and pyarrow.dataset costs each of them ~4 MB of RSS
+        import pyarrow.dataset as pads
+
+        ranks = store.load_tables(last, ["state"])["state"].select("v", "rank")
+        n = pads.dataset(f"{store.dir}/step={last}/state", format="parquet",
+                         filesystem=store.fs).count_rows()
+        store.close()  # its scratch root is unused; ranks read the checkpoint
+        return ranks, {
+            "iterations": last + 1, "converged": True,
+            "deltas": resumed["deltas"], "n": n, "resumed_at": last + 1,
+        }
     n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     verts, deg, contrib_edges, plan_cached = _prepare(
         edges, vertices, n_parts, weight_col
@@ -240,13 +260,7 @@ def pagerank_power(
     deltas: list[float] = []
     if last is not None:  # m: dangling mass of the *current* rank vector
         state = store.load_tables(last, ["state"])["state"]
-        metrics = store.manifest(last)["metrics"]
-        deltas, m = metrics["deltas"], metrics["next_dangling_mass"]
-        if metrics["converged"]:
-            return state.select("v", "rank"), {
-                "iterations": last + 1, "converged": True,
-                "deltas": deltas, "n": n, "resumed_at": last + 1,
-            }
+        deltas, m = resumed["deltas"], resumed["next_dangling_mass"]
     else:
         if init_ranks is not None:
             # warm start: project the prior vector onto the current vertex

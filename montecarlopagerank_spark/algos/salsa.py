@@ -23,9 +23,14 @@ two loop-invariant edge caches at setup (one hash-partitioned by src
 for the auth half-step, one by dst for the hub half-step), so a
 superstep exchanges only the O(V) score vector (shuffle_hash, never a
 broadcast — O(V) driver-serial hash builds flatline core scaling) plus
-the O(V) map-side-combined aggregate. Each half-step is EXACTLY ONE
-Spark job: the score write, with its L1 sum riding along as an
-``observe`` metric.
+the O(V) map-side-combined aggregate. Each half-step writes its scores
+once, with its L1 sum riding along as an ``observe`` metric (no separate
+sum job). That is not one Spark job: as in hits.py, a half-step runs 4
+in the local[4] test session with AQE on — 2 adaptive query-stage jobs
+for its shuffle map stages, the write, and the schema inference of the
+scratch re-read — 8 per iteration (2 per half-step with AQE off;
+counted with a job group + ``statusTracker`` on a 41-vertex path, 2 vs
+4 iterations).
 """
 
 from __future__ import annotations
@@ -98,7 +103,8 @@ def salsa(
     a = None
     sums: list[tuple[float, float]] = []
     for it in range(iters):
-        # auth half-step: one job, L1 sum observed on the write
+        # auth half-step: one write (4 jobs, see module docstring), L1
+        # sum observed on it
         obs_a = Observation(f"salsa_a_{it}")
         a = store.materialize(
             e_src.join(
@@ -113,7 +119,7 @@ def salsa(
             .observe(obs_a, F.sum("s").alias("t")),
             "salsa_a",
         )
-        # hub half-step: one job, L1 sum observed on the write
+        # hub half-step: one write, L1 sum observed on it
         obs_h = Observation(f"salsa_h_{it}")
         h = store.materialize(
             e_dst.join(

@@ -19,9 +19,9 @@ needs to reproduce the engine's vertex-id assignment.
 
 from __future__ import annotations
 
-import re
-
 import os
+import re
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -36,8 +36,7 @@ EPS = 0.15
 # ---------------------------------------------------------------------------
 
 # events → transcripts (mirror of transcripts_from_events, FIXTURES.md F5)
-SQL_TURNS = """
-turns AS (
+_TURNS = """turns{sfx} AS (
   SELECT 'u' || CAST(user_id AS VARCHAR) AS conv_id,
          CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1
               AS INTEGER) AS turn_idx,
@@ -45,44 +44,68 @@ turns AS (
          props AS text,
          CASE WHEN event_id % 3 = 0 THEN event_type END AS tool,
          ts
-  FROM events
+  FROM events{where}
 )"""
 
 # transcripts → typed string-keyed edges (mirror of operators/edges.py)
-SQL_TEDGES = SQL_TURNS + """,
-chained AS (
+_TEDGES = _TURNS + """,
+chained{sfx} AS (
   SELECT conv_id, turn_idx, role, tool,
          LAG(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_turn,
          LAG(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role
-  FROM turns
+  FROM turns{sfx}
 ),
-tedges AS (
+tedges{sfx} AS (
   SELECT 'turn#' || conv_id || '#' || CAST(prev_turn AS VARCHAR) AS src,
          'turn#' || conv_id || '#' || CAST(turn_idx AS VARCHAR) AS dst,
          'turn_chain' AS kind
-  FROM chained WHERE prev_turn IS NOT NULL
+  FROM chained{sfx} WHERE prev_turn IS NOT NULL
   UNION ALL
   SELECT 'role#' || prev_role, 'role#' || role, 'role_role'
-  FROM chained WHERE prev_role IS NOT NULL
+  FROM chained{sfx} WHERE prev_role IS NOT NULL
   UNION ALL
   SELECT 'turn#' || conv_id || '#' || CAST(turn_idx AS VARCHAR),
          'tool#' || tool, 'turn_tool'
-  FROM chained WHERE tool IS NOT NULL
+  FROM chained{sfx} WHERE tool IS NOT NULL
 )"""
+
+
+def _tedges_variant(sfx: str = "", where: str = "") -> str:
+    """The turns → chained → tedges chain with suffixed CTE names (and an
+    optional events filter) so one query can build two edge tables — the
+    edge-delta and warm-start twins' A/B instantiations."""
+    return _TEDGES.format(sfx=sfx, where=where)
+
+
+SQL_TURNS = _TURNS.format(sfx="", where="")
+SQL_TEDGES = _tedges_variant()
 
 SQL_NORM = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
 
 
-def _tedges_variant(sfx: str, where: str = "") -> str:
-    """The SQL_TEDGES chain with suffixed CTE names (and an optional
-    events filter) so one query can build two edge tables — the
-    edge-delta twin's A/B instantiation."""
-    s = SQL_TEDGES[1:]
-    s = s.replace("FROM events", f"FROM events{where}")
-    for name in ("turns", "chained", "tedges"):
-        s = s.replace(f"{name} AS (", f"{name}{sfx} AS (")
-        s = s.replace(f"FROM {name}", f"FROM {name}{sfx}")
-    return s
+def _verts(name: str = "verts", edges: str = "tedges") -> str:
+    """The vertex set: every endpoint of ``edges``, self-loops included."""
+    return f"{name} AS (SELECT src AS v FROM {edges} UNION SELECT dst FROM {edges})"
+
+
+def _sym(name: str = "sym", w: str = "w") -> str:
+    """The symmetric distinct pair set ``(u, w)`` of tedges' undirected
+    closure, self-loops dropped."""
+    return f"""{name} AS (
+  SELECT DISTINCT u, {w} FROM (
+    SELECT src AS u, dst AS {w} FROM tedges WHERE src <> dst
+    UNION ALL
+    SELECT dst, src FROM tedges WHERE src <> dst
+  )
+)"""
+
+
+def _und(name: str = "und") -> str:
+    """The canonical (x < y) distinct undirected pair set of tedges."""
+    return f"""{name} AS (
+  SELECT DISTINCT LEAST(src, dst) AS x, GREATEST(src, dst) AS y
+  FROM tedges WHERE src <> dst
+)"""
 
 
 def _mat(sql: str) -> str:
@@ -100,42 +123,88 @@ def _mat(sql: str) -> str:
     return re.sub(r"(\n|WITH )(\w+) AS \(", r"\1\2 AS MATERIALIZED (", sql)
 
 
-def _pi_sql(iters: int, eps: float = EPS) -> str:
-    """Power-iteration PageRank unrolled to ``iters`` supersteps as chained
-    CTEs — the exact relational twin of algos/pagerank_power.py's loop
-    (PowerIterationPageRank.scala:56-142 semantics in double space)."""
-    parts = [
-        "WITH " + SQL_TEDGES[1:],  # strip leading newline
-        """,
-verts AS (SELECT src AS v FROM tedges UNION SELECT dst FROM tedges),
-nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM verts),
-deg AS (SELECT src AS v, CAST(COUNT(*) AS DOUBLE) AS d FROM tedges GROUP BY src),
-r0 AS (SELECT v, 1.0 / nn.n AS r FROM verts CROSS JOIN nn)""",
+def _unroll(
+    seed_ctes: Sequence[str],
+    round_fn: Callable[[int], str],
+    rounds: int,
+    final: str,
+    tail_ctes: Sequence[str] = (),
+) -> str:
+    """One iterative twin unrolled into a single statement: ``WITH`` the
+    seed CTEs, then ``round_fn(r)`` for r in 0..rounds-1 (round r's CTEs
+    read round r-1's), then any ``tail_ctes`` over the last round, then
+    the ``final`` SELECT. Every CTE head starts its own line, so _mat
+    materializes all of them — a round's tables are each read 2-3 times
+    by the next round, which re-inlining would turn into expression
+    trees (and events.parquet re-scans) exponential in ``rounds``."""
+    ctes = [*seed_ctes, *map(round_fn, range(rounds)), *tail_ctes]
+    return _mat("WITH " + ",\n".join(c.strip("\n") for c in ctes) + "\n" + final)
+
+
+def _pi_ctes(sfx: str = "") -> list[str]:
+    """verts/nn/deg of the tedges{sfx} graph: the vertex set, its size and
+    the out-degrees a PI superstep divides by."""
+    return [
+        _verts(f"verts{sfx}", f"tedges{sfx}"),
+        f"nn{sfx} AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM verts{sfx})",
+        f"""deg{sfx} AS (SELECT src AS v, CAST(COUNT(*) AS DOUBLE) AS d
+        FROM tedges{sfx} GROUP BY src)""",
     ]
-    for i in range(iters):
-        parts.append(f""",
-m{i} AS (
+
+
+def _pi_round(
+    state: str = "r", sfx: str = "", teleport: str = "", joins: str = ""
+) -> Callable[[int], str]:
+    """round_fn of one power-iteration superstep over the _pi_ctes(sfx)
+    graph — the exact relational twin of algos/pagerank_power.py's loop
+    (PowerIterationPageRank.scala:56-142 semantics in double space):
+    ``{state}{i}`` → ``{state}{i+1}`` via the dangling mass ``m{sfx}{i}``
+    and the in-link mass ``c{sfx}{i}``. ``teleport`` is the jump +
+    dangling term (``{m}`` names the dangling-mass CTE) and ``joins`` the
+    tables it reads; by default both spread uniformly over nn{sfx}."""
+    teleport = teleport or f"{EPS} / nn{sfx}.n + {1.0 - EPS} * {{m}}.m / nn{sfx}.n"
+    joins = joins or f"CROSS JOIN nn{sfx}"
+
+    def round_fn(i: int) -> str:
+        m, c = f"m{sfx}{i}", f"c{sfx}{i}"
+        return f"""{m} AS (
   SELECT COALESCE(SUM(r.r), 0.0) AS m
-  FROM r{i} r LEFT JOIN deg d ON r.v = d.v WHERE d.v IS NULL
+  FROM {state}{i} r LEFT JOIN deg{sfx} d ON r.v = d.v WHERE d.v IS NULL
 ),
-c{i} AS (
+{c} AS (
   SELECT e.dst AS v, SUM(r.r / d.d) AS mass
-  FROM tedges e JOIN r{i} r ON e.src = r.v JOIN deg d ON e.src = d.v
+  FROM tedges{sfx} e JOIN {state}{i} r ON e.src = r.v JOIN deg{sfx} d ON e.src = d.v
   GROUP BY e.dst
 ),
-r{i + 1} AS (
-  SELECT verts.v,
-         {eps} / nn.n + {1.0 - eps} * m{i}.m / nn.n
-           + {1.0 - eps} * COALESCE(c.mass, 0.0) AS r
-  FROM verts CROSS JOIN nn CROSS JOIN m{i} LEFT JOIN c{i} c ON verts.v = c.v
-)""")
-    parts.append(f"""
-SELECT r.v AS v, ROUND(r.r * nn.n, 6) AS rank_scaled
-FROM r{iters} r CROSS JOIN nn""")
-    return "".join(parts)
+{state}{i + 1} AS (
+  SELECT verts{sfx}.v,
+         {teleport.format(m=m)}
+           + {1.0 - EPS} * COALESCE(c.mass, 0.0) AS r
+  FROM verts{sfx} {joins} CROSS JOIN {m}
+  LEFT JOIN {c} c ON verts{sfx}.v = c.v
+)"""
+
+    return round_fn
 
 
-def _pi_warm_sql(k1: int, k2: int, eps: float = EPS) -> str:
+def _pi_rank_select(iters: int) -> str:
+    return f"""SELECT r.v AS v, ROUND(r.r * nn.n, 6) AS rank_scaled
+FROM r{iters} r CROSS JOIN nn"""
+
+
+def _pi_sql(iters: int, final: str = "") -> str:
+    """Power-iteration PageRank unrolled to ``iters`` supersteps (see
+    _pi_round); ``final`` replaces the per-vertex rank SELECT."""
+    return _unroll(
+        [SQL_TEDGES, *_pi_ctes(),
+         "r0 AS (SELECT v, 1.0 / nn.n AS r FROM verts CROSS JOIN nn)"],
+        _pi_round(),
+        iters,
+        final or _pi_rank_select(iters),
+    )
+
+
+def _pi_warm_sql(k1: int, k2: int) -> str:
     """Warm-start (incremental-refresh) PI twin — the oracle for
     ``pagerank_power(init_ranks=...)`` (algos/pagerank_power.py:237):
 
@@ -147,121 +216,61 @@ def _pi_warm_sql(k1: int, k2: int, eps: float = EPS) -> str:
        engine's one-setup-job warm init;
     3. WARM phase: ``k2`` standard supersteps on the FULL graph.
 
-    Both phases reuse the _pi_sql iteration body; the stale chain's CTE
-    names carry an S suffix via _tedges_variant so the two edge builds
-    coexist in one statement."""
-    parts = [
-        """WITH cutv AS (
+    Both phases are _pi_round; the stale chain's CTE names carry an S
+    suffix via _tedges_variant so the two edge builds coexist in one
+    statement."""
+    stale = _pi_round("s", "S")
+    return _unroll(
+        [
+            """cutv AS (
   SELECT CAST(FLOOR(quantile_cont(epoch_us(ts), 0.5)) AS BIGINT) AS cut
   FROM events
-),
-""",
-        _tedges_variant("S", " WHERE epoch_us(ts) <= (SELECT cut FROM cutv)"),
-        """,
-vertsS AS (SELECT src AS v FROM tedgesS UNION SELECT dst FROM tedgesS),
-nnS AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM vertsS),
-degS AS (SELECT src AS v, CAST(COUNT(*) AS DOUBLE) AS d
-         FROM tedgesS GROUP BY src),
-s0 AS (SELECT v, 1.0 / nnS.n AS r FROM vertsS CROSS JOIN nnS)""",
-    ]
-    for i in range(k1):
-        parts.append(f""",
-mS{i} AS (
-  SELECT COALESCE(SUM(r.r), 0.0) AS m
-  FROM s{i} r LEFT JOIN degS d ON r.v = d.v WHERE d.v IS NULL
-),
-cS{i} AS (
-  SELECT e.dst AS v, SUM(r.r / d.d) AS mass
-  FROM tedgesS e JOIN s{i} r ON e.src = r.v JOIN degS d ON e.src = d.v
-  GROUP BY e.dst
-),
-s{i + 1} AS (
-  SELECT vertsS.v,
-         {eps} / nnS.n + {1.0 - eps} * mS{i}.m / nnS.n
-           + {1.0 - eps} * COALESCE(c.mass, 0.0) AS r
-  FROM vertsS CROSS JOIN nnS CROSS JOIN mS{i}
-  LEFT JOIN cS{i} c ON vertsS.v = c.v
-)""")
-    parts.append(f""",
-{SQL_TEDGES[1:]},
-verts AS (SELECT src AS v FROM tedges UNION SELECT dst FROM tedges),
-nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM verts),
-deg AS (SELECT src AS v, CAST(COUNT(*) AS DOUBLE) AS d
-        FROM tedges GROUP BY src),
-w0 AS (
+)""",
+            _tedges_variant("S", " WHERE epoch_us(ts) <= (SELECT cut FROM cutv)"),
+            *_pi_ctes("S"),
+            "s0 AS (SELECT v, 1.0 / nnS.n AS r FROM vertsS CROSS JOIN nnS)",
+            *map(stale, range(k1)),
+            SQL_TEDGES,
+            *_pi_ctes(),
+            f"""w0 AS (
   SELECT verts.v, COALESCE(s.r, 1.0 / nn.n) AS r
   FROM verts CROSS JOIN nn LEFT JOIN s{k1} s ON verts.v = s.v
-),
-ws AS (SELECT SUM(r) AS s FROM w0),
-r0 AS (SELECT v, r / ws.s AS r FROM w0 CROSS JOIN ws)""")
-    for i in range(k2):
-        parts.append(f""",
-m{i} AS (
-  SELECT COALESCE(SUM(r.r), 0.0) AS m
-  FROM r{i} r LEFT JOIN deg d ON r.v = d.v WHERE d.v IS NULL
-),
-c{i} AS (
-  SELECT e.dst AS v, SUM(r.r / d.d) AS mass
-  FROM tedges e JOIN r{i} r ON e.src = r.v JOIN deg d ON e.src = d.v
-  GROUP BY e.dst
-),
-r{i + 1} AS (
-  SELECT verts.v,
-         {eps} / nn.n + {1.0 - eps} * m{i}.m / nn.n
-           + {1.0 - eps} * COALESCE(c.mass, 0.0) AS r
-  FROM verts CROSS JOIN nn CROSS JOIN m{i} LEFT JOIN c{i} c ON verts.v = c.v
-)""")
-    parts.append(f"""
-SELECT r.v AS v, ROUND(r.r * nn.n, 6) AS rank_scaled
-FROM r{k2} r CROSS JOIN nn""")
-    return "".join(parts)
+)""",
+            "ws AS (SELECT SUM(r) AS s FROM w0)",
+            "r0 AS (SELECT v, r / ws.s AS r FROM w0 CROSS JOIN ws)",
+        ],
+        _pi_round(),
+        k2,
+        _pi_rank_select(k2),
+    )
 
 
-def _ppr_sql(iters: int, eps: float = EPS) -> str:
+def _ppr_sql(iters: int) -> str:
     """Personalized PageRank unrolled to ``iters`` supersteps — the twin
     of pagerank_power(sources=...): teleport vector p uniform over
     conversation u1's turn vertices, π0 = p, jump AND dangling mass land
     on p (algos/pagerank_power.py docstring)."""
-    parts = [
-        "WITH " + SQL_TEDGES[1:],
-        """,
-te AS MATERIALIZED (SELECT src, dst FROM tedges),
-verts AS MATERIALIZED (SELECT src AS v FROM te UNION SELECT dst FROM te),
-nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM verts),
-deg AS MATERIALIZED (
-  SELECT src AS v, CAST(COUNT(*) AS DOUBLE) AS d FROM te GROUP BY src),
-srcs AS MATERIALIZED (SELECT v FROM verts WHERE v LIKE 'turn#u1#%'),
-sn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS ns FROM srcs),
-r0 AS (
+    return _unroll(
+        [
+            SQL_TEDGES,
+            *_pi_ctes(),
+            "srcs AS (SELECT v FROM verts WHERE v LIKE 'turn#u1#%')",
+            "sn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS ns FROM srcs)",
+            """r0 AS (
   SELECT verts.v,
          CASE WHEN s.v IS NOT NULL THEN 1.0 / sn.ns ELSE 0.0 END AS r
   FROM verts CROSS JOIN sn LEFT JOIN srcs s ON verts.v = s.v
 )""",
-    ]
-    for i in range(iters):
-        parts.append(f""",
-m{i} AS (
-  SELECT COALESCE(SUM(r.r), 0.0) AS m
-  FROM r{i} r LEFT JOIN deg d ON r.v = d.v WHERE d.v IS NULL
-),
-c{i} AS (
-  SELECT e.dst AS v, SUM(r.r / d.d) AS mass
-  FROM te e JOIN r{i} r ON e.src = r.v JOIN deg d ON e.src = d.v
-  GROUP BY e.dst
-),
-r{i + 1} AS (
-  SELECT verts.v,
-         CASE WHEN s.v IS NOT NULL
-              THEN ({eps} + {1.0 - eps} * m{i}.m) / sn.ns ELSE 0.0 END
-           + {1.0 - eps} * COALESCE(c.mass, 0.0) AS r
-  FROM verts CROSS JOIN sn CROSS JOIN m{i}
-  LEFT JOIN c{i} c ON verts.v = c.v
-  LEFT JOIN srcs s ON verts.v = s.v
-)""")
-    parts.append(f"""
-SELECT r.v AS v, ROUND(r.r * nn.n, 6) AS ppr_scaled
-FROM r{iters} r CROSS JOIN nn""")
-    return "".join(parts)
+        ],
+        _pi_round(
+            teleport=f"""CASE WHEN s.v IS NOT NULL
+              THEN ({EPS} + {1.0 - EPS} * {{m}}.m) / sn.ns ELSE 0.0 END""",
+            joins="CROSS JOIN sn LEFT JOIN srcs s ON verts.v = s.v",
+        ),
+        iters,
+        f"""SELECT r.v AS v, ROUND(r.r * nn.n, 6) AS ppr_scaled
+FROM r{iters} r CROSS JOIN nn""",
+    )
 
 
 def _hits_sql(iters: int) -> str:
@@ -269,22 +278,11 @@ def _hits_sql(iters: int) -> str:
     (algos/hits.py carries scores unnormalized and divides at use — the
     per-element division is the same op in the same order, so the rounded
     outputs agree)."""
-    parts = [
-        "WITH " + SQL_TEDGES[1:],
-        """,
-te AS MATERIALIZED (SELECT src, dst FROM tedges),
-verts AS MATERIALIZED (SELECT src AS v FROM te UNION SELECT dst FROM te),
-nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM verts),
-h0 AS (SELECT v, 1.0 / nn.n AS s FROM verts CROSS JOIN nn)""",
-    ]
-    # te/verts are MATERIALIZED: DuckDB otherwise inlines the CTE chain at
-    # every reference (4+ per iteration), re-scanning events.parquet dozens
-    # of times and exhausting the fd limit
-    for i in range(iters):
-        parts.append(f""",
-ar{i} AS (
+
+    def round_fn(i: int) -> str:
+        return f"""ar{i} AS (
   SELECT e.dst AS v, SUM(h.s) AS s
-  FROM te e JOIN h{i} h ON e.src = h.v GROUP BY e.dst
+  FROM tedges e JOIN h{i} h ON e.src = h.v GROUP BY e.dst
 ),
 at{i} AS (SELECT SUM(s) AS t FROM ar{i}),
 a{i + 1} AS (
@@ -293,50 +291,48 @@ a{i + 1} AS (
 ),
 hr{i} AS (
   SELECT e.src AS v, SUM(a.s) AS s
-  FROM te e JOIN a{i + 1} a ON e.dst = a.v GROUP BY e.src
+  FROM tedges e JOIN a{i + 1} a ON e.dst = a.v GROUP BY e.src
 ),
 ht{i} AS (SELECT SUM(s) AS t FROM hr{i}),
 h{i + 1} AS (
   SELECT verts.v, COALESCE(hr.s, 0.0) / ht{i}.t AS s
   FROM verts CROSS JOIN ht{i} LEFT JOIN hr{i} hr ON verts.v = hr.v
-)""")
-    parts.append(f"""
-SELECT h.v AS v, ROUND(h.s * nn.n, 6) AS hub_scaled,
+)"""
+
+    return _unroll(
+        [SQL_TEDGES, _verts(),
+         "nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM verts)",
+         "h0 AS (SELECT v, 1.0 / nn.n AS s FROM verts CROSS JOIN nn)"],
+        round_fn,
+        iters,
+        f"""SELECT h.v AS v, ROUND(h.s * nn.n, 6) AS hub_scaled,
        ROUND(a.s * nn.n, 6) AS auth_scaled
-FROM h{iters} h JOIN a{iters} a ON h.v = a.v CROSS JOIN nn""")
-    return "".join(parts)
+FROM h{iters} h JOIN a{iters} a ON h.v = a.v CROSS JOIN nn""",
+    )
 
 
 def _bfs_sql(max_hops: int) -> str:
     """Min-hop distance from the tool vertices over the undirected
     closure, unrolled as ``max_hops`` relaxation rounds (full relaxation
     and algos/bfs.py's frontier BFS agree on min-hop distances)."""
-    parts = [
-        "WITH " + SQL_TEDGES[1:],
-        """,
-verts AS (SELECT src AS v FROM tedges UNION SELECT dst FROM tedges),
-sym AS MATERIALIZED (
-  SELECT DISTINCT u, w FROM (
-    SELECT src AS u, dst AS w FROM tedges WHERE src <> dst
-    UNION ALL
-    SELECT dst AS u, src AS w FROM tedges WHERE src <> dst
-  )
-),
-d0 AS (SELECT v, 0 AS hops FROM verts WHERE v LIKE 'tool#%')""",
-    ]
-    for i in range(max_hops):
-        parts.append(f""",
-d{i + 1} AS (
+
+    def round_fn(i: int) -> str:
+        return f"""d{i + 1} AS (
   SELECT v, MIN(hops) AS hops FROM (
     SELECT v, hops FROM d{i}
     UNION ALL
     SELECT s.w AS v, d.hops + 1 AS hops
     FROM sym s JOIN d{i} d ON s.u = d.v
   ) GROUP BY v
-)""")
-    parts.append(f"""
-SELECT v, CAST(hops AS INTEGER) AS hops FROM d{max_hops}""")
-    return "".join(parts)
+)"""
+
+    return _unroll(
+        [SQL_TEDGES, _verts(), _sym(),
+         "d0 AS (SELECT v, 0 AS hops FROM verts WHERE v LIKE 'tool#%')"],
+        round_fn,
+        max_hops,
+        f"SELECT v, CAST(hops AS INTEGER) AS hops FROM d{max_hops}",
+    )
 
 
 def _sssp_sql(rounds: int) -> str:
@@ -348,13 +344,23 @@ def _sssp_sql(rounds: int) -> str:
     (algos/sssp.py) and full relaxation agree after any equal number of
     rounds, and past the fixpoint every round is the identity, so any
     unroll ≥ the engine's round count reproduces the table exactly.
-    Each d{{i}} is referenced twice by d{{i+1}} → MATERIALIZED (same
+    Each d{{i}} is referenced twice by d{{i+1}} → materialized (same
     expression-tree-blowup reasoning as _cc_sql)."""
-    parts = [
-        "WITH " + SQL_TEDGES[1:],
-        """,
-verts AS (SELECT src AS v FROM tedges UNION SELECT dst FROM tedges),
-wsym AS MATERIALIZED (
+
+    def round_fn(i: int) -> str:
+        return f"""d{i + 1} AS (
+  SELECT v, MIN(d) AS d FROM (
+    SELECT v, d FROM d{i}
+    UNION ALL
+    SELECT s.x AS v, d.d + s.wt AS d FROM wsym s JOIN d{i} d ON s.u = d.v
+  ) GROUP BY v
+)"""
+
+    return _unroll(
+        [
+            SQL_TEDGES,
+            _verts(),
+            """wsym AS (
   SELECT u, x, MIN(wt) AS wt FROM (
     SELECT src AS u, dst AS x, LENGTH(src) + LENGTH(dst) AS wt
     FROM tedges WHERE src <> dst
@@ -362,21 +368,13 @@ wsym AS MATERIALIZED (
     SELECT dst, src, LENGTH(src) + LENGTH(dst)
     FROM tedges WHERE src <> dst
   ) GROUP BY u, x
-),
-d0 AS (SELECT v, CAST(0 AS BIGINT) AS d FROM verts WHERE v LIKE 'tool#%')""",
-    ]
-    for i in range(rounds):
-        parts.append(f""",
-d{i + 1} AS MATERIALIZED (
-  SELECT v, MIN(d) AS d FROM (
-    SELECT v, d FROM d{i}
-    UNION ALL
-    SELECT s.x AS v, d.d + s.wt AS d FROM wsym s JOIN d{i} d ON s.u = d.v
-  ) GROUP BY v
-)""")
-    parts.append(f"""
-SELECT v, CAST(d AS BIGINT) AS d FROM d{rounds}""")
-    return "".join(parts)
+)""",
+            "d0 AS (SELECT v, CAST(0 AS BIGINT) AS d FROM verts WHERE v LIKE 'tool#%')",
+        ],
+        round_fn,
+        rounds,
+        f"SELECT v, CAST(d AS BIGINT) AS d FROM d{rounds}",
+    )
 
 
 def _walks_sql(walk_length: int, walks_per_vertex: int) -> str:
@@ -386,40 +384,40 @@ def _walks_sql(walk_length: int, walks_per_vertex: int) -> str:
     % deg over the SAME sorted multiset neighbor list (list(x ORDER BY
     x) ≡ sort_array(collect_list(x)), dupes included), so DuckDB
     replays the corpus verbatim. Each w{i} is referenced twice (next
-    step + final union) → MATERIALIZED."""
-    parts = [
-        "WITH " + SQL_TEDGES[1:],
-        """,
-sym AS MATERIALIZED (
+    step + final union) → materialized."""
+
+    def round_fn(r: int) -> str:
+        return f"""w{r + 1} AS (
+  SELECT w.start, w.rep,
+         n.arr[CAST(1 + ((((w.rep + 1) * 40503 + {r + 1} * 69069) % 1000003)
+                         % n.deg) AS INT)] AS v
+  FROM w{r} w JOIN nbrs n ON w.v = n.u
+)"""
+
+    return _unroll(
+        [
+            SQL_TEDGES,
+            """sym AS (
   SELECT src AS u, dst AS x FROM tedges WHERE src <> dst
   UNION ALL
   SELECT dst, src FROM tedges WHERE src <> dst
-),
-nbrs AS MATERIALIZED (
-  SELECT u, list(x ORDER BY x) AS arr, COUNT(*) AS deg FROM sym GROUP BY u
-),
-tools AS (SELECT DISTINCT dst AS v FROM tedges WHERE dst LIKE 'tool#%'),
-w0 AS MATERIALIZED (
-  SELECT t.v AS start, r.rep AS rep, t.v AS v
-  FROM tools t CROSS JOIN (SELECT range AS rep FROM range("""
-        + str(walks_per_vertex)
-        + """)) r
 )""",
-    ]
-    for i in range(1, walk_length + 1):
-        parts.append(f""",
-w{i} AS MATERIALIZED (
-  SELECT w.start, w.rep,
-         n.arr[CAST(1 + ((((w.rep + 1) * 40503 + {i} * 69069) % 1000003)
-                         % n.deg) AS INT)] AS v
-  FROM w{i - 1} w JOIN nbrs n ON w.v = n.u
-)""")
-    selects = [
-        f"SELECT start, rep, CAST({i} AS INT) AS step, v FROM w{i}"
-        for i in range(walk_length + 1)
-    ]
-    parts.append("\n" + "\nUNION ALL\n".join(selects))
-    return "".join(parts)
+            """nbrs AS (
+  SELECT u, list(x ORDER BY x) AS arr, COUNT(*) AS deg FROM sym GROUP BY u
+)""",
+            "tools AS (SELECT DISTINCT dst AS v FROM tedges WHERE dst LIKE 'tool#%')",
+            f"""w0 AS (
+  SELECT t.v AS start, r.rep AS rep, t.v AS v
+  FROM tools t CROSS JOIN (SELECT range AS rep FROM range({walks_per_vertex})) r
+)""",
+        ],
+        round_fn,
+        walk_length,
+        "\nUNION ALL\n".join(
+            f"SELECT start, rep, CAST({i} AS INT) AS step, v FROM w{i}"
+            for i in range(walk_length + 1)
+        ),
+    )
 
 
 def _btw_sql(max_hops: int) -> str:
@@ -428,26 +426,12 @@ def _btw_sql(max_hops: int) -> str:
     plus the path-count sum), then Brandes dependency accumulation
     unrolled one CTE per depth band, deepest first. Rounds past the
     actual eccentricity are identity no-ops, so a fixed unroll equals
-    the engine's early-stopping loop. Everything MATERIALIZED — each
+    the engine's early-stopping loop. Everything materialized — each
     stage is referenced 2-3 times downstream."""
-    parts = [
-        "WITH " + SQL_TEDGES[1:],
-        """,
-sym AS MATERIALIZED (
-  SELECT DISTINCT u, x FROM (
-    SELECT src AS u, dst AS x FROM tedges WHERE src <> dst
-    UNION ALL
-    SELECT dst, src FROM tedges WHERE src <> dst
-  )
-),
-vis0 AS MATERIALIZED (
-  SELECT DISTINCT dst AS l, dst AS v, 0 AS d, 1.0 AS sigma
-  FROM tedges WHERE dst LIKE 'tool#%'
-)""",
-    ]
-    for h in range(1, max_hops + 1):
-        parts.append(f""",
-vis{h} AS MATERIALIZED (
+
+    def forward(r: int) -> str:
+        h = r + 1
+        return f"""vis{h} AS (
   SELECT * FROM vis{h - 1}
   UNION ALL
   SELECT m.l, m.v, {h} AS d, m.sigma FROM (
@@ -456,14 +440,10 @@ vis{h} AS MATERIALIZED (
     WHERE s.d = {h - 1}
     GROUP BY s.l, e.x
   ) m ANTI JOIN vis{h - 1} p ON m.l = p.l AND m.v = p.v
-)""")
-    parts.append(f""",
-del{max_hops + 1} AS MATERIALIZED (
-  SELECT l, v, d, sigma, 0.0 AS delta FROM vis{max_hops}
-)""")
-    for h in range(max_hops, 0, -1):
-        parts.append(f""",
-c{h} AS MATERIALIZED (
+)"""
+
+    def backward(h: int) -> str:
+        return f"""c{h} AS (
   SELECT pw.l, pv.v,
          SUM(pv.sigma / pw.sigma * (1.0 + pw.delta)) AS inc
   FROM del{h + 1} pw
@@ -472,75 +452,79 @@ c{h} AS MATERIALIZED (
   WHERE pw.d = {h}
   GROUP BY pw.l, pv.v
 ),
-del{h} AS MATERIALIZED (
+del{h} AS (
   SELECT d.l, d.v, d.d, d.sigma, d.delta + COALESCE(c.inc, 0.0) AS delta
   FROM del{h + 1} d LEFT JOIN c{h} c ON d.l = c.l AND d.v = c.v
-)""")
-    parts.append("""
-SELECT v, ROUND(SUM(delta), 6) AS btw_r6
-FROM del1 WHERE d > 0 GROUP BY v""")
-    return "".join(parts)
+)"""
 
-
-def _cc_sql(rounds: int = 12) -> str:
-    """Exact connected components in pure SQL: per round, every vertex's
-    label drops to min(own, neighbours') then pointer-jumps (lbl ← lbl of
-    lbl) — O(log diameter) rounds, unrolled as chained CTEs (a recursive
-    CTE would enumerate O(Σ|component|²) pairs). The histogram stabilizes
-    by round 16 on the sf0.001/sf0.01 transcript graphs (diameter ≈ max
-    conv length); rounds=20 leaves margin.
-    Output: component-size histogram, which is id-assignment-free — equal
-    for the engine's vid graph and this string-key twin.
-
-    Every CTE is MATERIALIZED: each l{r} is referenced 2-3 times per
-    round, so inlining would blow the expression tree (and DuckDB's file
-    handles) up exponentially in ``rounds``."""
-    parts = _cc_label_ctes(rounds)
-    parts.append(f"""
-SELECT CAST(size AS BIGINT) AS size, COUNT(*) AS n_components
-FROM (SELECT lbl, COUNT(*) AS size FROM l{rounds} GROUP BY lbl)
-GROUP BY size""")
-    return "".join(parts)
-
-
-def _cc_label_ctes(rounds: int) -> list[str]:
-    """Shared CTE chain ending in the per-vertex component-label table
-    ``l{rounds}(v, lbl)`` — used by _cc_sql (histogram) and
-    _modularity_sql (partition score)."""
-    mat = (
-        ("WITH " + SQL_TEDGES[1:])
-        .replace("turns AS (", "turns AS MATERIALIZED (")
-        .replace("chained AS (", "chained AS MATERIALIZED (")
-        .replace("tedges AS (", "tedges AS MATERIALIZED (")
+    return _unroll(
+        [
+            SQL_TEDGES,
+            _sym(w="x"),
+            """vis0 AS (
+  SELECT DISTINCT dst AS l, dst AS v, 0 AS d, 1.0 AS sigma
+  FROM tedges WHERE dst LIKE 'tool#%'
+)""",
+        ],
+        forward,
+        max_hops,
+        """SELECT v, ROUND(SUM(delta), 6) AS btw_r6
+FROM del1 WHERE d > 0 GROUP BY v""",
+        [
+            f"""del{max_hops + 1} AS (
+  SELECT l, v, d, sigma, 0.0 AS delta FROM vis{max_hops}
+)""",
+            *map(backward, range(max_hops, 0, -1)),
+        ],
     )
-    parts = [
-        mat,
-        """,
-sym AS MATERIALIZED (
-  SELECT DISTINCT u, v FROM (
-    SELECT src AS u, dst AS v FROM tedges WHERE src <> dst
-    UNION ALL
-    SELECT dst AS u, src AS v FROM tedges WHERE src <> dst
-  )
-),
-verts AS MATERIALIZED (
-  SELECT src AS v FROM tedges UNION SELECT dst FROM tedges
-),
-l0 AS MATERIALIZED (SELECT v, v AS lbl FROM verts)""",
-    ]
-    for r in range(rounds):
-        parts.append(f""",
-a{r} AS MATERIALIZED (
+
+
+def _cc_round(sym: str) -> Callable[[int], str]:
+    """round_fn of one min-label + pointer-jump round over the symmetric
+    pair set ``sym(u, v)``: every vertex's label drops to min(own,
+    neighbours') then jumps (lbl ← lbl of lbl) — ``l{r}`` → ``l{r+1}``.
+    Labels are always vertex ids of l0, so the jump's join never drops a
+    row."""
+
+    def round_fn(r: int) -> str:
+        return f"""a{r} AS (
   SELECT l.v, least(l.lbl, COALESCE(MIN(n.lbl), l.lbl)) AS lbl
   FROM l{r} l
-  LEFT JOIN sym s ON s.u = l.v
+  LEFT JOIN {sym} s ON s.u = l.v
   LEFT JOIN l{r} n ON n.v = s.v
   GROUP BY l.v, l.lbl
 ),
-l{r + 1} AS MATERIALIZED (
+l{r + 1} AS (
   SELECT a.v, b.lbl FROM a{r} a JOIN a{r} b ON a.lbl = b.v
-)""")
-    return parts
+)"""
+
+    return round_fn
+
+
+def _cc_sql(rounds: int, final: str = "", tail_ctes: Sequence[str] = ()) -> str:
+    """Exact connected components in pure SQL: ``rounds`` _cc_round
+    rounds — O(log diameter) rounds, unrolled as chained CTEs (a
+    recursive CTE would enumerate O(Σ|component|²) pairs). The histogram
+    stabilizes by round 16 on the sf0.001/sf0.01 transcript graphs
+    (diameter ≈ max conv length); rounds=24 leaves margin.
+    Output: component-size histogram, which is id-assignment-free — equal
+    for the engine's vid graph and this string-key twin. ``final`` (and
+    ``tail_ctes``) replace it with another function of the per-vertex
+    label table ``l{rounds}(v, lbl)`` — _modularity_sql, _conductance_sql.
+
+    Every CTE is materialized: each l{r} is referenced 2-3 times per
+    round, so inlining would blow the expression tree (and DuckDB's file
+    handles) up exponentially in ``rounds``."""
+    return _unroll(
+        [SQL_TEDGES, _sym(w="v"), _verts(),
+         "l0 AS (SELECT v, v AS lbl FROM verts)"],
+        _cc_round("sym"),
+        rounds,
+        final or f"""SELECT CAST(size AS BIGINT) AS size, COUNT(*) AS n_components
+FROM (SELECT lbl, COUNT(*) AS size FROM l{rounds} GROUP BY lbl)
+GROUP BY size""",
+        tail_ctes,
+    )
 
 
 def _salsa_sql(iters: int) -> str:
@@ -548,38 +532,39 @@ def _salsa_sql(iters: int) -> str:
     half-step a stochastic matrix-vector product (no normalization
     constant — sums are preserved by construction), hub₀ uniform over
     the out-degree support."""
-    parts = [
-        "WITH " + SQL_TEDGES[1:],
-        """,
-te AS MATERIALIZED (SELECT src, dst FROM tedges),
-verts AS MATERIALIZED (SELECT src AS v FROM te UNION SELECT dst FROM te),
-dout AS MATERIALIZED (
-  SELECT src AS v, CAST(COUNT(*) AS DOUBLE) AS d FROM te GROUP BY src
-),
-din AS MATERIALIZED (
-  SELECT dst AS v, CAST(COUNT(*) AS DOUBLE) AS d FROM te GROUP BY dst
-),
-nh AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM dout),
-h0 AS (SELECT v, 1.0 / nh.n AS s FROM dout CROSS JOIN nh)""",
-    ]
-    for i in range(iters):
-        parts.append(f""",
-a{i + 1} AS MATERIALIZED (
+
+    def round_fn(i: int) -> str:
+        return f"""a{i + 1} AS (
   SELECT e.dst AS v, SUM(h.s * (1.0 / o.d)) AS s
-  FROM te e JOIN h{i} h ON e.src = h.v JOIN dout o ON e.src = o.v
+  FROM tedges e JOIN h{i} h ON e.src = h.v JOIN dout o ON e.src = o.v
   GROUP BY e.dst
 ),
-h{i + 1} AS MATERIALIZED (
+h{i + 1} AS (
   SELECT e.src AS v, SUM(a.s * (1.0 / dd.d)) AS s
-  FROM te e JOIN a{i + 1} a ON e.dst = a.v JOIN din dd ON e.dst = dd.v
+  FROM tedges e JOIN a{i + 1} a ON e.dst = a.v JOIN din dd ON e.dst = dd.v
   GROUP BY e.src
-)""")
-    parts.append(f"""
-SELECT verts.v, ROUND(COALESCE(h.s, 0.0), 6) AS hub_r6,
+)"""
+
+    return _unroll(
+        [
+            SQL_TEDGES,
+            _verts(),
+            """dout AS (
+  SELECT src AS v, CAST(COUNT(*) AS DOUBLE) AS d FROM tedges GROUP BY src
+)""",
+            """din AS (
+  SELECT dst AS v, CAST(COUNT(*) AS DOUBLE) AS d FROM tedges GROUP BY dst
+)""",
+            "nh AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM dout)",
+            "h0 AS (SELECT v, 1.0 / nh.n AS s FROM dout CROSS JOIN nh)",
+        ],
+        round_fn,
+        iters,
+        f"""SELECT verts.v, ROUND(COALESCE(h.s, 0.0), 6) AS hub_r6,
        ROUND(COALESCE(a.s, 0.0), 6) AS auth_r6
 FROM verts LEFT JOIN h{iters} h ON verts.v = h.v
-           LEFT JOIN a{iters} a ON verts.v = a.v""")
-    return "".join(parts)
+           LEFT JOIN a{iters} a ON verts.v = a.v""",
+    )
 
 
 def _scc_sql() -> str:
@@ -592,9 +577,9 @@ def _scc_sql() -> str:
     DuckDB. The engine (algos/scc.py trim+coloring) labels by max vid,
     this twin by min string key — the size histogram is assignment-free
     so the two agree exactly."""
-    return ("WITH RECURSIVE " + SQL_TEDGES[1:] + """,
-de AS MATERIALIZED (SELECT DISTINCT src, dst FROM tedges WHERE src <> dst),
-verts AS MATERIALIZED (SELECT src AS v FROM de UNION SELECT dst FROM de),
+    return ("WITH RECURSIVE " + SQL_TEDGES + """,
+de AS (SELECT DISTINCT src, dst FROM tedges WHERE src <> dst),
+verts AS (SELECT src AS v FROM de UNION SELECT dst FROM de),
 reach(src, dst) AS (
   SELECT src, dst FROM de
   UNION
@@ -619,30 +604,32 @@ def _modularity_sql(rounds: int = 24) -> str:
     pure function of the partition (label values cancel), so the
     engine's min-vid labels and this twin's min-string labels (same
     unrolled CC chain as _cc_sql) score identically."""
-    parts = _cc_label_ctes(rounds)
-    parts.append(f""",
-und AS MATERIALIZED (SELECT u AS x, v AS y FROM sym WHERE u < v),
-deg AS MATERIALIZED (SELECT u AS v, COUNT(*) AS d FROM sym GROUP BY u),
-dsum AS (
+    return _cc_sql(
+        rounds,
+        """SELECT ROUND(SUM(COALESCE(i.ec, 0) / mm.m
+                 - (ds.dc / (2 * mm.m)) * (ds.dc / (2 * mm.m))), 6)
+         AS modularity_r6,
+       CAST(mm.m AS BIGINT) AS m
+FROM dsum ds LEFT JOIN intra i ON ds.lbl = i.lbl CROSS JOIN mm
+GROUP BY mm.m""",
+        [
+            "und AS (SELECT u AS x, v AS y FROM sym WHERE u < v)",
+            "deg AS (SELECT u AS v, COUNT(*) AS d FROM sym GROUP BY u)",
+            f"""dsum AS (
   SELECT l.lbl, SUM(d.d) AS dc
   FROM deg d JOIN l{rounds} l ON d.v = l.v GROUP BY l.lbl
-),
-intra AS (
+)""",
+            f"""intra AS (
   SELECT lx.lbl, COUNT(*) AS ec
   FROM und u
   JOIN l{rounds} lx ON u.x = lx.v
   JOIN l{rounds} ly ON u.y = ly.v
   WHERE lx.lbl = ly.lbl
   GROUP BY lx.lbl
-),
-mm AS (SELECT CAST(COUNT(*) AS DOUBLE) AS m FROM und)
-SELECT ROUND(SUM(COALESCE(i.ec, 0) / mm.m
-                 - (ds.dc / (2 * mm.m)) * (ds.dc / (2 * mm.m))), 6)
-         AS modularity_r6,
-       CAST(mm.m AS BIGINT) AS m
-FROM dsum ds LEFT JOIN intra i ON ds.lbl = i.lbl CROSS JOIN mm
-GROUP BY mm.m""")
-    return "".join(parts)
+)""",
+            "mm AS (SELECT CAST(COUNT(*) AS DOUBLE) AS m FROM und)",
+        ],
+    )
 
 
 def _conductance_sql(rounds: int = 24) -> str:
@@ -650,34 +637,36 @@ def _conductance_sql(rounds: int = 24) -> str:
     Labels differ between engines (min-vid vs min-string), so the
     comparable output is the (size, φ) histogram — partition-invariant
     like the CC size histogram."""
-    parts = _cc_label_ctes(rounds)
-    parts.append(f""",
-und2 AS MATERIALIZED (SELECT u AS x, v AS y FROM sym WHERE u < v),
-deg AS MATERIALIZED (SELECT u AS v, COUNT(*) AS d FROM sym GROUP BY u),
-vol AS (
+    return _cc_sql(
+        rounds,
+        """SELECT v.size, ROUND(CASE WHEN LEAST(v.vol, tv.t - v.vol) > 0
+                          THEN COALESCE(c.cut, 0) / LEAST(v.vol, tv.t - v.vol)
+                          ELSE 0.0 END, 6) AS phi_r6,
+       COUNT(*) AS n
+FROM vol v LEFT JOIN cut c ON v.lbl = c.lbl CROSS JOIN tv
+GROUP BY 1, 2""",
+        [
+            "und2 AS (SELECT u AS x, v AS y FROM sym WHERE u < v)",
+            "deg AS (SELECT u AS v, COUNT(*) AS d FROM sym GROUP BY u)",
+            f"""vol AS (
   SELECT l.lbl, SUM(d.d) AS vol, COUNT(*) AS size
   FROM deg d JOIN l{rounds} l ON d.v = l.v GROUP BY l.lbl
-),
-crossed AS MATERIALIZED (
+)""",
+            f"""crossed AS (
   SELECT lx.lbl AS la, ly.lbl AS lb
   FROM und2 u
   JOIN l{rounds} lx ON u.x = lx.v
   JOIN l{rounds} ly ON u.y = ly.v
   WHERE lx.lbl <> ly.lbl
-),
-cut AS (
+)""",
+            """cut AS (
   SELECT lbl, COUNT(*) AS cut FROM (
     SELECT la AS lbl FROM crossed UNION ALL SELECT lb FROM crossed
   ) GROUP BY lbl
-),
-tv AS (SELECT 2.0 * COUNT(*) AS t FROM und2)
-SELECT v.size, ROUND(CASE WHEN LEAST(v.vol, tv.t - v.vol) > 0
-                          THEN COALESCE(c.cut, 0) / LEAST(v.vol, tv.t - v.vol)
-                          ELSE 0.0 END, 6) AS phi_r6,
-       COUNT(*) AS n
-FROM vol v LEFT JOIN cut c ON v.lbl = c.lbl CROSS JOIN tv
-GROUP BY 1, 2""")
-    return "".join(parts)
+)""",
+            "tv AS (SELECT 2.0 * COUNT(*) AS t FROM und2)",
+        ],
+    )
 
 
 def _lpa_sql(rounds: int = 2) -> str:
@@ -685,112 +674,88 @@ def _lpa_sql(rounds: int = 2) -> str:
     vertex adopts the most frequent neighbour label, ties broken by
     minimum label — the exact relational twin of algos/labelprop.py
     (string labels on both sides, so tie-break order is directly
-    comparable). Output: label community size histogram. CTEs are
-    MATERIALIZED for the same reason as _cc_sql."""
-    mat = (
-        ("WITH " + SQL_TEDGES[1:])
-        .replace("turns AS (", "turns AS MATERIALIZED (")
-        .replace("chained AS (", "chained AS MATERIALIZED (")
-        .replace("tedges AS (", "tedges AS MATERIALIZED (")
-    )
-    parts = [
-        mat,
-        """,
-sym AS MATERIALIZED (
-  SELECT DISTINCT u, v FROM (
-    SELECT src AS u, dst AS v FROM tedges WHERE src <> dst
-    UNION ALL
-    SELECT dst AS u, src AS v FROM tedges WHERE src <> dst
-  )
-),
-verts AS MATERIALIZED (SELECT DISTINCT u AS v FROM sym),
-l0 AS MATERIALIZED (SELECT v, v AS lbl FROM verts)""",
-    ]
-    for r in range(rounds):
-        parts.append(f""",
-md{r} AS MATERIALIZED (
+    comparable). Output: label community size histogram."""
+
+    def round_fn(r: int) -> str:
+        return f"""md{r} AS (
   SELECT s.v AS v, l.lbl, COUNT(*) AS c
   FROM sym s JOIN l{r} l ON l.v = s.u
   GROUP BY s.v, l.lbl
 ),
-pk{r} AS MATERIALIZED (
+pk{r} AS (
   SELECT v, lbl FROM (
     SELECT v, lbl,
            ROW_NUMBER() OVER (PARTITION BY v ORDER BY c DESC, lbl ASC) AS rn
     FROM md{r}
   ) WHERE rn = 1
 ),
-l{r + 1} AS MATERIALIZED (
+l{r + 1} AS (
   SELECT l.v, COALESCE(p.lbl, l.lbl) AS lbl
   FROM l{r} l LEFT JOIN pk{r} p ON p.v = l.v
-)""")
-    parts.append(f"""
-SELECT CAST(size AS BIGINT) AS size, COUNT(*) AS n_labels
+)"""
+
+    return _unroll(
+        [SQL_TEDGES, _sym(w="v"),
+         "verts AS (SELECT DISTINCT u AS v FROM sym)",
+         "l0 AS (SELECT v, v AS lbl FROM verts)"],
+        round_fn,
+        rounds,
+        f"""SELECT CAST(size AS BIGINT) AS size, COUNT(*) AS n_labels
 FROM (SELECT lbl, COUNT(*) AS size FROM l{rounds} GROUP BY lbl)
-GROUP BY size""")
-    return "".join(parts)
+GROUP BY size""",
+    )
 
 
-def _harmonic_sql(max_hops: int) -> str:
+def _harmonic_sql(max_hops: int, final: str = "") -> str:
     """Landmark harmonic centrality twin: per-(landmark, vertex) min-hop
     relaxation unrolled ``max_hops`` rounds (exact for hop-capped
-    distances, like _bfs_sql), then Σ 1/d over d>0."""
-    parts = [
-        "WITH " + SQL_TEDGES[1:],
-        """,
-verts AS (SELECT src AS v FROM tedges UNION SELECT dst FROM tedges),
-sym AS MATERIALIZED (
-  SELECT DISTINCT u, w FROM (
-    SELECT src AS u, dst AS w FROM tedges WHERE src <> dst
-    UNION ALL
-    SELECT dst AS u, src AS w FROM tedges WHERE src <> dst
-  )
-),
-d0 AS (SELECT v AS l, v, 0 AS hops FROM verts WHERE v LIKE 'tool#%')""",
-    ]
-    for i in range(max_hops):
-        parts.append(f""",
-d{i + 1} AS MATERIALIZED (
+    distances, like _bfs_sql), then Σ 1/d over d>0. ``final`` swaps the
+    aggregate over ``d{max_hops}(l, v, hops)`` — _closeness_sql."""
+
+    def round_fn(i: int) -> str:
+        return f"""d{i + 1} AS (
   SELECT l, v, MIN(hops) AS hops FROM (
     SELECT l, v, hops FROM d{i}
     UNION ALL
     SELECT d.l, s.w AS v, d.hops + 1 AS hops
     FROM sym s JOIN d{i} d ON s.u = d.v
   ) GROUP BY l, v
-)""")
-    parts.append(f"""
-SELECT v, ROUND(SUM(1.0 / hops), 6) AS harmonic_r6
-FROM d{max_hops} WHERE hops > 0 GROUP BY v""")
-    return "".join(parts)
+)"""
+
+    return _unroll(
+        [SQL_TEDGES, _verts(), _sym(),
+         "d0 AS (SELECT v AS l, v, 0 AS hops FROM verts WHERE v LIKE 'tool#%')"],
+        round_fn,
+        max_hops,
+        final or f"""SELECT v, ROUND(SUM(1.0 / hops), 6) AS harmonic_r6
+FROM d{max_hops} WHERE hops > 0 GROUP BY v""",
+    )
 
 
 def _closeness_sql(max_hops: int) -> str:
     """Landmark closeness twin: the same unrolled per-(landmark, vertex)
     relaxation as _harmonic_sql, with the final aggregate swapped for
     reached / Σd (reciprocal mean distance to reached landmarks)."""
-    base = _harmonic_sql(max_hops)
-    tail = f"""
-SELECT v, ROUND(SUM(1.0 / hops), 6) AS harmonic_r6
-FROM d{max_hops} WHERE hops > 0 GROUP BY v"""
-    assert base.endswith(tail)
-    return base[: -len(tail)] + f"""
-SELECT v, ROUND(COUNT(*) * 1.0 / SUM(hops), 6) AS closeness_r6,
+    return _harmonic_sql(
+        max_hops,
+        f"""SELECT v, ROUND(COUNT(*) * 1.0 / SUM(hops), 6) AS closeness_r6,
        COUNT(*) AS reached
-FROM d{max_hops} WHERE hops > 0 GROUP BY v"""
+FROM d{max_hops} WHERE hops > 0 GROUP BY v""",
+    )
 
 
 def _dedup_cluster_sql(rounds: int = 6) -> str:
     """Twin of q_dedup_cluster_keep: the ngram_jaccard pair set at ≥0.5,
-    then ``rounds`` unrolled min-label + pointer-jump rounds (covers
-    component diameter 2^rounds — near-dup families are near-cliques,
-    so 6 is generous), then keep = (doc_id == min id of component)."""
-    parts = [
-        r"""
-WITH t AS MATERIALIZED (
-  SELECT doc_id, regexp_split_to_array(NORM_EXPR, '\s+') AS tk
+    then ``rounds`` unrolled _cc_round rounds (covers component diameter
+    2^rounds — near-dup families are near-cliques, so 6 is generous),
+    then keep = (doc_id == min id of component)."""
+    return _unroll(
+        [
+            rf"""t AS (
+  SELECT doc_id, regexp_split_to_array({SQL_NORM}, '\s+') AS tk
   FROM documents
-),
-sh AS MATERIALIZED (
+)""",
+            """sh AS (
   SELECT doc_id,
          list_distinct(
            CASE WHEN len(tk) >= 3
@@ -799,38 +764,24 @@ sh AS MATERIALIZED (
                 ELSE [array_to_string(tk, ' ')] END
          ) AS shingles
   FROM t
-),
-pairs AS MATERIALIZED (
+)""",
+            """pairs AS (
   SELECT a, b FROM (
     SELECT a.doc_id AS a, b.doc_id AS b,
            ROUND(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
                  / len(list_distinct(a.shingles || b.shingles)), 6) AS j
     FROM sh a JOIN sh b ON a.doc_id < b.doc_id
   ) WHERE j >= 0.5
-),
-sym AS MATERIALIZED (
+)""",
+            """sym AS (
   SELECT a AS u, b AS v FROM pairs UNION ALL SELECT b AS u, a AS v FROM pairs
-),
-l0 AS MATERIALIZED (SELECT doc_id AS v, doc_id AS lbl FROM t)""".replace(
-            "NORM_EXPR", SQL_NORM
-        )
-    ]
-    for r in range(rounds):
-        parts.append(f""",
-a{r} AS MATERIALIZED (
-  SELECT l.v, least(l.lbl, COALESCE(MIN(n.lbl), l.lbl)) AS lbl
-  FROM l{r} l
-  LEFT JOIN sym s ON s.u = l.v
-  LEFT JOIN l{r} n ON n.v = s.v
-  GROUP BY l.v, l.lbl
-),
-l{r + 1} AS MATERIALIZED (
-  SELECT a.v, COALESCE(p.lbl, a.lbl) AS lbl
-  FROM a{r} a LEFT JOIN a{r} p ON p.v = a.lbl
-)""")
-    parts.append(f"""
-SELECT v AS doc_id, lbl AS cluster_id, v = lbl AS keep FROM l{rounds}""")
-    return "".join(parts)
+)""",
+            "l0 AS (SELECT doc_id AS v, doc_id AS lbl FROM t)",
+        ],
+        _cc_round("sym"),
+        rounds,
+        f"SELECT v AS doc_id, lbl AS cluster_id, v = lbl AS keep FROM l{rounds}",
+    )
 
 
 def _kcore_sql(k: int, rounds: int) -> str:
@@ -842,37 +793,24 @@ def _kcore_sql(k: int, rounds: int) -> str:
     converged at any depth ≤ rounds (the engine asserts convergence; the
     sf0.01 transcript graph peels in 18 rounds at k=2 — rounds=28 leaves
     margin). Output: (v, deg) for every core vertex with its in-core
-    degree. CTEs are MATERIALIZED for the same reason as _cc_sql."""
-    mat = (
-        ("WITH " + SQL_TEDGES[1:])
-        .replace("turns AS (", "turns AS MATERIALIZED (")
-        .replace("chained AS (", "chained AS MATERIALIZED (")
-        .replace("tedges AS (", "tedges AS MATERIALIZED (")
-    )
-    parts = [
-        mat,
-        """,
-s0 AS MATERIALIZED (
-  SELECT DISTINCT u, w FROM (
-    SELECT src AS u, dst AS w FROM tedges WHERE src <> dst
-    UNION ALL
-    SELECT dst AS u, src AS w FROM tedges WHERE src <> dst
-  )
-)""",
-    ]
-    for r in range(rounds):
-        parts.append(f""",
-keep{r} AS MATERIALIZED (
+    degree."""
+
+    def round_fn(r: int) -> str:
+        return f"""keep{r} AS (
   SELECT u FROM s{r} GROUP BY u HAVING COUNT(*) >= {k}
 ),
-s{r + 1} AS MATERIALIZED (
+s{r + 1} AS (
   SELECT s.u, s.w FROM s{r} s
   JOIN keep{r} a ON s.u = a.u JOIN keep{r} b ON s.w = b.u
-)""")
-    parts.append(f"""
-SELECT u AS v, CAST(COUNT(*) AS BIGINT) AS deg
-FROM s{rounds} GROUP BY u""")
-    return "".join(parts)
+)"""
+
+    return _unroll(
+        [SQL_TEDGES, _sym("s0")],
+        round_fn,
+        rounds,
+        f"""SELECT u AS v, CAST(COUNT(*) AS BIGINT) AS deg
+FROM s{rounds} GROUP BY u""",
+    )
 
 
 def _truss_sql(k: int, rounds: int) -> str:
@@ -883,41 +821,28 @@ def _truss_sql(k: int, rounds: int) -> str:
     identity, so ``rounds`` unrolled rounds reproduce any engine run
     that converged at depth ≤ rounds (sf0.01 peels in 2 rounds at k=3;
     rounds=8 leaves margin, and tests/test_truss.py pins depth ≤ 8)."""
-    mat = (
-        ("WITH " + SQL_TEDGES[1:])
-        .replace("turns AS (", "turns AS MATERIALIZED (")
-        .replace("chained AS (", "chained AS MATERIALIZED (")
-        .replace("tedges AS (", "tedges AS MATERIALIZED (")
-    )
-    parts = [
-        mat,
-        """,
-s0 AS MATERIALIZED (
-  SELECT DISTINCT LEAST(src, dst) AS x, GREATEST(src, dst) AS y
-  FROM tedges WHERE src <> dst
-)""",
-    ]
-    for r in range(rounds):
-        parts.append(f""",
-tri{r} AS MATERIALIZED (
+
+    def round_fn(r: int) -> str:
+        return f"""tri{r} AS (
   SELECT a.x AS v1, a.y AS v2, b.y AS v3
   FROM s{r} a JOIN s{r} b ON a.y = b.x
   JOIN s{r} c ON a.x = c.x AND b.y = c.y
 ),
-sup{r} AS MATERIALIZED (
+sup{r} AS (
   SELECT x, y, COUNT(*) AS sup FROM (
     SELECT v1 AS x, v2 AS y FROM tri{r}
     UNION ALL SELECT v2, v3 FROM tri{r}
     UNION ALL SELECT v1, v3 FROM tri{r}
   ) GROUP BY x, y
 ),
-s{r + 1} AS MATERIALIZED (
+s{r + 1} AS (
   SELECT s.x, s.y FROM s{r} s
   JOIN sup{r} p ON s.x = p.x AND s.y = p.y AND p.sup >= {k - 2}
-)""")
-    parts.append(f"""
-SELECT x, y FROM s{rounds}""")
-    return "".join(parts)
+)"""
+
+    return _unroll(
+        [SQL_TEDGES, _und("s0")], round_fn, rounds, f"SELECT x, y FROM s{rounds}"
+    )
 
 
 def _katz_sql(
@@ -931,150 +856,103 @@ def _katz_sql(
     multigraph, unrolled ``iters`` supersteps, L1-normalized ×n at the
     end (see algos/katz.py on why normalized output is the scale-safe
     form). β=0, α=1 is the eigenvector-centrality power method."""
-    parts = [
-        "WITH " + SQL_TEDGES[1:],
-        f""",
-verts AS (SELECT src AS v FROM tedges UNION SELECT dst FROM tedges),
-k0 AS (SELECT v, {x0} AS s FROM verts)""",
-    ]
-    for i in range(iters):
-        parts.append(f""",
-a{i} AS (
+
+    def round_fn(i: int) -> str:
+        return f"""a{i} AS (
   SELECT e.dst AS v, SUM(k.s) AS m
   FROM tedges e JOIN k{i} k ON e.src = k.v GROUP BY e.dst
 ),
-k{i + 1} AS MATERIALIZED (
+k{i + 1} AS (
   SELECT verts.v, {beta} + {alpha} * COALESCE(m, 0) AS s
   FROM verts LEFT JOIN a{i} ON verts.v = a{i}.v
-)""")
-    parts.append(f"""
-SELECT v, ROUND(s * (SELECT COUNT(*) FROM verts) / (SELECT SUM(s) FROM k{iters}),
+)"""
+
+    return _unroll(
+        [SQL_TEDGES, _verts(), f"k0 AS (SELECT v, {x0} AS s FROM verts)"],
+        round_fn,
+        iters,
+        f"""SELECT v, ROUND(s * (SELECT COUNT(*) FROM verts) / (SELECT SUM(s) FROM k{iters}),
                 6) AS {out_col}
-FROM k{iters}""")
-    return "".join(parts)
+FROM k{iters}""",
+    )
 
 
-def _louvain_sql(rounds: int) -> str:
-    """Single-level synchronous Louvain twin (algos/louvain.py):
-    direction-alternating moves (even round → smaller community labels
+def _louvain_round(p: str, r: int) -> str:
+    """One synchronous local-move round on the level-``p`` tables
+    ``{p}sym``/``{p}deg``/``{p}twom``: ``{p}lab{r}`` → ``{p}lab{r+1}``.
+    Direction-alternating moves (even round → smaller community labels
     only, odd → larger; filter before argmax, so single-round label
     swaps are impossible), exact-LONG aggregates, double gain scores
     with the identical expression shape (IEEE ops on identical operands
     are bit-equal across engines), smallest-community tie break, strict
-    improvement. Emits the community size histogram after ``rounds``
-    local-move rounds on the undirected simple closure."""
-    parts = [
-        ("WITH " + SQL_TEDGES[1:]).replace("tedges AS (", "tedges AS MATERIALIZED ("),
-        """,
-und AS MATERIALIZED (
-  SELECT DISTINCT LEAST(src, dst) AS x, GREATEST(src, dst) AS y
-  FROM tedges WHERE src <> dst
-),
-sym AS MATERIALIZED (
-  SELECT x AS u, y AS w, 1::BIGINT AS wt FROM und
-  UNION ALL SELECT y, x, 1::BIGINT FROM und
-),
-deg AS MATERIALIZED (SELECT u AS v, SUM(wt)::BIGINT AS k FROM sym GROUP BY u),
-twom AS (SELECT CAST(SUM(k) AS DOUBLE) AS m2 FROM deg),
-lab0 AS (SELECT v, v AS c FROM deg)""",
-    ]
-    for r in range(rounds):
-        parts.append(_louvain_round(r, "lab", "sym", "deg", "twom", ""))
-    parts.append(f"""
-SELECT size, COUNT(*)::BIGINT AS n_communities FROM (
-  SELECT c, COUNT(*)::BIGINT AS size FROM lab{rounds} GROUP BY c)
-GROUP BY size""")
-    return "".join(parts)
-
-
-def _louvain_round(r: int, lab: str, sym: str, deg: str, twom: str, tag: str) -> str:
-    """One synchronous local-move round (the level-1-verified recursion,
-    parameterized over the level's sym/deg/twom/label tables so
-    contracted levels replay the identical rules)."""
-    return f""",
-{tag}tot{r} AS (
+    improvement. Contracted levels replay the identical rules."""
+    lab, sym, deg = f"{p}lab", f"{p}sym", f"{p}deg"
+    return f"""{p}tot{r} AS (
   SELECT c, SUM(k)::BIGINT AS tot FROM {lab}{r} JOIN {deg} USING (v) GROUP BY c
 ),
-{tag}cand{r} AS (
+{p}cand{r} AS (
   SELECT v, c, SUM(kvc)::BIGINT AS kvc FROM (
     SELECT s.u AS v, l.c AS c, s.wt AS kvc
     FROM {sym} s JOIN {lab}{r} l ON s.w = l.v
     UNION ALL SELECT v, c, 0 FROM {lab}{r}
   ) GROUP BY v, c
 ),
-{tag}sc{r} AS (
+{p}sc{r} AS (
   SELECT cd.v, cd.c, l.c AS cv,
          CAST(kvc AS DOUBLE)
            - CAST({deg}.k AS DOUBLE)
              * CAST(tot - CASE WHEN cd.c = l.c THEN {deg}.k ELSE 0 END AS DOUBLE)
-             / (SELECT m2 FROM {twom}) AS score
-  FROM {tag}cand{r} cd
-  JOIN {tag}tot{r} t ON cd.c = t.c
+             / (SELECT m2 FROM {p}twom) AS score
+  FROM {p}cand{r} cd
+  JOIN {p}tot{r} t ON cd.c = t.c
   JOIN {lab}{r} l ON cd.v = l.v
   JOIN {deg} ON cd.v = {deg}.v
 ),
-{tag}rk{r} AS (
+{p}rk{r} AS (
   SELECT v, c, cv, score,
          ROW_NUMBER() OVER (PARTITION BY v ORDER BY score DESC, c ASC) AS rn
-  FROM {tag}sc{r} WHERE c = cv OR c {"<" if r % 2 == 0 else ">"} cv
+  FROM {p}sc{r} WHERE c = cv OR c {"<" if r % 2 == 0 else ">"} cv
 ),
-{lab}{r + 1} AS MATERIALIZED (
+{lab}{r + 1} AS (
   SELECT b.v,
          CASE WHEN b.score > s.score THEN b.c ELSE b.cv END AS c
-  FROM (SELECT * FROM {tag}rk{r} WHERE rn = 1) b
-  JOIN (SELECT v, score FROM {tag}sc{r} WHERE c = cv) s USING (v)
+  FROM (SELECT * FROM {p}rk{r} WHERE rn = 1) b
+  JOIN (SELECT v, score FROM {p}sc{r} WHERE c = cv) s USING (v)
 )"""
 
 
-def _louvain_full_sql(rounds: int, levels: int) -> str:
-    """Full multi-level Louvain twin (algos/louvain.py with
-    ``rounds_per_level=rounds, max_levels=levels``): each level runs the
-    level-1-verified move recursion, then contracts — communities become
-    vertices, inter-community weights sum, intra weight halves into a
-    self-loop that enters k (and so Σtot/2m) but never k_{v,C}, exactly
-    the engine's convention. The engine's early level-break (a 0-move
-    level) is twin-safe: contracting an unmoved level yields an
-    isomorphic graph on the same labels, so the extra simulated levels
-    are the identity. Output: final community size histogram."""
-    parts = [
-        ("WITH " + SQL_TEDGES[1:]).replace("tedges AS (", "tedges AS MATERIALIZED ("),
-        """,
-und AS MATERIALIZED (
-  SELECT DISTINCT LEAST(src, dst) AS x, GREATEST(src, dst) AS y
-  FROM tedges WHERE src <> dst
-),
-L0sym AS MATERIALIZED (
-  SELECT x AS u, y AS w, 1::BIGINT AS wt FROM und
-  UNION ALL SELECT y, x, 1::BIGINT FROM und
-),
-L0deg AS MATERIALIZED (SELECT u AS v, SUM(wt)::BIGINT AS k FROM L0sym GROUP BY u),
-L0twom AS (SELECT CAST(SUM(k) AS DOUBLE) AS m2 FROM L0deg),
-L0lab0 AS (SELECT v, v AS c FROM L0deg)""",
-    ]
-    for lv in range(levels):
-        p = f"L{lv}"
-        for r in range(rounds):
-            parts.append(
-                _louvain_round(r, f"{p}lab", f"{p}sym", f"{p}deg", f"{p}twom", p)
-            )
-        if lv < levels - 1:
-            q = f"L{lv + 1}"
-            prev_self = (
-                f"""
+def _louvain_sql(rounds: int, levels: int = 1) -> str:
+    """Synchronous Louvain twin (algos/louvain.py with
+    ``rounds_per_level=rounds, max_levels=levels``) on the undirected
+    simple closure: each level runs ``rounds`` _louvain_round moves,
+    then contracts — communities become vertices, inter-community
+    weights sum, intra weight halves into a self-loop that enters k (and
+    so Σtot/2m) but never k_{v,C}, exactly the engine's convention. The
+    engine's early level-break (a 0-move level) is twin-safe:
+    contracting an unmoved level yields an isomorphic graph on the same
+    labels, so the extra simulated levels are the identity. Output:
+    final community size histogram (``levels=1``: the level-1 one)."""
+
+    def level(lv: int) -> str:
+        p, q = f"L{lv}", f"L{lv + 1}"
+        moves = [_louvain_round(p, r) for r in range(rounds)]
+        if lv == levels - 1:
+            return ",\n".join(moves)
+        prev_self = (
+            f"""
   UNION ALL SELECT l.c AS v, sw FROM {p}selfw s
   JOIN {p}lab{rounds} l ON s.v = l.v"""
-                if lv > 0
-                else ""
-            )
-            parts.append(f""",
-{q}sym AS MATERIALIZED (
+            if lv > 0
+            else ""
+        )
+        return ",\n".join(moves + [f"""{q}sym AS (
   SELECT lu.c AS u, lw.c AS w, SUM(s.wt)::BIGINT AS wt
   FROM {p}sym s
   JOIN {p}lab{rounds} lu ON s.u = lu.v
   JOIN {p}lab{rounds} lw ON s.w = lw.v
   WHERE lu.c <> lw.c GROUP BY 1, 2
 ),
-{q}selfw AS MATERIALIZED (
+{q}selfw AS (
   SELECT v, SUM(sw)::BIGINT AS sw FROM (
     SELECT lu.c AS v, (SUM(s.wt) // 2)::BIGINT AS sw
     FROM {p}sym s
@@ -1083,26 +961,39 @@ L0lab0 AS (SELECT v, v AS c FROM L0deg)""",
     WHERE lu.c = lw.c GROUP BY lu.c{prev_self}
   ) GROUP BY v
 ),
-{q}deg AS MATERIALIZED (
+{q}deg AS (
   SELECT COALESCE(d.v, s2.v) AS v,
          (COALESCE(d.k, 0) + 2 * COALESCE(s2.sw, 0))::BIGINT AS k
   FROM (SELECT u AS v, SUM(wt)::BIGINT AS k FROM {q}sym GROUP BY u) d
   FULL JOIN {q}selfw s2 ON d.v = s2.v
 ),
 {q}twom AS (SELECT CAST(SUM(k) AS DOUBLE) AS m2 FROM {q}deg),
-{q}lab0 AS (SELECT v, v AS c FROM {q}deg)""")
-    comp = "L0lab" + str(rounds)
-    final = f"(SELECT v, c FROM {comp})"
+{q}lab0 AS (SELECT v, v AS c FROM {q}deg)"""])
+
+    final = f"(SELECT v, c FROM L0lab{rounds})"
     for lv in range(1, levels):
         final = (
             f"(SELECT f.v, l.c FROM {final} f "
             f"JOIN L{lv}lab{rounds} l ON f.c = l.v)"
         )
-    parts.append(f"""
-SELECT size, COUNT(*)::BIGINT AS n_communities FROM (
+    return _unroll(
+        [
+            SQL_TEDGES,
+            _und(),
+            """L0sym AS (
+  SELECT x AS u, y AS w, 1::BIGINT AS wt FROM und
+  UNION ALL SELECT y, x, 1::BIGINT FROM und
+)""",
+            "L0deg AS (SELECT u AS v, SUM(wt)::BIGINT AS k FROM L0sym GROUP BY u)",
+            "L0twom AS (SELECT CAST(SUM(k) AS DOUBLE) AS m2 FROM L0deg)",
+            "L0lab0 AS (SELECT v, v AS c FROM L0deg)",
+        ],
+        level,
+        levels,
+        f"""SELECT size, COUNT(*)::BIGINT AS n_communities FROM (
   SELECT c, COUNT(*)::BIGINT AS size FROM {final} f2 GROUP BY c)
-GROUP BY size""")
-    return "".join(parts)
+GROUP BY size""",
+    )
 
 
 def _mis_sql(rounds: int) -> str:
@@ -1113,41 +1004,43 @@ def _mis_sql(rounds: int) -> str:
     reproduces the exact membership; leftover live{{R}} vertices (none,
     once converged) are unioned in to mirror the engine's edge-free
     final sweep."""
-    parts = [
-        ("WITH " + SQL_TEDGES[1:]).replace("tedges AS (", "tedges AS MATERIALIZED ("),
-        """,
-s0 AS MATERIALIZED (
-  SELECT DISTINCT u, w FROM (
-    SELECT src AS u, dst AS w FROM tedges WHERE src <> dst
-    UNION ALL SELECT dst, src FROM tedges WHERE src <> dst)
-),
-live0 AS MATERIALIZED (SELECT src AS v FROM tedges UNION SELECT dst FROM tedges)""",
-    ]
-    for r in range(rounds):
-        parts.append(f""",
-nm{r} AS (SELECT u, MIN(md5(w)) AS mn FROM s{r} GROUP BY u),
-win{r} AS MATERIALIZED (
+
+    def round_fn(r: int) -> str:
+        return f"""nm{r} AS (SELECT u, MIN(md5(w)) AS mn FROM s{r} GROUP BY u),
+win{r} AS (
   SELECT l.v FROM live{r} l LEFT JOIN nm{r} ON l.v = nm{r}.u
   WHERE mn IS NULL OR md5(l.v) < mn
 ),
-live{r + 1} AS MATERIALIZED (
+live{r + 1} AS (
   SELECT v FROM live{r}
   WHERE v NOT IN (SELECT v FROM win{r})
     AND v NOT IN (SELECT DISTINCT s.w FROM s{r} s JOIN win{r} x ON s.u = x.v)
 ),
-s{r + 1} AS MATERIALIZED (
+s{r + 1} AS (
   SELECT s.u, s.w FROM s{r} s
   JOIN live{r + 1} a ON s.u = a.v JOIN live{r + 1} b ON s.w = b.v
-)""")
-    parts.append(
-        "\nSELECT v FROM ("
+)"""
+
+    return _unroll(
+        [SQL_TEDGES, _sym("s0"), _verts("live0")],
+        round_fn,
+        rounds,
+        "SELECT v FROM ("
         + " UNION ALL ".join(
             [f"SELECT v FROM win{r}" for r in range(rounds)]
             + [f"SELECT v FROM live{rounds}"]
         )
-        + ")"
+        + ")",
     )
-    return "".join(parts)
+
+
+def _md5_pairs(name: str) -> str:
+    """The canonical pair set ``und`` with each pair's fixed md5 priority
+    (ties broken by the pair key itself), as algos/matching.py and
+    algos/msf.py rank edges."""
+    return f"""{name} AS (
+  SELECT x, y, md5(x || '#' || y) || '|' || x || '#' || y AS pri FROM und
+)"""
 
 
 def _matching_sql(rounds: int) -> str:
@@ -1157,41 +1050,35 @@ def _matching_sql(rounds: int) -> str:
     identity (an empty pair set wins nothing), so ``rounds`` ≥ the
     engine's convergence depth (4 at sf0.01, 8 leaves margin)
     reproduces the exact matched-edge set AND each edge's round."""
-    parts = [
-        ("WITH " + SQL_TEDGES[1:]).replace("tedges AS (", "tedges AS MATERIALIZED ("),
-        """,
-p0 AS MATERIALIZED (
-  SELECT x, y, md5(x || '#' || y) || '|' || x || '#' || y AS pri FROM (
-    SELECT DISTINCT least(src, dst) AS x, greatest(src, dst) AS y
-    FROM tedges WHERE src <> dst)
-)""",
-    ]
-    for r in range(rounds):
-        parts.append(f""",
-vm{r} AS (
+
+    def round_fn(r: int) -> str:
+        return f"""vm{r} AS (
   SELECT u, MIN(pri) AS mn FROM (
     SELECT x AS u, pri FROM p{r} UNION ALL SELECT y, pri FROM p{r})
   GROUP BY u
 ),
-win{r} AS MATERIALIZED (
+win{r} AS (
   SELECT p.x, p.y FROM p{r} p
   JOIN vm{r} a ON p.x = a.u AND p.pri = a.mn
   JOIN vm{r} b ON p.y = b.u AND p.pri = b.mn
 ),
-p{r + 1} AS MATERIALIZED (
+p{r + 1} AS (
   SELECT p.x, p.y, p.pri FROM p{r} p
   WHERE p.x NOT IN (SELECT x FROM win{r} UNION ALL SELECT y FROM win{r})
     AND p.y NOT IN (SELECT x FROM win{r} UNION ALL SELECT y FROM win{r})
-)""")
-    parts.append(
-        "\nSELECT x, y, round FROM ("
+)"""
+
+    return _unroll(
+        [SQL_TEDGES, _und(), _md5_pairs("p0")],
+        round_fn,
+        rounds,
+        "SELECT x, y, round FROM ("
         + " UNION ALL ".join(
             f"SELECT x, y, CAST({r} AS INT) AS round FROM win{r}"
             for r in range(rounds)
         )
-        + ")"
+        + ")",
     )
-    return "".join(parts)
 
 
 def _coloring_sql(rounds: int) -> str:
@@ -1201,32 +1088,21 @@ def _coloring_sql(rounds: int) -> str:
     Unrolled ``rounds`` rounds; past the fixpoint every round is the
     identity (empty frontier), so ``rounds`` ≥ the engine's convergence
     depth reproduces the exact assignment. Emits (v, color)."""
-    parts = [
-        ("WITH " + SQL_TEDGES[1:]).replace("tedges AS (", "tedges AS MATERIALIZED ("),
-        """,
-sym AS MATERIALIZED (
-  SELECT DISTINCT u, w FROM (
-    SELECT src AS u, dst AS w FROM tedges WHERE src <> dst
-    UNION ALL SELECT dst, src FROM tedges WHERE src <> dst)
-),
-live0 AS MATERIALIZED (SELECT src AS v FROM tedges UNION SELECT dst FROM tedges),
-colored0 AS (SELECT v, 0 AS color FROM live0 WHERE FALSE)""",
-    ]
-    for r in range(rounds):
-        parts.append(f""",
-lmax{r} AS (
+
+    def round_fn(r: int) -> str:
+        return f"""lmax{r} AS (
   SELECT s.u, MAX(md5(s.w)) AS mx FROM sym s
   LEFT JOIN colored{r} c ON s.w = c.v WHERE c.v IS NULL GROUP BY s.u
 ),
-frontier{r} AS MATERIALIZED (
+frontier{r} AS (
   SELECT l.v FROM live{r} l LEFT JOIN lmax{r} m ON l.v = m.u
   WHERE m.mx IS NULL OR md5(l.v) > m.mx
 ),
-used{r} AS MATERIALIZED (
+used{r} AS (
   SELECT DISTINCT f.v, c.color FROM frontier{r} f
   JOIN sym s ON s.u = f.v JOIN colored{r} c ON s.w = c.v
 ),
-fired{r} AS MATERIALIZED (
+fired{r} AS (
   SELECT t.v, MIN(t.cand) AS color FROM (
     SELECT n.v, UNNEST(range(0, n.n + 1)) AS cand FROM (
       SELECT f.v, COUNT(u.color) AS n FROM frontier{r} f
@@ -1235,16 +1111,20 @@ fired{r} AS MATERIALIZED (
   LEFT JOIN used{r} u ON u.v = t.v AND u.color = t.cand
   WHERE u.v IS NULL GROUP BY t.v
 ),
-colored{r + 1} AS MATERIALIZED (
+colored{r + 1} AS (
   SELECT v, color FROM colored{r} UNION ALL SELECT v, color FROM fired{r}
 ),
-live{r + 1} AS MATERIALIZED (
+live{r + 1} AS (
   SELECT v FROM live{r} WHERE v NOT IN (SELECT v FROM frontier{r})
-)""")
-    parts.append(
-        f"\nSELECT v, CAST(color AS BIGINT) AS color FROM colored{rounds}"
+)"""
+
+    return _unroll(
+        [SQL_TEDGES, _sym(), _verts("live0"),
+         "colored0 AS (SELECT v, 0 AS color FROM live0 WHERE FALSE)"],
+        round_fn,
+        rounds,
+        f"SELECT v, CAST(color AS BIGINT) AS color FROM colored{rounds}",
     )
-    return "".join(parts)
 
 
 def _corenum_sql(rounds: int) -> str:
@@ -1254,20 +1134,9 @@ def _corenum_sql(rounds: int) -> str:
     convergence depth reproduces the exact coreness (extra rounds are
     the identity). Emits (v, coreness); isolated/self-loop-only
     vertices get 0."""
-    parts = [
-        ("WITH " + SQL_TEDGES[1:]).replace("tedges AS (", "tedges AS MATERIALIZED ("),
-        """,
-sym AS MATERIALIZED (
-  SELECT DISTINCT u, w FROM (
-    SELECT src AS u, dst AS w FROM tedges WHERE src <> dst
-    UNION ALL SELECT dst, src FROM tedges WHERE src <> dst)
-),
-verts AS MATERIALIZED (SELECT src AS v FROM tedges UNION SELECT dst FROM tedges),
-h0 AS MATERIALIZED (SELECT u AS v, COUNT(*)::BIGINT AS h FROM sym GROUP BY u)""",
-    ]
-    for r in range(rounds):
-        parts.append(f""",
-h{r + 1} AS MATERIALIZED (
+
+    def round_fn(r: int) -> str:
+        return f"""h{r + 1} AS (
   SELECT v, MAX(LEAST(hw, ge))::BIGINT AS h FROM (
     SELECT v, hw, SUM(cnt) OVER (
       PARTITION BY v ORDER BY hw DESC
@@ -1276,11 +1145,16 @@ h{r + 1} AS MATERIALIZED (
       SELECT s.u AS v, hh.h AS hw, COUNT(*)::BIGINT AS cnt
       FROM sym s JOIN h{r} hh ON s.w = hh.v GROUP BY s.u, hh.h)
   ) GROUP BY v
-)""")
-    parts.append(f"""
-SELECT t.v, COALESCE(h.h, 0)::BIGINT AS coreness
-FROM verts t LEFT JOIN h{rounds} h ON t.v = h.v""")
-    return "".join(parts)
+)"""
+
+    return _unroll(
+        [SQL_TEDGES, _sym(), _verts(),
+         "h0 AS (SELECT u AS v, COUNT(*)::BIGINT AS h FROM sym GROUP BY u)"],
+        round_fn,
+        rounds,
+        f"""SELECT t.v, COALESCE(h.h, 0)::BIGINT AS coreness
+FROM verts t LEFT JOIN h{rounds} h ON t.v = h.v""",
+    )
 
 
 def _kahn_sql(rounds: int) -> str:
@@ -1291,32 +1165,29 @@ def _kahn_sql(rounds: int) -> str:
     bound) — mirroring ``kahn_peel(max_rounds=R)`` round-for-round.
     Past a stall every round is the identity (nothing peels), so the
     twin also matches fixpoint runs whose depth ≤ ``rounds``."""
-    parts = [
-        ("WITH " + SQL_TEDGES[1:]).replace("tedges AS (", "tedges AS MATERIALIZED ("),
-        """,
-d0 AS MATERIALIZED (SELECT DISTINCT src, dst FROM tedges),
-v0 AS MATERIALIZED (SELECT src AS v FROM d0 UNION SELECT dst FROM d0)""",
-    ]
-    for r in range(rounds):
-        parts.append(f""",
-p{r} AS MATERIALIZED (
+
+    def round_fn(r: int) -> str:
+        return f"""p{r} AS (
   SELECT v FROM v{r} WHERE v NOT IN (SELECT dst FROM d{r})
 ),
-v{r + 1} AS MATERIALIZED (
+v{r + 1} AS (
   SELECT v FROM v{r} WHERE v NOT IN (SELECT v FROM p{r})
 ),
-d{r + 1} AS MATERIALIZED (
+d{r + 1} AS (
   SELECT d.src, d.dst FROM d{r} d JOIN v{r + 1} s ON d.src = s.v
-)""")
-    sel = "\nUNION ALL\n".join(
-        [
-            f"SELECT v, CAST({r} AS BIGINT) AS layer FROM p{r}"
-            for r in range(rounds)
-        ]
-        + [f"SELECT v, CAST(-1 AS BIGINT) AS layer FROM v{rounds}"]
+)"""
+
+    return _unroll(
+        [SQL_TEDGES, "d0 AS (SELECT DISTINCT src, dst FROM tedges)",
+         _verts("v0")],
+        round_fn,
+        rounds,
+        "\nUNION ALL\n".join(
+            [f"SELECT v, CAST({r} AS BIGINT) AS layer FROM p{r}"
+             for r in range(rounds)]
+            + [f"SELECT v, CAST(-1 AS BIGINT) AS layer FROM v{rounds}"]
+        ),
     )
-    parts.append("\n" + sel)
-    return "".join(parts)
 
 
 def _msf_sql(rounds: int, jumps: int) -> str:
@@ -1328,21 +1199,15 @@ def _msf_sql(rounds: int, jumps: int) -> str:
     re-root, repeat. Components at least halve per round, so ``rounds``
     ≥ ⌈log₂ V⌉ replays the full run; past the fixpoint every round is
     the identity (no cross edges → empty pick set)."""
-    parts = [
-        ("WITH " + SQL_TEDGES[1:]).replace("tedges AS (", "tedges AS MATERIALIZED ("),
-        """,
-pr AS MATERIALIZED (
-  SELECT x, y, md5(x || '#' || y) || '|' || x || '#' || y AS pri FROM (
-    SELECT DISTINCT LEAST(src, dst) AS x, GREATEST(src, dst) AS y
-    FROM tedges WHERE src <> dst)
-),
-lab0 AS MATERIALIZED (
-  SELECT v, v AS lbl FROM (SELECT x AS v FROM pr UNION SELECT y FROM pr)
-)""",
-    ]
-    for r in range(rounds):
-        parts.append(f""",
-cand{r} AS MATERIALIZED (
+
+    def round_fn(r: int) -> str:
+        jump_chain = [
+            f"""j{r}_{i + 1} AS (
+  SELECT a.c, b.r FROM j{r}_{i} a JOIN j{r}_{i} b ON a.r = b.c
+)"""
+            for i in range(jumps)
+        ]
+        return ",\n".join([f"""cand{r} AS (
   SELECT lx.lbl AS cx, ly.lbl AS cy, p.pri, p.x, p.y
   FROM pr p JOIN lab{r} lx ON p.x = lx.v JOIN lab{r} ly ON p.y = ly.v
   WHERE lx.lbl <> ly.lbl
@@ -1352,31 +1217,29 @@ sym{r} AS (
   UNION ALL SELECT cy, cx, pri, x, y FROM cand{r}
 ),
 mn{r} AS (SELECT c, MIN(pri) AS mp FROM sym{r} GROUP BY c),
-me{r} AS MATERIALIZED (
+me{r} AS (
   SELECT s.c, s.o, s.x, s.y FROM sym{r} s
   JOIN mn{r} m ON s.c = m.c AND s.pri = m.mp
 ),
-ch{r} AS MATERIALIZED (SELECT DISTINCT x, y FROM me{r}),
-j{r}_0 AS MATERIALIZED (
+ch{r} AS (SELECT DISTINCT x, y FROM me{r}),
+j{r}_0 AS (
   SELECT a.c, CASE WHEN b.o = a.c AND a.c < a.o THEN a.c ELSE a.o END AS r
   FROM me{r} a JOIN me{r} b ON a.o = b.c
-)""")
-        for i in range(jumps):
-            parts.append(f""",
-j{r}_{i + 1} AS MATERIALIZED (
-  SELECT a.c, b.r FROM j{r}_{i} a JOIN j{r}_{i} b ON a.r = b.c
-)""")
-        parts.append(f""",
-lab{r + 1} AS MATERIALIZED (
+)""", *jump_chain, f"""lab{r + 1} AS (
   SELECT l.v, COALESCE(j.r, l.lbl) AS lbl
   FROM lab{r} l LEFT JOIN j{r}_{jumps} j ON l.lbl = j.c
-)""")
-    sel = "\nUNION ALL\n".join(
-        f"SELECT x, y, CAST({r} AS BIGINT) AS round FROM ch{r}"
-        for r in range(rounds)
+)"""])
+
+    return _unroll(
+        [SQL_TEDGES, _und(), _md5_pairs("pr"),
+         "lab0 AS (SELECT v, v AS lbl FROM (SELECT x AS v FROM pr UNION SELECT y FROM pr))"],
+        round_fn,
+        rounds,
+        "\nUNION ALL\n".join(
+            f"SELECT x, y, CAST({r} AS BIGINT) AS round FROM ch{r}"
+            for r in range(rounds)
+        ),
     )
-    parts.append("\n" + sel)
-    return "".join(parts)
 
 
 def _densest_sql(rounds: int, factor: str = "3.0") -> str:
@@ -1389,37 +1252,20 @@ def _densest_sql(rounds: int, factor: str = "3.0") -> str:
     bit-for-bit. Past extinction every round is empty (NULL density,
     excluded from the argmax), so ``rounds`` ≥ the engine's depth
     replays the full run."""
-    mat = (
-        ("WITH " + SQL_TEDGES[1:])
-        .replace("turns AS (", "turns AS MATERIALIZED (")
-        .replace("chained AS (", "chained AS MATERIALIZED (")
-        .replace("tedges AS (", "tedges AS MATERIALIZED (")
-    )
-    parts = [
-        mat,
-        """,
-s0 AS MATERIALIZED (
-  SELECT DISTINCT u, w FROM (
-    SELECT src AS u, dst AS w FROM tedges WHERE src <> dst
-    UNION ALL
-    SELECT dst AS u, src AS w FROM tedges WHERE src <> dst
-  )
-),
-l0 AS MATERIALIZED (SELECT DISTINCT u AS v FROM s0)""",
-    ]
-    for r in range(rounds):
-        parts.append(f""",
-l{r + 1} AS MATERIALIZED (
+
+    def round_fn(r: int) -> str:
+        return f"""l{r + 1} AS (
   SELECT l.v FROM l{r} l LEFT JOIN s{r} s ON s.u = l.v
   GROUP BY l.v
   HAVING COUNT(s.w) > {factor} * (
     CAST((SELECT COUNT(*) FROM s{r}) AS DOUBLE) / 2.0
     / (SELECT COUNT(*) FROM l{r}))
 ),
-s{r + 1} AS MATERIALIZED (
+s{r + 1} AS (
   SELECT s.u, s.w FROM s{r} s
   JOIN l{r + 1} a ON s.u = a.v JOIN l{r + 1} b ON s.w = b.v
-)""")
+)"""
+
     dens_rows = "\n  UNION ALL\n".join(
         f"""  SELECT {r} AS round,
     CAST((SELECT COUNT(*) FROM s{r}) AS DOUBLE) / 2.0
@@ -1429,19 +1275,20 @@ s{r + 1} AS MATERIALIZED (
     all_rows = "\n  UNION ALL\n".join(
         f"  SELECT {r} AS round, v FROM l{r}" for r in range(rounds + 1)
     )
-    parts.append(f""",
-dens AS (
-{dens_rows}
-),
-best AS (
+    return _unroll(
+        [SQL_TEDGES, _sym("s0"), "l0 AS (SELECT DISTINCT u AS v FROM s0)"],
+        round_fn,
+        rounds,
+        "SELECT v FROM allv WHERE round = (SELECT round FROM best)",
+        [
+            f"dens AS (\n{dens_rows}\n)",
+            """best AS (
   SELECT round FROM dens WHERE d IS NOT NULL
   ORDER BY d DESC, round ASC LIMIT 1
-),
-allv AS (
-{all_rows}
-)
-SELECT v FROM allv WHERE round = (SELECT round FROM best)""")
-    return "".join(parts)
+)""",
+            f"allv AS (\n{all_rows}\n)",
+        ],
+    )
 
 
 def _temporal_reach_sql(hops: int) -> str:
@@ -1451,16 +1298,27 @@ def _temporal_reach_sql(hops: int) -> str:
     ``hops`` unrolled (state ∪ usable-messages) min-rounds — all int64
     µs, no doubles. Past the fixpoint rounds are the identity, so
     ``hops`` ≥ the engine's early-stop depth replays the run."""
-    parts = [
-        ("WITH " + SQL_TURNS[1:]).replace("turns AS (", "turns AS MATERIALIZED ("),
-        """,
-tch AS MATERIALIZED (
+
+    def round_fn(r: int) -> str:
+        return f"""ea{r + 1} AS (
+  SELECT v, MIN(ea) AS ea FROM (
+    SELECT v, ea FROM ea{r}
+    UNION ALL
+    SELECT e.dst AS v, e.t AS ea FROM te e
+    JOIN ea{r} a ON e.src = a.v WHERE e.t >= a.ea
+  ) GROUP BY v
+)"""
+
+    return _unroll(
+        [
+            SQL_TURNS,
+            """tch AS (
   SELECT conv_id, turn_idx, role, tool, epoch_us(ts) AS t,
          LAG(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_turn,
          LAG(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role
   FROM turns
-),
-te AS MATERIALIZED (
+)""",
+            """te AS (
   SELECT 'turn#' || conv_id || '#' || CAST(prev_turn AS VARCHAR) AS src,
          'turn#' || conv_id || '#' || CAST(turn_idx AS VARCHAR) AS dst, t
   FROM tch WHERE prev_turn IS NOT NULL
@@ -1471,24 +1329,16 @@ te AS MATERIALIZED (
   SELECT 'turn#' || conv_id || '#' || CAST(turn_idx AS VARCHAR),
          'tool#' || tool, t
   FROM tch WHERE tool IS NOT NULL
-),
-ea0 AS MATERIALIZED (
+)""",
+            """ea0 AS (
   SELECT 'turn#' || conv_id || '#0' AS v, MIN(epoch_us(ts)) AS ea
   FROM turns WHERE turn_idx = 0 GROUP BY 1
 )""",
-    ]
-    for r in range(hops):
-        parts.append(f""",
-ea{r + 1} AS MATERIALIZED (
-  SELECT v, MIN(ea) AS ea FROM (
-    SELECT v, ea FROM ea{r}
-    UNION ALL
-    SELECT e.dst AS v, e.t AS ea FROM te e
-    JOIN ea{r} a ON e.src = a.v WHERE e.t >= a.ea
-  ) GROUP BY v
-)""")
-    parts.append(f"\nSELECT v, CAST(ea AS BIGINT) AS ea_us FROM ea{hops}")
-    return "".join(parts)
+        ],
+        round_fn,
+        hops,
+        f"SELECT v, CAST(ea AS BIGINT) AS ea_us FROM ea{hops}",
+    )
 
 
 def _wl_sql(rounds: int) -> str:
@@ -1496,34 +1346,18 @@ def _wl_sql(rounds: int) -> str:
     (out, in)-degree pair, each round re-hashes the own color with the
     (Σ md5-prefix-hash, count) summaries of the out- and in-neighbour
     color multisets — byte-identical strings both engines."""
-    hx = "('0x' || substr(md5({c}), 1, 8))::UBIGINT"
-    parts = [
-        ("WITH " + SQL_TEDGES[1:]).replace("tedges AS (", "tedges AS MATERIALIZED ("),
-        """,
-d AS MATERIALIZED (SELECT DISTINCT src, dst FROM tedges),
-verts AS MATERIALIZED (SELECT src AS v FROM d UNION SELECT dst FROM d),
-c0 AS MATERIALIZED (
-  SELECT verts.v,
-         md5(CAST(COALESCE(o.od, 0) AS VARCHAR) || '|' ||
-             CAST(COALESCE(i.ind, 0) AS VARCHAR)) AS color
-  FROM verts
-  LEFT JOIN (SELECT src AS v, COUNT(*) AS od FROM d GROUP BY 1) o
-    ON verts.v = o.v
-  LEFT JOIN (SELECT dst AS v, COUNT(*) AS ind FROM d GROUP BY 1) i
-    ON verts.v = i.v
-)""",
-    ]
-    for r in range(rounds):
-        parts.append(f""",
-om{r} AS MATERIALIZED (
-  SELECT d.src AS v, SUM({hx.format(c="c.color")}) AS os, COUNT(*) AS oc
+    hx = "('0x' || substr(md5(c.color), 1, 8))::UBIGINT"
+
+    def round_fn(r: int) -> str:
+        return f"""om{r} AS (
+  SELECT d.src AS v, SUM({hx}) AS os, COUNT(*) AS oc
   FROM d JOIN c{r} c ON d.dst = c.v GROUP BY 1
 ),
-im{r} AS MATERIALIZED (
-  SELECT d.dst AS v, SUM({hx.format(c="c.color")}) AS isum, COUNT(*) AS ic
+im{r} AS (
+  SELECT d.dst AS v, SUM({hx}) AS isum, COUNT(*) AS ic
   FROM d JOIN c{r} c ON d.src = c.v GROUP BY 1
 ),
-c{r + 1} AS MATERIALIZED (
+c{r + 1} AS (
   SELECT c.v,
          md5(c.color || '|' ||
              CAST(COALESCE(om{r}.os, 0) AS VARCHAR) || '|' ||
@@ -1533,121 +1367,126 @@ c{r + 1} AS MATERIALIZED (
   FROM c{r} c
   LEFT JOIN om{r} ON c.v = om{r}.v
   LEFT JOIN im{r} ON c.v = im{r}.v
-)""")
-    parts.append(f"\nSELECT v, color FROM c{rounds}")
-    return "".join(parts)
+)"""
+
+    return _unroll(
+        [
+            SQL_TEDGES,
+            "d AS (SELECT DISTINCT src, dst FROM tedges)",
+            _verts(),
+            """c0 AS (
+  SELECT verts.v,
+         md5(CAST(COALESCE(o.od, 0) AS VARCHAR) || '|' ||
+             CAST(COALESCE(i.ind, 0) AS VARCHAR)) AS color
+  FROM verts
+  LEFT JOIN (SELECT src AS v, COUNT(*) AS od FROM d GROUP BY 1) o
+    ON verts.v = o.v
+  LEFT JOIN (SELECT dst AS v, COUNT(*) AS ind FROM d GROUP BY 1) i
+    ON verts.v = i.v
+)""",
+        ],
+        round_fn,
+        rounds,
+        f"SELECT v, color FROM c{rounds}",
+    )
 
 
 def _dbscan_sql(rounds: int = 8, min_pts: int = 2) -> str:
     """DBSCAN twin (pipeline/clustering.py::dbscan_exact): exact cosine
     ≥ 0.4 pairs, core = degree ≥ min_pts, clusters via ``rounds``
-    unrolled min-label + pointer-jump CC rounds on the core subgraph
-    (labels converge to the min id — the engine's CC convention),
-    border = min core-neighbour cluster, rest noise."""
-    parts = [
-        f"""
-WITH pr AS MATERIALIZED (
+    unrolled _cc_round rounds on the core subgraph (labels converge to
+    the min id — the engine's CC convention), border = min core-neighbour
+    cluster, rest noise."""
+    return _unroll(
+        [
+            """pr AS (
   SELECT a.vec_id AS a, b.vec_id AS b
   FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
   WHERE ROUND(list_cosine_similarity(a.embedding::DOUBLE[],
                                      b.embedding::DOUBLE[]), 6) >= 0.4
-),
-sym AS MATERIALIZED (
-  SELECT a AS u, b AS v FROM pr UNION ALL SELECT b, a FROM pr
-),
-core AS MATERIALIZED (
+)""",
+            "sym AS (SELECT a AS u, b AS v FROM pr UNION ALL SELECT b, a FROM pr)",
+            f"""core AS (
   SELECT u AS v FROM (SELECT u, COUNT(*) AS d FROM sym GROUP BY u)
   WHERE d >= {min_pts}
-),
-cp AS MATERIALIZED (
+)""",
+            """cp AS (
   SELECT pr.a, pr.b FROM pr
   JOIN core ca ON pr.a = ca.v JOIN core cb ON pr.b = cb.v
-),
-csym AS MATERIALIZED (
-  SELECT a AS u, b AS v FROM cp UNION ALL SELECT b, a FROM cp
-),
-l0 AS MATERIALIZED (SELECT v, v AS lbl FROM core)""",
-    ]
-    for r in range(rounds):
-        parts.append(f""",
-a{r} AS MATERIALIZED (
-  SELECT l.v, least(l.lbl, COALESCE(MIN(n.lbl), l.lbl)) AS lbl
-  FROM l{r} l
-  LEFT JOIN csym s ON s.u = l.v
-  LEFT JOIN l{r} n ON n.v = s.v
-  GROUP BY l.v, l.lbl
-),
-l{r + 1} AS MATERIALIZED (
-  SELECT a.v, COALESCE(p.lbl, a.lbl) AS lbl
-  FROM a{r} a LEFT JOIN a{r} p ON p.v = a.lbl
-)""")
-    parts.append(f""",
-clusters AS MATERIALIZED (SELECT v, lbl AS cluster_id FROM l{rounds}),
-border AS MATERIALIZED (
-  SELECT s.u AS v, MIN(cl.cluster_id) AS cluster_id
-  FROM sym s JOIN clusters cl ON s.v = cl.v
-  WHERE s.u NOT IN (SELECT v FROM core)
-  GROUP BY s.u
-)
-SELECT e.vec_id,
+)""",
+            "csym AS (SELECT a AS u, b AS v FROM cp UNION ALL SELECT b, a FROM cp)",
+            "l0 AS (SELECT v, v AS lbl FROM core)",
+        ],
+        _cc_round("csym"),
+        rounds,
+        """SELECT e.vec_id,
        CASE WHEN c.v IS NOT NULL THEN 'core'
             WHEN b.v IS NOT NULL THEN 'border'
             ELSE 'noise' END AS role,
        CAST(COALESCE(c.cluster_id, b.cluster_id) AS BIGINT) AS cluster_id
 FROM embeddings e
 LEFT JOIN clusters c ON e.vec_id = c.v
-LEFT JOIN border b ON e.vec_id = b.v""")
-    return "".join(parts)
+LEFT JOIN border b ON e.vec_id = b.v""",
+        [
+            f"clusters AS (SELECT v, lbl AS cluster_id FROM l{rounds})",
+            """border AS (
+  SELECT s.u AS v, MIN(cl.cluster_id) AS cluster_id
+  FROM sym s JOIN clusters cl ON s.v = cl.v
+  WHERE s.u NOT IN (SELECT v FROM core)
+  GROUP BY s.u
+)""",
+        ],
+    )
 
 
-def _kmeans_sql_ctes(k: int, iters: int, dim: int) -> str:
-    """Shared CTE chain for the k-means / IVF twins: deterministic
-    farthest-point (maxmin) seeding unrolled seed-by-seed, then
-    ``iters`` unrolled Lloyd iterations (pipeline/clustering.py).
-    ``list_reduce`` is DuckDB's exact left fold — bit-identical to
-    Spark's ``F.aggregate`` with 0.0 init; argmin on (ROUND(d²,6), cid)
-    shields the engine-specific fp order of the centroid means."""
+def _fold(n: int, expr: str) -> str:
+    """Σ_{j=1..n} expr as a DuckDB ``list_reduce`` — an exact left fold,
+    bit-identical to Spark's ``F.aggregate`` with 0.0 init."""
+    return (
+        f"list_reduce(list_transform(range(1, {n + 1}), j -> {expr}), "
+        "(p, q) -> p + q)"
+    )
 
-    def d2(a: str, b: str) -> str:
-        return (
-            f"list_reduce(list_transform(range(1, {dim + 1}), "
-            f"j -> ({a}[j]-{b}[j])*({a}[j]-{b}[j])), (p, q) -> p + q)"
-        )
 
-    parts = [
-        """
-e AS (
-  SELECT vec_id AS vid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings
-),
-s0 AS MATERIALIZED (
-  SELECT vec AS v0 FROM e ORDER BY md5(CAST(vid AS VARCHAR)) LIMIT 1
-)"""
-    ]
-    for i in range(1, k):
+def _d2(n: int, a: str, b: str) -> str:
+    """Squared euclidean distance of two n-vectors as a _fold."""
+    return _fold(n, f"({a}[j]-{b}[j])*({a}[j]-{b}[j])")
+
+
+def _kmeans_sql(
+    k: int,
+    iters: int,
+    dim: int,
+    final: str = "SELECT vid AS vec_id, cid AS cluster, ROUND(d2r, 4) AS d2_r4 FROM fin",
+    tail_ctes: Sequence[str] = (),
+) -> str:
+    """k-means twin (pipeline/clustering.py): deterministic farthest-point
+    (maxmin) seeding unrolled seed-by-seed, then ``iters`` unrolled Lloyd
+    iterations, then ``fin(vid, vec, cid, d2r)``, each vector's final
+    cell. Argmin on (ROUND(d²,6), cid) shields the engine-specific fp
+    order of the centroid means. ``final`` (and ``tail_ctes``) replace the
+    cell-assignment SELECT — _ivf_sql."""
+
+    def seed(i: int) -> str:
         froms = ", ".join(["e"] + [f"s{j}" for j in range(i)])
-        mind = ", ".join(d2("e.vec", f"s{j}.v{j}") for j in range(i))
+        mind = ", ".join(_d2(dim, "e.vec", f"s{j}.v{j}") for j in range(i))
         if i > 1:
             mind = f"LEAST({mind})"
-        parts.append(f""",
-s{i} AS MATERIALIZED (
+        return f"""s{i} AS (
   SELECT e.vec AS v{i} FROM {froms}
   ORDER BY ROUND({mind}, 6) DESC, e.vid LIMIT 1
-)""")
+)"""
+
     cents = "\n  UNION ALL ".join(
         f"SELECT {i} AS cid, v{i} AS cvec FROM s{i}" for i in range(k)
     )
-    parts.append(f""",
-c0 AS (
-  {cents}
-)""")
-    for i in range(iters):
-        parts.append(f""",
-a{i} AS (
+
+    def round_fn(i: int) -> str:
+        return f"""a{i} AS (
   SELECT vid, vec, cid FROM (
     SELECT vid, vec, cid,
            ROW_NUMBER() OVER (PARTITION BY vid
-                              ORDER BY ROUND({d2('vec', 'cvec')}, 6), cid) AS rn
+                              ORDER BY ROUND({_d2(dim, 'vec', 'cvec')}, 6), cid) AS rn
     FROM e CROSS JOIN c{i})
   WHERE rn = 1
 ),
@@ -1658,70 +1497,78 @@ m{i} AS (
     GROUP BY cid, pos)
   GROUP BY cid
 ),
-c{i + 1} AS MATERIALIZED (
+c{i + 1} AS (
   SELECT c.cid, COALESCE(m.cvec, c.cvec) AS cvec
   FROM c{i} c LEFT JOIN m{i} m USING (cid)
-)""")
-    parts.append(f""",
-fin AS (
+)"""
+
+    return _unroll(
+        [
+            """e AS (
+  SELECT vec_id AS vid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
+  FROM embeddings
+)""",
+            "s0 AS (SELECT vec AS v0 FROM e ORDER BY md5(CAST(vid AS VARCHAR)) LIMIT 1)",
+            *map(seed, range(1, k)),
+            f"c0 AS (\n  {cents}\n)",
+        ],
+        round_fn,
+        iters,
+        final,
+        [
+            f"""fin AS (
   SELECT vid, vec, cid, d2r FROM (
-    SELECT vid, vec, cid, ROUND({d2('vec', 'cvec')}, 6) AS d2r,
+    SELECT vid, vec, cid, ROUND({_d2(dim, 'vec', 'cvec')}, 6) AS d2r,
            ROW_NUMBER() OVER (PARTITION BY vid
-                              ORDER BY ROUND({d2('vec', 'cvec')}, 6), cid) AS rn
+                              ORDER BY ROUND({_d2(dim, 'vec', 'cvec')}, 6), cid) AS rn
     FROM e CROSS JOIN c{iters})
   WHERE rn = 1
-)""")
-    return "".join(parts)
-
-
-def _kmeans_sql(k: int, iters: int, dim: int) -> str:
-    return (
-        "WITH" + _kmeans_sql_ctes(k, iters, dim)
-        + """
-SELECT vid AS vec_id, cid AS cluster, ROUND(d2r, 4) AS d2_r4 FROM fin"""
+)""",
+            *tail_ctes,
+        ],
     )
 
 
 def _ivf_sql(
     k: int, iters: int, dim: int, nprobe: int, topk: int, max_qid: int
 ) -> str:
-    def fold(expr: str) -> str:
-        return (
-            f"list_reduce(list_transform(range(1, {dim + 1}), j -> {expr}), "
-            "(p, q) -> p + q)"
-        )
-
-    return (
-        "WITH" + _kmeans_sql_ctes(k, iters, dim)
-        + f""",
-corpus AS (
-  SELECT vid AS cand_id, vec AS cvecd, cid,
-         sqrt({fold('vec[j]*vec[j]')}) AS cnorm
-  FROM fin
-),
-qs AS (SELECT vid AS query_id, vec AS qvec FROM e WHERE vid < {max_qid}),
-probes AS (
-  SELECT query_id, qvec, cid FROM (
-    SELECT q.query_id, q.qvec, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id
-                              ORDER BY ROUND({fold('(qvec[j]-cvec[j])*(qvec[j]-cvec[j])')}, 6),
-                                       c.cid) AS rn
-    FROM qs q CROSS JOIN c{iters} c)
-  WHERE rn <= {nprobe}
-),
-cand AS (
-  SELECT p.query_id, co.cand_id,
-         ROUND({fold('qvec[j]*cvecd[j]')}
-               / (sqrt({fold('qvec[j]*qvec[j]')}) * co.cnorm), 6) AS cos_r6
-  FROM probes p JOIN corpus co USING (cid)
-  WHERE co.cand_id <> p.query_id
-)
-SELECT query_id, CAST(rank AS INT) AS rank, match_id, cos_r6 FROM (
+    """IVF top-k twin (pipeline/clustering.py): the _kmeans_sql cells as
+    the inverted lists, ``nprobe`` nearest cells probed per query, exact
+    cosine re-rank within them."""
+    return _kmeans_sql(
+        k,
+        iters,
+        dim,
+        f"""SELECT query_id, CAST(rank AS INT) AS rank, match_id, cos_r6 FROM (
   SELECT query_id, cand_id AS match_id, cos_r6,
          ROW_NUMBER() OVER (PARTITION BY query_id
                             ORDER BY cos_r6 DESC, cand_id) AS rank
   FROM cand)
-WHERE rank <= {topk}"""
+WHERE rank <= {topk}""",
+        [
+            f"""corpus AS (
+  SELECT vid AS cand_id, vec AS cvecd, cid,
+         sqrt({_fold(dim, 'vec[j]*vec[j]')}) AS cnorm
+  FROM fin
+)""",
+            f"qs AS (SELECT vid AS query_id, vec AS qvec FROM e WHERE vid < {max_qid})",
+            f"""probes AS (
+  SELECT query_id, qvec, cid FROM (
+    SELECT q.query_id, q.qvec, c.cid,
+           ROW_NUMBER() OVER (PARTITION BY q.query_id
+                              ORDER BY ROUND({_fold(dim, '(qvec[j]-cvec[j])*(qvec[j]-cvec[j])')}, 6),
+                                       c.cid) AS rn
+    FROM qs q CROSS JOIN c{iters} c)
+  WHERE rn <= {nprobe}
+)""",
+            f"""cand AS (
+  SELECT p.query_id, co.cand_id,
+         ROUND({_fold(dim, 'qvec[j]*cvecd[j]')}
+               / (sqrt({_fold(dim, 'qvec[j]*qvec[j]')}) * co.cnorm), 6) AS cos_r6
+  FROM probes p JOIN corpus co USING (cid)
+  WHERE co.cand_id <> p.query_id
+)""",
+        ],
     )
 
 
@@ -1736,41 +1583,18 @@ def _pq_sql(
     argmin, so codes and the ranked output match exactly."""
     sub = dim // m
 
-    def d2(a: str, b: str) -> str:
-        return (
-            f"list_reduce(list_transform(range(1, {sub + 1}), "
-            f"j -> ({a}[j] - {b}[j]) * ({a}[j] - {b}[j])), (p, q) -> p + q)"
-        )
-
     def assign_cte(name: str, cents: str) -> str:
-        return f"""
-{name} AS MATERIALIZED (
+        return f"""{name} AS (
   SELECT vid, m, subvec, cid FROM (
     SELECT s.vid, s.m, s.subvec, c.cid,
            ROW_NUMBER() OVER (PARTITION BY s.vid, s.m
-                              ORDER BY ROUND({d2('s.subvec', 'c.cvec')}, 6),
+                              ORDER BY ROUND({_d2(sub, 's.subvec', 'c.cvec')}, 6),
                                        c.cid) AS rn
     FROM sub s JOIN {cents} c USING (m)) WHERE rn = 1
 )"""
 
-    parts = [f"""WITH e AS MATERIALIZED (
-  SELECT vec_id AS vid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-  FROM embeddings
-),
-sub AS MATERIALIZED (
-  SELECT vid, mm.m, vec[mm.m * {sub} + 1 : (mm.m + 1) * {sub}] AS subvec
-  FROM e CROSS JOIN (SELECT CAST(range AS INT) AS m FROM range({m})) mm
-),
-c0 AS MATERIALIZED (
-  SELECT m, CAST(rn - 1 AS INT) AS cid, subvec AS cvec FROM (
-    SELECT m, subvec,
-           ROW_NUMBER() OVER (PARTITION BY m
-                              ORDER BY md5(CAST(vid AS VARCHAR)), vid) AS rn
-    FROM sub) WHERE rn <= {k}
-)"""]
-    for i in range(iters):
-        parts.append("," + assign_cte(f"a{i}", f"c{i}"))
-        parts.append(f""",
+    def round_fn(i: int) -> str:
+        return assign_cte(f"a{i}", f"c{i}") + f""",
 mm{i} AS (
   SELECT m, cid, list(mx ORDER BY pos) AS cvec FROM (
     SELECT a.m, a.cid, p.pos, AVG(a.subvec[p.pos]) AS mx
@@ -1779,51 +1603,58 @@ mm{i} AS (
     GROUP BY a.m, a.cid, p.pos)
   GROUP BY m, cid
 ),
-c{i + 1} AS MATERIALIZED (
+c{i + 1} AS (
   SELECT c.m, c.cid, COALESCE(mm.cvec, c.cvec) AS cvec
   FROM c{i} c LEFT JOIN mm{i} mm ON c.m = mm.m AND c.cid = mm.cid
-)""")
-    parts.append("," + assign_cte("codes", f"c{iters}"))
-    parts.append(f""",
-qsub AS (SELECT vid AS query_id, m, subvec FROM sub WHERE vid < {max_qid}),
-tbl AS MATERIALIZED (
-  SELECT q.query_id, q.m, c.cid, {d2('q.subvec', 'c.cvec')} AS d2
-  FROM qsub q JOIN c{iters} c USING (m)
-),
-adc AS (
-  SELECT t.query_id, co.vid AS match_id, ROUND(SUM(t.d2), 6) AS adc_r6
-  FROM codes co JOIN tbl t ON co.m = t.m AND co.cid = t.cid
-  WHERE co.vid <> t.query_id
-  GROUP BY t.query_id, co.vid
-)
-SELECT query_id, CAST(rank AS INT) AS rank, match_id, adc_r6 FROM (
+)"""
+
+    return _unroll(
+        [
+            """e AS (
+  SELECT vec_id AS vid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
+  FROM embeddings
+)""",
+            f"""sub AS (
+  SELECT vid, mm.m, vec[mm.m * {sub} + 1 : (mm.m + 1) * {sub}] AS subvec
+  FROM e CROSS JOIN (SELECT CAST(range AS INT) AS m FROM range({m})) mm
+)""",
+            f"""c0 AS (
+  SELECT m, CAST(rn - 1 AS INT) AS cid, subvec AS cvec FROM (
+    SELECT m, subvec,
+           ROW_NUMBER() OVER (PARTITION BY m
+                              ORDER BY md5(CAST(vid AS VARCHAR)), vid) AS rn
+    FROM sub) WHERE rn <= {k}
+)""",
+        ],
+        round_fn,
+        iters,
+        f"""SELECT query_id, CAST(rank AS INT) AS rank, match_id, adc_r6 FROM (
   SELECT query_id, match_id, adc_r6,
          ROW_NUMBER() OVER (PARTITION BY query_id
                             ORDER BY adc_r6, match_id) AS rank
   FROM adc)
-WHERE rank <= {topk}""")
-    return "".join(parts)
+WHERE rank <= {topk}""",
+        [
+            assign_cte("codes", f"c{iters}"),
+            f"qsub AS (SELECT vid AS query_id, m, subvec FROM sub WHERE vid < {max_qid})",
+            f"""tbl AS (
+  SELECT q.query_id, q.m, c.cid, {_d2(sub, 'q.subvec', 'c.cvec')} AS d2
+  FROM qsub q JOIN c{iters} c USING (m)
+)""",
+            """adc AS (
+  SELECT t.query_id, co.vid AS match_id, ROUND(SUM(t.d2), 6) AS adc_r6
+  FROM codes co JOIN tbl t ON co.m = t.m AND co.cid = t.cid
+  WHERE co.vid <> t.query_id
+  GROUP BY t.query_id, co.vid
+)""",
+        ],
+    )
 
 
-def _bpe_sql(n_merges: int) -> str:
-    """BPE-training twin (pipeline/bpe.py): the word-type table rendered
-    as padded double-space symbol strings, ``n_merges`` rounds unrolled
-    — per round one pair-count aggregation, a (cnt DESC, l, r) argmax,
-    and a literal replace applying the merge (identical non-overlapping
-    left-to-right semantics in both engines; see the module docstring
-    for why the double separator makes literal replace a correct BPE
-    merge pass)."""
-    parts = ["""WITH w0 AS MATERIALIZED (
-  SELECT ' ' || array_to_string(list_transform(range(1, length(w) + 1),
-                                               i -> w[i]), '  ') || ' ' AS s,
-         freq
-  FROM (SELECT tok AS w, COUNT(*) AS freq FROM (
-          SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-          FROM documents) GROUP BY tok)
-)"""]
-    for r in range(n_merges):
-        parts.append(f""",
-c{r} AS (
+def _bpe_round(r: int) -> str:
+    """One BPE merge round: pair counts over w{r}, the (cnt DESC, l, r)
+    argmax m{r}, and w{r+1} with that merge applied."""
+    return f"""c{r} AS (
   SELECT l, r, SUM(freq) AS cnt FROM (
     SELECT freq,
            unnest(list_transform(range(1, len(sy)), i -> sy[i])) AS l,
@@ -1832,40 +1663,64 @@ c{r} AS (
     WHERE len(sy) >= 2)
   GROUP BY l, r
 ),
-m{r} AS MATERIALIZED (
+m{r} AS (
   SELECT l, r, cnt FROM c{r} ORDER BY cnt DESC, l, r LIMIT 1
 ),
-w{r + 1} AS MATERIALIZED (
+w{r + 1} AS (
   SELECT replace(s, ' ' || (SELECT l FROM m{r}) || '  '
                         || (SELECT r FROM m{r}) || ' ',
                     ' ' || (SELECT l FROM m{r})
                         || (SELECT r FROM m{r}) || ' ') AS s,
          freq
   FROM w{r}
-)""")
-    parts.append(
-        "\nSELECT merge_rank, lhs, rhs, pair_count FROM ("
+)"""
+
+
+_BPE_W0 = """w0 AS (
+  SELECT ' ' || array_to_string(list_transform(range(1, length(w) + 1),
+                                               i -> w[i]), '  ') || ' ' AS s,
+         freq
+  FROM (SELECT tok AS w, COUNT(*) AS freq FROM (
+          SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+          FROM documents) GROUP BY tok)
+)"""
+
+
+def _bpe_sql(n_merges: int) -> str:
+    """BPE-training twin (pipeline/bpe.py): the word-type table rendered
+    as padded double-space symbol strings, ``n_merges`` _bpe_round rounds
+    unrolled — per round one pair-count aggregation, a (cnt DESC, l, r)
+    argmax, and a literal replace applying the merge (identical
+    non-overlapping left-to-right semantics in both engines; see the
+    module docstring for why the double separator makes literal replace
+    a correct BPE merge pass)."""
+    return _unroll(
+        [_BPE_W0],
+        _bpe_round,
+        n_merges,
+        "SELECT merge_rank, lhs, rhs, pair_count FROM ("
         + " UNION ALL ".join(
             f"SELECT CAST({r} AS INT) AS merge_rank, l AS lhs, r AS rhs,"
             f" CAST(cnt AS BIGINT) AS pair_count FROM m{r}"
             for r in range(n_merges)
         )
-        + ")"
+        + ")",
     )
-    return "".join(parts)
 
 
 def _bpe_total_sql(n_merges: int) -> str:
     """Same training rounds as _bpe_sql, finishing with the corpus-level
     segment-count aggregation (q_bpe_token_total's twin)."""
-    body = _bpe_sql(n_merges)
-    cut = body.index("\nSELECT merge_rank")
-    return body[:cut] + f"""
-SELECT CAST(COUNT(*) AS BIGINT) AS n_types,
+    return _unroll(
+        [_BPE_W0],
+        _bpe_round,
+        n_merges,
+        f"""SELECT CAST(COUNT(*) AS BIGINT) AS n_types,
        CAST(SUM(freq) AS BIGINT) AS n_words,
        CAST(SUM(freq * len(string_split(trim(s), '  '))) AS BIGINT)
          AS n_tokens
-FROM w{n_merges}"""
+FROM w{n_merges}""",
+    )
 
 
 def _sq_sql(dim: int, max_qid: int, topk: int) -> str:
@@ -1874,24 +1729,17 @@ def _sq_sql(dim: int, max_qid: int, topk: int) -> str:
     cosine left-fold — the same IEEE ops in the same order as the
     Spark expressions, so codes match exactly and cosines to well
     under the ROUND 6."""
-
-    def fold(expr: str) -> str:
-        return (
-            f"list_reduce(list_transform(range(1, {dim + 1}), j -> {expr}), "
-            "(p, q) -> p + q)"
-        )
-
     return f"""
-WITH e AS MATERIALIZED (
+WITH e AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
   FROM embeddings
 ),
 dims AS (SELECT range AS j FROM range(1, {dim + 1})),
-stats AS MATERIALIZED (
+stats AS (
   SELECT j, MIN(vec[j]) AS mn, MAX(vec[j]) AS mx
   FROM e CROSS JOIN dims GROUP BY j
 ),
-codes AS MATERIALIZED (
+codes AS (
   SELECT e.vec_id, d.j,
          CASE WHEN s.mx = s.mn THEN 0
               ELSE LEAST(255, GREATEST(0,
@@ -1899,7 +1747,7 @@ codes AS MATERIALIZED (
          END AS c
   FROM e CROSS JOIN dims d JOIN stats s ON d.j = s.j
 ),
-deq AS MATERIALIZED (
+deq AS (
   SELECT c.vec_id AS neighbour_id,
          list(s.mn + (c.c + 0.5) * ((s.mx - s.mn) / 256.0) ORDER BY c.j) AS v
   FROM codes c JOIN stats s ON c.j = s.j GROUP BY c.vec_id
@@ -1907,8 +1755,8 @@ deq AS MATERIALIZED (
 qs AS (SELECT vec_id AS query_id, vec AS qv FROM e WHERE vec_id < {max_qid}),
 scored AS (
   SELECT q.query_id, d.neighbour_id,
-         ROUND({fold('qv[j] * v[j]')}
-               / (sqrt({fold('qv[j] * qv[j]')}) * sqrt({fold('v[j] * v[j]')})),
+         ROUND({_fold(dim, 'qv[j] * v[j]')}
+               / (sqrt({_fold(dim, 'qv[j] * qv[j]')}) * sqrt({_fold(dim, 'v[j] * v[j]')})),
                6) AS cos_r6
   FROM qs q JOIN deq d ON d.neighbour_id <> q.query_id
 )
@@ -3729,7 +3577,7 @@ def q_louvain_level1_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_louvain_communities_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full multi-level Louvain (3 levels × 6 rounds + contraction)
     community size histogram — hash-checked against the level-unrolled
-    twin ``_louvain_full_sql(6, 3)`` (each level replays the verified
+    twin ``_louvain_sql(6, 3)`` (each level replays the verified
     move recursion on the contracted weighted graph; the engine's
     0-move early level-break is twin-safe since contracting an unmoved
     level is the identity), and pinned against a pure-Python replay of
@@ -4172,17 +4020,17 @@ STOPWORDS_SQL = "['the', 'a', 'of', 'and', 'to', 'in', 'is', 'it']"
 
 ORACLE_SQL = {
     "transcripts_view": f"""
-WITH {SQL_TURNS[1:]}
+WITH {SQL_TURNS}
 SELECT conv_id, turn_idx, role, text, tool,
        strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str
 FROM turns
 """,
     "edge_counts_by_kind": f"""
-WITH {SQL_TEDGES[1:]}
+WITH {SQL_TEDGES}
 SELECT kind, COUNT(*) AS n_edges FROM tedges GROUP BY kind
 """,
     "edges_streaming_counts": f"""
-WITH {SQL_TEDGES[1:]}
+WITH {SQL_TEDGES}
 SELECT kind, COUNT(*) AS n_edges FROM tedges GROUP BY kind
 """,
     "edge_delta_append": f"""
@@ -4201,22 +4049,22 @@ FULL JOIN (SELECT src, dst, kind, COUNT(*) AS n_old FROM tedgesB
 WHERE COALESCE(n_new, 0) <> COALESCE(n_old, 0)
 """,
     "turn_chain_edges": f"""
-WITH {SQL_TEDGES[1:]}
+WITH {SQL_TEDGES}
 SELECT src, dst FROM tedges WHERE kind = 'turn_chain'
 """,
     "role_role_matrix": f"""
-WITH {SQL_TEDGES[1:]}
+WITH {SQL_TEDGES}
 SELECT src, dst, COUNT(*) AS n FROM tedges WHERE kind = 'role_role'
 GROUP BY src, dst
 """,
     "tool_usage": f"""
-WITH {SQL_TEDGES[1:]}
+WITH {SQL_TEDGES}
 SELECT dst AS tool_key, COUNT(*) AS n_refs FROM tedges
 WHERE kind = 'turn_tool' GROUP BY dst
 """,
     "degree_top20": f"""
-WITH {SQL_TEDGES[1:]},
-verts AS (SELECT src AS v FROM tedges UNION SELECT dst FROM tedges),
+WITH {SQL_TEDGES},
+{_verts()},
 outd AS (SELECT src AS v, COUNT(*) AS out_deg FROM tedges GROUP BY src),
 ind  AS (SELECT dst AS v, COUNT(*) AS in_deg  FROM tedges GROUP BY dst)
 SELECT verts.v, COALESCE(ind.in_deg, 0) AS in_deg,
@@ -4225,8 +4073,8 @@ FROM verts LEFT JOIN outd ON verts.v = outd.v LEFT JOIN ind ON verts.v = ind.v
 ORDER BY in_deg DESC, verts.v ASC LIMIT 20
 """,
     "degree_distribution": f"""
-WITH {SQL_TEDGES[1:]},
-verts AS (SELECT src AS v FROM tedges UNION SELECT dst FROM tedges),
+WITH {SQL_TEDGES},
+{_verts()},
 outd AS (SELECT src AS v, COUNT(*) AS out_deg FROM tedges GROUP BY src)
 SELECT CAST(COALESCE(outd.out_deg, 0) AS BIGINT) AS out_deg,
        COUNT(*) AS n_vertices
@@ -4234,8 +4082,8 @@ FROM verts LEFT JOIN outd ON verts.v = outd.v
 GROUP BY 1
 """,
     "degree_quantiles": f"""
-WITH {SQL_TEDGES[1:]},
-verts AS (SELECT src AS v FROM tedges UNION SELECT dst FROM tedges),
+WITH {SQL_TEDGES},
+{_verts()},
 outd AS (SELECT src AS v, COUNT(*) AS out_deg FROM tedges GROUP BY src),
 alld AS (
   SELECT COALESCE(outd.out_deg, 0) AS od
@@ -4248,11 +4096,8 @@ SELECT CAST(p AS DOUBLE) AS p, ROUND(q, 6) AS q_r6 FROM (
 )
 """,
     "degree_assortativity": f"""
-WITH {SQL_TEDGES[1:]},
-und AS (
-  SELECT DISTINCT LEAST(src, dst) AS x, GREATEST(src, dst) AS y
-  FROM tedges WHERE src <> dst
-),
+WITH {SQL_TEDGES},
+{_und()},
 sym AS (
   SELECT x AS u, y AS w FROM und UNION ALL SELECT y, x FROM und
 ),
@@ -4261,11 +4106,8 @@ SELECT ROUND(CORR(du.d, dw.d), 6) AS assortativity_r6
 FROM sym JOIN deg du ON sym.u = du.u JOIN deg dw ON sym.w = dw.u
 """,
     "rich_club": f"""
-WITH {SQL_TEDGES[1:]},
-und AS (
-  SELECT DISTINCT LEAST(src, dst) AS x, GREATEST(src, dst) AS y
-  FROM tedges WHERE src <> dst
-),
+WITH {SQL_TEDGES},
+{_und()},
 sym AS (SELECT x AS u, y AS w FROM und UNION ALL SELECT y, x FROM und),
 deg AS (SELECT u, COUNT(*) AS d FROM sym GROUP BY u),
 ks AS (SELECT UNNEST([2, 4, 8, 16]) AS k),
@@ -4389,7 +4231,7 @@ UNION ALL SELECT 4, 'exact_dedup', CAST(c4 AS BIGINT),
     "hits_fixed5": _hits_sql(5),
     "salsa_fixed5": _salsa_sql(5),
     "induced_subgraph_counts": """
-WITH """ + SQL_TEDGES[1:] + """,
+WITH """ + SQL_TEDGES + """,
 kept AS (
   SELECT src, dst, kind FROM tedges
   WHERE ('0x' || substr(md5('subg:' || src), 1, 8))::UBIGINT < 1288490188
@@ -4398,10 +4240,10 @@ kept AS (
 SELECT kind, COUNT(*) AS n_edges FROM kept GROUP BY kind
 """,
     "negative_edges": """
-WITH """ + SQL_TEDGES[1:] + """,
-de AS MATERIALIZED (SELECT DISTINCT src, dst FROM tedges),
+WITH """ + SQL_TEDGES + """,
+de AS (SELECT DISTINCT src, dst FROM tedges),
 verts AS (SELECT src AS v FROM de UNION SELECT dst FROM de),
-vindex AS MATERIALIZED (
+vindex AS (
   SELECT v, ROW_NUMBER() OVER (
     ORDER BY ('0x' || substr(md5('vidx:' || v), 1, 8))::UBIGINT % 1024, v
   ) - 1 AS idx
@@ -4427,16 +4269,13 @@ SELECT src, dst, CAST(neg_rank AS INT) AS neg_rank FROM (
   FROM joined)
 WHERE neg_rank <= 5
 """,
-    "vertex_features": """
-WITH """ + SQL_TEDGES[1:] + """,
-p AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS x, greatest(src, dst) AS y
-  FROM tedges WHERE src <> dst
-),
-sym AS MATERIALIZED (
+    "vertex_features": f"""
+WITH {SQL_TEDGES},
+{_und("p")},
+sym AS (
   SELECT x AS u, y AS w FROM p UNION ALL SELECT y, x FROM p
 ),
-deg AS MATERIALIZED (SELECT u AS v, COUNT(*) AS deg FROM sym GROUP BY u),
+deg AS (SELECT u AS v, COUNT(*) AS deg FROM sym GROUP BY u),
 od AS (SELECT src AS v, COUNT(*) AS out_deg FROM tedges GROUP BY src),
 idg AS (SELECT dst AS v, COUNT(*) AS in_deg FROM tedges GROUP BY dst),
 nbr AS (
@@ -4444,7 +4283,7 @@ nbr AS (
          SUM(d.deg - 1) AS wedges
   FROM sym s JOIN deg d ON s.w = d.v GROUP BY s.u
 ),
-verts AS (SELECT src AS v FROM tedges UNION SELECT dst FROM tedges)
+{_verts()}
 SELECT verts.v, COALESCE(od.out_deg, 0) AS out_deg,
        COALESCE(idg.in_deg, 0) AS in_deg,
        COALESCE(deg.deg, 0) AS deg,
@@ -4470,14 +4309,14 @@ FROM verts LEFT JOIN od USING (v) LEFT JOIN idg USING (v)
     "densest_subgraph": _densest_sql(24),
     "temporal_reachability": _temporal_reach_sql(8),
     "wl_refinement": _wl_sql(3),
-    "temporal_relays": ("WITH " + SQL_TURNS[1:]) + """,
-tch AS MATERIALIZED (
+    "temporal_relays": ("WITH " + SQL_TURNS) + """,
+tch AS (
   SELECT conv_id, turn_idx, role, tool, epoch_us(ts) AS t,
          LAG(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_turn,
          LAG(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role
   FROM turns
 ),
-te AS MATERIALIZED (
+te AS (
   SELECT 'turn#' || conv_id || '#' || CAST(prev_turn AS VARCHAR) AS src,
          'turn#' || conv_id || '#' || CAST(turn_idx AS VARCHAR) AS dst, t
   FROM tch WHERE prev_turn IS NOT NULL
@@ -4510,11 +4349,8 @@ FROM embeddings, (SELECT unnest(range(16)) AS r)
     "label_propagation_fixed2": _lpa_sql(2),
     "label_propagation_sizes": _lpa_sql(10),
     "triangle_count": f"""
-WITH {SQL_TEDGES[1:]},
-und AS (
-  SELECT DISTINCT LEAST(src, dst) AS x, GREATEST(src, dst) AS y
-  FROM tedges WHERE src <> dst
-)
+WITH {SQL_TEDGES},
+{_und()}
 SELECT COUNT(*) AS triangles
 FROM und a JOIN und b ON a.y = b.x JOIN und c ON a.x = c.x AND b.y = c.y
 """,
@@ -4522,7 +4358,7 @@ FROM und a JOIN und b ON a.y = b.x JOIN und c ON a.x = c.x AND b.y = c.y
     # rebuilt exactly as in null_model_rewire, then counted like
     # triangle_count on its undirected closure
     "null_model_triangles": f"""
-WITH {SQL_TEDGES[1:]},
+WITH {SQL_TEDGES},
 s AS (
   SELECT src, dst,
          md5('s#' || src || '#' || dst) AS hs,
@@ -4540,11 +4376,8 @@ SELECT COUNT(*) AS triangles
 FROM und a JOIN und b ON a.y = b.x JOIN und c ON a.x = c.x AND b.y = c.y
 """,
     "four_clique_count": f"""
-WITH {SQL_TEDGES[1:]},
-und AS (
-  SELECT DISTINCT LEAST(src, dst) AS x, GREATEST(src, dst) AS y
-  FROM tedges WHERE src <> dst
-)
+WITH {SQL_TEDGES},
+{_und()}
 SELECT CAST(COUNT(*) AS BIGINT) AS n_4cliques
 FROM und ab
 JOIN und ac ON ac.x = ab.x AND ac.y > ab.y
@@ -4554,11 +4387,8 @@ JOIN und bd ON bd.x = ab.y AND bd.y = ad.y
 JOIN und cd ON cd.x = ac.y AND cd.y = ad.y
 """,
     "clustering_coefficient": f"""
-WITH {SQL_TEDGES[1:]},
-und AS (
-  SELECT DISTINCT LEAST(src, dst) AS x, GREATEST(src, dst) AS y
-  FROM tedges WHERE src <> dst
-),
+WITH {SQL_TEDGES},
+{_und()},
 tri AS (
   SELECT a.x AS v1, a.y AS v2, b.y AS v3
   FROM und a JOIN und b ON a.y = b.x JOIN und c ON a.x = c.x AND b.y = c.y
@@ -4583,11 +4413,8 @@ SELECT deg.v AS v, CAST(deg.d AS BIGINT) AS deg,
 FROM deg LEFT JOIN pv ON deg.v = pv.v
 """,
     "link_prediction_top50": f"""
-WITH {SQL_TEDGES[1:]},
-und AS (
-  SELECT DISTINCT LEAST(src, dst) AS x, GREATEST(src, dst) AS y
-  FROM tedges WHERE src <> dst
-),
+WITH {SQL_TEDGES},
+{_und()},
 sym AS (SELECT x AS v, y AS w FROM und UNION ALL SELECT y, x FROM und),
 deg AS (SELECT v, COUNT(*) AS d FROM sym GROUP BY v),
 apexn AS (
@@ -4610,11 +4437,8 @@ FROM fresh f JOIN deg da ON f.a = da.v JOIN deg db ON f.b = db.v
 ORDER BY common DESC, a ASC, b ASC LIMIT 50
 """,
     "adamic_adar_top50": f"""
-WITH {SQL_TEDGES[1:]},
-und AS (
-  SELECT DISTINCT LEAST(src, dst) AS x, GREATEST(src, dst) AS y
-  FROM tedges WHERE src <> dst
-),
+WITH {SQL_TEDGES},
+{_und()},
 sym AS (SELECT x AS v, y AS w FROM und UNION ALL SELECT y, x FROM und),
 deg AS (SELECT v, COUNT(*) AS d FROM sym GROUP BY v),
 apexn AS (
@@ -4647,7 +4471,7 @@ SELECT doc_id,
 FROM documents
 """,
     "turn_latency": f"""
-WITH {SQL_TURNS[1:]},
+WITH {SQL_TURNS},
 g AS (
   SELECT conv_id, role,
          LAG(role) OVER (PARTITION BY conv_id ORDER BY turn_idx)
@@ -5034,7 +4858,7 @@ WITH d AS (
 SELECT doc_id, source FROM r WHERE pos < FLOOR(0.25 * n + 0.5)
 """,
     "null_model_rewire": f"""
-WITH {SQL_TEDGES[1:]},
+WITH {SQL_TEDGES},
 s AS (
   SELECT src, dst,
          md5('s#' || src || '#' || dst) AS hs,
@@ -5187,14 +5011,14 @@ SELECT CAST(ROW_NUMBER() OVER (ORDER BY score_r6 DESC, doc_id ASC)
 FROM scored ORDER BY score_r6 DESC, doc_id ASC LIMIT 20
 """,
     "tool_cooccurrence": f"""
-WITH {SQL_TURNS[1:]},
+WITH {SQL_TURNS},
 gi AS (SELECT DISTINCT conv_id, tool FROM turns WHERE tool IS NOT NULL)
 SELECT a.tool AS tool_a, b.tool AS tool_b, COUNT(*) AS n_groups
 FROM gi a JOIN gi b ON a.conv_id = b.conv_id AND a.tool < b.tool
 GROUP BY 1, 2
 """,
     "butterfly_count": f"""
-WITH {SQL_TURNS[1:]},
+WITH {SQL_TURNS},
 gi AS (SELECT DISTINCT conv_id, tool FROM turns WHERE tool IS NOT NULL),
 p AS (
   SELECT a.tool AS ta, b.tool AS tb, COUNT(*) AS c
@@ -5209,7 +5033,7 @@ SELECT CAST(COALESCE(SUM(c * (c - 1)), 0) // 2 AS BIGINT) AS n_butterflies,
 FROM p
 """,
     "reciprocity": f"""
-WITH {SQL_TEDGES[1:]},
+WITH {SQL_TEDGES},
 d AS (SELECT DISTINCT src, dst FROM tedges WHERE src <> dst)
 SELECT ROUND(AVG(CASE WHEN r.src IS NOT NULL THEN 1.0 ELSE 0.0 END), 6)
          AS reciprocity_r6
@@ -5218,7 +5042,7 @@ FROM d LEFT JOIN d r ON d.src = r.dst AND d.dst = r.src
     "katz_fixed6": _katz_sql(6, 0.05),
     "eigenvector_fixed6": _katz_sql(6, 1.0, beta=0.0, out_col="eig_n6"),
     "louvain_level1_sizes": _louvain_sql(6),
-    "louvain_communities_sizes": _louvain_full_sql(6, 3),
+    "louvain_communities_sizes": _louvain_sql(6, 3),
     "greedy_coloring": _coloring_sql(18),
     "core_numbers": _corenum_sql(20),
     # span detection: gaps-and-islands window here, doc-bounded array
@@ -5452,22 +5276,18 @@ FROM totals t LEFT JOIN kept USING (doc_id)
     "pq_topk": _pq_sql(4, 16, 2, 64, topk=10, max_qid=8),
 }
 
-# the roundtrip queries must reproduce the base view exactly
-# 22 unrolled rounds: every CTE must be MATERIALIZED or DuckDB's inliner
-# re-scans events.parquet exponentially and exhausts the fd limit
 ORACLE_SQL["sketch_streaming_cells"] = ORACLE_SQL["count_min_sketch"]
-ORACLE_SQL["pagerank_power_top20"] = (
-    re.sub(r"\n(\w+) AS \(", lambda mo: f"\n{mo.group(1)} AS MATERIALIZED (",
-           _pi_sql(22)).replace(
-        "SELECT r.v AS v, ROUND(r.r * nn.n, 6) AS rank_scaled\nFROM r22 r CROSS JOIN nn",
-        """SELECT v, rank_scaled FROM (
-  SELECT r.v AS v, ROUND(r.r * nn.n, 6) AS rank_scaled
-  FROM r22 r CROSS JOIN nn)
+# 22 unrolled rounds: every CTE must be MATERIALIZED (_unroll does it) or
+# DuckDB's inliner re-scans events.parquet exponentially and exhausts the
+# fd limit
+ORACLE_SQL["pagerank_power_top20"] = _pi_sql(
+    22,
+    f"""SELECT v, rank_scaled FROM (
+{_pi_rank_select(22)})
 ORDER BY rank_scaled DESC, v LIMIT 20""",
-    )
 )
 ORACLE_SQL["conversation_profile"] = ("""
-WITH """ + SQL_TURNS[1:] + """
+WITH """ + SQL_TURNS + """
 SELECT conv_id, COUNT(*) AS n_turns,
        COUNT(DISTINCT role) AS n_roles,
        COUNT(tool) AS n_tool_calls,
@@ -5477,7 +5297,7 @@ SELECT conv_id, COUNT(*) AS n_turns,
 FROM turns GROUP BY conv_id
 """)
 ORACLE_SQL["tool_context_terms"] = ("""
-WITH """ + SQL_TURNS[1:] + """,
+WITH """ + SQL_TURNS + """,
 tok AS (
   SELECT tool, unnest(string_split_regex(trim(text), '\\s+')) AS term
   FROM turns WHERE tool IS NOT NULL
@@ -5489,6 +5309,7 @@ SELECT tool, CAST(rank AS INT) AS rank, term, cnt FROM (
   FROM cnt)
 WHERE rank <= 5
 """)
+# the roundtrip queries must reproduce the base view exactly
 ORACLE_SQL["transcripts_jsonl_roundtrip"] = ORACLE_SQL["transcripts_view"]
 ORACLE_SQL["transcripts_orc_roundtrip"] = ORACLE_SQL["transcripts_view"]
 # warm-start refresh: 5 stale supersteps on the events prefix, project +

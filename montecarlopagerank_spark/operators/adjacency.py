@@ -7,14 +7,17 @@ Two forms (SURVEY.md §1.4):
   unlike the reference's ``groupByKey``
   (ConvertNodeLinksToAdjacencyList.scala:40);
 
-* **CSR blocks** for the Arrow walk kernels:
-  ``blocks(block_id:int, vids:array<long>, indptr:array<long>,
-  indices:array<long>)`` — one row per vertex-range block, holding a
-  compressed-sparse-row slice of the graph. Block boundaries are
-  **degree-aware**: vids are packed so each block carries ≈ equal *edge*
-  count (not vertex count), so a hub-dense vid range is split into many
-  small blocks while sparse ranges coalesce — this is the "degree-aware
-  block splits" skew handling from BASELINE.json's north_star.
+* **CSR blocks** for the Arrow walk kernels (``plan_walk_blocks``): each
+  block is a compressed-sparse-row slice of the graph written as three
+  ``.npy`` arrays — ``vids`` (sorted row keys), ``indptr`` and
+  ``indices`` — under ``<csr_root>/_decoded/b<block_id>/``, the only copy
+  of the CSR (pagerank_mc ``_write_block``/``_load_block``). Block
+  boundaries are **degree-aware**: row keys are packed so each block
+  carries ≈ equal *edge* count (not vertex count), so a hub-dense vid
+  range is split into many small blocks while sparse ranges coalesce,
+  and a vertex above the hub threshold is itself split into replicas —
+  the "degree-aware block splits" skew handling from BASELINE.json's
+  north_star.
 
 Assigning blocks by cumulative degree needs a prefix sum over vid order;
 a single global window would serialize on one task at 10^12 scale, so it
@@ -28,15 +31,10 @@ from __future__ import annotations
 import time
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
-
-CSR_BLOCK_SCHEMA = (
-    "block_id int, vids array<long>, indptr array<long>, indices array<long>"
-)
 
 # replica id lives in the low bits of the CSR row key: rkey = v << 20 | r.
 # 2^20 replicas bounds a single hub at edges_per_block * 2^20 out-edges
@@ -98,22 +96,6 @@ def _assign_by_prefix(
         )
 
     return weighted.groupBy("rng").applyInArrow(kernel, schema=schema)
-
-
-def assign_blocks(
-    degrees_df: DataFrame, edges_per_block: int = 1 << 20, coarse: int = 1 << 16
-) -> DataFrame:
-    """``deg(v, out_deg)`` → ``(v, block_id)`` by cumulative out-degree:
-    block_id = floor(prefix_edges / edges_per_block). Each vertex also
-    counts 1 so empty-degree runs still split. Deterministic in vid order."""
-    weighted = degrees_df.select(
-        _coarse_range("v", coarse), "v", (F.col("out_deg") + F.lit(1)).alias("w")
-    )
-    totals = weighted.groupBy("rng").agg(F.sum("w")).collect()
-    return _assign_by_prefix(
-        weighted, "v", _range_offsets(totals), edges_per_block,
-        "v long, block_id int",
-    )
 
 
 def plan_walk_blocks(
@@ -362,42 +344,3 @@ def plan_walk_blocks(
     }
     return blocks_assign, meta
 
-
-def build_csr_blocks(
-    adj: DataFrame, block_assign: DataFrame, n_shuffle: int | None = None
-) -> DataFrame:
-    """Adjacency + block assignment → CSR block rows (one per block).
-
-    ``applyInPandas`` per block packs (vids sorted, indptr, indices) into
-    numpy-backed arrays; downstream kernels slice with zero copies. The
-    result should be ``.persist()``-ed by callers — it is the loop-invariant
-    structure the reference cached (MonteCarloPageRank.scala:98).
-    """
-    joined = adj.join(block_assign, adj.src == block_assign.v).select(
-        "block_id", "src", "neighbours"
-    )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("src")
-        vids = pdf["src"].to_numpy(dtype=np.int64)
-        lens = pdf["neighbours"].map(len).to_numpy(dtype=np.int64)
-        indptr = np.concatenate(([0], np.cumsum(lens)))
-        if len(pdf) and indptr[-1] > 0:
-            indices = np.concatenate(
-                [np.asarray(x, dtype=np.int64) for x in pdf["neighbours"]]
-            )
-        else:
-            indices = np.array([], dtype=np.int64)
-        return pd.DataFrame(
-            {
-                "block_id": [int(pdf["block_id"].iloc[0])],
-                "vids": [vids],
-                "indptr": [indptr],
-                "indices": [indices],
-            }
-        )
-
-    out = joined.groupBy("block_id").applyInPandas(pack, schema=CSR_BLOCK_SCHEMA)
-    if n_shuffle:
-        out = out.repartition(n_shuffle, "block_id")
-    return out

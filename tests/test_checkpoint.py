@@ -53,10 +53,21 @@ def test_pi_resume_identical(spark, gnutella_mini, tmp_path):
 
 
 def test_pi_resume_on_converged_run_is_noop(spark, cycle5, tmp_path):
+    """A converged checkpoint resumes to its ranks before any setup: the
+    call leaves no cached table behind and runs at most one Spark job
+    (counted per job group with the status tracker)."""
     ck = str(tmp_path / "ck")
     r1, i1 = pagerank_power(spark, cycle5, tol=1e-9, checkpoint_dir=ck)
-    r2, i2 = pagerank_power(
-        spark, cycle5, tol=1e-9, checkpoint_dir=ck, resume=True)
+    sc = spark.sparkContext
+    cached = sc._jsc.sc().getPersistentRDDs().size()
+    sc.setJobGroup("pi-converged-resume", "converged resume")
+    try:
+        r2, i2 = pagerank_power(
+            spark, cycle5, tol=1e-9, checkpoint_dir=ck, resume=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc._jsc.sc().getPersistentRDDs().size() == cached
+    assert len(sc.statusTracker().getJobIdsForGroup("pi-converged-resume")) <= 1
     assert i2["converged"] and "resumed_at" in i2
     assert ranks_dict(r1) == ranks_dict(r2)
 

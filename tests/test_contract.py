@@ -6,6 +6,7 @@ while still failing on oracle drift)."""
 from __future__ import annotations
 
 import os
+import re
 
 import duckdb
 import pandas as pd
@@ -116,6 +117,21 @@ def test_mat_materializes_every_cte_idempotently():
     assert "reach(src, dst) AS (" in out  # recursive head untouched
     assert _mat(out) == out  # idempotent
     assert "MATERIALIZED MATERIALIZED" not in _mat(out)
+
+    # _unroll applies _mat itself: every CTE head a round emits (several
+    # per round, leading/trailing newlines or not) comes out materialized
+    from montecarlopagerank_spark.contract import _unroll
+
+    def round_fn(r):
+        return (f"\nm{r} AS (SELECT SUM(x) AS m FROM s{r}),\n"
+                f"s{r + 1} AS (SELECT x + m AS x FROM s{r} CROSS JOIN m{r})\n")
+
+    out = _unroll(["s0 AS (SELECT 1 AS x)"], round_fn, 3, "SELECT x FROM s3")
+    heads = re.findall(r"(\w+) AS (MATERIALIZED )?\(", out)
+    assert [h for h, _ in heads] == ["s0", "m0", "s1", "m1", "s2", "m2", "s3"]
+    assert all(m for _, m in heads), out
+    assert out.endswith("\nSELECT x FROM s3")
+    assert _mat(out) == out
 
 
 def test_registry_window_covers_oracled_queries():

@@ -2,13 +2,15 @@
 
 from __future__ import annotations
 
-import numpy as np
+from collections import Counter
+
 from pyspark.sql import functions as F
 
+from montecarlopagerank_spark.algos.pagerank_mc import _load_block
 from montecarlopagerank_spark.operators.adjacency import (
-    assign_blocks,
+    REPLICA_BITS,
     build_adjacency,
-    build_csr_blocks,
+    plan_walk_blocks,
 )
 from montecarlopagerank_spark.operators.skew import salted_sum
 
@@ -25,41 +27,40 @@ def test_build_adjacency_closed_and_sorted(spark):
     assert adj[2] == ([], 0)  # dangling -> empty array (ref :34-35)
 
 
-def test_assign_blocks_degree_aware(spark):
-    """Blocks pack ~equal edge counts: a hub vertex ends up alone in its
-    block while low-degree vertices coalesce (north_star degree-aware
-    block splits)."""
-    rows = [(0, 100, 0)] + [(v, 1, 0) for v in range(1, 51)]
-    deg = spark.createDataFrame(rows, "v long, out_deg long, in_deg long")
-    ba = {r["v"]: r["block_id"] for r in
-          assign_blocks(deg, edges_per_block=50).collect()}
-    assert ba[0] == 0
-    # the hub fills block 0 (101 weight > 50); others don't share it
-    assert all(ba[v] > 0 for v in range(1, 51))
-    # deterministic under repartition
-    ba2 = {r["v"]: r["block_id"] for r in
-           assign_blocks(deg.repartition(5), edges_per_block=50).collect()}
-    assert ba == ba2
+def test_plan_walk_blocks_deterministic_under_repartition(
+    spark, gnutella_mini, tmp_path
+):
+    """Block ids are a function of the graph, not of its partitioning:
+    the edge table and its 5-way repartition get the same degree-aware
+    (rkey → block_id) plan."""
+    plans = []
+    for i, e in enumerate((gnutella_mini, gnutella_mini.repartition(5))):
+        assign, meta = plan_walk_blocks(
+            e, str(tmp_path / f"csr{i}"), edges_per_block=50)
+        plans.append({r["rkey"]: r["block_id"] for r in assign.collect()})
+        for df in meta["cached"]:
+            df.unpersist()
+    assert plans[0] == plans[1]
+    assert len(set(plans[0].values())) > 1
 
 
-def test_csr_blocks_roundtrip(spark, gnutella_mini, gnutella_mini_pairs):
-    from montecarlopagerank_spark.operators.edges import degrees
-
-    deg = degrees(gnutella_mini)
-    adj = build_adjacency(
-        gnutella_mini, deg.select(F.col("v").alias("vid")))
-    csr = build_csr_blocks(adj, assign_blocks(deg, edges_per_block=64))
-    rebuilt = set()
-    for row in csr.collect():
-        vids = np.asarray(row["vids"])
-        indptr = np.asarray(row["indptr"])
-        indices = np.asarray(row["indices"])
+def test_csr_blocks_roundtrip(spark, gnutella_mini, gnutella_mini_pairs, tmp_path):
+    """The walk kernel's CSR blocks — plan_walk_blocks' ``.npy`` files,
+    read back with _load_block — hold every edge exactly once, with row
+    keys sorted within a block and one indptr entry per row plus one."""
+    csr_root = str(tmp_path / "csr")
+    _, meta = plan_walk_blocks(gnutella_mini, csr_root, edges_per_block=64)
+    rebuilt = Counter()
+    for b in meta["block_ids"]:
+        vids, indptr, indices = _load_block(csr_root, b)
         assert len(indptr) == len(vids) + 1
         assert list(vids) == sorted(vids)  # sorted within block
-        for i, v in enumerate(vids):
+        for i, rkey in enumerate(vids):
             for d in indices[indptr[i]:indptr[i + 1]]:
-                rebuilt.add((int(v), int(d)))
-    assert rebuilt == set(gnutella_mini_pairs)
+                rebuilt[(int(rkey) >> REPLICA_BITS, int(d))] += 1
+    assert rebuilt == Counter(map(tuple, gnutella_mini_pairs))
+    for df in meta["cached"]:
+        df.unpersist()
 
 
 def test_salted_sum_equals_plain_sum(spark):

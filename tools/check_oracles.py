@@ -6,7 +6,9 @@ Compares row count, column names, Arrow-level column TYPES (strict — a
 DuckDB decimal128 vs Spark int64 mismatch is a FAIL here, exactly as it
 is at the driver's typed hash; r4's `vertex_features` red row survived
 two rounds because the old pandas-object stringification hid it), and
-order-insensitive values.
+order-insensitive values. Every query's Spark output must also be
+scalar: a nested column (list, map or struct) is a FAIL, rows-only
+queries included — a typed row canonicalizer cannot hash nested values.
 """
 
 from __future__ import annotations
@@ -103,6 +105,12 @@ def main() -> int:
             spdf = sat.to_pandas()
         except Exception as ex:
             print(f"FAIL  {name}: spark error {type(ex).__name__}: {ex}")
+            n_fail += 1
+            continue
+        nested = [f"{f.name}: {f.type}" for f in sat.schema
+                  if pa.types.is_nested(f.type)]
+        if nested:
+            print(f"FAIL  {name}: nested output column {'; '.join(nested)}")
             n_fail += 1
             continue
         if name not in oracles:
