@@ -16,10 +16,10 @@ partitioning via a shuffle_hash join (score vectors are never broadcast:
 O(V) driver-serial hash builds flatline core scaling). Each half-step
 writes its scores once, with its L1 norm riding along as an ``observe``
 metric (no separate norm job). That is not one Spark job: a half-step
-runs 4 in the local[4] test session with AQE on — 2 adaptive
-query-stage jobs for its shuffle map stages, the write, and the schema
-inference of the scratch re-read (StateStore.materialize) — 8 per
-iteration (2 per half-step with AQE off; counted with a job group +
+runs 3 in the local[4] test session with AQE on — 2 adaptive
+query-stage jobs for its shuffle map stages, then the write (the
+scratch re-read, StateStore.materialize, infers no schema) — 6 per
+iteration (1 per half-step with AQE off; counted with a job group +
 ``statusTracker`` on a 41-vertex path, 2 vs 4 iterations). Scores are
 carried UNNORMALIZED and divided by the
 previous half-step's observed norm at the point of use — mathematically
@@ -79,7 +79,7 @@ def hits(
     hsum, asum = float(n), None
     a = None
     for it in range(iters):
-        # auth half-step: one write (4 jobs, see module docstring), norm
+        # auth half-step: one write (3 jobs, see module docstring), norm
         # observed on it
         obs_a = Observation(f"hits_a_{it}")
         araw = (

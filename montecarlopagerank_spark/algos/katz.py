@@ -23,11 +23,11 @@ Scale shape mirrors hits.py: the edge table is exchanged ONCE
 O(V) score vector into that partitioning via a shuffle_hash join (never
 broadcast — O(V) driver-serial hash builds flatline core scaling), and
 writes its state once, with the score L1 mass riding as an ``observe``
-metric (no separate mass job). That is not one Spark job: a step runs 4
+metric (no separate mass job). That is not one Spark job: a step runs 3
 in the local[4] test session with AQE on — 2 adaptive query-stage jobs
-for its shuffle map stages, the write, and the schema inference of the
-scratch re-read (StateStore.materialize); 2 with AQE off (counted with a
-job group + ``statusTracker`` on a 41-vertex path, 2 vs 4 steps). State
+for its shuffle map stages, then the write (the scratch re-read,
+StateStore.materialize, infers no schema); 1 with AQE off (counted with
+a job group + ``statusTracker`` on a 41-vertex path, 2 vs 4 steps). State
 is carried exactly (no normalization),
 so the unrolled SQL twin (contract.py ``_katz_sql``) matches to fp
 round-off.

@@ -41,10 +41,10 @@ with EXACTLY ONE shuffle per superstep:
    so AQE has nothing to add. The graph itself is
    **host-resident**: the setup job that packs the CSR writes each
    block's arrays ONCE as ``.npy`` files (``_write_block``), the only
-   copy of the graph, and every worker serves its blocks from them
-   (``_CSR_CACHE``): ``np.memmap`` views on a local root — one
-   page-cache copy per block per HOST, not per worker — and an LRU of
-   in-memory reads on a DFS root. A worker loads a block on first
+   copy of the graph, and every worker serves its blocks from them as
+   ``np.memmap`` views (``_CSR_CACHE``) — one page-cache copy per block
+   per HOST, not per worker; a DFS root's files are first copied to
+   host-local disk, once per host. A worker loads a block on first
    touch; there is no separate warm job. Earlier designs cogrouped a
    JVM-cached CSR table into the kernel, which re-shipped the whole
    graph JVM→Arrow→Python EVERY superstep — measured 429 MB/step at
@@ -115,11 +115,14 @@ sampling the coupons ⋈ adjacency join (Zhao et al., SIGMOD 2018).
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
 import time
-from collections import OrderedDict
+import uuid
 from functools import reduce
-from typing import Any
+from typing import Any, Callable
 
 import numpy as np
 import pyarrow as pa
@@ -191,18 +194,17 @@ def route_expr(
 
 
 # Host-resident CSR blocks: (csr_path, block_id) → (vids, indptr,
-# indices) numpy triples, read from the ``.npy`` files the pack job wrote
+# indices) np.memmap triples of the ``.npy`` files the pack job wrote
 # under ``<csr_path>/_decoded/b<block_id>`` (``_write_block``; the
-# underscore prefix hides them from Spark/pyarrow dataset discovery). For
-# a LOCAL csr root the triples are np.memmap views, so every worker on the
-# host shares ONE page-cache copy per block and keeps ~0 resident bytes
-# (the earlier per-worker in-memory caches held N_workers copies: the
-# anti-scaling warm phase of BENCH/scaling.json, 8 s at 2 cores vs 48 s
-# at 8 on 100M edges). For non-local roots (hdfs://, s3://) mmap needs a
-# local file, so the arrays are read into memory, LRU-bounded.
-_CSR_CACHE: OrderedDict[tuple[str, int], tuple] = OrderedDict()
-_CSR_CACHE_BYTES = [0]  # in-memory (non-mmap) entries + _LOCAL_IDS arrays
-_CSR_CACHE_CAP = int(os.environ.get("SPARK_GRAFT_CSR_CACHE_BYTES", 4 << 30))
+# underscore prefix hides them from Spark/pyarrow dataset discovery).
+# Every worker on a host shares ONE page-cache copy per block and keeps
+# ~0 resident bytes (the earlier per-worker in-memory caches held
+# N_workers copies: the anti-scaling warm phase of BENCH/scaling.json,
+# 8 s at 2 cores vs 48 s at 8 on 100M edges). A local root's files are
+# mapped where the pack wrote them; a non-local root's (hdfs://, s3://)
+# are first staged to host-local disk (``_stage_block``), because mmap
+# needs a local file.
+_CSR_CACHE: dict[tuple[str, int], tuple] = {}
 _CSR_ARRAYS = ("vids", "indptr", "indices")
 
 # Block-local destination ids for the walk kernel's bincount coalescing:
@@ -211,9 +213,10 @@ _CSR_ARRAYS = ("vids", "indptr", "indices")
 # dsts[local[j]]``. Computed once per block per worker. An entry keeps
 # the ``indices`` array it was computed from and is recomputed when the
 # cached block holds a different one, so a replaced ``_CSR_CACHE`` entry
-# never gets another block's ids. The arrays are resident even for mmap
-# blocks, so they count in ``_CSR_CACHE_BYTES`` and leave with their
-# block.
+# never gets another block's ids. These are the only resident per-block
+# arrays: 4 B per edge plus 8 B per distinct destination, for the blocks
+# of ONE pack that this worker served (``_purge_other_roots``), so at
+# most ~12 B per edge of that pack's graph, uncapped.
 _LOCAL_IDS: dict[tuple[str, int], tuple] = {}
 
 
@@ -225,26 +228,32 @@ def _block_dir(root: str, block_id: int) -> str:
     return f"{root.rstrip('/')}/_decoded/b{block_id}"
 
 
-def _publish_block(root: str, block_id: int, entry: tuple) -> None:
-    """Atomically publish a block as mmap-able ``.npy`` files: write to a
-    pid-suffixed tmp dir, rename into place. A retried or speculative
-    task that finds the block already published discards its tmp dir —
-    the winner's dir is complete and immutable. Any other failure (a
-    failed save, a failed rename with no published dir) raises: the
-    files are the only copy of the block, so the pack task must fail."""
-    import shutil
-
-    dest = _block_dir(root, block_id)
+def _publish_dir(dest: str, fill: Callable[[str], None]) -> None:
+    """Atomically publish a block dir: ``fill(tmp)`` writes its files to
+    a pid-suffixed tmp dir, renamed into place. A racer that finds the
+    dir published (a retried or speculative task, another worker on the
+    host) discards its tmp dir; the winner's is complete and immutable.
+    Any other failure raises: the task must fail, not lose the block."""
     tmp = f"{dest}.tmp.{os.getpid()}"
     try:
         os.makedirs(tmp, exist_ok=True)
-        for name, arr in zip(_CSR_ARRAYS, entry):
-            np.save(os.path.join(tmp, f"{name}.npy"), arr)
+        fill(tmp)
         os.rename(tmp, dest)
     except OSError:
         shutil.rmtree(tmp, ignore_errors=True)
         if not os.path.isdir(dest):
             raise
+
+
+def _publish_block(root: str, block_id: int, entry: tuple) -> None:
+    """Publish a block's arrays as mmap-able ``.npy`` files under a local
+    root (``_publish_dir``): the files are the only copy of the block."""
+
+    def save(tmp: str) -> None:
+        for name, arr in zip(_CSR_ARRAYS, entry):
+            np.save(os.path.join(tmp, f"{name}.npy"), arr)
+
+    _publish_dir(_block_dir(root, block_id), save)
 
 
 def _mmap_block(root: str, block_id: int):
@@ -271,67 +280,58 @@ def _write_block(csr_path: str, block_id: int, entry: tuple) -> None:
             np.save(f, arr)
 
 
-def _read_block(fs: pafs.FileSystem, root: str, block_id: int):
-    """A non-local root's block → in-memory triple."""
-    dest = _block_dir(root, block_id)
-    out = []
-    for name in _CSR_ARRAYS:
-        with fs.open_input_file(f"{dest}/{name}.npy") as f:
-            out.append(np.load(f))
-    return tuple(out)
+def _stage_block(fs: pafs.FileSystem, root: str, csr_path: str,
+                 block_id: int) -> str:
+    """Copy a non-local block's three files, byte for byte, to this
+    host's stage root once (the first worker to miss publishes them via
+    ``_publish_dir``; a racer discards its copy) and return that root:
+    under the first ``SPARK_LOCAL_DIRS`` entry — which Spark sets in each
+    Python worker to the executor's block-manager dirs, deleted when the
+    executor stops — else the temp dir, keyed by csr_path (one pack)."""
+    base = os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0]
+    local = os.path.join(base or tempfile.gettempdir(), "mc_csr",
+                         hashlib.sha1(csr_path.encode()).hexdigest())
+    src, dest = _block_dir(root, block_id), _block_dir(local, block_id)
+
+    def copy(tmp: str) -> None:
+        for name in _CSR_ARRAYS:
+            with fs.open_input_file(f"{src}/{name}.npy") as f:
+                f.download(os.path.join(tmp, f"{name}.npy"))
+
+    if not os.path.isdir(dest):
+        _publish_dir(dest, copy)
+    return local
 
 
 def _load_block(csr_path: str, block_id: int):
-    """Cached triple for a block. Every routed block id has files (the
-    pack job's own rows are the routing bounds), so a missing or
+    """Cached memmap triple for a block. Every routed block id has files
+    (the pack job's own rows are the routing bounds), so a missing or
     unreadable block raises — the task fails and is retried — rather
     than silently killing the block's walks."""
     key = (csr_path, block_id)
     hit = _CSR_CACHE.get(key)
     if hit is not None:
-        _CSR_CACHE.move_to_end(key)
         return hit
     _purge_other_roots(csr_path)  # stale runs' graphs must not pile up
     fs, root = _resolve_fs(csr_path)
-    entry = (_mmap_block(root, block_id) if _is_local(csr_path)
-             else _read_block(fs, root, block_id))
-    _CSR_CACHE[key] = entry
-    _CSR_CACHE_BYTES[0] += _entry_bytes(entry)
-    _evict_lru()
+    if not _is_local(csr_path):
+        root = _stage_block(fs, root, csr_path, block_id)
+    entry = _CSR_CACHE[key] = _mmap_block(root, block_id)
     return entry
-
-
-def _entry_bytes(entry: tuple) -> int:
-    """RSS cost of a cache entry — memmap views cost address space, not
-    resident bytes, and were never counted in."""
-    return 0 if isinstance(entry[0], np.memmap) else sum(a.nbytes for a in entry)
-
-
-def _drop_ids(key: tuple[str, int]) -> None:
-    ids = _LOCAL_IDS.pop(key, None)
-    if ids is not None:
-        _CSR_CACHE_BYTES[0] -= ids[1].nbytes + ids[2].nbytes
 
 
 def _drop(key: tuple[str, int]) -> None:
     """Remove a block and its local destination ids from the caches."""
-    old = _CSR_CACHE.pop(key, None)
-    if old is not None:
-        _CSR_CACHE_BYTES[0] -= _entry_bytes(old)
-    _drop_ids(key)
-
-
-def _evict_lru() -> None:
-    while _CSR_CACHE_BYTES[0] > _CSR_CACHE_CAP and len(_CSR_CACHE) > 1:
-        _drop(next(iter(_CSR_CACHE)))
+    _CSR_CACHE.pop(key, None)
+    _LOCAL_IDS.pop(key, None)
 
 
 def _purge_other_roots(csr_path: str) -> None:
     """Drop cached blocks belonging to OTHER runs' csr_paths. A long-lived
     Python worker serving many pagerank_monte_carlo calls would otherwise
-    keep every run's full graph resident (distinct csr_path keys never
-    hit again → unbounded growth; mmap entries cost only fds/address
-    space but are dropped too). ``_load_block`` calls it on every miss."""
+    keep every run's local destination ids resident and its maps open
+    (distinct csr_path keys never hit again → unbounded growth).
+    ``_load_block`` calls it on every miss."""
     for key in {k for k in (*_CSR_CACHE, *_LOCAL_IDS) if k[0] != csr_path}:
         _drop(key)
 
@@ -341,12 +341,9 @@ def _local_ids(key: tuple[str, int], indices: np.ndarray):
     hit = _LOCAL_IDS.get(key)
     if hit is not None and hit[0] is indices:
         return hit[1], hit[2]
-    _drop_ids(key)  # computed for a block that has since been replaced
     dsts, local = np.unique(indices, return_inverse=True)
     local = local.astype(np.int32)  # a block holds < 2^31 edges
     _LOCAL_IDS[key] = (indices, dsts, local)
-    _CSR_CACHE_BYTES[0] += dsts.nbytes + local.nbytes
-    _evict_lru()
     return dsts, local
 
 
@@ -488,12 +485,13 @@ def pagerank_monte_carlo(
 
     ``state_root`` relocates the scratch state (CSR blocks + segment
     state tables). It may be a filesystem URI (``file://``, ``hdfs://``,
-    ``s3://``): the CSR writes and the workers' resident-CSR reads resolve
-    it through ``pyarrow.fs`` (``_resolve_fs``), so superstep state can
-    live on DFS — the real-cluster deployment shape. The CSR is re-packed
-    on every call and never read across calls. Caller owns cleanup of a
-    given root; the default mkdtemp scratch is reclaimed at interpreter
-    exit."""
+    ``s3://``): the CSR writes and the workers' block reads resolve it
+    through ``pyarrow.fs`` (``_resolve_fs``), so superstep state can live
+    on DFS — the real-cluster deployment shape; each host copies a DFS
+    root's blocks to its local disk once and maps them. Every call clears
+    ``<state_root>/csr`` and packs into a fresh ``csr/<uuid4 hex>`` dir,
+    so no call reads another call's graph. Caller owns cleanup of a given
+    root; the default mkdtemp scratch is reclaimed at interpreter exit."""
     t_setup = time.time()
     K = max(walks_per_vertex, 1)  # MonteCarloPageRank.scala:101
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -513,11 +511,12 @@ def pagerank_monte_carlo(
         resume, root=state_root,
         ignore=("edges_per_block",) if edges_per_block is None else (),
     )
-    csr_path = store.root.rstrip("/") + "/csr"
-    # re-packed on every call: clear a reused root's blocks first, or a
-    # packed block's rename would lose to a stale one (_publish_block)
-    fs, csr_dir = _resolve_fs(csr_path)
+    # re-packed on every call: a reused root's old packs are cleared, and
+    # the pack goes to a fresh dir, so no worker's cache or stage entry
+    # for an earlier call's csr_path can serve this call's blocks
+    fs, csr_dir = _resolve_fs(store.root.rstrip("/") + "/csr")
     fs.delete_dir_contents(csr_dir, missing_dir_ok=True)
+    csr_path = f"{store.root.rstrip('/')}/csr/{uuid.uuid4().hex}"
     # edges_per_block=None → the planner derives the ≈2-blocks-per-slot
     # default from the degree aggregate it computes anyway (no extra pass)
     blocks_assign, plan_meta = plan_walk_blocks(

@@ -24,11 +24,12 @@ Scale shape: the loop-invariant (src, dst, inv_deg) edge table is
 hash-partitioned by src once and persisted; each superstep shuffles only
 the rank vector (one groupBy(dst) with map-side combine — the one
 unavoidable shuffle) and commits its state with ONE ``save_step``,
-scratch or durable at the same Spark jobs. That is not one job: 4 jobs
+scratch or durable at the same Spark jobs. That is not one job: 3 jobs
 per superstep in the local[4] test session with AQE on — 2 adaptive
-query-stage jobs for its shuffle map stages, the write, and the schema
-inference of re-reading the written state — and 2 with AQE off (counted
-with a job group + ``statusTracker`` on a 41-vertex path, 2 vs 4 steps;
+query-stage jobs for its shuffle map stages, then the write — and 1
+with AQE off; the re-read of the written state takes the written
+frame's schema, so it runs no inference job (counted with a job group +
+``statusTracker`` on a 41-vertex path, 2 vs 4 steps;
 tests/test_checkpoint.py compares scratch and durable). The convergence
 delta and next step's dangling mass ride the write as
 ``DataFrame.observe`` metrics (no separate per-step aggregate job — at
@@ -150,10 +151,9 @@ def pagerank_power(
     PageRank: the teleport vector p is uniform over the source set instead
     of over all vertices — init π = p, and both the ε jump and the dangling
     mass land on p (π'_u = ε·p_u + (1−ε)(Σ contribs_u + m·p_u)). Source ids
-    not present in the graph are ignored. The loop shape is unchanged: the
-    source flag rides the same cached co-partitioned side table as the
-    dangling flag, so personalization costs zero extra joins or exchanges
-    per superstep.
+    not present in the graph are ignored. The source flag rides a cached
+    side table hash-partitioned like the state, so personalization adds
+    one join per superstep (the state ⋈ ``is_src``) but no exchange.
 
     ``init_ranks`` (optional, ``(v, rank)``) WARM-STARTS the iteration
     from a prior rank vector — the incremental-refresh path after the
@@ -223,7 +223,8 @@ def pagerank_power(
     vaux = deg.select("v", (F.col("out_deg") == 0).alias("dang"))
     if sources is not None:
         # personalization flag joins ONCE at setup into the same cached
-        # side table — the superstep loop never sees an extra join
+        # side table; each superstep joins its is_src back (co-
+        # partitioned: one more join, no exchange)
         s = sources.select("v").distinct().withColumn("is_src", F.lit(True))
         vaux = vaux.join(s, "v", "left").select(
             "v", "dang", F.coalesce("is_src", F.lit(False)).alias("is_src")

@@ -25,12 +25,12 @@ superstep exchanges only the O(V) score vector (shuffle_hash, never a
 broadcast — O(V) driver-serial hash builds flatline core scaling) plus
 the O(V) map-side-combined aggregate. Each half-step writes its scores
 once, with its L1 sum riding along as an ``observe`` metric (no separate
-sum job). That is not one Spark job: as in hits.py, a half-step runs 4
+sum job). That is not one Spark job: as in hits.py, a half-step runs 3
 in the local[4] test session with AQE on — 2 adaptive query-stage jobs
-for its shuffle map stages, the write, and the schema inference of the
-scratch re-read — 8 per iteration (2 per half-step with AQE off;
-counted with a job group + ``statusTracker`` on a 41-vertex path, 2 vs
-4 iterations).
+for its shuffle map stages, then the write (the scratch re-read infers
+no schema) — 6 per iteration (1 per half-step with AQE off; counted
+with a job group + ``statusTracker`` on a 41-vertex path, 2 vs 4
+iterations).
 """
 
 from __future__ import annotations
@@ -103,7 +103,7 @@ def salsa(
     a = None
     sums: list[tuple[float, float]] = []
     for it in range(iters):
-        # auth half-step: one write (4 jobs, see module docstring), L1
+        # auth half-step: one write (3 jobs, see module docstring), L1
         # sum observed on it
         obs_a = Observation(f"salsa_a_{it}")
         a = store.materialize(

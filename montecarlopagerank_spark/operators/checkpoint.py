@@ -59,9 +59,11 @@ class CheckpointManager(StateStore):
         metrics: dict | Callable[[], dict],
     ) -> dict[str, DataFrame]:
         """Write state tables, then commit the step's one manifest; return
-        re-read DataFrames (lineage truncated). ``metrics`` may be a
-        callable: it is evaluated after the tables are written, so it can
-        read the write job's observed metrics."""
+        re-read DataFrames (lineage truncated; read with the written
+        frames' schemas, so no schema-inference job, as in
+        ``materialize``). ``metrics`` may be a callable: it is evaluated
+        after the tables are written, so it can read the write job's
+        observed metrics."""
         for name, df in tables.items():
             df.write.mode("overwrite").parquet(f"{self.uri}/step={step}/{name}")
         manifest = {
@@ -74,10 +76,16 @@ class CheckpointManager(StateStore):
         with self.fs.open_output_stream(tmp) as f:
             f.write(json.dumps(manifest).encode())
         self.fs.move(tmp, self._manifest_path(step))  # atomic commit
-        return self.load_tables(step, sorted(tables))
+        return {
+            n: self.spark.read.schema(df.schema)
+            .parquet(f"{self.uri}/step={step}/{n}")
+            for n, df in tables.items()
+        }
 
     # -- read ------------------------------------------------------------
     def load_tables(self, step: int, names: list[str]) -> dict[str, DataFrame]:
+        """A committed step's tables for resume: the schema is inferred
+        (one Spark job per table), since no frame of this run wrote them."""
         return {
             n: self.spark.read.parquet(f"{self.uri}/step={step}/{n}")
             for n in names

@@ -117,7 +117,9 @@ class StateStore:
 
     def materialize(self, df: DataFrame, name: str = "state") -> DataFrame:
         """Write ``df`` to the name's next slot and return the re-read
-        DataFrame (lineage truncated, plan = fresh parquet scan)."""
+        DataFrame (lineage truncated, plan = fresh parquet scan). The
+        re-read takes ``df``'s schema, so it runs no schema-inference job
+        (Spark reads file sources all-nullable either way)."""
         seq = self._seq.get(name, 0)
         path = os.path.join(self.root, f"{name}_{seq % 3}")
         # snappy, not the session's zstd: scratch slots live for exactly
@@ -126,7 +128,7 @@ class StateStore:
         # ~2× faster encode for ~1.33× bytes on CSR-shaped data)
         df.write.option("compression", "snappy").mode("overwrite").parquet(path)
         self._seq[name] = seq + 1
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(df.schema).parquet(path)
 
     def save_step(
         self, step: int, tables: dict[str, DataFrame],

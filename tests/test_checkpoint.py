@@ -30,6 +30,49 @@ def test_manifest_commit_semantics(spark, tmp_path):
     assert ck.last_complete_step() == 1
 
 
+@pytest.mark.parametrize("durable", [False, True], ids=["scratch", "durable"])
+def test_state_reread_runs_no_job(spark, tmp_path, monkeypatch, durable):
+    """A committed step is read back with the written frame's schema: the
+    re-read runs no Spark job (a bare read of the same dir runs one, the
+    schema inference), and its schema is the one inference gives (all
+    fields nullable, although the written frame's are not)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from montecarlopagerank_spark.operators.state import StateStore
+
+    sc, group = spark.sparkContext, f"reread-{durable}"
+    df = spark.range(40).selectExpr(
+        "id AS v", "CAST(id AS double) AS rank", "id % 2 = 0 AS dang"
+    ).repartition(4)
+    if durable:
+        store = CheckpointManager(spark, str(tmp_path / "ck"))
+        path = tmp_path / "ck" / "step=0" / "state"
+    else:
+        store = StateStore(spark, str(tmp_path / "s"))
+        path = tmp_path / "s" / "state_0"
+    write = DataFrameWriter.parquet
+
+    def write_then_count(self, *a, **k):  # count only what follows
+        write(self, *a, **k)
+        sc.setJobGroup(group, group)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_count)
+    try:
+        out = store.save_step(0, {"state": df}, {})["state"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    sc.setJobGroup(group + "-bare", group)
+    try:
+        inferred = spark.read.parquet(str(path)).schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group + "-bare")) >= 1
+    assert out.schema == inferred
+    assert all(f.nullable for f in inferred) and not df.schema["v"].nullable
+    assert sorted(out.collect()) == sorted(df.collect())
+
+
 def test_pi_resume_identical(spark, gnutella_mini, tmp_path):
     """Interrupt PI after 3 supersteps; resume must land on ranks identical
     to the uninterrupted run (checkpoint determinism)."""

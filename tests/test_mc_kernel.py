@@ -1,16 +1,20 @@
 """The MC walk kernel's sampling, tested without Spark: a CSR block goes
 into the worker-resident cache under a private key and
 ``pagerank_mc._walk_kernel`` is called directly, as perfbench/kernel.py
-does. Also the CSR root's ``file:`` URI parsing."""
+does. Also the CSR root's ``file:`` URI parsing, and the host-local
+staging of a non-local root's block files."""
 
 from __future__ import annotations
 
+import hashlib
 import math
+import os
 import tracemalloc
 
 import numpy as np
 import pyarrow as pa
 import pytest
+from pyarrow import fs as pafs
 
 from montecarlopagerank_spark.algos import pagerank_mc as mc
 from montecarlopagerank_spark.operators import state
@@ -178,42 +182,148 @@ def test_strip_file_scheme_rejects_host_and_relative(uri):
         state._strip_file_scheme(uri)
 
 
-def test_non_local_root_reads_into_counted_lru(monkeypatch):
-    """A DFS-style root: the pack's non-local write puts the block's
-    ``.npy`` files on the root's filesystem, ``_load_block`` reads them
-    back as in-memory arrays counted in ``_CSR_CACHE_BYTES``, and
-    ``_purge_other_roots`` drops them again. Every
-    ``FileSystem.from_uri("mock://…")`` is a fresh, empty filesystem, so
-    ``_resolve_fs`` is patched to hand out one shared instance."""
-    from pyarrow import fs as pafs
+# one block as the pack kernel writes it (vids, indptr, indices)
+ENTRY = (
+    np.array([3, 7], np.int64) << REPLICA_BITS,
+    np.array([0, 2, 3], np.int64),
+    np.array([7, 9, 3], np.int32),
+)
 
+
+@pytest.fixture
+def dfs_root(monkeypatch, tmp_path):
+    """A DFS-style root, ``mock://csr-test/run``, holding block 4 as the
+    pack's non-local write leaves it. Every ``FileSystem.from_uri(
+    "mock://…")`` is a fresh, empty filesystem, so ``_resolve_fs`` is
+    patched to hand out one shared instance; ``SPARK_LOCAL_DIRS`` puts
+    the host's stage root under ``tmp_path``. Yields (root filesystem,
+    root, stage dir); the root's cache entries are dropped afterwards."""
     shared = pafs._MockFileSystem()
     monkeypatch.setattr(
         mc, "_resolve_fs", lambda p: (shared, p.split("://", 1)[1]))
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", f"{tmp_path}/ld0,{tmp_path}/ld1")
     root = "mock://csr-test/run"
-    entry = (
-        np.array([3, 7], np.int64) << REPLICA_BITS,
-        np.array([0, 2, 3], np.int64),
-        np.array([7, 9, 3], np.int32),
-    )
-    mc._write_block(root, 4, entry)
+    mc._write_block(root, 4, ENTRY)
+    stage = os.path.join(tmp_path, "ld0", "mc_csr",
+                         hashlib.sha1(root.encode()).hexdigest(), "_decoded")
+    yield shared, root, stage
+    for key in [k for k in mc._CSR_CACHE if k[0] == root]:
+        mc._drop(key)
+
+
+def test_non_local_root_stages_host_local_copy(dfs_root):
+    """The pack's non-local write puts the block's ``.npy`` files on the
+    root's filesystem; ``_load_block`` copies them to the host's stage
+    root and maps them like a local root's, a hit returns the same
+    triple, and ``_purge_other_roots`` drops the entry."""
+    shared, root, stage = dfs_root
     names = shared.get_file_info(pafs.FileSelector("csr-test/run/_decoded/b4"))
     assert sorted(i.base_name for i in names) == [
         "indices.npy", "indptr.npy", "vids.npy"]
     with pytest.raises(FileNotFoundError):  # no files: a fault, no entry
         mc._load_block(root, 5)
     assert (root, 5) not in mc._CSR_CACHE
-    before = mc._CSR_CACHE_BYTES[0]
+    assert not os.path.exists(stage) or os.listdir(stage) == []
     got = mc._load_block(root, 4)
-    for a, b in zip(got, entry):
-        assert not isinstance(a, np.memmap)
+    for name, a, b in zip(mc._CSR_ARRAYS, got, ENTRY):
+        assert isinstance(a, np.memmap)
+        assert a.filename == os.path.join(stage, "b4", f"{name}.npy")
         assert a.dtype == b.dtype and np.array_equal(a, b)
+    assert os.listdir(stage) == ["b4"]
     assert mc._CSR_CACHE[(root, 4)] is got
-    assert mc._CSR_CACHE_BYTES[0] - before == sum(a.nbytes for a in entry)
     assert mc._load_block(root, 4) is got  # a hit, not a second read
     mc._purge_other_roots("mock://csr-test/other")
     assert (root, 4) not in mc._CSR_CACHE
-    assert mc._CSR_CACHE_BYTES[0] == before
+
+
+def test_staged_block_serves_other_workers_on_the_host(dfs_root, monkeypatch):
+    """After one worker staged a block, another worker on the same host
+    (an empty cache: ``_drop``) maps the staged copy and opens nothing
+    on the root filesystem."""
+    shared, root, stage = dfs_root
+    mc._load_block(root, 4)
+    mc._drop((root, 4))
+    opened = []
+
+    class CountingFS:
+        def open_input_file(self, path):
+            opened.append(path)
+            return shared.open_input_file(path)
+
+    monkeypatch.setattr(
+        mc, "_resolve_fs", lambda p: (CountingFS(), p.split("://", 1)[1]))
+    got = mc._load_block(root, 4)
+    assert opened == []
+    assert all(np.array_equal(a, b) for a, b in zip(got, ENTRY))
+
+
+def test_stage_race_loser_discards_copy(dfs_root, monkeypatch, tmp_path):
+    """Two workers on a host miss the same block: the one whose rename
+    lands second discards its copy, leaves no tmp dir, and maps the
+    winner's files."""
+    shared, root, stage = dfs_root
+    won = (ENTRY[0], ENTRY[1], ENTRY[2] + 100)
+    mc._publish_block(str(tmp_path / "winner"), 4, won)
+
+    class RacedFS:
+        """The root filesystem, except that the winner's rename lands
+        while this worker is copying."""
+
+        def open_input_file(self, path):
+            if not os.path.isdir(os.path.join(stage, "b4")):
+                os.rename(tmp_path / "winner" / "_decoded" / "b4",
+                          os.path.join(stage, "b4"))
+            return shared.open_input_file(path)
+
+    monkeypatch.setattr(
+        mc, "_resolve_fs", lambda p: (RacedFS(), p.split("://", 1)[1]))
+    got = mc._load_block(root, 4)
+    assert all(np.array_equal(a, b) for a, b in zip(got, won))
+    assert os.listdir(stage) == ["b4"]
+
+
+def _stage_racer(root: str, local_dirs: str, barrier, results) -> None:
+    """One worker process of ``test_stage_race_many_workers``: a root on
+    the local disk addressed as a DFS URI, so ``_load_block`` stages it."""
+    os.environ["SPARK_LOCAL_DIRS"] = local_dirs
+    mc._resolve_fs = lambda p: (pafs.LocalFileSystem(), p.split("://", 1)[1])
+    barrier.wait(timeout=60)
+    try:
+        got = mc._load_block(root, 4)
+        results.put([np.asarray(a).tolist() for a in got])
+    except Exception:  # reported to the parent, which fails the test
+        import traceback
+
+        results.put(traceback.format_exc())
+
+
+def test_stage_race_many_workers(tmp_path):
+    """Six worker processes (more than a 4-core host's cores) miss the
+    same block at once: every one maps the block's exact arrays, and the
+    host keeps one staged copy and no tmp dir."""
+    import multiprocessing as mp
+
+    mc._publish_block(str(tmp_path / "root"), 4, ENTRY)
+    root = f"dfs://{tmp_path}/root"
+    n = 6
+    ctx = mp.get_context("spawn")
+    barrier, results = ctx.Barrier(n), ctx.Queue()
+    procs = [ctx.Process(target=_stage_racer,
+                         args=(root, str(tmp_path / "ld"), barrier, results))
+             for _ in range(n)]
+    for p in procs:
+        p.start()
+    got = [results.get(timeout=120) for _ in procs]  # drain, then join
+    for p in procs:
+        p.join(timeout=60)
+        assert not p.is_alive()
+    want = [a.tolist() for a in ENTRY]
+    assert got == [want] * n
+    stage = os.path.join(tmp_path, "ld", "mc_csr",
+                         hashlib.sha1(root.encode()).hexdigest(), "_decoded")
+    assert os.listdir(stage) == ["b4"]
+    assert sorted(os.listdir(os.path.join(stage, "b4"))) == [
+        "indices.npy", "indptr.npy", "vids.npy"]
 
 
 @pytest.mark.parametrize("fail", ["save", "rename"])
@@ -222,7 +332,6 @@ def test_failed_publish_raises(tmp_path, monkeypatch, fail):
     that fails (ENOSPC) or a rename that fails with no published dir
     must fail the pack task — and leave no tmp or half-written dir."""
     import errno
-    import os
 
     def boom(*_a, **_k):
         raise OSError(errno.ENOSPC, "No space left on device")
@@ -255,6 +364,7 @@ def test_failed_read_fails_kernel(tmp_path, monkeypatch):
 
     monkeypatch.setattr(
         mc, "_resolve_fs", lambda p: (FlakyFS(), p.split("://", 1)[1]))
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", str(tmp_path))  # the stage root
     root = "mock://csr-test/flaky"
     with pytest.raises(OSError, match="transient"):
         mc._walk_kernel(root, EPS, 1, 0)(coupons)

@@ -292,6 +292,8 @@ def test_mc_state_root_file_uri_single_slash(spark, gnutella_mini, tmp_path):
     was returned unstripped, so ``_publish_block`` recreated the literal
     ``file:`` junk dir under cwd (the exact bug 470f79c fixed for the
     double-slash form)."""
+    import glob
+
     from montecarlopagerank_spark.operators.state import _strip_file_scheme
 
     assert _strip_file_scheme(f"file:{tmp_path}/x") == f"{tmp_path}/x"
@@ -312,9 +314,10 @@ def test_mc_state_root_file_uri_single_slash(spark, gnutella_mini, tmp_path):
     )
     assert ranks_dict(r_uri) == d_local
     assert info["total_visits"] > 0
-    # published decode side-files landed under the STRIPPED root, and no
-    # literal "file:" directory was created anywhere under cwd
-    assert os.path.isdir(f"{tmp_path}/mc_state1/csr/_decoded")
+    # published decode side-files landed under the STRIPPED root (in the
+    # call's own pack dir), and no literal "file:" directory was created
+    # anywhere under cwd
+    assert glob.glob(f"{tmp_path}/mc_state1/csr/*/_decoded")
     assert not os.path.exists("file:")
 
 
@@ -489,7 +492,7 @@ def test_mc_pack_time_publication(spark, gnutella_mini, tmp_path):
         edges_per_block=64, state_root=root,
     )
     assert info["total_visits"] > 0
-    published = glob.glob(os.path.join(root, "csr", "_decoded", "b*"))
+    published = glob.glob(os.path.join(root, "csr", "*", "_decoded", "b*"))
     assert info["n_blocks"] > 1
     assert len(published) == info["n_blocks"]
     for d in published:
@@ -497,7 +500,35 @@ def test_mc_pack_time_publication(spark, gnutella_mini, tmp_path):
             "indices.npy", "indptr.npy", "vids.npy"]
     assert not glob.glob(os.path.join(root, "csr", "**", "*.parquet"),
                          recursive=True)
-    assert not glob.glob(os.path.join(root, "csr", "block_id=*"))
+    assert not glob.glob(os.path.join(root, "csr", "**", "block_id=*"),
+                         recursive=True)
+
+
+def test_mc_reused_state_root_walks_its_own_graph(spark, tmp_path):
+    """A second call on the same ``state_root`` walks its own graph, not
+    the first call's, although pooled Python workers still hold the first
+    call's block 0. Graph A is a 10-cycle; graph B sends 1..9 to 0 and 0
+    to 1. B's ranks on A's root equal B's ranks on a fresh root, byte for
+    byte, and A's pack is gone from the shared root."""
+    import glob
+
+    a = spark.createDataFrame(
+        [(i, (i + 1) % 10) for i in range(10)], "src long, dst long")
+    b = spark.createDataFrame(
+        [(i, 0) for i in range(1, 10)] + [(0, 1)], "src long, dst long")
+    kw = dict(walks_per_vertex=200, seed=5, edges_per_block=64)
+    shared = str(tmp_path / "shared")
+    # one superstep per job, many jobs: every pooled worker serves A's
+    # only block
+    pagerank_monte_carlo(
+        spark, a, iterations=16, fuse_steps=1, state_root=shared, **kw)
+    on_a, info_a = pagerank_monte_carlo(
+        spark, b, iterations=4, state_root=shared, **kw)
+    fresh, info_f = pagerank_monte_carlo(
+        spark, b, iterations=4, state_root=str(tmp_path / "fresh"), **kw)
+    assert info_a["total_visits"] == info_f["total_visits"]
+    assert ranks_dict(on_a) == ranks_dict(fresh)
+    assert len(glob.glob(os.path.join(shared, "csr", "*"))) == 1
 
 
 def test_mc_checkpoint_resume_repacks_csr(spark, gnutella_mini, tmp_path):
