@@ -18,19 +18,16 @@ well-conditioned either way. The raw score is also returned for graphs
 a caller KNOWS are subcritical. Normalizing once at the end (not per
 step) keeps the unrolled SQL twin trivially identical.
 
-Scale shape mirrors hits.py: the edge table is exchanged ONCE
-(hash-partitioned by src) and pinned; each superstep shuffles only the
-O(V) score vector into that partitioning via a shuffle_hash join (never
-broadcast — O(V) driver-serial hash builds flatline core scaling), and
-writes its state once, with the score L1 mass riding as an ``observe``
-metric (no separate mass job). That is not one Spark job: a step runs 3
-in the local[4] test session with AQE on — 2 adaptive query-stage jobs
-for its shuffle map stages, then the write (the scratch re-read,
-StateStore.materialize, infers no schema); 1 with AQE off (counted with
-a job group + ``statusTracker`` on a 41-vertex path, 2 vs 4 steps). State
-is carried exactly (no normalization),
-so the unrolled SQL twin (contract.py ``_katz_sql``) matches to fp
-round-off.
+Scale shape: the edge cache, the vertex table and the push are
+operators/propagate.py's. Each superstep writes its state once, with the
+score L1 mass riding as an ``observe`` metric (no separate mass job).
+That is not one Spark job: a step runs 3 in the local[4] test session
+with AQE on — 2 adaptive query-stage jobs for its shuffle map stages,
+then the write (the scratch re-read, StateStore.materialize, infers no
+schema); 1 with AQE off (counted with a job group + ``statusTracker`` on
+a 41-vertex path, 2 vs 4 steps; tests/test_propagate.py). State is
+carried exactly (no normalization), so the unrolled SQL twin
+(contract.py ``_katz_sql``) matches to fp round-off.
 """
 
 from __future__ import annotations
@@ -42,6 +39,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from montecarlopagerank_spark.operators.propagate import Propagation
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -61,43 +59,19 @@ def katz(
     ``x0`` exists so the β=0 power-method family (eigenvector
     centrality) can still start from a non-degenerate vector."""
     t0 = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    e = edges.select("src", "dst")
-    if vertices is not None:
-        verts = vertices.select(F.col("vid").alias("v")).distinct()
-    else:
-        verts = (
-            e.select(F.col("src").alias("v"))
-            .unionByName(e.select(F.col("dst").alias("v")))
-            .distinct()
-        )
-    e_src = e.repartition(n_parts, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    verts = verts.repartition(n_parts, "v").persist(StorageLevel.MEMORY_AND_DISK)
-    e_src.count()
-    n = verts.count()
+    g = Propagation(edges, vertices, n_partitions)
+    n = g.count()["n"]
     if n == 0:
-        return spark.createDataFrame([], "v string, katz double"), {
-            "iterations": 0,
-            "n": 0,
-        }
+        return g.empty("katz", "katz_norm"), {"iterations": 0, "n": 0}
 
     init = float(beta if x0 is None else x0)
     store = StateStore(spark)
-    x = store.materialize(verts.select("v", F.lit(init).alias("s")), "katz_x")
+    x = store.materialize(g.verts.select("v", F.lit(init).alias("s")), "katz_x")
     mass = float(n) * init
     for it in range(iters):
-        agg = (
-            e_src.join(
-                x.repartition(n_parts, "v").hint("shuffle_hash"),
-                e_src["src"] == F.col("v"),
-            )
-            .select(F.col("dst").alias("vc"), F.col("s").alias("m"))
-            .groupBy("vc")
-            .agg(F.sum("m").alias("m"))
-        )
         obs = Observation(f"katz_{it}")
         x_next = (
-            verts.join(agg.hint("shuffle_hash"), verts["v"] == agg["vc"], "left")
+            g.gather(g.push(g.scores(x), "src", F.col("s")))
             .select(
                 "v",
                 (
@@ -121,7 +95,7 @@ def katz(
         norm.alias("katz_norm"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
-    e_src.unpersist(), verts.unpersist()
+    g.close()
     return out, {
         "iterations": iters,
         "n": n,

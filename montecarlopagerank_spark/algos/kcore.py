@@ -71,7 +71,8 @@ def k_core(
             converged = True
             break
         # survivors: O(V), shuffled by vertex — never broadcast (O(V)
-        # driver-serial hash builds flatline core scaling; see hits.py)
+        # driver-serial hash builds flatline core scaling; see
+        # operators/propagate.py)
         keep = (
             sym(p)
             .groupBy("u")

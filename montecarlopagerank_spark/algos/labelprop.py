@@ -49,8 +49,8 @@ def label_propagation(
         # loop-invariant; the explicit repartition by the join key makes
         # the cached partitioning visible to the loop planner, so each
         # superstep's join exchanges only the O(V) label table, never the
-        # O(E) symmetric edge table (same AQE-cache opacity as
-        # pagerank_power — see the comment there)
+        # O(E) symmetric edge table (same AQE-cache opacity as the
+        # rankers' edge caches — see operators/propagate.py)
         .repartition(n_parts, "u")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

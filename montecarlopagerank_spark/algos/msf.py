@@ -28,7 +28,8 @@ Scale shape: the canonical pair set (O(E), with per-pair min weight
 pre-collapsed — multigraph-safe) is exchanged once and pinned; per
 round only O(V)-or-smaller tables move — labels, the per-component min
 pick, the shrinking root map — all ``shuffle_hash``-hinted, never
-broadcast (O(V) driver-serial hash builds flatline scaling; hits.py).
+broadcast (O(V) driver-serial hash builds flatline scaling;
+operators/propagate.py).
 State is re-materialized per round via StateStore (flat plans, bounded
 lineage), forest slots accumulate per round exactly like matching.py's
 winner frames.

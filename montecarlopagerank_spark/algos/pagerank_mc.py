@@ -280,17 +280,22 @@ def _write_block(csr_path: str, block_id: int, entry: tuple) -> None:
             np.save(f, arr)
 
 
+def _stage_root(csr_path: str) -> str:
+    """This host's stage root for a non-local pack: under the first
+    ``SPARK_LOCAL_DIRS`` entry — which Spark sets in each Python worker to
+    the executor's block-manager dirs, deleted when the executor stops —
+    else the temp dir, keyed by csr_path (one pack)."""
+    base = os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0]
+    return os.path.join(base or tempfile.gettempdir(), "mc_csr",
+                        hashlib.sha1(csr_path.encode()).hexdigest())
+
+
 def _stage_block(fs: pafs.FileSystem, root: str, csr_path: str,
                  block_id: int) -> str:
     """Copy a non-local block's three files, byte for byte, to this
     host's stage root once (the first worker to miss publishes them via
-    ``_publish_dir``; a racer discards its copy) and return that root:
-    under the first ``SPARK_LOCAL_DIRS`` entry — which Spark sets in each
-    Python worker to the executor's block-manager dirs, deleted when the
-    executor stops — else the temp dir, keyed by csr_path (one pack)."""
-    base = os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0]
-    local = os.path.join(base or tempfile.gettempdir(), "mc_csr",
-                         hashlib.sha1(csr_path.encode()).hexdigest())
+    ``_publish_dir``; a racer discards its copy) and return that root."""
+    local = _stage_root(csr_path)
     src, dest = _block_dir(root, block_id), _block_dir(local, block_id)
 
     def copy(tmp: str) -> None:
@@ -330,10 +335,15 @@ def _purge_other_roots(csr_path: str) -> None:
     """Drop cached blocks belonging to OTHER runs' csr_paths. A long-lived
     Python worker serving many pagerank_monte_carlo calls would otherwise
     keep every run's local destination ids resident and its maps open
-    (distinct csr_path keys never hit again → unbounded growth).
-    ``_load_block`` calls it on every miss."""
-    for key in {k for k in (*_CSR_CACHE, *_LOCAL_IDS) if k[0] != csr_path}:
+    (distinct csr_path keys never hit again → unbounded growth), and the
+    host every staged pack. Removing a stage dir is safe: open maps
+    outlive the unlink, and a later miss stages the block again (a local
+    root has no stage dir). ``_load_block`` calls it on every miss."""
+    stale = {k for k in (*_CSR_CACHE, *_LOCAL_IDS) if k[0] != csr_path}
+    for key in stale:
         _drop(key)
+    for path in {k[0] for k in stale}:
+        shutil.rmtree(_stage_root(path), ignore_errors=True)
 
 
 def _local_ids(key: tuple[str, int], indices: np.ndarray):

@@ -20,36 +20,25 @@ per SURVEY.md §2.6 "reference bugs":
   has an inclusive-range off-by-one and no convergence control,
   PowerIterationPageRank.scala:78, Conf.scala:10).
 
-Scale shape: the loop-invariant (src, dst, inv_deg) edge table is
-hash-partitioned by src once and persisted; each superstep shuffles only
-the rank vector (one groupBy(dst) with map-side combine — the one
-unavoidable shuffle) and commits its state with ONE ``save_step``,
-scratch or durable at the same Spark jobs. That is not one job: 3 jobs
-per superstep in the local[4] test session with AQE on — 2 adaptive
-query-stage jobs for its shuffle map stages, then the write — and 1
-with AQE off; the re-read of the written state takes the written
-frame's schema, so it runs no inference job (counted with a job group +
-``statusTracker`` on a 41-vertex path, 2 vs 4 steps;
-tests/test_checkpoint.py compares scratch and durable). The convergence
-delta and next step's dangling mass ride the write as
-``DataFrame.observe`` metrics (no separate per-step aggregate job — at
-high core counts a second job's fixed schedule+IO cost dominates the
-superstep and caps scaling efficiency). The state table is
-(v, rank, dang): carrying the loop-invariant dangling flag IN the state
-lets the update join read the observed-mass flag for free — no per-step
-side-table join at all (a cached co-partitioned vflag join, the round-3
-shape, measured +0.3-0.5 s/step of pure fixed overhead at sf0.1).
-Exchange reuse still holds because BOTH per-step consumers of the state
-— the contributions join and the update join — are made to consume the
-IDENTICAL (v, rank, dang) schema: the contributions mass is written as
-``when(dang, 0.0).otherwise(rank·inv_deg)``, semantically a no-op (an
-edge's src has an out-edge by construction, so dang is always false on
-that branch) but syntactically a real reference that column pruning
-cannot remove, and an explicit ``isNotNull(v)`` filter above the
-repartition matches the not-null constraint the inner contributions
-join would otherwise push below its side of the exchange alone. Without
-both tricks the two branches' pruned/filtered subtrees differ and each
-pays its own O(V) state shuffle per superstep (the round-2 shape).
+Scale shape: the edge cache, the vertex table, the push and the reasons
+for their plans live in operators/propagate.py. Each superstep commits
+its state with ONE ``save_step``, scratch or durable at the same Spark
+jobs. That is not one job: 3 jobs per superstep in the local[4] test
+session with AQE on — 2 adaptive query-stage jobs for its shuffle map
+stages, then the write — and 1 with AQE off; the re-read of the written
+state takes the written frame's schema, so it runs no inference job
+(counted with a job group + ``statusTracker`` on a 41-vertex path, 2 vs
+4 steps; tests/test_propagate.py pins it, tests/test_checkpoint.py
+compares scratch and durable). The convergence delta and next step's
+dangling mass ride the write as ``DataFrame.observe`` metrics (no
+separate per-step aggregate job — at high core counts a second job's
+fixed schedule+IO cost dominates the superstep and caps scaling
+efficiency). The state table is (v, rank, dang): carrying the
+loop-invariant dangling flag IN the state lets the update join read the
+observed-mass flag for free — no per-step side-table join at all (a
+cached co-partitioned vflag join, the round-3 shape, measured +0.3-0.5
+s/step of pure fixed overhead at sf0.1). The push and the update join
+share one state exchange per step (propagate.py says how).
 """
 
 from __future__ import annotations
@@ -66,65 +55,10 @@ from montecarlopagerank_spark.operators.checkpoint import (
     CheckpointManager,
     open_store,
 )
+from montecarlopagerank_spark.operators.propagate import Propagation
 from montecarlopagerank_spark.operators.state import StateStore  # noqa: F401
 
 EPS = 0.15  # jump probability, MonteCarloPageRank.scala:28
-
-
-def _prepare(
-    edges: DataFrame,
-    vertices: DataFrame | None,
-    n_parts: int,
-    weight_col: str | None = None,
-):
-    """Loop-invariant structures: closed vertex set, out-degrees, and the
-    (src, dst, inv_deg) contribution-edge table partitioned by src.
-
-    The edge table is exchanged by src ONCE, up front, and PINNED:
-    exchange reuse only holds *within* one query, and setup runs several
-    actions (contrib cache fill, vertex-flag cache fill) — unpinned, each
-    action re-reads the source and re-pays the exchange (measured ~3
-    source scans + 3 full exchanges at 100M edges). The O(V) degree table
-    is pinned too, and the vertex set rides it: srcs come from the degree
-    keys, only the dst side pays a distinct over the cached exchange. At
-    100 TB the edge exchange IS the setup cost; it must happen once.
-
-    Returns ``(verts, deg, contrib_edges, cached)`` — callers unpersist
-    ``cached`` once their own loop-invariant caches are materialized."""
-    e2 = edges.repartition(n_parts, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    # weighted graphs: the per-edge contribution fraction becomes
-    # w(src,dst)/W(src) instead of 1/out_deg — same one-pass degree agg
-    # (count and weight-sum together), identical loop downstream. A
-    # multigraph with duplicate rows and its collapsed (src, dst,
-    # weight=multiplicity) form produce the SAME fractions, which is what
-    # the oracle query pins (contract.q_pagerank_weighted_fixed).
-    aggs = [F.count("*").alias("out_deg")]
-    if weight_col is not None:
-        aggs.append(F.sum(weight_col).alias("out_w"))
-    out_deg = e2.groupBy("src").agg(*aggs).persist(StorageLevel.MEMORY_AND_DISK)
-    frac = (
-        F.lit(1.0) / F.col("out_deg")
-        if weight_col is None
-        else F.col(weight_col) / F.col("out_w")
-    )
-    # shuffle_hash: the O(V) degree table exceeds the broadcast threshold
-    # well before 100 TB, and a sort-merge join would SORT the full edge
-    # table — the hint streams the cached edges in place and hash-builds
-    # the per-partition degree slice instead (no edge sort, no exchange)
-    contrib_edges = e2.join(out_deg.hint("shuffle_hash"), "src").select(
-        "src", "dst", frac.alias("inv_deg")
-    )
-    verts = (
-        vertices.select(F.col("vid").alias("v"))
-        if vertices is not None
-        else out_deg.select(F.col("src").alias("v"))
-        .unionByName(e2.select(F.col("dst").alias("v")))
-        .distinct()
-    )
-    deg = verts.join(
-        out_deg.withColumnRenamed("src", "v").hint("shuffle_hash"), "v", "left"
-    ).select("v", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
-    return verts, deg, contrib_edges, [e2, out_deg]
 
 
 def pagerank_power(
@@ -196,46 +130,16 @@ def pagerank_power(
             "iterations": last + 1, "converged": True,
             "deltas": resumed["deltas"], "n": n, "resumed_at": last + 1,
         }
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    verts, deg, contrib_edges, plan_cached = _prepare(
-        edges, vertices, n_parts, weight_col
-    )
-    # the explicit repartition at the cache boundary is NOT redundant with
-    # _prepare's: an AQE-planned cached join hides its output partitioning
-    # from downstream planning, so without this node every loop iteration
-    # re-exchanges the cached edge table (measured +40% loop time at 100M
-    # edges). A static RepartitionByExpression on top of the cache makes
-    # the partitioning visible and the loop join leaves the edges in place.
-    contrib_edges = contrib_edges.repartition(n_parts, "src").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # vflag is the SETUP-TIME flag source (state init, personalization
-    # weights): since r4 the dang flag rides the state table itself, so a
-    # standard run's superstep loop never joins vflag — see the module
-    # docstring for why exchange reuse still holds with dang in the
-    # state. Personalized runs still join its is_src column (co-
-    # partitioned, no exchange) on every superstep. The explicit
-    # repartition at the cache boundary makes hash(v) partitioning
-    # visible through the cache (AQE hides it otherwise); the superstep's
-    # single write job yields the next dangling mass as an observed
-    # metric (no per-step lookup job — the reference pays a full
-    # lookup(-1) action per superstep, PowerIterationPageRank.scala:111)
-    vaux = deg.select("v", (F.col("out_deg") == 0).alias("dang"))
-    if sources is not None:
-        # personalization flag joins ONCE at setup into the same cached
-        # side table; each superstep joins its is_src back (co-
-        # partitioned: one more join, no exchange)
-        s = sources.select("v").distinct().withColumn("is_src", F.lit(True))
-        vaux = vaux.join(s, "v", "left").select(
-            "v", "dang", F.coalesce("is_src", F.lit(False)).alias("is_src")
-        )
-    vflag = vaux.repartition(n_parts, "v").persist(StorageLevel.MEMORY_AND_DISK)
-    contrib_edges.count()  # materialize the loop-invariant cache in setup,
-    # not inside step 0's job (keeps per-step times honest and steady)
-    aggs = [  # one setup job for all counts
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("dang"), 1).otherwise(0)).alias("nd"),
-    ]
+    # the vertex table (v, dang[, is_src]) is the SETUP-TIME flag source
+    # (state init, personalization weights): dang rides the state, so
+    # only a personalized superstep joins the table (its is_src column,
+    # co-partitioned, no exchange). The next dangling mass is an observed
+    # metric of the step's write (no per-step lookup job — the reference
+    # pays a lookup(-1) action per superstep,
+    # PowerIterationPageRank.scala:111)
+    g = Propagation(edges, vertices, n_partitions, norm=True, weight=weight_col,
+                    sources=sources)
+    aggs = [F.sum(F.when(F.col("dang"), 1).otherwise(0)).alias("nd")]
     if sources is not None:
         aggs.append(F.sum(F.when(F.col("is_src"), 1).otherwise(0)).alias("ns"))
         aggs.append(
@@ -243,18 +147,17 @@ def pagerank_power(
                 F.when(F.col("is_src") & F.col("dang"), 1).otherwise(0)
             ).alias("nsd")
         )
-    crow = vflag.agg(*aggs).collect()[0]
-    for df in plan_cached:  # loop-invariant caches (contrib_edges, vflag)
-        df.unpersist()  # are materialized — the planner pins can go
+    crow = g.count(*aggs)  # one setup job for all counts
     n = crow["n"]
     if n == 0:
-        empty = spark.createDataFrame([], "v long, rank double")
-        return empty, {"iterations": 0, "converged": True, "deltas": [], "n": 0}
+        return g.empty("rank"), {
+            "iterations": 0, "converged": True, "deltas": [], "n": 0}
     n_dangling = crow["nd"]
     ns = None
     if sources is not None:
         ns = crow["ns"]
         if not ns:
+            g.close()
             raise ValueError("personalized PageRank: no source id is in the graph")
 
     start_step = 0 if last is None else last + 1
@@ -267,7 +170,7 @@ def pagerank_power(
             # warm start: project the prior vector onto the current vertex
             # set (new vertices ← 1/n), renormalize to a distribution, and
             # read off the initial dangling mass — ONE setup aggregate job
-            r0 = vflag.join(
+            r0 = g.verts.join(
                 init_ranks.select("v", "rank").hint("shuffle_hash"), "v", "left"
             ).select(
                 "v",
@@ -288,12 +191,12 @@ def pagerank_power(
             m = (row["md"] or 0.0) / row["s"]
         elif sources is None:
             state = store.materialize(
-                vflag.select("v", (F.lit(1.0) / n).alias("rank"), "dang")
+                g.verts.select("v", (F.lit(1.0) / n).alias("rank"), "dang")
             )
             m = n_dangling / n  # uniform init → closed-form dangling mass
         else:
             state = store.materialize(
-                vflag.select(
+                g.verts.select(
                     "v",
                     F.when(F.col("is_src"), F.lit(1.0) / ns)
                     .otherwise(F.lit(0.0))
@@ -308,66 +211,22 @@ def pagerank_power(
     t_loop = time.time()
     for it in range(start_step, max_iters):
         t_step = time.time()
-        # ONE state exchange per superstep: the freshly-read
-        # (v, rank, dang) state is repartitioned by v ONCE and BOTH
-        # consumers — the contributions join and the update join — share
-        # the exchange (AQE reuses the identical shuffle stage; the state
-        # parquet is scanned once per step, verified in the executed
-        # plan). Three things make the subtrees identical: (1) the joins
-        # use EXPLICIT column conditions, never a rename over ``st`` — an
-        # alias project (v AS src / rank AS old_rank) gets pushed below
-        # the RepartitionByExpression and de-unifies the branches;
-        # renames happen above the joins instead; (2) the contributions
-        # mass is ``when(dang, 0.0).otherwise(rank·inv_deg)`` — a
-        # semantic no-op (an edge's src always has an out-edge, so dang
-        # is false on every joined row) that forces the contributions
-        # branch to consume the same (v, rank, dang) schema as the
-        # update branch, so column pruning cannot differentiate the
-        # scans; (3) the explicit isNotNull(v) filter above the
-        # repartition matches the not-null constraint the inner
-        # contributions join would otherwise infer and push below its
-        # side of the exchange alone. Before this, the two joins
-        # exchanged the O(V) state independently (by src, then by v) — a
-        # second O(V) exchange per step that capped N-vs-4N loop
-        # efficiency. The update join is exchange-FREE: state via the
-        # reused exchange, contributions from the final hash-aggregate —
-        # all hash(v, n_parts)-partitioned. The dangling flag for the
-        # observed mass metric rides the state itself (carrying the
-        # boolean costs ~1 byte/row in the exchange; the round-3
-        # alternative — a per-step join against a cached co-partitioned
-        # vflag — cost a measured +0.3-0.5 s/step of fixed overhead).
-        st = state.repartition(n_parts, "v").filter(F.col("v").isNotNull())
-        # shuffle_hash hints: the rank vector is O(n) and must NEVER be
-        # broadcast (a driver-serial hash build per superstep — measured
-        # to flatline core-scaling once n·16B slips under the broadcast
-        # threshold). SHJ streams the cached edges in place (no edge sort,
-        # no edge exchange) and builds per-partition hash tables in
-        # parallel — the plan that survives a 100× scale-up.
-        contribs = (
-            contrib_edges.join(
-                st.hint("shuffle_hash"), contrib_edges["src"] == st["v"]
-            )
-            .select(
-                F.col("dst").alias("vc"),
-                F.when(st["dang"], F.lit(0.0))
-                .otherwise(F.col("rank") * F.col("inv_deg"))
-                .alias("mass"),
-            )
-            .groupBy("vc")
-            .agg(F.sum("mass").alias("mass"))  # partial+final hash agg
-        )
+        # ONE state exchange per superstep, shared by the push and the
+        # update join (operators/propagate.py): both consume ``st``, and
+        # the push mass reads ``dang`` so their subtrees stay identical
+        st = g.scores(state)
+        contribs = g.push(st, "src", F.when(st["dang"], F.lit(0.0)).otherwise(
+            F.col("rank") * F.col("w")))
         # ONE update join yields the new rank and per-vertex delta; the
         # dangling flag for the observed mass metric comes from the state
-        joined = st.join(
-            contribs.hint("shuffle_hash"), st["v"] == contribs["vc"], "left"
-        )
+        joined = g.gather(contribs, st)
         if sources is None:
             base_col = F.lit(eps / n + (1.0 - eps) * m / n)
         else:
             # teleport + dangling mass both land on p (uniform over
             # sources); the loop-invariant source flag joins from the
             # cached co-partitioned side table (personalized runs only)
-            vsrc = vflag.select("v", "is_src")
+            vsrc = g.verts.select("v", "is_src")
             joined = joined.join(
                 vsrc.hint("shuffle_hash"), st["v"] == vsrc["v"]
             )
@@ -378,7 +237,7 @@ def pagerank_power(
             st["v"].alias("v"), st["dang"].alias("dang"),
             (
                 base_col
-                + F.lit(1.0 - eps) * F.coalesce(F.col("mass"), F.lit(0.0))
+                + F.lit(1.0 - eps) * F.coalesce(F.col("m"), F.lit(0.0))
             ).alias("rank"),
             st["rank"].alias("old_rank"),
         ).withColumn("dv", F.abs(F.col("rank") - F.col("old_rank")))
@@ -406,8 +265,7 @@ def pagerank_power(
             converged = True
             break
 
-    contrib_edges.unpersist()
-    vflag.unpersist()
+    g.close()
     ranks = state.select("v", "rank")
     if isinstance(store, CheckpointManager) and max_iters > start_step:
         store.close()  # final ranks read from the durable checkpoint dir

@@ -18,11 +18,10 @@ updates preserve the L1 sum exactly (each matrix is stochastic over its
 support), which doubles as a cheap per-step invariant: the observed sum
 must stay 1 to fp precision.
 
-Scale shape mirrors algos/hits.py: the 1/degree weights are baked into
-two loop-invariant edge caches at setup (one hash-partitioned by src
-for the auth half-step, one by dst for the hub half-step), so a
-superstep exchanges only the O(V) score vector (shuffle_hash, never a
-broadcast — O(V) driver-serial hash builds flatline core scaling) plus
+Scale shape: operators/propagate.py holds the plan — the 1/degree
+weights are baked into two loop-invariant edge caches at setup (one
+partitioned by src for the auth half-step, one by dst for the hub
+half-step), so a superstep exchanges only the O(V) score vector plus
 the O(V) map-side-combined aggregate. Each half-step writes its scores
 once, with its L1 sum riding along as an ``observe`` metric (no separate
 sum job). That is not one Spark job: as in hits.py, a half-step runs 3
@@ -30,7 +29,7 @@ in the local[4] test session with AQE on — 2 adaptive query-stage jobs
 for its shuffle map stages, then the write (the scratch re-read infers
 no schema) — 6 per iteration (1 per half-step with AQE off; counted
 with a job group + ``statusTracker`` on a 41-vertex path, 2 vs 4
-iterations).
+iterations; tests/test_propagate.py).
 """
 
 from __future__ import annotations
@@ -42,6 +41,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from montecarlopagerank_spark.operators.propagate import Propagation
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -58,45 +58,17 @@ def salsa(
     side get 0 there. ``vertices(vid, ...)`` optionally supplies
     isolated ids (hub = auth = 0)."""
     t0 = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    e = edges.select("src", "dst")
-    if vertices is not None:
-        verts = vertices.select(F.col("vid").alias("v")).distinct()
-    else:
-        verts = (
-            e.select(F.col("src").alias("v"))
-            .unionByName(e.select(F.col("dst").alias("v")))
-            .distinct()
-        )
-    out_w = (
-        e.groupBy("src").agg((F.lit(1.0) / F.count(F.lit(1))).alias("w_out"))
-    )
-    in_w = e.groupBy("dst").agg((F.lit(1.0) / F.count(F.lit(1))).alias("w_in"))
-    # loop-invariant weighted edge caches (see module docstring)
-    e_src = (
-        e.join(out_w, "src")
-        .repartition(n_parts, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e_dst = (
-        e.join(in_w, "dst")
-        .repartition(n_parts, "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    verts = verts.repartition(n_parts, "v").persist(StorageLevel.MEMORY_AND_DISK)
-    e_src.count(), e_dst.count()  # pay the two edge exchanges in setup
-    n = verts.count()
-    n_hubs = out_w.count()
-    if n == 0 or n_hubs == 0:
-        empty = verts.select(
-            "v", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth")
-        )
-        return empty, {"iterations": 0, "n": n, "n_hubs": n_hubs}
+    g = Propagation(edges, vertices, n_partitions, keys=("src", "dst"), norm=True)
+    row = g.count(F.sum(F.when(F.col("dang"), 0).otherwise(1)).alias("n_hubs"))
+    n, n_hubs = row["n"], row["n_hubs"] or 0
+    if n_hubs == 0:  # no edges: every score is 0
+        g.close()
+        return g.empty("hub", "auth"), {"iterations": 0, "n": n, "n_hubs": 0}
 
     store = StateStore(spark)
     h = store.materialize(
-        e_src.select("src").distinct().select(
-            F.col("src").alias("v"), (F.lit(1.0) / F.lit(float(n_hubs))).alias("s")
+        g.verts.filter(~F.col("dang")).select(
+            "v", (F.lit(1.0) / F.lit(float(n_hubs))).alias("s")
         ),
         "salsa_h",
     )
@@ -107,37 +79,24 @@ def salsa(
         # sum observed on it
         obs_a = Observation(f"salsa_a_{it}")
         a = store.materialize(
-            e_src.join(
-                h.repartition(n_parts, "v").hint("shuffle_hash"),
-                e_src["src"] == F.col("v"),
-            )
-            .select(
-                F.col("dst").alias("vc"), (F.col("s") * F.col("w_out")).alias("m")
-            )
-            .groupBy(F.col("vc").alias("v"))
-            .agg(F.sum("m").alias("s"))
+            g.push(g.scores(h), "src", F.col("s") * F.col("w"))
+            .select(F.col("vc").alias("v"), F.col("m").alias("s"))
             .observe(obs_a, F.sum("s").alias("t")),
             "salsa_a",
         )
         # hub half-step: one write, L1 sum observed on it
         obs_h = Observation(f"salsa_h_{it}")
         h = store.materialize(
-            e_dst.join(
-                a.repartition(n_parts, "v").hint("shuffle_hash"),
-                e_dst["dst"] == F.col("v"),
-            )
-            .select(
-                F.col("src").alias("vc"), (F.col("s") * F.col("w_in")).alias("m")
-            )
-            .groupBy(F.col("vc").alias("v"))
-            .agg(F.sum("m").alias("s"))
+            g.push(g.scores(a), "dst", F.col("s") * F.col("w"))
+            .select(F.col("vc").alias("v"), F.col("m").alias("s"))
             .observe(obs_h, F.sum("s").alias("t")),
             "salsa_h",
         )
         sums.append((float(obs_a.get["t"]), float(obs_h.get["t"])))
 
     out = (
-        verts.join(h.withColumnRenamed("s", "hub").hint("shuffle_hash"), "v", "left")
+        g.verts.join(h.withColumnRenamed("s", "hub").hint("shuffle_hash"), "v",
+                     "left")
         .join(a.withColumnRenamed("s", "auth").hint("shuffle_hash"), "v", "left")
         .select(
             "v",
@@ -147,7 +106,7 @@ def salsa(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     out.count()
-    e_src.unpersist(), e_dst.unpersist(), verts.unpersist()
+    g.close()
     return out, {
         "iterations": iters,
         "n": n,

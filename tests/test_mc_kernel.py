@@ -236,6 +236,22 @@ def test_non_local_root_stages_host_local_copy(dfs_root):
     assert (root, 4) not in mc._CSR_CACHE
 
 
+def test_purge_removes_other_packs_stage_dirs(dfs_root, tmp_path):
+    """A miss on a new pack drops the older pack's cache entries AND its
+    host-local stage dir: a host keeps the staged copy of one pack."""
+    packs = ["mock://csr-test/st/csr/a", "mock://csr-test/st/csr/b"]
+    stages = os.path.join(tmp_path, "ld0", "mc_csr")
+    try:
+        for p in packs:
+            mc._write_block(p, 0, ENTRY)
+            mc._load_block(p, 0)
+        assert (packs[0], 0) not in mc._CSR_CACHE
+        assert os.listdir(stages) == [
+            hashlib.sha1(packs[1].encode()).hexdigest()]
+    finally:
+        mc._drop((packs[1], 0))
+
+
 def test_staged_block_serves_other_workers_on_the_host(dfs_root, monkeypatch):
     """After one worker staged a block, another worker on the same host
     (an empty cache: ``_drop``) maps the staged copy and opens nothing
