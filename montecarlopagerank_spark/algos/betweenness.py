@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from montecarlopagerank_spark.operators.propagate import neighbours
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -63,18 +64,7 @@ def landmark_betweenness(
     are excluded (source-endpoint convention)."""
     t0 = time.time()
     n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    base = edges.select(F.col("src").alias("u"), F.col("dst").alias("x"))
-    if not directed:
-        base = base.unionByName(
-            edges.select(F.col("dst").alias("u"), F.col("src").alias("x"))
-        )
-    e = (
-        base.filter(F.col("u") != F.col("x"))
-        .distinct()  # simple-graph closure: parallel edges are one road
-        .repartition(n_parts, "u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e.count()
+    e = neighbours(edges, n_parts, directed)  # operators/propagate.py
     # reversed orientation for the backward phase (w → its predecessors)
     er = e.select(F.col("x").alias("u"), F.col("u").alias("x"))
 

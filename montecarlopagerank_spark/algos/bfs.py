@@ -6,15 +6,15 @@ neighborhood queries on a link graph. Undirected by default (edges are
 traversed both ways); ``directed=True`` follows src→dst only.
 
 Scale shape: classic frontier BFS — per round only the NEWLY discovered
-frontier joins the edge table, never the full visited set, so round cost
-is O(frontier boundary), not O(V). The edge table (symmetrized for the
-undirected case) is hash-partitioned by the join key once and persisted;
-each round shuffles only the O(frontier) vertex set into it via a
-shuffle_hash join plus one aggregate to drop duplicates. The visited set
-accumulates in a parquet-backed state table (flat plans, bounded lineage);
-"seen before?" is a left-anti join against it, co-partitioned by v. Each
-round is TWO jobs (frontier write with its count observed, visited-set
-write); the loop stops when the frontier empties or at ``max_hops``.
+frontier joins the neighbour cache (operators/propagate.py), never the
+full visited set, so round cost is O(frontier boundary), not O(V); each
+round shuffles only the O(frontier) vertex set into the cache plus one
+aggregate to drop duplicates. The visited set accumulates in a
+parquet-backed state table (flat plans, bounded lineage); "seen before?"
+is a left-anti join against it, co-partitioned by v. Each round is TWO
+jobs (frontier write with its count observed, visited-set write); the
+loop stops when the frontier empties or at ``max_hops``. One loop serves
+``bfs_hops`` (one landmark key) and the landmark centralities.
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from montecarlopagerank_spark.operators.propagate import neighbours
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -39,28 +40,40 @@ def bfs_hops(
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` + ``sources(v)`` → (``dist(v, hops:int)``, info)
     for every vertex reachable within ``max_hops``; sources get hops 0.
-    Unreachable vertices are absent from the result."""
+    Unreachable vertices are absent from the result. The landmark loop
+    with ONE landmark key (l = 0) seeded at every source."""
     t0 = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-    if not directed:
-        e = e.unionByName(
-            edges.select(F.col("dst").alias("u"), F.col("src").alias("w"))
-        )
-    e = (
-        e.filter(F.col("u") != F.col("w"))
-        .distinct()  # multigraph dups only duplicate frontier work
-        .repartition(n_parts, "u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    visited, rounds = _landmark_distances(
+        spark, edges, sources.select(F.lit(0).alias("l"), "v"), max_hops,
+        directed, n_partitions
     )
-    e.count()  # pay the one edge exchange in setup
+    return _done(visited.select("v", "hops"), rounds, max_hops, t0)
+
+
+def _landmark_distances(
+    spark: SparkSession,
+    edges: DataFrame,
+    seeds: DataFrame,
+    max_hops: int,
+    directed: bool,
+    n_partitions: int | None,
+) -> tuple[DataFrame, int]:
+    """Shared BFS loop: exact per-(landmark, vertex) hop distances
+    ``(l, v, hops)`` within ``max_hops`` from the ``seeds(l, v)`` at hop
+    0, as ONE multi-source BFS whose state is keyed (landmark, vertex) —
+    landmarks expand simultaneously, so the loop costs the same number of
+    rounds as a single BFS, not |landmarks| of them. Returns (distances,
+    rounds); the distance table is NOT persisted (callers aggregate it
+    once)."""
+    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    e = neighbours(edges, n_parts, directed)
 
     store = StateStore(spark)
     frontier = store.materialize(
-        sources.select("v").distinct().repartition(n_parts, "v"), "bfs_frontier"
+        seeds.distinct().repartition(n_parts, "v"), "bfs_frontier"
     )
     visited = store.materialize(
-        frontier.select("v", F.lit(0).alias("hops")), "bfs_dist"
+        frontier.select("l", "v", F.lit(0).alias("hops")), "bfs_dist"
     )
     rounds = 0
     for hop in range(1, max_hops + 1):
@@ -70,90 +83,33 @@ def bfs_hops(
                 frontier.repartition(n_parts, "v").hint("shuffle_hash"),
                 e["u"] == F.col("v"),
             )
-            .select(F.col("w").alias("v"))
+            .select("l", F.col("x").alias("v"))
             .distinct()
             .withColumn("hops", F.lit(hop))
             # left-anti against the visited set: both sides hash(v)
-            .join(visited.hint("shuffle_hash"), "v", "left_anti")
+            .join(visited.hint("shuffle_hash"), ["l", "v"], "left_anti")
             .observe(obs, F.count(F.lit(1)).alias("n"))
         )
         new = store.materialize(nxt, "bfs_frontier")
         if obs.get["n"] == 0:
             break
         rounds = hop
-        frontier = new.select("v")
+        frontier = new.select("l", "v")
         visited = store.materialize(visited.unionByName(new), "bfs_dist")
     e.unpersist()
-    out = visited.persist(StorageLevel.MEMORY_AND_DISK)
+    return visited, rounds
+
+
+def _done(out: DataFrame, rounds: int, max_hops: int, t0: float
+          ) -> tuple[DataFrame, dict[str, Any]]:
+    """``out`` persisted and filled, with the loop's info."""
+    out = out.persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
     return out, {
         "rounds": rounds,
         "max_hops": max_hops,
         "secs": round(time.time() - t0, 3),
     }
-
-
-def _landmark_distances(
-    spark: SparkSession,
-    edges: DataFrame,
-    landmarks: DataFrame,
-    max_hops: int,
-    directed: bool,
-    n_partitions: int | None,
-) -> tuple[DataFrame, int]:
-    """Shared kernel of the landmark centralities: exact per-(landmark,
-    vertex) hop distances ``(l, v, hops)`` within ``max_hops``, from ONE
-    multi-source BFS whose state is keyed (landmark, vertex) — landmarks
-    expand simultaneously, so the loop costs the same number of rounds as
-    a single BFS, not |landmarks| of them. Same one-job-per-hop /
-    O(frontier) shape as :func:`bfs_hops`. Returns (distances, rounds);
-    the distance table is NOT persisted (callers aggregate it once)."""
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-    if not directed:
-        e = e.unionByName(
-            edges.select(F.col("dst").alias("u"), F.col("src").alias("w"))
-        )
-    e = (
-        e.filter(F.col("u") != F.col("w"))
-        .distinct()
-        .repartition(n_parts, "u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e.count()
-
-    store = StateStore(spark)
-    frontier = store.materialize(
-        landmarks.select(F.col("v").alias("l"), "v")
-        .distinct()
-        .repartition(n_parts, "v"),
-        "hc_frontier",
-    )
-    visited = store.materialize(
-        frontier.select("l", "v", F.lit(0).alias("hops")), "hc_dist"
-    )
-    rounds = 0
-    for hop in range(1, max_hops + 1):
-        obs = Observation(f"hc_round_{hop}")
-        nxt = (
-            e.join(
-                frontier.repartition(n_parts, "v").hint("shuffle_hash"),
-                e["u"] == F.col("v"),
-            )
-            .select("l", F.col("w").alias("v"))
-            .distinct()
-            .withColumn("hops", F.lit(hop))
-            .join(visited.hint("shuffle_hash"), ["l", "v"], "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-        )
-        new = store.materialize(nxt, "hc_frontier")
-        if obs.get["n"] == 0:
-            break
-        rounds = hop
-        frontier = new.select("l", "v")
-        visited = store.materialize(visited.unionByName(new), "hc_dist")
-    e.unpersist()
-    return visited, rounds
 
 
 def harmonic_centrality(
@@ -174,20 +130,15 @@ def harmonic_centrality(
     landmark within the cap are absent (h = 0)."""
     t0 = time.time()
     visited, rounds = _landmark_distances(
-        spark, edges, landmarks, max_hops, directed, n_partitions
+        spark, edges, landmarks.select(F.col("v").alias("l"), "v"), max_hops,
+        directed, n_partitions
     )
     out = (
         visited.filter(F.col("hops") > 0)  # d(l,l)=0 excluded (l ≠ v terms)
         .groupBy("v")
         .agg(F.sum(F.lit(1.0) / F.col("hops")).alias("harmonic"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    out.count()
-    return out, {
-        "rounds": rounds,
-        "max_hops": max_hops,
-        "secs": round(time.time() - t0, 3),
-    }
+    return _done(out, rounds, max_hops, t0)
 
 
 def closeness_centrality(
@@ -217,7 +168,8 @@ def closeness_centrality(
     no landmark are absent."""
     t0 = time.time()
     visited, rounds = _landmark_distances(
-        spark, edges, landmarks, max_hops, directed, n_partitions
+        spark, edges, landmarks.select(F.col("v").alias("l"), "v"), max_hops,
+        directed, n_partitions
     )
     out = (
         visited.filter(F.col("hops") > 0)
@@ -226,11 +178,5 @@ def closeness_centrality(
             (F.count(F.lit(1)) / F.sum("hops")).alias("closeness"),
             F.count(F.lit(1)).alias("reached"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    out.count()
-    return out, {
-        "rounds": rounds,
-        "max_hops": max_hops,
-        "secs": round(time.time() - t0, 3),
-    }
+    return _done(out, rounds, max_hops, t0)

@@ -48,8 +48,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from montecarlopagerank_spark.algos.components import _pairs
 from montecarlopagerank_spark.algos.mis import _pri
+from montecarlopagerank_spark.operators.propagate import both_ways, pairs
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -68,10 +68,7 @@ def greedy_coloring(
     n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     store = StateStore(spark)
 
-    p = _pairs(edges)
-    sym_raw = p.select(F.col("x").alias("u"), F.col("y").alias("w")).unionByName(
-        p.select(F.col("y").alias("u"), F.col("x").alias("w"))
-    )
+    sym_raw = both_ways(pairs(edges), "u", "w")
     # TWO pinned copies of the symmetric pair set, one per loop join key:
     # the live-neighbour anti-join keys on w, the coloured-neighbour
     # lookup keys on u — a single pin would re-exchange the O(E) side on

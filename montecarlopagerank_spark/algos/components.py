@@ -3,9 +3,10 @@
 Algorithm: Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii,
 "Connected Components in MapReduce and Beyond" (SoCC 2014) — the exact
 algorithm named by BASELINE.json's north_star (no reference code exists;
-SURVEY.md §2.7). Components are over the *undirected* closure of the edge
-set. Output labels are exact: every vertex gets the minimum vid of its
-component, so results are deterministic and parallelism-invariant.
+SURVEY.md §2.7). Components are over the undirected simple closure of the
+edge set (operators/propagate.py). Output labels are exact: every vertex
+gets the minimum vid of its component, so results are deterministic and
+parallelism-invariant.
 
 Edges are treated as undirected node pairs throughout; each star op views
 the pair from the directions it needs (large-star from both endpoints,
@@ -35,6 +36,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from montecarlopagerank_spark.operators.checkpoint import open_store
+from montecarlopagerank_spark.operators.propagate import both_ways, pairs
 
 _P1 = 1_000_000_007
 _P2 = 998_244_353
@@ -51,27 +53,16 @@ def _pair_stats(name: str):
     return obs, cols
 
 
-def _pairs(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
-    """Canonical undirected loop-free pair set (x < y), deduplicated."""
-    return (
-        edges.filter(F.col(a) != F.col(b))
-        .select(F.least(a, b).alias("x"), F.greatest(a, b).alias("y"))
-        .distinct()
-    )
-
-
 def _large_star(p: DataFrame) -> DataFrame:
     """p(x<y) → new canonical pairs. Views each pair from both endpoints."""
-    sym = p.select(F.col("x").alias("u"), F.col("y").alias("v")).unionByName(
-        p.select(F.col("y").alias("u"), F.col("x").alias("v"))
-    )
+    sym = both_ways(p, "u", "v")
     m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
     out = (
         sym.join(m, "u")
         .filter(F.col("v") > F.col("u"))
         .select(F.col("v").alias("x"), F.col("m").alias("y"))
     )
-    return _pairs(out, "x", "y")
+    return pairs(out, "x", "y")
 
 
 def _small_star(p: DataFrame) -> DataFrame:
@@ -83,7 +74,7 @@ def _small_star(p: DataFrame) -> DataFrame:
         .select(F.col("v").alias("x"), F.col("m").alias("y"))
         .unionByName(m.select(F.col("u").alias("x"), F.col("m").alias("y")))
     )
-    return _pairs(out, "x", "y")
+    return pairs(out, "x", "y")
 
 
 def connected_components(
@@ -119,7 +110,7 @@ def connected_components(
         start = last + 1
     else:
         obs0, cols0 = _pair_stats("cc_init")
-        p = store.materialize(_pairs(edges).observe(obs0, *cols0), "pairs")
+        p = store.materialize(pairs(edges).observe(obs0, *cols0), "pairs")
         prev = fp(obs0.get)
     for it in range(start, max_iters if not done else start):
         obs, cols = _pair_stats(f"cc_round_{it}")

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from montecarlopagerank_spark.algos.components import _pairs
+from montecarlopagerank_spark.operators.propagate import both_ways, pairs
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -81,15 +81,13 @@ def core_numbers(
         .unionByName(edges.select(F.col("dst").alias("v")))
         .distinct()
     )
-    p = _pairs(edges)
     # pinned by w — the per-round message join's key — so the O(E) side
     # never re-exchanges inside the loop (the cached scan's
     # hashpartitioning(w) satisfies the join requirement); only the O(V)
     # h-table moves per round. The one-time init groupBy(u) pays a single
     # O(E) exchange instead.
     sym = (
-        p.select(F.col("x").alias("u"), F.col("y").alias("w"))
-        .unionByName(p.select(F.col("y").alias("u"), F.col("x").alias("w")))
+        both_ways(pairs(edges), "u", "w")
         .repartition(n_parts, "w")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

@@ -31,7 +31,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from montecarlopagerank_spark.algos.components import _pairs
+from montecarlopagerank_spark.operators.propagate import both_ways, pairs
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -52,14 +52,12 @@ def densest_subgraph(
 
     obs_p = Observation("dens_init_p")
     p = store.materialize(
-        _pairs(edges).observe(obs_p, F.count(F.lit(1)).alias("n")), "dens_pairs"
+        pairs(edges).observe(obs_p, F.count(F.lit(1)).alias("n")), "dens_pairs"
     )
     e_count = int(obs_p.get["n"])
     obs_v = Observation("dens_init_v")
     v = store.materialize(
-        p.select(F.col("x").alias("v"))
-        .unionByName(p.select(F.col("y").alias("v")))
-        .distinct()
+        both_ways(p, "v", "w").select("v").distinct()
         .observe(obs_v, F.count(F.lit(1)).alias("n")),
         "dens_v_0",
     )
@@ -77,8 +75,7 @@ def densest_subgraph(
             best_d, best_r = d, it
         thr = factor * d  # same IEEE order as the SQL twin
         deg = (
-            p.select(F.col("x").alias("v"))
-            .unionByName(p.select(F.col("y").alias("v")))
+            both_ways(p, "v", "w")
             .groupBy("v")
             .agg(F.count(F.lit(1)).alias("d"))
         )
@@ -114,7 +111,7 @@ def densest_subgraph(
         converged = v_count == 0
 
     if best_r is None:  # edge-free input
-        out = _pairs(edges).limit(0).select(F.col("x").alias("v"))
+        out = pairs(edges).limit(0).select(F.col("x").alias("v"))
     else:
         out = snapshots[best_r]
     return out, {

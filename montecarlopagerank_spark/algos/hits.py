@@ -43,14 +43,13 @@ def hits(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     iters: int = 5,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` (multigraph: duplicate edges count) →
     (``scores(v, hub, auth)``, info). hub and auth are L1-normalized
     (each sums to 1). Vertices with no in-edges get auth 0; no out-edges
     → hub 0. ``vertices(vid, ...)`` optionally supplies isolated ids."""
     t0 = time.time()
-    g = Propagation(edges, vertices, n_partitions, keys=("src", "dst"))
+    g = Propagation(edges, vertices, keys=("src", "dst"))
     n = g.count()["n"]
     if n == 0:
         return g.empty("hub", "auth"), {"iterations": 0, "n": 0}

@@ -36,8 +36,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from montecarlopagerank_spark.operators.propagate import neighbours
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -58,18 +58,7 @@ def neighborhood_function(
     of the final value, linearly interpolated (Boldi-Vigna convention)."""
     t0 = time.time()
     n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    base = edges.select(F.col("src").alias("u"), F.col("dst").alias("x"))
-    if not directed:
-        base = base.unionByName(
-            edges.select(F.col("dst").alias("u"), F.col("src").alias("x"))
-        )
-    e = (
-        base.filter(F.col("u") != F.col("x"))
-        .distinct()
-        .repartition(n_parts, "u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e.count()  # one edge exchange, paid in setup
+    e = neighbours(edges, n_parts, directed)  # operators/propagate.py
 
     verts = (
         e.select(F.col("u").alias("v"))

@@ -50,7 +50,6 @@ def katz(
     alpha: float = 0.05,
     beta: float = 1.0,
     iters: int = 6,
-    n_partitions: int | None = None,
     x0: float | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` → (``scores(v, katz)``, info) after ``iters``
@@ -59,7 +58,7 @@ def katz(
     ``x0`` exists so the β=0 power-method family (eigenvector
     centrality) can still start from a non-degenerate vector."""
     t0 = time.time()
-    g = Propagation(edges, vertices, n_partitions)
+    g = Propagation(edges, vertices)
     n = g.count()["n"]
     if n == 0:
         return g.empty("katz", "katz_norm"), {"iterations": 0, "n": 0}
@@ -109,7 +108,6 @@ def eigenvector_centrality(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     iters: int = 6,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """In-edge eigenvector centrality by ``iters`` exact power-method
     supersteps: x₀ = 1, x ← Aᵀx, L1-normalized ×n once at the end — the
@@ -125,6 +123,5 @@ def eigenvector_centrality(
         alpha=1.0,
         beta=0.0,
         iters=iters,
-        n_partitions=n_partitions,
         x0=1.0,
     )

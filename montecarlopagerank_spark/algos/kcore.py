@@ -33,7 +33,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from montecarlopagerank_spark.algos.components import _pairs
+from montecarlopagerank_spark.operators.propagate import both_ways, pairs
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -55,14 +55,9 @@ def k_core(
     n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     store = StateStore(spark)
 
-    def sym(p: DataFrame) -> DataFrame:
-        return p.select(F.col("x").alias("u")).unionByName(
-            p.select(F.col("y").alias("u"))
-        )
-
     obs0 = Observation("kcore_init")
     p = store.materialize(
-        _pairs(edges).observe(obs0, F.count(F.lit(1)).alias("n")), "kcore_pairs"
+        pairs(edges).observe(obs0, F.count(F.lit(1)).alias("n")), "kcore_pairs"
     )
     prev = int(obs0.get["n"])
     rounds, converged = 0, False
@@ -74,7 +69,7 @@ def k_core(
         # driver-serial hash builds flatline core scaling; see
         # operators/propagate.py)
         keep = (
-            sym(p)
+            both_ways(p, "u", "w")
             .groupBy("u")
             .agg(F.count(F.lit(1)).alias("d"))
             .filter(F.col("d") >= k)
@@ -103,7 +98,7 @@ def k_core(
             break
         prev = cur
     out = (
-        sym(p)
+        both_ways(p, "u", "w")
         .groupBy(F.col("u").alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
     )

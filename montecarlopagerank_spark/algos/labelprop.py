@@ -11,8 +11,8 @@ Shape per superstep: edges ⋈ labels → groupBy(v, label).count() →
 groupBy(v).max(struct(cnt, −label)) — the mode with min-label tie-break
 as two hash aggregations, both partial-aggregable, no window sort. Hub
 vertices with huge neighbourhoods pre-aggregate map-side because
-(v, label) collapses duplicates early; the loop-invariant symmetric edge
-table is cached pre-partitioned by the join key so each superstep
+(v, label) collapses duplicates early; the loop-invariant neighbour cache
+(operators/propagate.py) is pinned by the join key so each superstep
 exchanges only the O(V) label table.
 """
 
@@ -20,9 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from montecarlopagerank_spark.operators.checkpoint import open_store
+from montecarlopagerank_spark.operators.propagate import neighbours
 
 
 def label_propagation(
@@ -40,24 +40,12 @@ def label_propagation(
     ``resume=True`` continues from the last complete superstep —
     identical final labels, since a synchronous LPA step is a pure
     function of the committed label table."""
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    sym = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter("u != v")
-        .distinct()
-        # loop-invariant; the explicit repartition by the join key makes
-        # the cached partitioning visible to the loop planner, so each
-        # superstep's join exchanges only the O(V) label table, never the
-        # O(E) symmetric edge table (same AQE-cache opacity as the
-        # rankers' edge caches — see operators/propagate.py)
-        .repartition(n_parts, "u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # loop-invariant (u, x) neighbour cache (operators/propagate.py)
+    sym = neighbours(edges, int(spark.conf.get("spark.sql.shuffle.partitions")))
     verts = (
         vertices.select(F.col("vid").alias("v"))
         if vertices is not None
-        else sym.select("u").withColumnRenamed("u", "v").distinct()
+        else sym.select(F.col("u").alias("v")).distinct()
     )
     store, last = open_store(
         spark, checkpoint_dir, {"algo": "lpa", "format": 1}, resume
@@ -73,15 +61,11 @@ def label_propagation(
         )
 
     for it in range(start, max_iters if not done else start):
-        # shuffle_hash on the O(V) label side: without the hint the
-        # planner picks sort-merge and re-SORTS the cached O(E) symmetric
-        # edge table every superstep — the repartition above avoids the
-        # per-step exchange but not the sort (same reasoning as the
-        # pagerank_power loop join; labels must also never broadcast —
-        # a driver-serial hash build per superstep at scale)
+        # shuffle_hash on the O(V) label side, never broadcast
+        # (operators/propagate.py)
         nbr_labels = sym.join(
             labels.withColumnRenamed("v", "u").hint("shuffle_hash"), "u"
-        ).select("v", "label")
+        ).select(F.col("x").alias("v"), "label")
         # mode with min-label tie-break as a pure hash aggregation:
         # min(struct(-cnt, label)) ≡ row_number over (cnt desc, label asc)
         # = 1, but partial-aggregable and without the window's per-

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from montecarlopagerank_spark.algos.triangles import undirected_edges
+from montecarlopagerank_spark.operators.propagate import both_ways, pairs
 
 
 def common_neighbors_topk(
@@ -49,10 +49,8 @@ def common_neighbors_topk(
     the denominator; only the intersection count is apex-capped (see
     module docstring).
     """
-    und = undirected_edges(edges)
-    sym = und.select(F.col("x").alias("v"), F.col("y").alias("w")).unionByName(
-        und.select(F.col("y").alias("v"), F.col("x").alias("w"))
-    )
+    und = pairs(edges)
+    sym = both_ways(und, "v", "w")
     deg = sym.groupBy("v").agg(F.count("*").alias("deg"))
     # wedges mediated by capped-degree apexes only; the self-join key is
     # the apex, so each task's blow-up is bounded by cap^2
@@ -115,10 +113,8 @@ def adamic_adar_topk(
     Returns ``(a, b, common:long, aa_r6:double)`` with ``a < b``, ordered
     by (aa_r6 DESC, common DESC, a, b) — rounding before ordering keeps
     the k-cut identical across engines despite float-sum order."""
-    und = undirected_edges(edges)
-    sym = und.select(F.col("x").alias("v"), F.col("y").alias("w")).unionByName(
-        und.select(F.col("y").alias("v"), F.col("x").alias("w"))
-    )
+    und = pairs(edges)
+    sym = both_ways(und, "v", "w")
     deg = sym.groupBy("v").agg(F.count("*").alias("deg"))
     # deg >= 2: a degree-1 apex mediates no wedge anyway, and keeping it
     # would evaluate 1/ln(1) (ANSI divide-by-zero) before the a<b filter

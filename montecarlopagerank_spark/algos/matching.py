@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from montecarlopagerank_spark.algos.components import _pairs
+from montecarlopagerank_spark.operators.propagate import pairs
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -67,7 +67,7 @@ def maximal_matching(
 
     obs0 = Observation("match_init")
     p = store.materialize(
-        _pairs(edges)
+        pairs(edges)
         .select("x", "y", _edge_pri(F.col("x"), F.col("y")).alias("pri"))
         .observe(obs0, F.count(F.lit(1)).alias("n")),
         "match_pairs",
@@ -135,7 +135,7 @@ def maximal_matching(
         for w in winners[1:]:
             out = out.unionByName(w)
     else:  # schema-preserving empty result (works for any key type)
-        out = _pairs(edges).limit(0).select("x", "y", F.lit(0).alias("round"))
+        out = pairs(edges).limit(0).select("x", "y", F.lit(0).alias("round"))
     out = out.persist(StorageLevel.MEMORY_AND_DISK)
     n_matched = out.count()
     return out, {

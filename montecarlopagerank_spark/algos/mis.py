@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from montecarlopagerank_spark.algos.components import _pairs
+from montecarlopagerank_spark.operators.propagate import both_ways, pairs
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -63,21 +63,16 @@ def luby_mis(
     n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     store = StateStore(spark)
 
-    # all vertices (incl. self-loop-only ones, which _pairs drops)
+    # all vertices (incl. self-loop-only ones, which pairs drops)
     verts = (
         edges.select(F.col("src").alias("v"))
         .unionByName(edges.select(F.col("dst").alias("v")))
         .distinct()
     )
 
-    def sym(p: DataFrame) -> DataFrame:
-        return p.select(F.col("x").alias("u"), F.col("y").alias("w")).unionByName(
-            p.select(F.col("y").alias("u"), F.col("x").alias("w"))
-        )
-
     obs0 = Observation("mis_init")
     p = store.materialize(
-        _pairs(edges).observe(obs0, F.count(F.lit(1)).alias("n")), "mis_pairs"
+        pairs(edges).observe(obs0, F.count(F.lit(1)).alias("n")), "mis_pairs"
     )
     live_pairs = int(obs0.get["n"])
     live = store.materialize(verts, "mis_live")
@@ -92,7 +87,9 @@ def luby_mis(
             break
         # strict-min priority among live neighbours (pair set only ever
         # contains live endpoints, so no filtering join is needed here)
-        nbr_min = sym(p).groupBy("u").agg(F.min(_pri(F.col("w"))).alias("mn"))
+        nbr_min = both_ways(p, "u", "w").groupBy("u").agg(
+            F.min(_pri(F.col("w"))).alias("mn")
+        )
         win = (
             live.join(
                 nbr_min.withColumnRenamed("u", "v").hint("shuffle_hash"),
@@ -110,7 +107,7 @@ def luby_mis(
         winners.append(win)
         # excluded = winners' neighbours; survivors = live − win − excluded
         excluded = (
-            sym(p)
+            both_ways(p, "u", "w")
             .join(
                 win.select(F.col("v").alias("u")).hint("shuffle_hash"),
                 "u",

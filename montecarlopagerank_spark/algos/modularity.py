@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from montecarlopagerank_spark.operators.propagate import both_ways, pairs
+
 
 def conductance(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """Per-community conductance φ(c) = cut(c) / min(vol(c), vol(rest))
@@ -33,18 +35,9 @@ def conductance(edges: DataFrame, labels: DataFrame) -> DataFrame:
     k-row arithmetic. Partition-invariant per label, so the DuckDB twin
     compares (size, φ) pairs — label-value-free (contract.py
     ``conductance_cc``)."""
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("x"), F.greatest("src", "dst").alias("y")
-        )
-        .distinct()
-    )
+    und = pairs(edges)
     lab = labels.select("v", "label")
-    sym = und.select(F.col("x").alias("v"), F.col("y").alias("w")).unionByName(
-        und.select(F.col("y").alias("v"), F.col("x").alias("w"))
-    )
-    deg = sym.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
+    deg = both_ways(und, "v", "w").groupBy("v").agg(F.count(F.lit(1)).alias("d"))
     vol = (
         deg.join(lab.hint("shuffle_hash"), "v")
         .groupBy("label")
@@ -91,18 +84,9 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     self-loops dropped; vertices missing from ``labels`` contribute
     nothing (their incident edges still count in m and in their labeled
     endpoint's degree)."""
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("x"), F.greatest("src", "dst").alias("y")
-        )
-        .distinct()
-    )
+    und = pairs(edges)
     lab = labels.select("v", "label")
-    sym = und.select(F.col("x").alias("v"), F.col("y").alias("w")).unionByName(
-        und.select(F.col("y").alias("v"), F.col("x").alias("w"))
-    )
-    deg = sym.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
+    deg = both_ways(und, "v", "w").groupBy("v").agg(F.count(F.lit(1)).alias("d"))
     dsum = (
         deg.join(lab.hint("shuffle_hash"), "v")
         .groupBy("label")

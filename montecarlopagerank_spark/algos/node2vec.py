@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from montecarlopagerank_spark.operators.propagate import neighbours, pin
 from montecarlopagerank_spark.operators.state import StateStore
 
 _U_MOD = 1 << 30  # u = pmod(xxhash64, 2^30) / 2^30 — 9 decimal digits of
@@ -68,24 +69,12 @@ def node2vec_walks(
         raise ValueError(f"p and q must be positive, got p={p} q={q}")
     t0 = time.time()
     n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    base = edges.select(F.col("src").alias("u"), F.col("dst").alias("x"))
-    if not directed:
-        base = base.unionByName(
-            edges.select(F.col("dst").alias("u"), F.col("src").alias("x"))
-        )
-    sym = (
-        base.filter(F.col("u") != F.col("x"))
-        .distinct()
-        .repartition(n_parts, "u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym.count()
-    nbrs = (
+    sym = neighbours(edges, n_parts, directed)  # operators/propagate.py
+    nbrs = pin(
         sym.groupBy("u")
         .agg(F.sort_array(F.collect_list("x")).alias("arr"))
-        .withColumn("deg", F.size("arr").cast("long"))
-        .repartition(n_parts, "u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .withColumn("deg", F.size("arr").cast("long")),
+        n_parts, "u",
     )
     nbrs.count()
     # canonical pair set for the (prev, candidate) existence probe

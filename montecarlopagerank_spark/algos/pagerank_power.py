@@ -70,7 +70,6 @@ def pagerank_power(
     max_iters: int = 100,
     checkpoint_dir: str | None = None,
     resume: bool = False,
-    n_partitions: int | None = None,
     sources: DataFrame | None = None,
     init_ranks: DataFrame | None = None,
     weight_col: str | None = None,
@@ -137,7 +136,7 @@ def pagerank_power(
     # metric of the step's write (no per-step lookup job — the reference
     # pays a lookup(-1) action per superstep,
     # PowerIterationPageRank.scala:111)
-    g = Propagation(edges, vertices, n_partitions, norm=True, weight=weight_col,
+    g = Propagation(edges, vertices, norm=True, weight=weight_col,
                     sources=sources)
     aggs = [F.sum(F.when(F.col("dang"), 1).otherwise(0)).alias("nd")]
     if sources is not None:

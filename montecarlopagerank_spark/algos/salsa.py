@@ -50,7 +50,6 @@ def salsa(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     iters: int = 5,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` (multigraph: duplicate edges count) →
     (``scores(v, hub, auth)``, info). hub sums to 1 over vertices with
@@ -58,7 +57,7 @@ def salsa(
     side get 0 there. ``vertices(vid, ...)`` optionally supplies
     isolated ids (hub = auth = 0)."""
     t0 = time.time()
-    g = Propagation(edges, vertices, n_partitions, keys=("src", "dst"), norm=True)
+    g = Propagation(edges, vertices, keys=("src", "dst"), norm=True)
     row = g.count(F.sum(F.when(F.col("dang"), 0).otherwise(1)).alias("n_hubs"))
     n, n_hubs = row["n"], row["n_hubs"] or 0
     if n_hubs == 0:  # no edges: every score is 0

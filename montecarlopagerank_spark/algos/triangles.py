@@ -1,7 +1,8 @@
 """Triangle counting via degree-ordered edge orientation (node-iterator++).
 
 North-rule algorithm with no reference implementation (SURVEY.md §2.7).
-Counts triangles in the undirected closure of the edge set.
+Counts triangles in the undirected simple closure of the edge set, the
+canonical pair set ``pairs`` of operators/propagate.py.
 
 Skew story (the reason for degree ordering): orient every undirected edge
 from the endpoint with smaller (degree, vid) to the larger. Every vertex's
@@ -20,19 +21,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def undirected_edges(edges: DataFrame) -> DataFrame:
-    """Canonical undirected, de-duplicated, loop-free edge set (x < y)."""
-    return (
-        edges.filter("src != dst")
-        .select(F.least("src", "dst").alias("x"), F.greatest("src", "dst").alias("y"))
-        .distinct()
-    )
+from montecarlopagerank_spark.operators.propagate import pairs
 
 
 def _oriented(edges: DataFrame) -> DataFrame:
     """Orient each undirected edge by (degree, vid) ascending → (lo, hi)."""
-    und = undirected_edges(edges)
+    und = pairs(edges)
     deg = (
         und.select(F.col("x").alias("v"))
         .unionByName(und.select(F.col("y").alias("v")))
@@ -140,7 +134,7 @@ def clustering_coefficient(spark: SparkSession, edges: DataFrame) -> DataFrame:
     multiply+divide — bit-identical to any SQL twin computing
     ``2.0·T/(d·(d−1))``, so the value is hash-checkable.
     """
-    und = undirected_edges(edges)
+    und = pairs(edges)
     deg = (
         und.select(F.col("x").alias("v"))
         .unionByName(und.select(F.col("y").alias("v")))

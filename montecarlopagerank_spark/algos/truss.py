@@ -30,7 +30,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from montecarlopagerank_spark.algos.components import _pairs
+from montecarlopagerank_spark.operators.propagate import pairs
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -73,7 +73,7 @@ def k_truss(
 
     obs0 = Observation("truss_init")
     p = store.materialize(
-        _pairs(edges).observe(obs0, F.count(F.lit(1)).alias("n")), "truss_pairs"
+        pairs(edges).observe(obs0, F.count(F.lit(1)).alias("n")), "truss_pairs"
     )
     prev = int(obs0.get["n"])
     rounds, converged = 0, k <= 2

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from montecarlopagerank_spark.operators.propagate import both_ways, pairs
+
 VERTEX_BUCKETS = 256
 
 
@@ -230,12 +232,7 @@ def vertex_features(edges: DataFrame) -> DataFrame:
     rows but `shuffle_hash` against the O(V) degree table — never a
     broadcast, never a wedge enumeration: Σ(deg−1) needs the degree
     table, not the Ω(Σd²) wedge join)."""
-    from montecarlopagerank_spark.algos.components import _pairs
-
-    p = _pairs(edges)
-    sym = p.select(F.col("x").alias("u"), F.col("y").alias("w")).unionByName(
-        p.select(F.col("y").alias("u"), F.col("x").alias("w"))
-    )
+    sym = both_ways(pairs(edges), "u", "w")
     deg = sym.groupBy(F.col("u").alias("v")).agg(F.count("*").alias("deg"))
     nbr = (
         sym.join(

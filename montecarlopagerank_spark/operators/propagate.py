@@ -1,10 +1,22 @@
-"""Propagation core of the link-analysis rankers.
+"""Propagation core of the link-analysis rankers, and the undirected
+simple closure of the graph modules.
 
 Power-iteration PageRank (algos/pagerank_power.py), Katz/eigenvector
 centrality (katz.py), HITS (hits.py) and SALSA (salsa.py) all run one
 sparse matrix-vector product per (half-)superstep, with different edge
 weights (SURVEY.md §2.6-2.7). This module holds that product's plan once;
 each ranker keeps its own update, normalization, metrics and store calls.
+
+The north-rule algorithms (CC, LPA, triangles, k-core, BFS, …; SURVEY.md
+§2.7) work over the *undirected simple closure* of the edge table:
+self-loops dropped, parallel and reversed edges collapsed. Its canonical
+form is the loop-free distinct pair set ``(x, y)``, ``x < y`` of Kiveris
+et al. (SoCC 2014), ``pairs``; ``both_ways`` views each pair from both
+endpoints; ``neighbours`` is the loop-invariant ``(u, x)`` step table
+(both orientations, or ``src → dst`` only for a directed traversal) a
+loop joins its frontier or labels to, and follows the cache rules below
+exactly as the edge cache does. Each algorithm keeps its own
+loop, joins, metrics and store calls.
 
 * The loop-invariant edge table is exchanged by its join key ONCE in
   setup and persisted (``edge_cache``), optionally weighted by the key's
@@ -54,13 +66,53 @@ def pin(df: DataFrame, n_parts: int, key: str) -> DataFrame:
     return df.repartition(n_parts, key).persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def edge_cache(edges: DataFrame, key: str, n_parts: int, norm: bool = False,
+def fill(df: DataFrame) -> DataFrame:
+    """Materialize the persisted ``df`` in setup, not inside step 0's job.
+    A noop write scans every partition without ``count()``'s aggregate
+    exchange, one Spark job fewer with AQE on."""
+    df.write.format("noop").mode("overwrite").save()
+    return df
+
+
+def pairs(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
+    """The canonical loop-free distinct ``(x, y)``, ``x < y``, of
+    ``edges(a, b)``: the undirected simple closure."""
+    return (
+        edges.filter(F.col(a) != F.col(b))
+        .select(F.least(a, b).alias("x"), F.greatest(a, b).alias("y"))
+        .distinct()
+    )
+
+
+def both_ways(p: DataFrame, a: str, b: str) -> DataFrame:
+    """Each pair row ``(x, y)`` of ``p`` as ``(a=x, b=y)`` and ``(a=y, b=x)``."""
+    return p.select(F.col("x").alias(a), F.col("y").alias(b)).unionByName(
+        p.select(F.col("y").alias(a), F.col("x").alias(b))
+    )
+
+
+def neighbours(edges: DataFrame, n_parts: int, directed: bool = False
+               ) -> DataFrame:
+    """``(u, x)``: the loop-free distinct steps of ``edges(src, dst)`` —
+    both orientations, or ``src → dst`` only when ``directed`` — pinned
+    by ``u`` and filled in setup."""
+    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("x"))
+    if not directed:
+        e = e.unionByName(
+            edges.select(F.col("dst").alias("u"), F.col("src").alias("x")))
+    return fill(pin(e.filter(F.col("u") != F.col("x")).distinct(), n_parts, "u"))
+
+
+def edge_cache(edges: DataFrame, key: str, norm: bool = False,
                weight: str | None = None) -> DataFrame:
-    """``edges(src, dst)`` partitioned by ``key`` and materialized. With
-    ``norm`` it carries ``w`` = 1/degree of the key (PI's 1/out_deg,
-    SALSA's 1/outdeg and 1/indeg), or ``weight``/the key's weight sum. A
+    """``edges(src, dst)`` partitioned by ``key`` into the session's
+    shuffle partitions and materialized (the degree join plans that
+    count; any other would exchange the edges twice). With ``norm`` it
+    carries ``w`` = 1/degree of the key (PI's 1/out_deg, SALSA's
+    1/outdeg and 1/indeg), or ``weight``/the key's weight sum. A
     multigraph's duplicate rows and its collapsed (src, dst,
     weight=multiplicity) form give the same ``w``."""
+    n_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     e = edges.select("src", "dst", *([weight] if weight else []))
     if norm:
         total = F.count("*") if weight is None else F.sum(weight)
@@ -68,9 +120,7 @@ def edge_cache(edges: DataFrame, key: str, n_parts: int, norm: bool = False,
         w = F.lit(1.0) if weight is None else F.col(weight)
         e = e.repartition(n_parts, key).join(deg.hint("shuffle_hash"), key).select(
             "src", "dst", (w / F.col("deg")).alias("w"))
-    cache = pin(e, n_parts, key)
-    cache.count()  # fill it in setup, not inside step 0's job
-    return cache
+    return fill(pin(e, n_parts, key))
 
 
 def vertex_set(by_src: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
@@ -93,17 +143,14 @@ class Propagation:
     in ``keys`` (``edges[key]``; "src" comes first, the vertex table
     reads it) and the v-partitioned vertex table
     ``verts(v, dang[, is_src])``, where ``is_src`` flags the ``sources``
-    ids (personalized PageRank). ``n_parts`` defaults to the session's
-    shuffle partitions."""
+    ids (personalized PageRank)."""
 
     def __init__(self, edges: DataFrame, vertices: DataFrame | None,
-                 n_parts: int | None, keys: tuple[str, ...] = ("src",),
-                 norm: bool = False, weight: str | None = None,
-                 sources: DataFrame | None = None):
-        self.n_parts = n_parts = int(n_parts or edges.sparkSession.conf.get(
+                 keys: tuple[str, ...] = ("src",), norm: bool = False,
+                 weight: str | None = None, sources: DataFrame | None = None):
+        self.n_parts = n_parts = int(edges.sparkSession.conf.get(
             "spark.sql.shuffle.partitions"))
-        self.edges = {k: edge_cache(edges, k, n_parts, norm, weight)
-                      for k in keys}
+        self.edges = {k: edge_cache(edges, k, norm, weight) for k in keys}
         verts = vertex_set(self.edges["src"], vertices)
         if sources is not None:
             s = sources.select("v").distinct().withColumn("is_src", F.lit(True))

@@ -1,16 +1,21 @@
-"""The link-analysis rankers (power-iteration PageRank, Katz/eigenvector,
-HITS, SALSA) share one propagation core, ``operators/propagate.py``.
-These tests pin what that core must keep: the Spark jobs of a superstep,
-PI's one state exchange per step, and the empty-graph contract."""
+"""``operators/propagate.py`` holds the link-analysis rankers' propagation
+core (power-iteration PageRank, Katz/eigenvector, HITS, SALSA) and the
+undirected simple closure the other graph modules share. These tests pin
+what it must keep: the Spark jobs of a superstep (rankers and LPA), PI's
+one state exchange per step, the empty-graph contract, and the closure's
+pair set, two-way view and pinned neighbour cache."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.storagelevel import StorageLevel
 
 from montecarlopagerank_spark.algos.hits import hits
 from montecarlopagerank_spark.algos.katz import eigenvector_centrality, katz
+from montecarlopagerank_spark.algos.labelprop import label_propagation
 from montecarlopagerank_spark.algos.pagerank_power import pagerank_power
 from montecarlopagerank_spark.algos.salsa import salsa
+from montecarlopagerank_spark.operators.propagate import both_ways, neighbours, pairs
 from montecarlopagerank_spark.operators.state import StateStore
 
 RANKERS = {
@@ -21,11 +26,18 @@ RANKERS = {
     "salsa": lambda s, e, k: salsa(s, e, iters=k),
 }
 
+STEPPED = {
+    **RANKERS,
+    "label_propagation": lambda s, e, k: label_propagation(s, e, max_iters=k),
+}
+
 # Spark jobs per superstep (a HITS/SALSA iteration is two half-steps),
 # (AQE on, AQE off): 2 adaptive query-stage jobs + the write per step or
-# half-step with AQE on, the write alone with it off
+# half-step with AQE on, the write alone with it off. LPA's (5, 2) are
+# measured; it never converges on the path below, so every step runs.
 JOBS_PER_STEP = {
     "pagerank_power": (3, 1), "katz": (3, 1), "hits": (6, 2), "salsa": (6, 2),
+    "label_propagation": (5, 2),
 }
 
 
@@ -56,7 +68,7 @@ def test_jobs_per_superstep(spark, path41, algo, aqe):
         group = f"propagate-{algo}-{aqe}-{steps}"
         sc.setJobGroup(group, group)
         try:
-            RANKERS[algo](spark, path41, steps)
+            STEPPED[algo](spark, path41, steps)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
@@ -95,3 +107,40 @@ def test_empty_graph(spark, name):
     assert out.count() == 0
     assert out.schema.simpleString() == one.schema.simpleString()
     assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == before
+
+
+# a multigraph: parallel and reversed duplicates, self-loops, and vertex 3
+# with nothing but a self-loop; 10 sorts before 2 as a string id
+MULTI = [(0, 1), (1, 0), (0, 1), (1, 10), (10, 10), (3, 3), (10, 0), (4, 1),
+         (1, 4), (2, 4), (4, 2), (2, 2)]
+
+
+@pytest.mark.parametrize("ids", ["long", "string"])
+def test_closure(spark, ids):
+    """``pairs``, ``both_ways`` and ``neighbours`` against Python sets, on
+    vid (long) and ``kind#key`` (string) ids."""
+    key = (lambda i: i) if ids == "long" else (lambda i: f"turn#{i}")
+    rows = [(key(a), key(b)) for a, b in MULTI]
+    e = spark.createDataFrame(rows, f"src {ids}, dst {ids}")
+    und = {(min(a, b), max(a, b)) for a, b in rows if a != b}
+    two_way = und | {(b, a) for a, b in und}
+    p = pairs(e)
+    assert sorted(tuple(r) for r in p.collect()) == sorted(und)
+    assert sorted(tuple(r) for r in both_ways(p, "a", "b").collect()) == sorted(
+        two_way)
+    for directed, want in ((False, two_way),
+                           (True, {(a, b) for a, b in rows if a != b})):
+        n = neighbours(e, 3, directed=directed)
+        try:
+            assert n.columns == ["u", "x"]
+            assert sorted(tuple(r) for r in n.collect()) == sorted(want)
+            assert n.storageLevel == StorageLevel.MEMORY_AND_DISK
+            # pinned by u: a later groupBy("u") adds no exchange above
+            # the cached scan
+            deg = n.groupBy("u").count()
+            deg.collect()
+            plan = deg._jdf.queryExecution().executedPlan().toString()
+            above, _, _ = plan.partition("InMemoryTableScan")
+            assert above != plan and "Exchange" not in above
+        finally:
+            n.unpersist()
