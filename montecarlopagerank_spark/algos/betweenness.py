@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from montecarlopagerank_spark.operators.propagate import neighbours
+from montecarlopagerank_spark.operators.propagate import fill, hash_by, neighbours
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -53,7 +53,6 @@ def landmark_betweenness(
     landmarks: DataFrame,
     max_hops: int = 6,
     directed: bool = False,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` + ``landmarks(v)`` → (``bc(v, btw)``, info):
     unnormalized landmark-sampled betweenness (Σ over landmarks of the
@@ -63,19 +62,20 @@ def landmark_betweenness(
     every vertex reachable from a landmark; landmark rows themselves
     are excluded (source-endpoint convention)."""
     t0 = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    e = neighbours(edges, n_parts, directed)  # operators/propagate.py
+    e = neighbours(edges, directed)  # operators/propagate.py
     # reversed orientation for the backward phase (w → its predecessors)
     er = e.select(F.col("x").alias("u"), F.col("u").alias("x"))
 
     store = StateStore(spark)
     # visited state: (l, v, d, sigma)
     visited = store.materialize(
-        landmarks.select(F.col("v").alias("l"))
-        .distinct()
-        .select("l", F.col("l").alias("v"), F.lit(0).alias("d"),
-                F.lit(1.0).alias("sigma"))
-        .repartition(n_parts, "v"),
+        hash_by(
+            landmarks.select(F.col("v").alias("l"))
+            .distinct()
+            .select("l", F.col("l").alias("v"), F.lit(0).alias("d"),
+                    F.lit(1.0).alias("sigma")),
+            "v",
+        ),
         "btw_visited",
     )
     frontier = visited
@@ -84,8 +84,7 @@ def landmark_betweenness(
         obs = Observation(f"btw_fwd_{h}")
         msgs = (
             e.join(
-                frontier.withColumnRenamed("v", "u")
-                .repartition(n_parts, "u")
+                hash_by(frontier.withColumnRenamed("v", "u"), "u")
                 .hint("shuffle_hash"),
                 "u",
             )
@@ -108,8 +107,7 @@ def landmark_betweenness(
         visited = store.materialize(
             visited.unionByName(frontier), "btw_visited"
         )
-    visited = visited.persist(StorageLevel.MEMORY_AND_DISK)
-    visited.count()
+    visited = fill(visited.persist(StorageLevel.MEMORY_AND_DISK))
 
     # backward: delta keyed (l, v), deepest band first
     delta = visited.select("l", "v", "d", "sigma", F.lit(0.0).alias("delta"))
@@ -122,8 +120,7 @@ def landmark_betweenness(
         # predecessors of w: reversed edges from w, matched to depth h-1
         contrib = (
             er.join(
-                band_w.withColumnRenamed("w", "u")
-                .repartition(n_parts, "u")
+                hash_by(band_w.withColumnRenamed("w", "u"), "u")
                 .hint("shuffle_hash"),
                 "u",
             )

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from montecarlopagerank_spark.operators.propagate import neighbours
+from montecarlopagerank_spark.operators.propagate import hash_by, neighbours
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -36,7 +36,6 @@ def bfs_hops(
     sources: DataFrame,
     max_hops: int = 6,
     directed: bool = False,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` + ``sources(v)`` → (``dist(v, hops:int)``, info)
     for every vertex reachable within ``max_hops``; sources get hops 0.
@@ -45,7 +44,7 @@ def bfs_hops(
     t0 = time.time()
     visited, rounds = _landmark_distances(
         spark, edges, sources.select(F.lit(0).alias("l"), "v"), max_hops,
-        directed, n_partitions
+        directed
     )
     return _done(visited.select("v", "hops"), rounds, max_hops, t0)
 
@@ -56,7 +55,6 @@ def _landmark_distances(
     seeds: DataFrame,
     max_hops: int,
     directed: bool,
-    n_partitions: int | None,
 ) -> tuple[DataFrame, int]:
     """Shared BFS loop: exact per-(landmark, vertex) hop distances
     ``(l, v, hops)`` within ``max_hops`` from the ``seeds(l, v)`` at hop
@@ -65,12 +63,11 @@ def _landmark_distances(
     rounds as a single BFS, not |landmarks| of them. Returns (distances,
     rounds); the distance table is NOT persisted (callers aggregate it
     once)."""
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    e = neighbours(edges, n_parts, directed)
+    e = neighbours(edges, directed)
 
     store = StateStore(spark)
     frontier = store.materialize(
-        seeds.distinct().repartition(n_parts, "v"), "bfs_frontier"
+        hash_by(seeds.distinct(), "v"), "bfs_frontier"
     )
     visited = store.materialize(
         frontier.select("l", "v", F.lit(0).alias("hops")), "bfs_dist"
@@ -80,7 +77,7 @@ def _landmark_distances(
         obs = Observation(f"bfs_round_{hop}")
         nxt = (
             e.join(
-                frontier.repartition(n_parts, "v").hint("shuffle_hash"),
+                hash_by(frontier, "v").hint("shuffle_hash"),
                 e["u"] == F.col("v"),
             )
             .select("l", F.col("x").alias("v"))
@@ -118,7 +115,6 @@ def harmonic_centrality(
     landmarks: DataFrame,
     max_hops: int = 6,
     directed: bool = False,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """Landmark harmonic centrality (Boldi & Vigna, "Axioms for
     Centrality", Internet Math 2014): ``h(v) = Σ_l 1/d(v,l)`` over the
@@ -131,7 +127,7 @@ def harmonic_centrality(
     t0 = time.time()
     visited, rounds = _landmark_distances(
         spark, edges, landmarks.select(F.col("v").alias("l"), "v"), max_hops,
-        directed, n_partitions
+        directed
     )
     out = (
         visited.filter(F.col("hops") > 0)  # d(l,l)=0 excluded (l ≠ v terms)
@@ -147,7 +143,6 @@ def closeness_centrality(
     landmarks: DataFrame,
     max_hops: int = 6,
     directed: bool = False,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """Landmark closeness centrality: ``c(v) = r_v / Σ_l d(v, l)`` over
     the landmarks v reaches within ``max_hops`` (r_v = how many) — the
@@ -169,7 +164,7 @@ def closeness_centrality(
     t0 = time.time()
     visited, rounds = _landmark_distances(
         spark, edges, landmarks.select(F.col("v").alias("l"), "v"), max_hops,
-        directed, n_partitions
+        directed
     )
     out = (
         visited.filter(F.col("hops") > 0)

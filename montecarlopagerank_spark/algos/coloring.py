@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from montecarlopagerank_spark.algos.mis import _pri
-from montecarlopagerank_spark.operators.propagate import both_ways, pairs
+from montecarlopagerank_spark.operators.propagate import both_ways, pairs, pin
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -57,7 +57,6 @@ def greedy_coloring(
     spark: SparkSession,
     edges: DataFrame,
     max_rounds: int = 64,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` → (``colors(v, color)``, info): a proper
     greedy colouring of the undirected simple closure (self-loops
@@ -65,7 +64,6 @@ def greedy_coloring(
     ``info['converged']`` is True iff every vertex fired within
     ``max_rounds``; ``info['n_colors']`` is the palette size."""
     t0 = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     store = StateStore(spark)
 
     sym_raw = both_ways(pairs(edges), "u", "w")
@@ -75,12 +73,7 @@ def greedy_coloring(
     # the other key EVERY round. 2× edge memory for zero per-round O(E)
     # exchanges is the standard space-time trade (the groupBy(u) after
     # the anti-join ships only partial-aggregated maxima, O(V·parts)).
-    sym = (
-        sym_raw.repartition(n_parts, "u").persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym_w = (
-        sym_raw.repartition(n_parts, "w").persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    sym, sym_w = pin(sym_raw, "u"), pin(sym_raw, "w")
     obs_v = Observation("color_nverts")
     verts = store.materialize(
         edges.select(F.col("src").alias("v"))

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from montecarlopagerank_spark.operators.propagate import both_ways, pairs
+from montecarlopagerank_spark.operators.propagate import both_ways, pairs, pin
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -62,7 +62,6 @@ def core_numbers(
     spark: SparkSession,
     edges: DataFrame,
     max_rounds: int = 100,
-    n_partitions: int | None = None,
     fuse_rounds: int = 2,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` → (``cores(v, coreness:long)``, info) over the
@@ -73,7 +72,6 @@ def core_numbers(
     materialization; any value ≥ 1 yields identical results (module
     docstring — the iteration is a monotone fixpoint)."""
     t0 = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     store = StateStore(spark)
 
     verts = (
@@ -86,11 +84,7 @@ def core_numbers(
     # hashpartitioning(w) satisfies the join requirement); only the O(V)
     # h-table moves per round. The one-time init groupBy(u) pays a single
     # O(E) exchange instead.
-    sym = (
-        both_ways(pairs(edges), "u", "w")
-        .repartition(n_parts, "w")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    sym = pin(both_ways(pairs(edges), "u", "w"), "w")
 
     obs0 = Observation("coren_init")
     h = store.materialize(

@@ -48,7 +48,6 @@ def neighborhood_function(
     lgk: int = 12,
     directed: bool = False,
     rel_tol: float = 0.0,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` → (``nf(h, npairs)``, info): npairs ≈ number
     of ordered vertex pairs (u, v) with d(u, v) ≤ h (h = 0 counts the
@@ -57,8 +56,7 @@ def neighborhood_function(
     ``effective_diameter_90`` — the smallest h whose npairs reaches 90%
     of the final value, linearly interpolated (Boldi-Vigna convention)."""
     t0 = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    e = neighbours(edges, n_parts, directed)  # operators/propagate.py
+    e = neighbours(edges, directed)  # operators/propagate.py
 
     verts = (
         e.select(F.col("u").alias("v"))

@@ -42,7 +42,6 @@ def k_core(
     edges: DataFrame,
     k: int = 2,
     max_rounds: int = 100,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` → (``core(v, deg)``, info): the vertices of the
     k-core of the undirected simple closure, with each vertex's degree
@@ -52,7 +51,6 @@ def k_core(
     if k < 0:
         raise ValueError(f"k must be ≥ 0, got {k}")
     t0 = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     store = StateStore(spark)
 
     obs0 = Observation("kcore_init")

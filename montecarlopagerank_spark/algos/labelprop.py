@@ -41,7 +41,7 @@ def label_propagation(
     identical final labels, since a synchronous LPA step is a pure
     function of the committed label table."""
     # loop-invariant (u, x) neighbour cache (operators/propagate.py)
-    sym = neighbours(edges, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    sym = neighbours(edges)
     verts = (
         vertices.select(F.col("vid").alias("v"))
         if vertices is not None

@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from montecarlopagerank_spark.operators.propagate import hash_by, pin
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -68,7 +69,6 @@ def _local_moves(
     two_m: int,
     labels: DataFrame,
     rounds: int,
-    n_parts: int,
 ) -> tuple[DataFrame, int]:
     """Run ``rounds`` synchronous gated local-move rounds; returns the
     final labels and the total number of moves."""
@@ -142,7 +142,7 @@ def _local_moves(
             .alias("moved"),
         ).observe(obs, F.sum("moved").alias("mv"))
         labels = store.materialize(
-            nxt.select("v", "c").repartition(n_parts, "v"), "louvain_lab"
+            hash_by(nxt.select("v", "c"), "v"), "louvain_lab"
         )
         total_moves += int(obs.get["mv"] or 0)
     return labels, total_moves
@@ -153,7 +153,6 @@ def louvain(
     edges: DataFrame,
     rounds_per_level: int = 6,
     max_levels: int = 3,
-    n_partitions: int | None = None,
     weight_col: str | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` → (``assign(v, community)``, info).
@@ -174,7 +173,6 @@ def louvain(
     for fractional weights, pre-scale to a fixed-point long.
     """
     t0 = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     store = StateStore(spark)
 
     base = edges.filter(F.col("src") != F.col("dst")).select(
@@ -208,7 +206,7 @@ def louvain(
         # restricting k_{v,C} scoring to the round's movers — identical
         # output, but A/B timings were noise-dominated with a 2×
         # outlier, so the simpler full-score round is kept.)
-        sym_p = sym.repartition(n_parts, "u").persist(StorageLevel.MEMORY_AND_DISK)
+        sym_p = pin(sym, "u")
         kdeg = sym_p.groupBy(F.col("u").alias("v")).agg(F.sum("wt").alias("k"))
         if selfw is not None:
             kdeg = (
@@ -221,15 +219,14 @@ def louvain(
                     ).alias("k"),
                 )
             )
-        deg = kdeg.repartition(n_parts, "v").persist(StorageLevel.MEMORY_AND_DISK)
+        deg = pin(kdeg, "v")
         two_m = deg.agg(F.sum("k")).collect()[0][0]
         if not two_m:
             deg.unpersist(), sym_p.unpersist()
             break
         labels0 = deg.select("v", F.col("v").alias("c"))
         labels, moves = _local_moves(
-            spark, store, sym_p, deg, int(two_m), labels0, rounds_per_level,
-            n_parts,
+            spark, store, sym_p, deg, int(two_m), labels0, rounds_per_level
         )
         info["moves"].append(moves)
         info["levels"] = level + 1

@@ -56,7 +56,6 @@ def maximal_matching(
     spark: SparkSession,
     edges: DataFrame,
     max_rounds: int = 60,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` → (``matching(x, y, round)``, info): a maximal
     matching of the undirected simple closure (self-loops dropped),

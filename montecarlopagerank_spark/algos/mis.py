@@ -52,7 +52,6 @@ def luby_mis(
     spark: SparkSession,
     edges: DataFrame,
     max_rounds: int = 40,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` → (``mis(v, round)``, info): a maximal
     independent set of the undirected simple closure (self-loops
@@ -60,7 +59,6 @@ def luby_mis(
     (only self-loop edges) are always in the MIS. ``info['converged']``
     is True iff every vertex was decided within ``max_rounds``."""
     t0 = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     store = StateStore(spark)
 
     # all vertices (incl. self-loop-only ones, which pairs drops)

@@ -5,7 +5,7 @@ distribution depends on the previous vertex. For a walk at ``cur``
 having arrived from ``prev``, candidate ``c`` gets weight
 
 - 1/p  if c == prev            (return)
-- 1    if edge(prev, c) exists (BFS-ish stay-local)
+- 1    if prev and c are adjacent (BFS-ish stay-local)
 - 1/q  otherwise               (DFS-ish explore)
 
 p < 1 biases homophily/backtracking, q < 1 biases structural
@@ -18,9 +18,13 @@ Spark-first mechanics (and where the cost honestly goes):
   node2vec's convention (weights come from p/q, not multiplicity);
 - per subsequent step, candidates are ``posexplode``d (O(Σ deg(cur))
   rows across live walks — node2vec's intrinsic per-step cost) and the
-  (prev, c) edge-existence test is a LEFT JOIN against the canonical
-  pair set keyed (lo, hi) — a real partitioned join, never an
-  ``array_contains`` scan that would go quadratic on hub degrees;
+  (prev, c) adjacency test is a LEFT JOIN against the canonical pair
+  set ``pairs(edges)`` keyed (x, y) — a real partitioned join, never an
+  ``array_contains`` scan that would go quadratic on hub degrees.
+  Adjacent means linked in EITHER direction, in both modes: a directed
+  walk steps along ``src → dst`` only, but whether a candidate "stays
+  local" asks whether prev and c are linked, not which way, and never
+  depends on vertex labels;
 - the weighted pick is two window functions over the exploded rows
   (running + total weight per walk) selecting the unique row where the
   cumulative weight first exceeds u·total, with u ∈ [0,1) a pure
@@ -42,7 +46,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from montecarlopagerank_spark.operators.propagate import neighbours, pin
+from montecarlopagerank_spark.operators.propagate import (
+    fill,
+    hash_by,
+    neighbours,
+    pairs,
+    pin,
+)
 from montecarlopagerank_spark.operators.state import StateStore
 
 _U_MOD = 1 << 30  # u = pmod(xxhash64, 2^30) / 2^30 — 9 decimal digits of
@@ -59,47 +69,41 @@ def node2vec_walks(
     q: float = 1.0,
     directed: bool = False,
     seed: int = 1234,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` + ``starts(v)`` → (``walks(start, rep, step,
     v)``, info) with node2vec (p, q) second-order bias. Dead ends stop
     the walk early; self-loops are dropped; the simple-graph closure is
-    used (parallel edges don't multiply weight — p/q is the bias)."""
+    used (parallel edges don't multiply weight — p/q is the bias), and
+    prev and c are adjacent if linked in either direction."""
     if p <= 0 or q <= 0:
         raise ValueError(f"p and q must be positive, got p={p} q={q}")
     t0 = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = neighbours(edges, n_parts, directed)  # operators/propagate.py
-    nbrs = pin(
+    sym = neighbours(edges, directed)  # operators/propagate.py
+    nbrs = fill(pin(
         sym.groupBy("u")
         .agg(F.sort_array(F.collect_list("x")).alias("arr"))
         .withColumn("deg", F.size("arr").cast("long")),
-        n_parts, "u",
-    )
-    nbrs.count()
-    # canonical pair set for the (prev, candidate) existence probe
-    pairs = (
-        sym.filter(F.col("u") < F.col("x"))
-        .select(F.col("u").alias("lo"), F.col("x").alias("hi"))
-        .repartition(n_parts, "lo", "hi")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    pairs.count()
+        "u",
+    ))
+    # (prev, candidate) adjacency probe, either direction (module docstring)
+    probe = fill(pin(pairs(edges), "x", "y"))
 
     store = StateStore(spark)
     reps = spark.range(walks_per_vertex).select(F.col("id").alias("rep"))
     state = store.materialize(
-        starts.select(F.col("v").alias("start"))
-        .distinct()
-        .crossJoin(reps)
-        .select(
-            "start", "rep",
-            # typed null: prev must carry the vertex type (long vids or
-            # string keys both work)
-            F.lit(None).cast(starts.schema["v"].dataType).alias("prev"),
-            F.col("start").alias("v"),
-        )
-        .repartition(n_parts, "v"),
+        hash_by(
+            starts.select(F.col("v").alias("start"))
+            .distinct()
+            .crossJoin(reps)
+            .select(
+                "start", "rep",
+                # typed null: prev must carry the vertex type (long vids
+                # or string keys both work)
+                F.lit(None).cast(starts.schema["v"].dataType).alias("prev"),
+                F.col("start").alias("v"),
+            ),
+            "v",
+        ),
         "n2v_step_0",
     )
     out_parts = [state.select("start", "rep", F.lit(0).alias("step"), "v")]
@@ -128,18 +132,18 @@ def node2vec_walks(
             )
             flagged = (
                 cand.join(
-                    pairs,
-                    (F.least("prev", "c") == F.col("lo"))
-                    & (F.greatest("prev", "c") == F.col("hi")),
+                    probe,
+                    (F.least("prev", "c") == F.col("x"))
+                    & (F.greatest("prev", "c") == F.col("y")),
                     "left",
                 )
                 .withColumn(
                     "w",
                     F.when(F.col("c") == F.col("prev"), F.lit(1.0 / p))
-                    .when(F.col("lo").isNotNull(), F.lit(1.0))
+                    .when(F.col("x").isNotNull(), F.lit(1.0))
                     .otherwise(F.lit(1.0 / q)),
                 )
-                .drop("lo", "hi")
+                .drop("x", "y")
             )
             wk = Window.partitionBy("start", "rep")
             cum = F.sum("w").over(wk.orderBy("i"))
@@ -163,9 +167,7 @@ def node2vec_walks(
                     F.col("c").alias("v"),
                 )
             )
-        state = store.materialize(
-            nxt.repartition(n_parts, "v"), f"n2v_step_{step}"
-        )
+        state = store.materialize(hash_by(nxt, "v"), f"n2v_step_{step}")
         out_parts.append(
             state.select("start", "rep", F.lit(step).alias("step"), "v")
         )
@@ -177,7 +179,7 @@ def node2vec_walks(
         walks = walks.unionByName(part)
     walks = walks.persist(StorageLevel.MEMORY_AND_DISK)
     n_rows = walks.count()
-    for c in (sym, nbrs, pairs):
+    for c in (sym, nbrs, probe):
         c.unpersist()
     return walks, {
         "steps": emitted,

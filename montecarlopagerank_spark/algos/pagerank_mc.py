@@ -135,6 +135,7 @@ from montecarlopagerank_spark.operators.adjacency import (
     REPLICA_BITS,
     plan_walk_blocks,
 )
+from montecarlopagerank_spark.operators.propagate import hash_by
 # both store classes stay bound here for perfbench/tracing.py's wrappers
 from montecarlopagerank_spark.operators.checkpoint import (  # noqa: F401
     CheckpointManager,
@@ -504,7 +505,6 @@ def pagerank_monte_carlo(
     root; the default mkdtemp scratch is reclaimed at interpreter exit."""
     t_setup = time.time()
     K = max(walks_per_vertex, 1)  # MonteCarloPageRank.scala:101
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # ONE superstep store (state.py; durable with checkpoint_dir): its
     # scratch root also holds the CSR blocks the pack job writes (module
     # docstring, item 1), so the graph never re-crosses the JVM→Arrow
@@ -530,7 +530,7 @@ def pagerank_monte_carlo(
     # edges_per_block=None → the planner derives the ≈2-blocks-per-slot
     # default from the degree aggregate it computes anyway (no extra pass)
     blocks_assign, plan_meta = plan_walk_blocks(
-        edges, csr_path, edges_per_block=edges_per_block, n_partitions=n_parts,
+        edges, csr_path, edges_per_block=edges_per_block,
     )
     if checkpoint_dir and edges_per_block is None:
         store.run_config["edges_per_block"] = plan_meta["edges_per_block"]
@@ -581,7 +581,7 @@ def pagerank_monte_carlo(
         canonicalizes cleanly; the one hash(block_id) exchange the kernel
         inserts above it is itself reused across all consumers."""
         return (
-            r.repartition(n_parts, "block_id")
+            hash_by(r, "block_id")
             .groupBy("block_id", "rkey")
             .agg(F.sum("c").alias("c"))
         )
@@ -662,9 +662,10 @@ def pagerank_monte_carlo(
                     _walk_kernel(csr_path, eps, seed, s, hubs),
                     schema="rkey long, cnt long",
                 )
-                exch = moved.select(
-                    route, "rkey", F.col("cnt").alias("c")
-                ).repartition(n_parts, "block_id")
+                exch = hash_by(
+                    moved.select(route, "rkey", F.col("cnt").alias("c")),
+                    "block_id",
+                )
                 obs = Observation(f"mc_step_{s}")
                 obs_by_step[s] = obs
                 branches.append(

@@ -41,6 +41,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from montecarlopagerank_spark.operators.propagate import hash_by
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -57,14 +58,12 @@ def strongly_connected_components(
     vertices: DataFrame | None = None,
     max_outer: int = 50,
     max_inner: int = 200,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` → (``scc(v:long, scc:long)``, info). ``scc`` is
     the maximum vid of the vertex's strongly connected component, so
     labels are deterministic and parallelism-invariant. Isolated vertices
     from ``vertices`` get their own id."""
     t0 = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     store = StateStore(spark)
 
     e0 = (
@@ -74,15 +73,17 @@ def strongly_connected_components(
     )
     live, lm = _one_job(
         store,
-        e0.repartition(n_parts, "src"),
+        hash_by(e0, "src"),
         "scc_edges",
         F.count(F.lit(1)).alias("ne"),
     )
     remaining = store.materialize(
-        live.select(F.col("src").alias("v"))
-        .unionByName(live.select(F.col("dst").alias("v")))
-        .distinct()
-        .repartition(n_parts, "v"),
+        hash_by(
+            live.select(F.col("src").alias("v"))
+            .unionByName(live.select(F.col("dst").alias("v")))
+            .distinct(),
+            "v",
+        ),
         "scc_verts",
     )
     assigned: list[DataFrame] = []
@@ -96,10 +97,10 @@ def strongly_connected_components(
             break
         # --- 1. TRIM (vertices need BOTH a live in- and out-edge) ---
         while True:
-            both = (
+            both = hash_by(
                 live.select(F.col("src").alias("v"))
-                .intersect(live.select(F.col("dst").alias("v")))
-                .repartition(n_parts, "v")
+                .intersect(live.select(F.col("dst").alias("v"))),
+                "v",
             )
             keep = store.materialize(both, "scc_keep")
             nl, lmeta = _one_job(
@@ -135,7 +136,7 @@ def strongly_connected_components(
             )
         )
         remaining = store.materialize(
-            remaining.join(core, "v", "left_semi").repartition(n_parts, "v"),
+            hash_by(remaining.join(core, "v", "left_semi"), "v"),
             "scc_verts",
         )
         if int(lm["ne"]) == 0:
@@ -215,9 +216,7 @@ def strongly_connected_components(
         )
         # --- 4. shrink the live subgraph and go again ---
         remaining = store.materialize(
-            remaining.join(visited.select("v"), "v", "left_anti").repartition(
-                n_parts, "v"
-            ),
+            hash_by(remaining.join(visited.select("v"), "v", "left_anti"), "v"),
             "scc_verts",
         )
         live, lm = _one_job(
@@ -247,7 +246,7 @@ def strongly_connected_components(
             .join(out, "v", "left")
             .select("v", F.coalesce("scc", F.col("v")).alias("scc"))
         )
-    out = store.materialize(out.repartition(n_parts, "v"), "scc_final")
+    out = store.materialize(hash_by(out, "v"), "scc_final")
     return out, {
         "outer_rounds": outer,
         "trim_rounds": trim_rounds,

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from montecarlopagerank_spark.operators.propagate import fill, hash_by, pin
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -46,7 +47,6 @@ def sssp(
     weight_col: str = "w",
     max_rounds: int = 64,
     directed: bool = False,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst, <weight_col>)`` + ``sources(v)`` →
     (``dist(v, d)``, info): min total weight from the nearest source,
@@ -55,7 +55,6 @@ def sssp(
     ``info['converged']`` is True iff the fixpoint was reached within
     ``max_rounds``."""
     t0 = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     base = edges.select(
         F.col("src").alias("u"), F.col("dst").alias("x"),
         F.col(weight_col).alias("wt"),
@@ -67,21 +66,19 @@ def sssp(
                 F.col(weight_col).alias("wt"),
             )
         )
-    e = (
+    e = fill(pin(  # pay the one edge exchange in setup
         base.filter(F.col("u") != F.col("x"))
         .groupBy("u", "x")
-        .agg(F.min("wt").alias("wt"))
-        .repartition(n_parts, "u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e.count()  # pay the one edge exchange in setup
+        .agg(F.min("wt").alias("wt")),
+        "u",
+    ))
 
     store = StateStore(spark)
     dist = store.materialize(
-        sources.select("v")
-        .distinct()
-        .withColumn("d", F.lit(0).cast("long"))
-        .repartition(n_parts, "v"),
+        hash_by(
+            sources.select("v").distinct().withColumn("d", F.lit(0).cast("long")),
+            "v",
+        ),
         "sssp_dist",
     )
     frontier = dist
@@ -91,8 +88,7 @@ def sssp(
         obs = Observation(f"sssp_round_{r}")
         cand = (
             e.join(
-                frontier.withColumnRenamed("v", "u")
-                .repartition(n_parts, "u")
+                hash_by(frontier.withColumnRenamed("v", "u"), "u")
                 .hint("shuffle_hash"),
                 "u",
             )

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from montecarlopagerank_spark.operators.propagate import fill, pin
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -47,7 +48,6 @@ def earliest_arrival(
     tedges: DataFrame,
     sources: DataFrame,
     max_hops: int = 8,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``tedges(src, dst, t)`` (int64 µs) + ``sources(v, t0)`` →
     (``reach(v, ea)``, info): earliest arrival time per vertex reachable
@@ -56,15 +56,10 @@ def earliest_arrival(
     collapse to the min t0). ``info['converged']`` is True iff a round
     improved nothing before the cap (the uncapped fixpoint)."""
     t0_ = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     store = StateStore(spark)
 
-    e = (
-        tedges.select("src", "dst", F.col("t").cast("long").alias("t"))
-        .repartition(n_parts, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e.count()
+    e = fill(pin(
+        tedges.select("src", "dst", F.col("t").cast("long").alias("t")), "src"))
     chk = [
         F.count(F.lit(1)).alias("n"),
         # ANSI-safe set checksum (sum(µs) would overflow int64): the

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from montecarlopagerank_spark.operators.propagate import fill, pin
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -55,7 +56,6 @@ def kahn_peel(
     edges: DataFrame,
     max_rounds: int | None = None,
     rounds_per_job: int = 4,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` → (``layers(v, layer)``, info) over the directed
     simple graph (parallel edges deduped, self-loops kept — a self-loop
@@ -66,16 +66,9 @@ def kahn_peel(
     realized (max assigned layer + 1); ``info['n_unresolved']`` counts
     the ``-1`` rows."""
     t0 = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     store = StateStore(spark)
 
-    d = (
-        edges.select("src", "dst")
-        .distinct()
-        .repartition(n_parts, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    d.count()
+    d = fill(pin(edges.select("src", "dst").distinct(), "src"))
     verts = store.materialize(
         d.select(F.col("src").alias("v"))
         .unionByName(d.select(F.col("dst").alias("v")))

@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from montecarlopagerank_spark.operators.propagate import fill, hash_by, pin
 from montecarlopagerank_spark.operators.state import StateStore
 
 # LCG-ish mixing constants (public-domain folklore multipliers); the
@@ -79,7 +80,6 @@ def random_walks(
     directed: bool = False,
     chooser: str = "xxhash",
     seed: int = 1234,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` + ``starts(v)`` → (``walks(start, rep, step,
     v)``, info): ``walks_per_vertex`` uniform random walks of up to
@@ -90,7 +90,6 @@ def random_walks(
     if chooser not in ("xxhash", "lcg"):
         raise ValueError(f"unknown chooser {chooser!r}")
     t0 = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     base = edges.select(F.col("src").alias("u"), F.col("dst").alias("x"))
     if not directed:
         base = base.unionByName(
@@ -98,15 +97,13 @@ def random_walks(
         )
     # sorted multiset neighbor list: index i is the same vertex in Spark
     # and in the DuckDB twin's list(x ORDER BY x), dupes included
-    nbrs = (
+    nbrs = fill(pin(  # pay the one adjacency exchange in setup
         base.filter(F.col("u") != F.col("x"))
         .groupBy("u")
         .agg(F.sort_array(F.collect_list("x")).alias("arr"))
-        .withColumn("deg", F.size("arr").cast("long"))
-        .repartition(n_parts, "u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    nbrs.count()  # pay the one adjacency exchange in setup
+        .withColumn("deg", F.size("arr").cast("long")),
+        "u",
+    ))
 
     store = StateStore(spark)
     reps = spark.range(walks_per_vertex).select(F.col("id").alias("rep"))
@@ -114,11 +111,13 @@ def random_walks(
     # part of the output corpus, so its parquet slot must outlive the
     # loop (ping-pong would overwrite step i's directory at step i+2)
     state = store.materialize(
-        starts.select(F.col("v").alias("start"))
-        .distinct()
-        .crossJoin(reps)
-        .withColumn("v", F.col("start"))
-        .repartition(n_parts, "v"),
+        hash_by(
+            starts.select(F.col("v").alias("start"))
+            .distinct()
+            .crossJoin(reps)
+            .withColumn("v", F.col("start")),
+            "v",
+        ),
         "walk_step_0",
     )
     out_parts = [state.select("start", "rep", F.lit(0).alias("step"), "v")]
@@ -135,9 +134,7 @@ def random_walks(
         nxt = joined.select(
             "start", "rep", F.element_at("arr", idx).alias("v")
         )
-        state = store.materialize(
-            nxt.repartition(n_parts, "v"), f"walk_step_{step}"
-        )
+        state = store.materialize(hash_by(nxt, "v"), f"walk_step_{step}")
         out_parts.append(
             state.select("start", "rep", F.lit(step).alias("step"), "v")
         )

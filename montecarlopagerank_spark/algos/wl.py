@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from montecarlopagerank_spark.operators.propagate import fill, pin
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -56,7 +57,6 @@ def wl_colors(
     spark: SparkSession,
     edges: DataFrame,
     rounds: int = 3,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` → (``colors(v, color)``, info): 1-WL colors
     after ``rounds`` refinements of the directed simple graph (parallel
@@ -66,16 +66,9 @@ def wl_colors(
     final distinct-color count, ``info['stable']`` True iff the
     partition stopped splitting before the last round."""
     t0 = time.time()
-    n_parts = int(n_partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     store = StateStore(spark)
 
-    d = (
-        edges.select("src", "dst")
-        .distinct()
-        .repartition(n_parts, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    d.count()
+    d = fill(pin(edges.select("src", "dst").distinct(), "src"))
     verts = store.materialize(
         d.select(F.col("src").alias("v"))
         .unionByName(d.select(F.col("dst").alias("v")))

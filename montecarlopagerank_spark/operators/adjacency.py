@@ -36,11 +36,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from montecarlopagerank_spark.operators.propagate import pin
+
 # replica id lives in the low bits of the CSR row key: rkey = v << 20 | r.
 # 2^20 replicas bounds a single hub at edges_per_block * 2^20 out-edges
 # (≥ 2^40 at the smallest sane block size); vids stay < 2^43 — fine for
 # dense dictionary-assigned ids.
 REPLICA_BITS = 20
+# vids per coarse range of the two-level prefix sum (module docstring);
+# read at call time
+COARSE = 1 << 16
 
 
 def build_adjacency(edges: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
@@ -63,10 +68,10 @@ def build_adjacency(edges: DataFrame, vertices: DataFrame | None = None) -> Data
     return adj.withColumn("deg", F.size("neighbours"))
 
 
-def _coarse_range(v: str, coarse: int):
+def _coarse_range(v: str):
     """Coarse vid range of a vertex: monotone in v, so ranges in order
     and keys in order within a range give the global key order."""
-    return F.expr(f"{v} div {int(coarse)}").alias("rng")
+    return F.expr(f"{v} div {int(COARSE)}").alias("rng")
 
 
 def _range_offsets(totals: list) -> dict[int, int]:
@@ -102,8 +107,6 @@ def plan_walk_blocks(
     edges: DataFrame,
     csr_root: str,
     edges_per_block: int | None = 1 << 20,
-    coarse: int = 1 << 16,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, dict]:
     """Degree-aware block plan WITH hub-vertex splitting (north_star:
     "hub vertices split across ≥2 blocks, partial-aggregated then
@@ -147,18 +150,15 @@ def plan_walk_blocks(
     t0 = time.time()
     cached: list[DataFrame] = []  # pinned plans; meta["cached"] — the
     # caller unpersists after the walk state is initialized
-    if n_partitions:
-        # ONE up-front exchange by src, then PINNED: the degree
-        # aggregation, the replica recount, and the edge⋈assignment join
-        # are all separate Spark *actions*, and exchanges are not reused
-        # across jobs — unpinned, each action re-shuffled the full edge
-        # table from source (measured: setup at 100M edges paid the edge
-        # exchange ~5×, ~290 s of a 308 s MC setup at 2 cores). At 100 TB
-        # the edge exchange IS the setup cost; it must happen exactly once.
-        edges = edges.repartition(n_partitions, "src").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        cached.append(edges)
+    # ONE up-front exchange by src, then PINNED: the degree aggregation,
+    # the replica recount, and the edge⋈assignment join are all separate
+    # Spark *actions*, and exchanges are not reused across jobs —
+    # unpinned, each action re-shuffled the full edge table from source
+    # (measured: setup at 100M edges paid the edge exchange ~5×, ~290 s
+    # of a 308 s MC setup at 2 cores). At 100 TB the edge exchange IS the
+    # setup cost; it must happen exactly once.
+    edges = pin(edges, "src")
+    cached.append(edges)
     # (v, out_deg) is O(V) — pin it too; hub/default-sizing/vertex-set
     # reads then never touch the edge table again
     out_deg = (
@@ -169,8 +169,8 @@ def plan_walk_blocks(
     cached.append(out_deg)
     # ONE job fills the edge + degree caches and returns every planning
     # scalar plus the per-coarse-range weight totals Σ(out_deg + 1) that
-    # offset the hub-free prefix sum (one row per range: O(V / coarse))
-    ranges = out_deg.groupBy(_coarse_range("v", coarse)).agg(
+    # offset the hub-free prefix sum (one row per range: O(V / COARSE))
+    ranges = out_deg.groupBy(_coarse_range("v")).agg(
         F.max("out_deg").alias("d"),
         F.max("_mx_dst").alias("mx"),  # only dst feeds the int32 indices
         F.sum(F.col("out_deg") + 1).alias("w"),
@@ -248,14 +248,14 @@ def plan_walk_blocks(
         cached.append(replicas)  # collect and the assign kernel
         # a split vertex weighs rsize + 1 per non-empty replica, so its
         # range's total needs the recount: one small aggregate
-        totals = replicas.groupBy(_coarse_range("v", coarse)).agg(
+        totals = replicas.groupBy(_coarse_range("v")).agg(
             F.sum(F.col("rsize") + 1)
         ).collect()
     t_pack = time.time()
     plan_secs = round(t_pack - t0, 3)
 
     weighted = replicas.select(
-        _coarse_range("v", coarse), "v", "replica", "rkey", "rsize", "n_rep",
+        _coarse_range("v"), "v", "replica", "rkey", "rsize", "n_rep",
         (F.col("rsize") + F.lit(1)).alias("w"),
     )
     blocks_assign = _assign_by_prefix(

@@ -18,6 +18,19 @@ loop joins its frontier or labels to, and follows the cache rules below
 exactly as the edge cache does. Each algorithm keeps its own
 loop, joins, metrics and store calls.
 
+This module is the one place that knows the partition count. Every
+cache boundary and every loop-side exchange of the graph modules
+hash-partitions into the session's ``spark.sql.shuffle.partitions``
+with an explicit number (``hash_by``): Spark plans ``repartition(n,
+key)`` as a REPARTITION_BY_NUM shuffle, which AQE never coalesces, so a
+cached table keeps the partitioning every loop join was planned
+against (``repartition(key)`` plans REPARTITION_BY_COL, which AQE may
+coalesce). The count is a deployment setting, not an algorithm
+parameter: RNG is seeded per logical block and per key, never per
+physical partition, so every output is the same at any count; and one
+count for the whole session means an edge table is never exchanged a
+second time into a count its degree join did not plan.
+
 * The loop-invariant edge table is exchanged by its join key ONCE in
   setup and persisted (``edge_cache``), optionally weighted by the key's
   degree or weight sum (a map-side-combined O(V) aggregate joined in the
@@ -61,9 +74,16 @@ from pyspark.storagelevel import StorageLevel
 OTHER = {"src": "dst", "dst": "src"}
 
 
-def pin(df: DataFrame, n_parts: int, key: str) -> DataFrame:
-    """``df`` hash-partitioned by ``key`` at the cache boundary, persisted."""
-    return df.repartition(n_parts, key).persist(StorageLevel.MEMORY_AND_DISK)
+def hash_by(df: DataFrame, *keys: str) -> DataFrame:
+    """``df`` hash-partitioned by ``keys`` into the session's shuffle
+    partitions (module docstring: the partition rule)."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *keys)
+
+
+def pin(df: DataFrame, *keys: str) -> DataFrame:
+    """``df`` hash-partitioned by ``keys`` at the cache boundary, persisted."""
+    return hash_by(df, *keys).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def fill(df: DataFrame) -> DataFrame:
@@ -91,8 +111,7 @@ def both_ways(p: DataFrame, a: str, b: str) -> DataFrame:
     )
 
 
-def neighbours(edges: DataFrame, n_parts: int, directed: bool = False
-               ) -> DataFrame:
+def neighbours(edges: DataFrame, directed: bool = False) -> DataFrame:
     """``(u, x)``: the loop-free distinct steps of ``edges(src, dst)`` —
     both orientations, or ``src → dst`` only when ``directed`` — pinned
     by ``u`` and filled in setup."""
@@ -100,27 +119,24 @@ def neighbours(edges: DataFrame, n_parts: int, directed: bool = False
     if not directed:
         e = e.unionByName(
             edges.select(F.col("dst").alias("u"), F.col("src").alias("x")))
-    return fill(pin(e.filter(F.col("u") != F.col("x")).distinct(), n_parts, "u"))
+    return fill(pin(e.filter(F.col("u") != F.col("x")).distinct(), "u"))
 
 
 def edge_cache(edges: DataFrame, key: str, norm: bool = False,
                weight: str | None = None) -> DataFrame:
-    """``edges(src, dst)`` partitioned by ``key`` into the session's
-    shuffle partitions and materialized (the degree join plans that
-    count; any other would exchange the edges twice). With ``norm`` it
+    """``edges(src, dst)`` pinned by ``key`` and filled. With ``norm`` it
     carries ``w`` = 1/degree of the key (PI's 1/out_deg, SALSA's
     1/outdeg and 1/indeg), or ``weight``/the key's weight sum. A
     multigraph's duplicate rows and its collapsed (src, dst,
     weight=multiplicity) form give the same ``w``."""
-    n_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     e = edges.select("src", "dst", *([weight] if weight else []))
     if norm:
         total = F.count("*") if weight is None else F.sum(weight)
         deg = e.groupBy(key).agg(total.alias("deg"))  # map-side combined
         w = F.lit(1.0) if weight is None else F.col(weight)
-        e = e.repartition(n_parts, key).join(deg.hint("shuffle_hash"), key).select(
+        e = hash_by(e, key).join(deg.hint("shuffle_hash"), key).select(
             "src", "dst", (w / F.col("deg")).alias("w"))
-    return fill(pin(e, n_parts, key))
+    return fill(pin(e, key))
 
 
 def vertex_set(by_src: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
@@ -148,15 +164,13 @@ class Propagation:
     def __init__(self, edges: DataFrame, vertices: DataFrame | None,
                  keys: tuple[str, ...] = ("src",), norm: bool = False,
                  weight: str | None = None, sources: DataFrame | None = None):
-        self.n_parts = n_parts = int(edges.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"))
         self.edges = {k: edge_cache(edges, k, norm, weight) for k in keys}
         verts = vertex_set(self.edges["src"], vertices)
         if sources is not None:
             s = sources.select("v").distinct().withColumn("is_src", F.lit(True))
             verts = verts.join(s, "v", "left").select(
                 "v", "dang", F.coalesce("is_src", F.lit(False)).alias("is_src"))
-        self.verts = pin(verts, n_parts, "v")
+        self.verts = pin(verts, "v")
 
     def count(self, *aggs) -> Row:
         """One setup job: fill the vertex table and return its row count
@@ -173,7 +187,7 @@ class Propagation:
     def scores(self, df: DataFrame) -> DataFrame:
         """A ``(v, …)`` score vector as ``push`` joins it (module
         docstring: pass the same frame to a second consumer)."""
-        return df.repartition(self.n_parts, "v").filter(F.col("v").isNotNull())
+        return hash_by(df, "v").filter(F.col("v").isNotNull())
 
     def push(self, scores: DataFrame, key: str, mass: Column) -> DataFrame:
         """``(vc, m)``: Σ ``mass`` over the ``key``-cached edges, joined to

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import sys
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -28,6 +29,18 @@ def spark():
 
 def edges_df(spark, pairs):
     return spark.createDataFrame(pairs, "src long, dst long")
+
+
+@contextmanager
+def shuffle_partitions(spark, n):
+    """Run the block with ``spark.sql.shuffle.partitions`` = ``n`` — the
+    partition count every graph module reads — and restore it after."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 @pytest.fixture(scope="session")

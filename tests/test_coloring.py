@@ -9,6 +9,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from montecarlopagerank_spark.algos.coloring import greedy_coloring
+from tests.conftest import shuffle_partitions
 from tests.oracle import random_powerlaw_digraph
 
 
@@ -92,8 +93,10 @@ def test_fixtures(spark):
 def test_parallelism_invariance(spark):
     el = random_powerlaw_digraph(n=50, seed=13)
     df = spark.createDataFrame(el, "src long, dst long")
-    a = _cmap(greedy_coloring(spark, df, n_partitions=2)[0])
-    b = _cmap(greedy_coloring(spark, df, n_partitions=17)[0])
+    with shuffle_partitions(spark, 2):
+        a = _cmap(greedy_coloring(spark, df)[0])
+    with shuffle_partitions(spark, 17):
+        b = _cmap(greedy_coloring(spark, df)[0])
     assert a == b
 
 

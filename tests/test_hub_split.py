@@ -22,6 +22,7 @@ from montecarlopagerank_spark.algos.pagerank_mc import (
     pagerank_monte_carlo,
 )
 from montecarlopagerank_spark.algos.pagerank_power import pagerank_power
+from montecarlopagerank_spark.operators import adjacency
 from montecarlopagerank_spark.operators.adjacency import (
     REPLICA_BITS,
     plan_walk_blocks,
@@ -179,12 +180,10 @@ def test_auto_hub_threshold_decoupled_from_block_size(spark, tmp_path):
     analyzer tree in the fused loop) into every superstep."""
     pairs = [(0, d) for d in range(1, 6001)] + [(d, 0) for d in range(1, 50)]
     e = spark.createDataFrame(pairs, "src long, dst long")
-    _, meta = plan_walk_blocks(
-        e, str(tmp_path / "a"), edges_per_block=None, n_partitions=4)
+    _, meta = plan_walk_blocks(e, str(tmp_path / "a"), edges_per_block=None)
     assert not meta["has_hubs"]
     assert meta["edges_per_block"] < 6000  # auto size IS below the degree
-    _, meta2 = plan_walk_blocks(
-        e, str(tmp_path / "b"), edges_per_block=512, n_partitions=4)
+    _, meta2 = plan_walk_blocks(e, str(tmp_path / "b"), edges_per_block=512)
     assert meta2["has_hubs"]
     for m in (meta, meta2):
         for df in m["cached"]:
@@ -204,10 +203,10 @@ def test_auto_fuse_steps_follows_hub_plan(spark, hub_graph, gnutella_mini):
     assert not i_flat["has_hub_splits"] and i_flat["fuse_steps"] == 6
 
 
-def test_plan_block_ids_match_numpy_prefix_sum(spark, tmp_path):
+def test_plan_block_ids_match_numpy_prefix_sum(spark, tmp_path, monkeypatch):
     """The planner's block ids equal a numpy cumsum over the whole rkey
     order: block_id = floor(Σ(rsize + 1) of earlier replicas /
-    edges_per_block). With coarse=4 every coarse range is a few vertices,
+    edges_per_block). With COARSE = 4 every coarse range is a few vertices,
     so blocks straddle range boundaries and every range's offset is used;
     the graph has a split hub (out_deg 30 > 8) and an out_deg == 8
     vertex whose weight 9 skips a block id. The packed blocks' ids and
@@ -219,7 +218,8 @@ def test_plan_block_ids_match_numpy_prefix_sum(spark, tmp_path):
              for d in gen.choice(60, size=k, replace=False)]
     e = spark.createDataFrame(pairs, "src long, dst long")
     csr_root = str(tmp_path / "csr")
-    assign, meta = plan_walk_blocks(e, csr_root, edges_per_block=8, coarse=4)
+    monkeypatch.setattr(adjacency, "COARSE", 4)
+    assign, meta = plan_walk_blocks(e, csr_root, edges_per_block=8)
     rows = sorted((r["rkey"], r["v"], r["replica"], r["rsize"], r["block_id"])
                   for r in assign.collect())
     for df in meta["cached"]:

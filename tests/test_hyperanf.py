@@ -11,7 +11,7 @@ from montecarlopagerank_spark.algos.hyperanf import (
     _effective_diameter,
     neighborhood_function,
 )
-from tests.conftest import edges_df
+from tests.conftest import edges_df, shuffle_partitions
 
 
 def _exact_nf(pairs, n_max_h, directed=False):
@@ -73,9 +73,13 @@ def test_anf_error_band_on_power_law(spark, gnutella_mini_pairs, gnutella_mini):
 
 
 def test_anf_deterministic_across_parallelism(spark, gnutella_mini):
-    a, ia = neighborhood_function(spark, gnutella_mini, max_h=8, n_partitions=2)
-    b, ib = neighborhood_function(spark, gnutella_mini, max_h=8, n_partitions=16)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    with shuffle_partitions(spark, 2):
+        a, ia = neighborhood_function(spark, gnutella_mini, max_h=8)
+        ra = sorted(map(tuple, a.collect()))
+    with shuffle_partitions(spark, 16):
+        b, ib = neighborhood_function(spark, gnutella_mini, max_h=8)
+        rb = sorted(map(tuple, b.collect()))
+    assert ra == rb
     assert ia["effective_diameter_90"] == ib["effective_diameter_90"]
 
 

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from montecarlopagerank_spark.algos.louvain import louvain
 from montecarlopagerank_spark.algos.modularity import modularity
+from tests.conftest import shuffle_partitions
 from tests.oracle import random_powerlaw_digraph
 
 
@@ -125,8 +126,10 @@ def test_matches_python_replay_on_random_graph(spark):
 def test_parallelism_invariance(spark):
     el = random_powerlaw_digraph(n=50, seed=9)
     df = spark.createDataFrame(el, "src long, dst long")
-    a = _assign_map(louvain(spark, df, n_partitions=2)[0])
-    b = _assign_map(louvain(spark, df, n_partitions=17)[0])
+    with shuffle_partitions(spark, 2):
+        a = _assign_map(louvain(spark, df)[0])
+    with shuffle_partitions(spark, 17):
+        b = _assign_map(louvain(spark, df)[0])
     assert a == b
 
 

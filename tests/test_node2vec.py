@@ -9,7 +9,7 @@ from collections import Counter
 import pytest
 
 from montecarlopagerank_spark.algos.node2vec import node2vec_walks
-from tests.conftest import edges_df
+from tests.conftest import edges_df, shuffle_partitions
 
 
 def starts_df(spark, vs):
@@ -77,6 +77,25 @@ def test_low_q_biases_exploration_vs_triangle(spark):
     assert dist3 / len(went_02) >= 0.82
 
 
+def test_directed_stay_local_ignores_labels(spark):
+    """Directed {s→1, 1→2, 1→3, s→3}, walked s → 1: candidate 3 is
+    adjacent to prev s (s→3), so it weighs 1 against 2's 1/q = 100 and
+    is picked ~1% of the time, whether s sorts before 3 (s=0) or after
+    it (s=5). Adjacency counts either direction (module docstring)."""
+    share = {}
+    for s in (0, 5):
+        e = edges_df(spark, [(s, 1), (1, 2), (1, 3), (s, 3)])
+        w, _ = node2vec_walks(
+            spark, e, starts_df(spark, [s]), walk_length=2,
+            walks_per_vertex=400, p=1.0, q=0.01, directed=True,
+        )
+        c = _step_counts(w, 2)  # only walks at 1 take a second step
+        assert set(c) <= {2, 3} and c[2] + c[3] >= 150
+        share[s] = c[3] / (c[2] + c[3])
+    assert share[0] <= 0.05 and share[5] <= 0.05  # E = 1/101 for both
+    assert abs(share[0] - share[5]) <= 0.04
+
+
 def test_dead_end_stops(spark):
     e = edges_df(spark, [(0, 1), (1, 2)])
     w, _ = node2vec_walks(
@@ -90,15 +109,19 @@ def test_dead_end_stops(spark):
 
 def test_deterministic_across_parallelism(spark, gnutella_mini):
     srcs = starts_df(spark, range(8))
-    a, _ = node2vec_walks(
-        spark, gnutella_mini, srcs, walk_length=5, walks_per_vertex=2,
-        p=0.5, q=2.0, n_partitions=2,
-    )
-    b, _ = node2vec_walks(
-        spark, gnutella_mini, srcs, walk_length=5, walks_per_vertex=2,
-        p=0.5, q=2.0, n_partitions=16,
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    with shuffle_partitions(spark, 2):
+        a, _ = node2vec_walks(
+            spark, gnutella_mini, srcs, walk_length=5, walks_per_vertex=2,
+            p=0.5, q=2.0,
+        )
+        ra = sorted(map(tuple, a.collect()))
+    with shuffle_partitions(spark, 16):
+        b, _ = node2vec_walks(
+            spark, gnutella_mini, srcs, walk_length=5, walks_per_vertex=2,
+            p=0.5, q=2.0,
+        )
+        rb = sorted(map(tuple, b.collect()))
+    assert ra == rb
 
 
 def test_rejects_bad_pq(spark):

@@ -5,6 +5,7 @@ from __future__ import annotations
 from collections import Counter
 
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from montecarlopagerank_spark.algos.pagerank_mc import _load_block
 from montecarlopagerank_spark.operators.adjacency import (
@@ -42,6 +43,24 @@ def test_plan_walk_blocks_deterministic_under_repartition(
             df.unpersist()
     assert plans[0] == plans[1]
     assert len(set(plans[0].values())) > 1
+
+
+def test_plan_walk_blocks_pins_edges_by_src(spark, gnutella_mini, tmp_path):
+    """``meta["edges_src_partitioned"]`` is what its name says: the edge
+    table persisted and hash-partitioned by src, so a later groupBy("src")
+    adds no exchange above the cached scan."""
+    _, meta = plan_walk_blocks(gnutella_mini, str(tmp_path), edges_per_block=64)
+    try:
+        e = meta["edges_src_partitioned"]
+        assert e.storageLevel == StorageLevel.MEMORY_AND_DISK
+        deg = e.groupBy("src").count()
+        deg.collect()
+        plan = deg._jdf.queryExecution().executedPlan().toString()
+        above, _, _ = plan.partition("InMemoryTableScan")
+        assert above != plan and "Exchange" not in above
+    finally:
+        for df in meta["cached"]:
+            df.unpersist()
 
 
 def test_csr_blocks_roundtrip(spark, gnutella_mini, gnutella_mini_pairs, tmp_path):

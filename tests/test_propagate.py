@@ -130,7 +130,7 @@ def test_closure(spark, ids):
         two_way)
     for directed, want in ((False, two_way),
                            (True, {(a, b) for a, b in rows if a != b})):
-        n = neighbours(e, 3, directed=directed)
+        n = neighbours(e, directed=directed)
         try:
             assert n.columns == ["u", "x"]
             assert sorted(tuple(r) for r in n.collect()) == sorted(want)

@@ -15,6 +15,7 @@ from montecarlopagerank_spark.pipeline.quality_filters import (
     gopher_quality_flags,
     repetition_stats,
 )
+from tests.conftest import shuffle_partitions
 from tests.oracle import random_powerlaw_digraph
 
 
@@ -241,9 +242,13 @@ def test_mis_valid_on_powerlaw(spark):
 def test_mis_deterministic_across_partitioning(spark):
     edges = random_powerlaw_digraph(n=100, seed=3)
     df = spark.createDataFrame(edges, "src long, dst long")
-    a, _ = luby_mis(spark, df, n_partitions=2)
-    b, _ = luby_mis(spark, df.repartition(13), n_partitions=7)
-    assert {r.v for r in a.collect()} == {r.v for r in b.collect()}
+    with shuffle_partitions(spark, 2):
+        a, _ = luby_mis(spark, df)
+        va = {r.v for r in a.collect()}
+    with shuffle_partitions(spark, 7):
+        b, _ = luby_mis(spark, df.repartition(13))
+        vb = {r.v for r in b.collect()}
+    assert va == vb
 
 
 def test_mis_isolated_and_self_loop_vertices(spark):

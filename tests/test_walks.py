@@ -15,7 +15,7 @@ from montecarlopagerank_spark.algos.walks import (
     _LCG_M,
     random_walks,
 )
-from tests.conftest import edges_df
+from tests.conftest import edges_df, shuffle_partitions
 
 
 def starts_df(spark, vs):
@@ -76,16 +76,16 @@ def test_walks_multigraph_weights_pick(spark):
 
 def test_walks_deterministic_across_parallelism(spark, gnutella_mini):
     srcs = starts_df(spark, range(10))
-    a, _ = random_walks(
-        spark, gnutella_mini, srcs, walk_length=6, walks_per_vertex=2,
-        n_partitions=2,
-    )
-    b, _ = random_walks(
-        spark, gnutella_mini, srcs, walk_length=6, walks_per_vertex=2,
-        n_partitions=16,
-    )
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
+    with shuffle_partitions(spark, 2):
+        a, _ = random_walks(
+            spark, gnutella_mini, srcs, walk_length=6, walks_per_vertex=2,
+        )
+        ra = sorted(map(tuple, a.collect()))
+    with shuffle_partitions(spark, 16):
+        b, _ = random_walks(
+            spark, gnutella_mini, srcs, walk_length=6, walks_per_vertex=2,
+        )
+        rb = sorted(map(tuple, b.collect()))
     assert ra == rb and len(ra) > 0
 
 
