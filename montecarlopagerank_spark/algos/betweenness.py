@@ -18,7 +18,7 @@ not K:
    predecessors u at h−1. Per round: frontier ⋈ cached edges →
    ``groupBy(l, x).sum(σ)`` (map-side combined) → left-anti against the
    visited set — only the O(frontier-band) state moves (`shuffle_hash`);
-   frontier size rides the write via ``observe``.
+   the frontier size is the write's observed ``n`` (state.py).
 2. **Backward** (dependency accumulation, deepest level first): δ(l,v)
    += Σ_{w ∈ succ(v), d(w)=d(v)+1} σ(l,v)/σ(l,w) · (1 + δ(l,w)). Each
    of the ≤maxd rounds joins ONE depth band against the cached edges —
@@ -39,7 +39,7 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -81,7 +81,6 @@ def landmark_betweenness(
     frontier = visited
     maxd = 0
     for h in range(1, max_hops + 1):
-        obs = Observation(f"btw_fwd_{h}")
         msgs = (
             e.join(
                 hash_by(frontier.withColumnRenamed("v", "u"), "u")
@@ -98,10 +97,9 @@ def landmark_betweenness(
                 "left_anti",
             )
             .select("l", "v", F.lit(h).alias("d"), "sigma")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        frontier = store.materialize(fresh, "btw_frontier")
-        if obs.get["n"] == 0:
+        frontier, row = store.observe(fresh, "btw_frontier")
+        if row["n"] == 0:
             break
         maxd = h
         visited = store.materialize(
@@ -152,8 +150,7 @@ def landmark_betweenness(
         .groupBy("v")
         .agg(F.sum("delta").alias("btw"))
     )
-    out = bc.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
+    out = fill(bc.persist(StorageLevel.MEMORY_AND_DISK))
     e.unpersist()
     visited.unpersist()
     return out, {

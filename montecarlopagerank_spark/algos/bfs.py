@@ -22,11 +22,11 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from montecarlopagerank_spark.operators.propagate import hash_by, neighbours
+from montecarlopagerank_spark.operators.propagate import fill, hash_by, neighbours
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -74,7 +74,6 @@ def _landmark_distances(
     )
     rounds = 0
     for hop in range(1, max_hops + 1):
-        obs = Observation(f"bfs_round_{hop}")
         nxt = (
             e.join(
                 hash_by(frontier, "v").hint("shuffle_hash"),
@@ -85,10 +84,9 @@ def _landmark_distances(
             .withColumn("hops", F.lit(hop))
             # left-anti against the visited set: both sides hash(v)
             .join(visited.hint("shuffle_hash"), ["l", "v"], "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        new = store.materialize(nxt, "bfs_frontier")
-        if obs.get["n"] == 0:
+        new, row = store.observe(nxt, "bfs_frontier")
+        if row["n"] == 0:
             break
         rounds = hop
         frontier = new.select("l", "v")
@@ -100,9 +98,7 @@ def _landmark_distances(
 def _done(out: DataFrame, rounds: int, max_hops: int, t0: float
           ) -> tuple[DataFrame, dict[str, Any]]:
     """``out`` persisted and filled, with the loop's info."""
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    return out, {
+    return fill(out.persist(StorageLevel.MEMORY_AND_DISK)), {
         "rounds": rounds,
         "max_hops": max_hops,
         "secs": round(time.time() - t0, 3),

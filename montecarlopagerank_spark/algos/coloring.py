@@ -32,7 +32,7 @@ vertices. Per round only O(V) tables move (live set, coloured set,
 frontier), every join is shuffle_hash-hinted on the O(V) side, and the
 per-round job count is constant: ONE state write (the coloured set; the
 live set is DERIVED in-plan as verts ∖ coloured and the round's colour
-count rides the write as an observed metric — the round-2 three-write
+count is observed on the write (state.py) — the round-2 three-write
 round shape spent ~⅔ of its wall time on job/materialize fixed costs,
 measured 15 rounds × 2.1 s on a 23k-edge graph where the data work is
 microseconds). Rounds are the length of the longest priority-decreasing
@@ -44,7 +44,7 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -74,19 +74,17 @@ def greedy_coloring(
     # exchanges is the standard space-time trade (the groupBy(u) after
     # the anti-join ships only partial-aggregated maxima, O(V·parts)).
     sym, sym_w = pin(sym_raw, "u"), pin(sym_raw, "w")
-    obs_v = Observation("color_nverts")
-    verts = store.materialize(
+    verts, row = store.observe(
         edges.select(F.col("src").alias("v"))
         .unionByName(edges.select(F.col("dst").alias("v")))
-        .distinct()
-        .observe(obs_v, F.count(F.lit(1)).alias("n")),
+        .distinct(),
         "color_verts",
     )
-    n_verts = int(obs_v.get["n"] or 0)
+    n_verts = row["n"]
 
     # ONE state write per round: the coloured set. The live set is derived
     # in-plan (verts ∖ coloured — both parquet-backed, so plans stay flat)
-    # and the coloured count rides the write as an observed metric; the
+    # and the coloured count is the write's observed n; the
     # round-2 shape (fired + coloured + live = 3 writes/round) paid 3× the
     # job fixed costs for the same data work.
     colored: DataFrame | None = None
@@ -143,14 +141,11 @@ def greedy_coloring(
                 )
             ).alias("color"),
         )
-        obs = Observation(f"color_round_{it}")
-        colored = store.materialize(
-            (fired if colored is None else colored.unionByName(fired)).observe(
-                obs, F.count(F.lit(1)).alias("n")
-            ),
+        colored, row = store.observe(
+            fired if colored is None else colored.unionByName(fired),
             "color_all",
         )
-        n_colored = int(obs.get["n"] or 0)
+        n_colored = row["n"]
         rounds += 1
     else:
         converged = n_colored == n_verts

@@ -21,10 +21,10 @@ Both are one groupBy(min) + one join + a conditional projection — pure
 DataFrame, partial-aggregable, O(log n) rounds on real-world graphs. Per
 round the pair set is materialized to parquet (flat plan, bounded
 lineage); the fixpoint test is a (count, Σ hash, Σ salted-hash) checksum
-triple that rides the materialize as observed metrics — ONE Spark job per
-round instead of the two extra ``exceptAll`` jobs a symmetric-difference
-check costs. Two independent 10^9-range hash sums agreeing while the sets
-differ needs a ~2^-60 coincidence; star operators also provably never
+triple observed on the round's write (state.py), not the two extra
+``exceptAll`` jobs a symmetric-difference check costs. Two independent
+10^9-range hash sums agreeing while the sets differ needs a ~2^-60
+coincidence; star operators also provably never
 cycle between distinct sets of equal size (they monotonically lower the
 sum of pair minima), so a stale fixpoint read is not a failure mode we
 can hit in practice.
@@ -32,7 +32,7 @@ can hit in practice.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from montecarlopagerank_spark.operators.checkpoint import open_store
@@ -42,15 +42,12 @@ _P1 = 1_000_000_007
 _P2 = 998_244_353
 
 
-def _pair_stats(name: str):
-    """(Observation, metric columns) for the pair-set fingerprint."""
-    obs = Observation(name)
-    cols = (
-        F.count(F.lit(1)).alias("n"),
+def _pair_stats() -> tuple:
+    """The pair-set fingerprint's hash sums; its count is the observed ``n``."""
+    return (
         F.sum(F.pmod(F.xxhash64("x", "y"), F.lit(_P1))).alias("h1"),
         F.sum(F.pmod(F.xxhash64("x", "y", F.lit(1)), F.lit(_P2))).alias("h2"),
     )
-    return obs, cols
 
 
 def _large_star(p: DataFrame) -> DataFrame:
@@ -109,22 +106,16 @@ def connected_components(
         prev, done = tuple(metrics["fingerprint"]), metrics["converged"]
         start = last + 1
     else:
-        obs0, cols0 = _pair_stats("cc_init")
-        p = store.materialize(pairs(edges).observe(obs0, *cols0), "pairs")
-        prev = fp(obs0.get)
+        p, row = store.observe(pairs(edges), "pairs", *_pair_stats())
+        prev = fp(row)
     for it in range(start, max_iters if not done else start):
-        obs, cols = _pair_stats(f"cc_round_{it}")
-        nxt = _small_star(_large_star(p)).observe(obs, *cols)
-
-        def round_metrics() -> dict:
-            cur = fp(obs.get)  # ready once the write job has run
-            return {"fingerprint": list(cur), "converged": cur == prev}
-
-        p = store.save_step(it, {"pairs": nxt}, round_metrics)["pairs"]
-        cur = fp(obs.get)
-        if cur == prev:  # fixpoint (see module docstring on checksum safety)
+        p, metrics = store.observe(
+            _small_star(_large_star(p)), "pairs", *_pair_stats(), step=it,
+            record=lambda r: {"fingerprint": list(fp(r)),
+                              "converged": fp(r) == prev})
+        if metrics["converged"]:  # fixpoint (module docstring: checksum safety)
             break
-        prev = cur
+        prev = tuple(metrics["fingerprint"])
     # at fixpoint p is a star set (child y? no: canonical x<y with x = root)
     labels = p.select(F.col("y").alias("v"), F.col("x").alias("component")).groupBy(
         "v"

@@ -9,8 +9,8 @@ degree and coreness", Nature Communications 2016): start h₀(v) =
 deg(v); repeat h_{t+1}(v) = H({h_t(w) : w ∈ Γ(v)}) where H is the
 H-index (the largest i with at least i neighbour values ≥ i). The
 sequence is monotone non-increasing and converges exactly to coreness;
-convergence is detected as a zero-change round (observed metric riding
-the state write — no extra job).
+convergence is detected as a zero-change round (an observed metric of
+the state write, state.py).
 
 The H-index is computed WITHOUT per-vertex sorting of the full
 neighbour list (hub-safe): H = max over DISTINCT neighbour values h of
@@ -86,14 +86,12 @@ def core_numbers(
     # O(E) exchange instead.
     sym = pin(both_ways(pairs(edges), "u", "w"), "w")
 
-    obs0 = Observation("coren_init")
-    h = store.materialize(
+    h, row = store.observe(
         sym.groupBy(F.col("u").alias("v"))
-        .agg(F.count(F.lit(1)).cast("long").alias("h"))
-        .observe(obs0, F.sum("h").alias("s")),
-        "coren_h",
+        .agg(F.count(F.lit(1)).cast("long").alias("h")),
+        "coren_h", F.sum("h").alias("s"),
     )
-    prev_sum = int(obs0.get["s"] or 0)
+    prev_sum = int(row["s"] or 0)
     # h ≥ 1 per row, so Σh = 0 ⇔ h is empty (edgeless input) — already a
     # fixpoint. Short-circuit rather than run a round: AQE's runtime
     # empty-relation propagation would prune the round's CollectMetrics

@@ -17,8 +17,8 @@ the SAME IEEE operation order on both engines
 
 Scale shape (mirrors kcore.py): per round one degree aggregate over the
 surviving symmetric pair view (map-side combined), an O(V) keep filter,
-and two semi-join restrictions of the pair set — 2 jobs/round with the
-surviving vertex/pair counts riding the writes via ``observe``. Each
+and two semi-join restrictions of the pair set — 2 jobs/round, the
+surviving vertex/pair counts observed on the writes (state.py). Each
 round's vertex set lands in its own parquet slot so the best round's
 set is returned without recomputation.
 """
@@ -28,7 +28,7 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from montecarlopagerank_spark.operators.propagate import both_ways, pairs
@@ -50,18 +50,11 @@ def densest_subgraph(
     factor = 2.0 * (1.0 + eps)
     store = StateStore(spark)
 
-    obs_p = Observation("dens_init_p")
-    p = store.materialize(
-        pairs(edges).observe(obs_p, F.count(F.lit(1)).alias("n")), "dens_pairs"
-    )
-    e_count = int(obs_p.get["n"])
-    obs_v = Observation("dens_init_v")
-    v = store.materialize(
-        both_ways(p, "v", "w").select("v").distinct()
-        .observe(obs_v, F.count(F.lit(1)).alias("n")),
-        "dens_v_0",
-    )
-    v_count = int(obs_v.get["n"])
+    p, row = store.observe(pairs(edges), "dens_pairs")
+    e_count = row["n"]
+    v, row = store.observe(
+        both_ways(p, "v", "w").select("v").distinct(), "dens_v_0")
+    v_count = row["n"]
 
     snapshots: dict[int, DataFrame] = {0: v}
     best_d, best_r = -1.0, None
@@ -79,18 +72,15 @@ def densest_subgraph(
             .groupBy("v")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        obs_k = Observation(f"dens_v_{it + 1}")
-        keep = store.materialize(
+        keep, row = store.observe(
             v.join(deg.hint("shuffle_hash"), "v", "left")
             .filter(F.coalesce(F.col("d"), F.lit(0)) > F.lit(thr))
-            .select("v")
-            .observe(obs_k, F.count(F.lit(1)).alias("n")),
+            .select("v"),
             f"dens_v_{it + 1}",
         )
-        v_count = int(obs_k.get["n"])
+        v_count = row["n"]
         snapshots[it + 1] = keep
-        obs_e = Observation(f"dens_p_{it}")
-        p = store.materialize(
+        p, row = store.observe(
             p.join(
                 keep.withColumnRenamed("v", "x").hint("shuffle_hash"),
                 "x",
@@ -100,11 +90,10 @@ def densest_subgraph(
                 keep.withColumnRenamed("v", "y").hint("shuffle_hash"),
                 "y",
                 "left_semi",
-            )
-            .observe(obs_e, F.count(F.lit(1)).alias("n")),
+            ),
             "dens_pairs",
         )
-        e_count = int(obs_e.get["n"])
+        e_count = row["n"]
         v = keep
         rounds += 1
     else:

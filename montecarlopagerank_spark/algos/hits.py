@@ -11,8 +11,8 @@ Per iteration over the directed multigraph E:
 Scale shape: operators/propagate.py holds the plan — two edge caches,
 one partitioned by src (consumed by the auth half-step) and one by dst
 (the hub half-step), so a superstep exchanges only the O(V) score
-vector. Each half-step writes its scores once, with its L1 norm riding
-along as an ``observe`` metric (no separate norm job). That is not one
+vector. Each half-step writes its scores once, with its L1 norm
+observed on the write (state.py). That is not one
 Spark job: a half-step runs 3 in the local[4] test session with AQE on
 — 2 adaptive query-stage jobs for its shuffle map stages, then the write
 (the scratch re-read, StateStore.materialize, infers no schema) — 6 per
@@ -30,11 +30,11 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from montecarlopagerank_spark.operators.propagate import Propagation
+from montecarlopagerank_spark.operators.propagate import Propagation, fill
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -62,25 +62,19 @@ def hits(
     for it in range(iters):
         # auth half-step: one write (3 jobs, see module docstring), norm
         # observed on it
-        obs_a = Observation(f"hits_a_{it}")
-        a_next = (
+        a, row = store.observe(
             g.gather(g.push(g.scores(h), "src", F.col("s") / F.lit(hsum)))
-            .select("v", F.coalesce("m", F.lit(0.0)).alias("s"))
-            .observe(obs_a, F.sum("s").alias("t"))
-        )
-        a = store.materialize(a_next, "hits_a")
-        asum = obs_a.get["t"]
+            .select("v", F.coalesce("m", F.lit(0.0)).alias("s")),
+            "hits_a", F.sum("s").alias("t"))
+        asum = row["t"]
         # hub half-step: one write, norm observed on it
-        obs_h = Observation(f"hits_h_{it}")
-        h_next = (
+        h, row = store.observe(
             g.gather(g.push(g.scores(a), "dst", F.col("s") / F.lit(asum)))
-            .select("v", F.coalesce("m", F.lit(0.0)).alias("s"))
-            .observe(obs_h, F.sum("s").alias("t"))
-        )
-        h = store.materialize(h_next, "hits_h")
-        hsum = obs_h.get["t"]
+            .select("v", F.coalesce("m", F.lit(0.0)).alias("s")),
+            "hits_h", F.sum("s").alias("t"))
+        hsum = row["t"]
 
-    out = (
+    out = fill(
         h.select("v", (F.col("s") / F.lit(hsum)).alias("hub"))
         .join(
             a.select("v", (F.col("s") / F.lit(asum)).alias("auth")),
@@ -88,7 +82,6 @@ def hits(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    out.count()
     g.close()
     return out, {
         "iterations": iters,

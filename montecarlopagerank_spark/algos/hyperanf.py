@@ -19,7 +19,7 @@ partition, not a million rows — the same skew story as map-side
 combined degree counting). State (v, sk) is parquet-materialized per
 round (flat plans); Σ-estimate convergence (N(h) == N(h−1), integer
 equality of rounded estimates — the fixpoint test HyperANF itself
-uses) rides the state write via ``observe``.
+uses) is observed on the state write (state.py).
 
 Determinism: an HLL register state is an order-insensitive function of
 the input multiset, so sketches — and every estimate — are identical
@@ -34,7 +34,7 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from montecarlopagerank_spark.operators.propagate import neighbours
@@ -65,22 +65,11 @@ def neighborhood_function(
     )
     store = StateStore(spark)
 
-    def _write(df: DataFrame, h: int) -> tuple[DataFrame, int]:
-        # Σ-estimate rides the state write as an observe metric: ONE
-        # Spark job per superstep, no second pass over the sketches
-        obs = Observation(f"anf_{h}")
-        out = store.materialize(
-            df.observe(
-                obs, F.sum(F.round(F.hll_sketch_estimate("sk"))).alias("t")
-            ),
-            "anf_state",
-        )
-        return out, int(obs.get["t"] or 0)
-
+    est = F.sum(F.round(F.hll_sketch_estimate("sk"))).alias("t")  # N(h)
     # sketch of {v} itself: groupBy(v) over the vertex set
-    state, prev = _write(
-        verts.groupBy("v").agg(F.hll_sketch_agg("v", F.lit(lgk)).alias("sk")), 0
-    )
+    state, prev = store.observe(
+        verts.groupBy("v").agg(F.hll_sketch_agg("v", F.lit(lgk)).alias("sk")),
+        "anf_state", est, record=lambda r: int(r["t"] or 0))
     counts: list[tuple[int, int]] = [(0, prev)]
     rounds = 0
     for h in range(1, max_h + 1):
@@ -93,7 +82,8 @@ def neighborhood_function(
             .groupBy("v")
             .agg(F.hll_union_agg("sk", F.lit(True)).alias("sk"))
         )
-        state, cur = _write(merged, h)
+        state, cur = store.observe(merged, "anf_state", est,
+                                   record=lambda r: int(r["t"] or 0))
         counts.append((h, cur))
         rounds = h
         # rel_tol=0: exact plateau (estimates stopped growing). >0: the

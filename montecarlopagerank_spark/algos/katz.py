@@ -20,10 +20,9 @@ step) keeps the unrolled SQL twin trivially identical.
 
 Scale shape: the edge cache, the vertex table and the push are
 operators/propagate.py's. Each superstep writes its state once, with the
-score L1 mass riding as an ``observe`` metric (no separate mass job).
-That is not one Spark job: a step runs 3 in the local[4] test session
-with AQE on — 2 adaptive query-stage jobs for its shuffle map stages,
-then the write (the scratch re-read, StateStore.materialize, infers no
+score L1 mass observed on the write (state.py). That is not one Spark
+job: a step runs 3 in the local[4] test session with AQE on — 2
+adaptive query-stage jobs for its shuffle map stages, then the write (the scratch re-read, StateStore.materialize, infers no
 schema); 1 with AQE off (counted with a job group + ``statusTracker`` on
 a 41-vertex path, 2 vs 4 steps; tests/test_propagate.py). State is
 carried exactly (no normalization), so the unrolled SQL twin
@@ -35,11 +34,11 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from montecarlopagerank_spark.operators.propagate import Propagation
+from montecarlopagerank_spark.operators.propagate import Propagation, fill
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -68,32 +67,26 @@ def katz(
     x = store.materialize(g.verts.select("v", F.lit(init).alias("s")), "katz_x")
     mass = float(n) * init
     for it in range(iters):
-        obs = Observation(f"katz_{it}")
-        x_next = (
-            g.gather(g.push(g.scores(x), "src", F.col("s")))
-            .select(
-                "v",
-                (
-                    F.lit(float(beta))
-                    + F.lit(float(alpha)) * F.coalesce("m", F.lit(0.0))
-                ).alias("s"),
-            )
-            .observe(obs, F.sum("s").alias("t"))
+        x_next = g.gather(g.push(g.scores(x), "src", F.col("s"))).select(
+            "v",
+            (
+                F.lit(float(beta))
+                + F.lit(float(alpha)) * F.coalesce("m", F.lit(0.0))
+            ).alias("s"),
         )
-        x = store.materialize(x_next, "katz_x")
-        mass = obs.get["t"]
+        x, row = store.observe(x_next, "katz_x", F.sum("s").alias("t"))
+        mass = row["t"]
 
     norm = (
         (F.col("s") * F.lit(float(n)) / F.lit(float(mass)))
         if mass != 0.0
         else F.lit(0.0)  # edge-free graph: keep the output finite
     )
-    out = x.select(
+    out = fill(x.select(
         "v",
         F.col("s").alias("katz"),
         norm.alias("katz_norm"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
+    ).persist(StorageLevel.MEMORY_AND_DISK))
     g.close()
     return out, {
         "iterations": iters,

@@ -16,8 +16,8 @@ pair set p(x<y), re-materialized to parquet per round (flat plan, bounded
 lineage — StateStore). Per round: degrees from the symmetric view of p
 (one partial-aggregable groupBy), survivors = deg ≥ k (O(V)), then two
 left-semi joins restrict p to pairs with both endpoints surviving. Each
-round is ONE Spark job — the pair-set write — with the surviving-pair
-count riding it as an ``observe`` metric. The pair set only ever SHRINKS,
+round is ONE Spark job — the pair-set write, whose observed ``n`` is
+the surviving-pair count (state.py). The pair set only ever SHRINKS,
 so count-equality is an *exact* fixpoint test (equal count ⇔ no vertex
 was removed ⇔ equal set), unlike components.py's star rounds which need
 checksums. Rounds = peeling depth of the pendant forest (the longest
@@ -30,7 +30,7 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from montecarlopagerank_spark.operators.propagate import both_ways, pairs
@@ -53,11 +53,8 @@ def k_core(
     t0 = time.time()
     store = StateStore(spark)
 
-    obs0 = Observation("kcore_init")
-    p = store.materialize(
-        pairs(edges).observe(obs0, F.count(F.lit(1)).alias("n")), "kcore_pairs"
-    )
-    prev = int(obs0.get["n"])
+    p, row = store.observe(pairs(edges), "kcore_pairs")
+    prev = row["n"]
     rounds, converged = 0, False
     for it in range(max_rounds):
         if prev == 0:
@@ -73,7 +70,6 @@ def k_core(
             .filter(F.col("d") >= k)
             .select("u")
         )
-        obs = Observation(f"kcore_round_{it}")
         p_next = (
             p.join(
                 keep.withColumnRenamed("u", "x").hint("shuffle_hash"),
@@ -86,10 +82,9 @@ def k_core(
                 "left_semi",
             )
             .select("x", "y")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        p = store.materialize(p_next, "kcore_pairs")
-        cur = int(obs.get["n"])
+        p, row = store.observe(p_next, "kcore_pairs")
+        cur = row["n"]
         rounds += 1
         if cur == prev:  # shrink-only state: equal count ⇔ fixpoint
             converged = True

@@ -18,7 +18,7 @@ exchanges only the O(V) label table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from montecarlopagerank_spark.operators.checkpoint import open_store
@@ -91,19 +91,13 @@ def label_propagation(
                 (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
             )
         )
-        # changed-count rides the write job as an observed metric — one
-        # Spark job per superstep, no separate count() action
-        obs = Observation(f"lpa_step_{it}")
-        observed = updated.observe(
-            obs, F.sum(F.when(F.col("changed"), 1).otherwise(0)).alias("nc")
-        ).select("v", "label")
-
-        def step_metrics() -> dict:
-            nc = int(obs.get["nc"] or 0)  # ready once the write job has run
-            return {"n_changed": nc, "converged": nc == 0}
-
-        labels = store.save_step(it, {"labels": observed}, step_metrics)["labels"]
-        if step_metrics()["converged"]:
+        labels, metrics = store.observe(
+            updated, "labels",
+            F.sum(F.when(F.col("changed"), 1).otherwise(0)).alias("nc"),
+            keep=("v", "label"), step=it,
+            record=lambda r: {"n_changed": int(r["nc"] or 0),
+                              "converged": not r["nc"]})
+        if metrics["converged"]:
             break
     sym.unpersist()
     return labels

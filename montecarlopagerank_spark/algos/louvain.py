@@ -53,7 +53,7 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -131,7 +131,6 @@ def _local_moves(
                 F.first("cv").alias("cv"),
             )
         )
-        obs = Observation(f"louvain_mv_{r}")
         nxt = best.select(
             "v",
             F.when(-F.col("b.ns") > F.col("stay"), F.col("b.c"))
@@ -140,11 +139,11 @@ def _local_moves(
             ((-F.col("b.ns") > F.col("stay")) & (F.col("b.c") != F.col("cv")))
             .cast("long")
             .alias("moved"),
-        ).observe(obs, F.sum("moved").alias("mv"))
-        labels = store.materialize(
-            hash_by(nxt.select("v", "c"), "v"), "louvain_lab"
         )
-        total_moves += int(obs.get["mv"] or 0)
+        labels, row = store.observe(
+            hash_by(nxt, "v"), "louvain_lab", F.sum("moved").alias("mv"),
+            keep=("v", "c"))
+        total_moves += int(row["mv"] or 0)
     return labels, total_moves
 
 

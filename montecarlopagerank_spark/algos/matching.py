@@ -35,7 +35,7 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -64,14 +64,12 @@ def maximal_matching(
     t0 = time.time()
     store = StateStore(spark)
 
-    obs0 = Observation("match_init")
-    p = store.materialize(
-        pairs(edges)
-        .select("x", "y", _edge_pri(F.col("x"), F.col("y")).alias("pri"))
-        .observe(obs0, F.count(F.lit(1)).alias("n")),
+    p, row = store.observe(
+        pairs(edges).select(
+            "x", "y", _edge_pri(F.col("x"), F.col("y")).alias("pri")),
         "match_pairs",
     )
-    live_pairs = int(obs0.get["n"])
+    live_pairs = row["n"]
 
     winners: list[DataFrame] = []
     rounds, converged = 0, False
@@ -109,7 +107,6 @@ def maximal_matching(
             win.select(F.col("x").alias("v"))
             .unionByName(win.select(F.col("y").alias("v")))
         )
-        obs = Observation(f"match_round_{it}")
         p_next = (
             p.join(
                 matched.withColumnRenamed("v", "x").hint("shuffle_hash"),
@@ -121,10 +118,9 @@ def maximal_matching(
                 "y",
                 "left_anti",
             )
-            .observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        p = store.materialize(p_next, "match_pairs")
-        live_pairs = int(obs.get["n"])
+        p, row = store.observe(p_next, "match_pairs")
+        live_pairs = row["n"]
         rounds += 1
     else:
         converged = live_pairs == 0

@@ -34,7 +34,7 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -68,11 +68,8 @@ def luby_mis(
         .distinct()
     )
 
-    obs0 = Observation("mis_init")
-    p = store.materialize(
-        pairs(edges).observe(obs0, F.count(F.lit(1)).alias("n")), "mis_pairs"
-    )
-    live_pairs = int(obs0.get["n"])
+    p, row = store.observe(pairs(edges), "mis_pairs")
+    live_pairs = row["n"]
     live = store.materialize(verts, "mis_live")
 
     winners: list[DataFrame] = []
@@ -118,7 +115,6 @@ def luby_mis(
         live = store.materialize(
             live.join(gone.hint("shuffle_hash"), "v", "left_anti"), "mis_live"
         )
-        obs = Observation(f"mis_round_{it}")
         keep = live.select(F.col("v").alias("k"))
         p_next = (
             p.join(
@@ -132,10 +128,9 @@ def luby_mis(
                 "left_semi",
             )
             .select("x", "y")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        p = store.materialize(p_next, "mis_pairs")
-        live_pairs = int(obs.get["n"])
+        p, row = store.observe(p_next, "mis_pairs")
+        live_pairs = row["n"]
         rounds += 1
     else:
         converged = live_pairs == 0 and live.isEmpty()

@@ -40,7 +40,7 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -146,18 +146,15 @@ def minimum_spanning_forest(
             .agg(F.min("pri").alias("mp"))
             .withColumnRenamed("c", "mc")
         )
-        obs = Observation(f"msf_me_{it}")
         # exactly one row per live component: pri is globally unique
-        me = store.materialize(
+        me, row = store.observe(
             sym.join(
                 mn.hint("shuffle_hash"),
                 (F.col("c") == F.col("mc")) & (F.col("pri") == F.col("mp")),
-            )
-            .select("c", "o", "pri", "x", "y")
-            .observe(obs, F.count(F.lit(1)).alias("n")),
+            ).select("c", "o", "pri", "x", "y"),
             f"msf_me_{it}",
         )
-        if int(obs.get["n"]) == 0:
+        if row["n"] == 0:
             break
         forest.append(
             store.materialize(
@@ -183,7 +180,7 @@ def minimum_spanning_forest(
         )
         root = store.materialize(root, "msf_root")
         # pointer-jump to the verified fixpoint: each squaring's
-        # moved-count rides its own state write (no extra job); a jump
+        # moved-count is observed on its own state write; a jump
         # that moves nothing proves root∘root == root, so the loop
         # early-exits at depth-flatten (typically 2-4 jumps with md5
         # weights). The fixed-J SQL twin matches because post-fixpoint
@@ -191,23 +188,20 @@ def minimum_spanning_forest(
         flat = False
         for j in range(jump_rounds):
             ra, rb = root.alias("ra"), root.alias("rb")
-            moved_obs = Observation(f"msf_jump_{it}_{j}")
-            nxt = (
+            root, row = store.observe(
                 ra.join(rb.hint("shuffle_hash"), F.col("ra.r") == F.col("rb.c"))
                 .select(
                     F.col("ra.c").alias("c"),
                     F.col("rb.r").alias("r"),
                     (F.col("ra.r") != F.col("rb.r")).cast("long").alias("_m"),
-                )
-                .observe(moved_obs, F.sum("_m").alias("n"))
+                ),
+                "msf_root", F.sum("_m").alias("moved"), keep=("c", "r"),
             )
-            root = store.materialize(nxt, "msf_root")
-            if int(moved_obs.get["n"] or 0) == 0:
+            if not row["moved"]:
                 flat = True
                 break
         if not flat:
             converged = False  # depth exceeded 2^jump_rounds — flag loudly
-        root = root.select("c", "r")
         lab = store.materialize(
             lab.join(
                 root.withColumnRenamed("c", "lbl").hint("shuffle_hash"),

@@ -85,6 +85,7 @@ def node2vec_walks(
         .withColumn("deg", F.size("arr").cast("long")),
         "u",
     ))
+    sym.unpersist()  # read once, by the nbrs fill
     # (prev, candidate) adjacency probe, either direction (module docstring)
     probe = fill(pin(pairs(edges), "x", "y"))
 
@@ -179,7 +180,7 @@ def node2vec_walks(
         walks = walks.unionByName(part)
     walks = walks.persist(StorageLevel.MEMORY_AND_DISK)
     n_rows = walks.count()
-    for c in (sym, nbrs, probe):
+    for c in (nbrs, probe):
         c.unpersist()
     return walks, {
         "steps": emitted,

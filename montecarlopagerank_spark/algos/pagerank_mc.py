@@ -135,7 +135,7 @@ from montecarlopagerank_spark.operators.adjacency import (
     REPLICA_BITS,
     plan_walk_blocks,
 )
-from montecarlopagerank_spark.operators.propagate import hash_by
+from montecarlopagerank_spark.operators.propagate import fill, hash_by
 # both store classes stay bound here for perfbench/tracing.py's wrappers
 from montecarlopagerank_spark.operators.checkpoint import (  # noqa: F401
     CheckpointManager,
@@ -729,14 +729,11 @@ def pagerank_monte_carlo(
         F.shiftright("rkey", REPLICA_BITS).alias("v"),
         F.col("c").alias("z"),
     )
-    obs_total = Observation("mc_total")
-    visits = store.materialize(
-        all_arrivals.groupBy("v")
-        .agg(F.sum("z").alias("z"))
-        .observe(obs_total, F.sum("z").alias("t")),
-        "visits",
+    visits, row = store.observe(
+        all_arrivals.groupBy("v").agg(F.sum("z").alias("z")),
+        "visits", F.sum("z").alias("t"),
     )
-    total = obs_total.get["t"]
+    total = row["t"]
     if total is None:  # empty graph: no vertices at all
         verts.unpersist()
         empty = spark.createDataFrame([], "v long, rank double")
@@ -746,9 +743,9 @@ def pagerank_monte_carlo(
             "loop_secs": 0.0,
         }
     ranks = visits.select("v", (F.col("z") / F.lit(float(total))).alias("rank"))
-    ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-    ranks.count()  # pin; the scratch root (ranks' recompute source) is
-    # reclaimed at interpreter exit (state.py atexit registry)
+    # pin; the scratch root (ranks' recompute source) is reclaimed at
+    # interpreter exit (state.py atexit registry)
+    ranks = fill(ranks.persist(StorageLevel.MEMORY_AND_DISK))
     verts.unpersist()
     info = {
         "iterations": steps_run, "K": K, "seed": seed,

@@ -30,10 +30,8 @@ state takes the written frame's schema, so it runs no inference job
 (counted with a job group + ``statusTracker`` on a 41-vertex path, 2 vs
 4 steps; tests/test_propagate.py pins it, tests/test_checkpoint.py
 compares scratch and durable). The convergence delta and next step's
-dangling mass ride the write as ``DataFrame.observe`` metrics (no
-separate per-step aggregate job — at high core counts a second job's
-fixed schedule+IO cost dominates the superstep and caps scaling
-efficiency). The state table is (v, rank, dang): carrying the
+dangling mass ride the write as observed metrics (``StateStore.observe``,
+state.py). The state table is (v, rank, dang): carrying the
 loop-invariant dangling flag IN the state lets the update join read the
 observed-mass flag for free — no per-step side-table join at all (a
 cached co-partitioned vflag join, the round-3 shape, measured +0.3-0.5
@@ -46,7 +44,7 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -55,7 +53,7 @@ from montecarlopagerank_spark.operators.checkpoint import (
     CheckpointManager,
     open_store,
 )
-from montecarlopagerank_spark.operators.propagate import Propagation
+from montecarlopagerank_spark.operators.propagate import Propagation, fill
 from montecarlopagerank_spark.operators.state import StateStore  # noqa: F401
 
 EPS = 0.15  # jump probability, MonteCarloPageRank.scala:28
@@ -133,9 +131,7 @@ def pagerank_power(
     # (state init, personalization weights): dang rides the state, so
     # only a personalized superstep joins the table (its is_src column,
     # co-partitioned, no exchange). The next dangling mass is an observed
-    # metric of the step's write (no per-step lookup job — the reference
-    # pays a lookup(-1) action per superstep,
-    # PowerIterationPageRank.scala:111)
+    # metric of the step's write (state.py)
     g = Propagation(edges, vertices, norm=True, weight=weight_col,
                     sources=sources)
     aggs = [F.sum(F.when(F.col("dang"), 1).otherwise(0)).alias("nd")]
@@ -240,24 +236,17 @@ def pagerank_power(
             ).alias("rank"),
             st["rank"].alias("old_rank"),
         ).withColumn("dv", F.abs(F.col("rank") - F.col("old_rank")))
-        # convergence delta + next step's dangling mass ride the write job
-        # as observed metrics — zero extra jobs (SURVEY.md §3.4)
-        obs = Observation(f"pi_step_{it}")
-        observed = joined.observe(
-            obs,
-            F.max("dv").alias("d"),
-            F.sum(F.when(F.col("dang"), F.col("rank"))).alias("m"),
-        ).select("v", "rank", "dang")
 
-        def step_metrics() -> dict[str, Any]:
-            # observed metrics are ready once the write job has run
-            row = obs.get
+        def record(row: dict) -> dict[str, Any]:
             d = float(row["d"])
             return {"deltas": deltas + [d], "next_dangling_mass": row["m"] or 0.0,
                     "converged": bool(d < tol)}
 
-        state = store.save_step(it, {"state": observed}, step_metrics)["state"]
-        metrics = step_metrics()
+        # convergence delta + next step's dangling mass (state.py: observe)
+        state, metrics = store.observe(
+            joined, "state", F.max("dv").alias("d"),
+            F.sum(F.when(F.col("dang"), F.col("rank"))).alias("m"),
+            keep=("v", "rank", "dang"), step=it, record=record)
         deltas, m = metrics["deltas"], metrics["next_dangling_mass"]
         step_secs.append(round(time.time() - t_step, 3))
         if metrics["converged"]:
@@ -272,8 +261,7 @@ def pagerank_power(
         # final ranks still scan the scratch slot: pin them and leave the
         # scratch files in place as the recompute source (the store's
         # scratch root is reclaimed at interpreter exit — state.py)
-        ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-        ranks.count()
+        ranks = fill(ranks.persist(StorageLevel.MEMORY_AND_DISK))
     info = {
         "iterations": it + 1, "converged": converged, "deltas": deltas, "n": n,
         "n_sources": ns,

@@ -23,11 +23,11 @@ weights are baked into two loop-invariant edge caches at setup (one
 partitioned by src for the auth half-step, one by dst for the hub
 half-step), so a superstep exchanges only the O(V) score vector plus
 the O(V) map-side-combined aggregate. Each half-step writes its scores
-once, with its L1 sum riding along as an ``observe`` metric (no separate
-sum job). That is not one Spark job: as in hits.py, a half-step runs 3
-in the local[4] test session with AQE on — 2 adaptive query-stage jobs
-for its shuffle map stages, then the write (the scratch re-read infers
-no schema) — 6 per iteration (1 per half-step with AQE off; counted
+once, with its L1 sum observed on the write (state.py). That is not one
+Spark job: as in hits.py, a half-step runs 3 in the local[4] test
+session with AQE on — 2 adaptive query-stage jobs for its shuffle map
+stages, then the write (the scratch re-read infers no schema) — 6 per
+iteration (1 per half-step with AQE off; counted
 with a job group + ``statusTracker`` on a 41-vertex path, 2 vs 4
 iterations; tests/test_propagate.py).
 """
@@ -37,11 +37,11 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from montecarlopagerank_spark.operators.propagate import Propagation
+from montecarlopagerank_spark.operators.propagate import Propagation, fill
 from montecarlopagerank_spark.operators.state import StateStore
 
 
@@ -76,24 +76,18 @@ def salsa(
     for it in range(iters):
         # auth half-step: one write (3 jobs, see module docstring), L1
         # sum observed on it
-        obs_a = Observation(f"salsa_a_{it}")
-        a = store.materialize(
+        a, ra = store.observe(
             g.push(g.scores(h), "src", F.col("s") * F.col("w"))
-            .select(F.col("vc").alias("v"), F.col("m").alias("s"))
-            .observe(obs_a, F.sum("s").alias("t")),
-            "salsa_a",
-        )
+            .select(F.col("vc").alias("v"), F.col("m").alias("s")),
+            "salsa_a", F.sum("s").alias("t"))
         # hub half-step: one write, L1 sum observed on it
-        obs_h = Observation(f"salsa_h_{it}")
-        h = store.materialize(
+        h, rh = store.observe(
             g.push(g.scores(a), "dst", F.col("s") * F.col("w"))
-            .select(F.col("vc").alias("v"), F.col("m").alias("s"))
-            .observe(obs_h, F.sum("s").alias("t")),
-            "salsa_h",
-        )
-        sums.append((float(obs_a.get["t"]), float(obs_h.get["t"])))
+            .select(F.col("vc").alias("v"), F.col("m").alias("s")),
+            "salsa_h", F.sum("s").alias("t"))
+        sums.append((float(ra["t"]), float(rh["t"])))
 
-    out = (
+    out = fill(
         g.verts.join(h.withColumnRenamed("s", "hub").hint("shuffle_hash"), "v",
                      "left")
         .join(a.withColumnRenamed("s", "auth").hint("shuffle_hash"), "v", "left")
@@ -104,7 +98,6 @@ def salsa(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    out.count()
     g.close()
     return out, {
         "iterations": iters,

@@ -38,18 +38,11 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from montecarlopagerank_spark.operators.propagate import hash_by
 from montecarlopagerank_spark.operators.state import StateStore
-
-
-def _one_job(store: StateStore, df: DataFrame, name: str, *metrics):
-    """Materialize ``df`` with observed metrics riding the single write."""
-    obs = Observation(name)
-    out = store.materialize(df.observe(obs, *metrics), name)
-    return out, obs.get
 
 
 def strongly_connected_components(
@@ -71,12 +64,7 @@ def strongly_connected_components(
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    live, lm = _one_job(
-        store,
-        hash_by(e0, "src"),
-        "scc_edges",
-        F.count(F.lit(1)).alias("ne"),
-    )
+    live, lm = store.observe(hash_by(e0, "src"), "scc_edges")
     remaining = store.materialize(
         hash_by(
             live.select(F.col("src").alias("v"))
@@ -90,7 +78,7 @@ def strongly_connected_components(
     outer = trim_rounds = color_rounds = bfs_hops = 0
     converged = False
     for outer in range(1, max_outer + 1):
-        if int(lm["ne"]) == 0:
+        if lm["n"] == 0:
             # no live edges: every remaining vertex is a singleton
             assigned.append(remaining.select("v", F.col("v").alias("scc")))
             converged = True
@@ -103,8 +91,7 @@ def strongly_connected_components(
                 "v",
             )
             keep = store.materialize(both, "scc_keep")
-            nl, lmeta = _one_job(
-                store,
+            nl, lmeta = store.observe(
                 live.join(
                     keep.withColumnRenamed("v", "src").hint("shuffle_hash"),
                     "src",
@@ -115,16 +102,15 @@ def strongly_connected_components(
                     "left_semi",
                 ),
                 "scc_edges",
-                F.count(F.lit(1)).alias("ne"),
             )
             trim_rounds += 1
-            unchanged = int(lmeta["ne"]) == int(lm["ne"])
+            unchanged = lmeta["n"] == lm["n"]
             # rebind even on the no-change round: keeping the OLDER
             # DataFrame would leave `live` two scc_edges writes back, and
             # the next scc_edges write (step 4) would overwrite the slot
             # its own plan scans (see operators/state.py slot invariant)
             live, lm = nl, lmeta
-            if unchanged or int(lm["ne"]) == 0:
+            if unchanged or lm["n"] == 0:
                 break
         core = live.select(F.col("src").alias("v")).unionByName(
             live.select(F.col("dst").alias("v"))
@@ -139,14 +125,12 @@ def strongly_connected_components(
             hash_by(remaining.join(core, "v", "left_semi"), "v"),
             "scc_verts",
         )
-        if int(lm["ne"]) == 0:
+        if lm["n"] == 0:
             converged = True
             break
         # --- 2. COLOR: max-label propagation along in-edges to fixpoint ---
-        color, cm = _one_job(
-            store,
-            remaining.select("v", F.col("v").alias("c")),
-            "scc_color",
+        color, cm = store.observe(
+            remaining.select("v", F.col("v").alias("c")), "scc_color",
             F.sum("c").alias("s"),
         )
         prev_s = int(cm["s"])
@@ -159,8 +143,7 @@ def strongly_connected_components(
                 .groupBy(F.col("dst").alias("v"))
                 .agg(F.max("c").alias("cin"))
             )
-            color, cm = _one_job(
-                store,
+            color, cm = store.observe(
                 color.join(inc.hint("shuffle_hash"), "v", "left").select(
                     "v",
                     F.greatest(
@@ -176,14 +159,12 @@ def strongly_connected_components(
                 break
             prev_s = s
         # --- 3. BACKWARD reach from every pivot within its color class ---
-        frontier, fm = _one_job(
-            store,
+        frontier, fm = store.observe(
             color.filter(F.col("v") == F.col("c")).select("v", "c"),
             "scc_frontier",
-            F.count(F.lit(1)).alias("nf"),
         )
         visited = store.materialize(frontier, "scc_visited")
-        while int(fm["nf"]) > 0:
+        while fm["n"] > 0:
             preds = (
                 live.join(
                     frontier.withColumnRenamed("v", "dst").hint("shuffle_hash"),
@@ -197,14 +178,12 @@ def strongly_connected_components(
                 .select("v", "c")
                 .distinct()
             )
-            frontier, fm = _one_job(
-                store,
+            frontier, fm = store.observe(
                 preds.join(visited.select("v"), "v", "left_anti"),
                 "scc_frontier",
-                F.count(F.lit(1)).alias("nf"),
             )
             bfs_hops += 1
-            if int(fm["nf"]) == 0:
+            if fm["n"] == 0:
                 break
             visited = store.materialize(
                 visited.unionByName(frontier), "scc_visited"
@@ -219,8 +198,7 @@ def strongly_connected_components(
             hash_by(remaining.join(visited.select("v"), "v", "left_anti"), "v"),
             "scc_verts",
         )
-        live, lm = _one_job(
-            store,
+        live, lm = store.observe(
             live.join(
                 remaining.withColumnRenamed("v", "src").hint("shuffle_hash"),
                 "src",
@@ -231,9 +209,8 @@ def strongly_connected_components(
                 "left_semi",
             ),
             "scc_edges",
-            F.count(F.lit(1)).alias("ne"),
         )
-        if int(lm["ne"]) == 0:
+        if lm["n"] == 0:
             assigned.append(remaining.select("v", F.col("v").alias("scc")))
             converged = True
             break

@@ -16,8 +16,8 @@ Scale shape: identical to bfs_hops — the weighted edge table is
 deduped to min-weight per (u, x) pair (a multigraph only duplicates
 relax work), hash-partitioned by source endpoint once and persisted;
 each round shuffles only the O(frontier) vertex set (shuffle_hash, the
-edge side never moves), and the improved-count rides the frontier
-write as an ``observe`` metric — TWO jobs per round, state tables
+edge side never moves), and the improved-count is the frontier
+write's observed ``n`` (state.py) — TWO jobs per round, state tables
 parquet-backed (flat plans, bounded lineage).
 
 Determinism: distances are exact (min-plus over the input weights; no
@@ -32,7 +32,7 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -85,7 +85,6 @@ def sssp(
     rounds = 0
     converged = False
     for r in range(1, max_rounds + 1):
-        obs = Observation(f"sssp_round_{r}")
         cand = (
             e.join(
                 hash_by(frontier.withColumnRenamed("v", "u"), "u")
@@ -100,10 +99,9 @@ def sssp(
             cand.join(dist.hint("shuffle_hash"), "v", "left")
             .filter(F.col("d").isNull() | (F.col("nd") < F.col("d")))
             .select("v", F.col("nd").alias("d"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        newf = store.materialize(improved, "sssp_frontier")
-        if obs.get["n"] == 0:
+        newf, row = store.observe(improved, "sssp_frontier")
+        if row["n"] == 0:
             converged = True
             break
         rounds = r
@@ -113,9 +111,7 @@ def sssp(
             "sssp_dist",
         )
     e.unpersist()
-    out = dist.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    return out, {
+    return fill(dist.persist(StorageLevel.MEMORY_AND_DISK)), {
         "rounds": rounds,
         "converged": converged,
         "secs": round(time.time() - t0, 3),

@@ -24,8 +24,8 @@ Scale shape: the timestamped edge table is exchanged ONCE
 (hash-partitioned by src) and pinned; per round ONE state write — the
 (state ∪ usable-edge messages) min-aggregate, map-side combined, so a
 hub's fan-in collapses to per-partition partial minima — with a
-(row count, xor-checksum) fixpoint test riding the write via
-``observe`` (the state only grows rows or decreases arrivals, so
+(row count, xor-checksum) fixpoint test observed on the write
+(state.py; the state only grows rows or decreases arrivals, so
 checksum equality across rounds is an exact early stop —
 components.py's checksum discipline).
 """
@@ -35,7 +35,7 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -60,22 +60,19 @@ def earliest_arrival(
 
     e = fill(pin(
         tedges.select("src", "dst", F.col("t").cast("long").alias("t")), "src"))
-    chk = [
-        F.count(F.lit(1)).alias("n"),
-        # ANSI-safe set checksum (sum(µs) would overflow int64): the
-        # state only grows rows / decreases ea, so (count, xor-hash)
-        # equality across rounds is an exact-up-to-2⁻⁶⁴ fixpoint test —
-        # the same checksum discipline as components.py's star rounds
-        F.expr("bit_xor(xxhash64(v, ea))").alias("x"),
-    ]
-    obs0 = Observation("treach_init")
-    ea = store.materialize(
-        sources.groupBy("v")
-        .agg(F.min(F.col("t0").cast("long")).alias("ea"))
-        .observe(obs0, *chk),
-        "treach_ea",
+    # ANSI-safe set checksum (sum(µs) would overflow int64): the state
+    # only grows rows / decreases ea, so (count, xor-hash) equality
+    # across rounds is an exact-up-to-2⁻⁶⁴ fixpoint test — the same
+    # checksum discipline as components.py's star rounds
+    xor = F.expr("bit_xor(xxhash64(v, ea))").alias("x")
+
+    def chk(r: dict) -> tuple[int, int]:
+        return r["n"], int(r["x"] or 0)
+
+    ea, prev = store.observe(
+        sources.groupBy("v").agg(F.min(F.col("t0").cast("long")).alias("ea")),
+        "treach_ea", xor, record=chk,
     )
-    prev = (int(obs0.get["n"]), int(obs0.get["x"] or 0))
 
     rounds, converged = 0, False
     for it in range(max_hops):
@@ -84,16 +81,11 @@ def earliest_arrival(
             .filter(F.col("t") >= F.col("ea"))
             .select(F.col("dst").alias("v"), F.col("t").alias("ea"))
         )
-        obs = Observation(f"treach_{it}")
-        nxt = (
-            ea.unionByName(msgs)
-            .groupBy("v")
-            .agg(F.min("ea").alias("ea"))
-            .observe(obs, *chk)
+        ea, cur = store.observe(
+            ea.unionByName(msgs).groupBy("v").agg(F.min("ea").alias("ea")),
+            "treach_ea", xor, record=chk,
         )
-        ea = store.materialize(nxt, "treach_ea")
         rounds += 1
-        cur = (int(obs.get["n"]), int(obs.get["x"] or 0))
         if cur == prev:
             converged = True
             break

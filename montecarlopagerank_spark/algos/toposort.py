@@ -33,8 +33,8 @@ fixed job+materialize overhead, so wall time ≈ writes, not rounds).
 Scale shape: the deduped edge table is exchanged ONCE (hash-partitioned
 by src) and pinned; per fused round one message pass d⋈state (map-side-
 combined max/null-count per dst — hub fan-in collapses to partials) and
-one O(V) left join against the pinned vertex table. Assigned-count
-rides each write via ``observe``; assignment is monotone, so count
+one O(V) left join against the pinned vertex table. The assigned count
+is observed on each write (state.py); assignment is monotone, so count
 equality across writes is an exact stall test.
 """
 
@@ -43,7 +43,7 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -109,17 +109,11 @@ def kahn_peel(
         st = vstate
         for _ in range(k):
             st = one_round(st)
-        obs = Observation(f"kahn_block_{done}")
-        vstate = store.materialize(
-            st.observe(
-                obs,
-                F.sum(F.col("layer").isNotNull().cast("long")).alias("n"),
-                F.count(F.lit(1)).alias("total"),
-            ),
-            "kahn_vstate",
+        vstate, row = store.observe(
+            st, "kahn_vstate",
+            F.sum(F.col("layer").isNotNull().cast("long")).alias("assigned"),
         )
-        assigned = int(obs.get["n"] or 0)
-        total = int(obs.get["total"] or 0)
+        assigned, total = int(row["assigned"] or 0), row["n"]
         done += k
         if assigned == total:
             converged = True

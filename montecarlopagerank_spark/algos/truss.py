@@ -14,8 +14,8 @@ lineage). Per round: triangles are enumerated from the CANONICAL
 (x<y-ordered) pair set with the same 3-join used by triangles.py —
 each triangle (v1<v2<v3) credits its 3 edges, support = credit count
 per edge, survivors keep support ≥ k-2. Each round is ONE Spark job
-(the pair-set write) with the surviving count riding as an ``observe``
-metric; the pair set only SHRINKS, so count equality is an exact
+(the pair-set write) with the surviving count as its observed ``n``
+(state.py); the pair set only SHRINKS, so count equality is an exact
 fixpoint test. The per-round triangle join is the dominant cost —
 O(Σ wedge counts) — which the canonical orientation bounds by
 low-degree-first wedges exactly as in triangle counting; at 100 TB the
@@ -27,7 +27,7 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from montecarlopagerank_spark.operators.propagate import pairs
@@ -71,11 +71,8 @@ def k_truss(
     t0 = time.time()
     store = StateStore(spark)
 
-    obs0 = Observation("truss_init")
-    p = store.materialize(
-        pairs(edges).observe(obs0, F.count(F.lit(1)).alias("n")), "truss_pairs"
-    )
-    prev = int(obs0.get["n"])
+    p, row = store.observe(pairs(edges), "truss_pairs")
+    prev = row["n"]
     rounds, converged = 0, k <= 2
     if k > 2:
         for it in range(max_rounds):
@@ -83,14 +80,11 @@ def k_truss(
                 converged = True
                 break
             keep = _support(p).filter(F.col("sup") >= k - 2).select("x", "y")
-            obs = Observation(f"truss_round_{it}")
             # inner join: zero-support edges have no credit row and drop
-            p_next = (
-                p.join(keep.hint("shuffle_hash"), ["x", "y"], "left_semi")
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-            )
-            p = store.materialize(p_next, "truss_pairs")
-            cur = int(obs.get["n"])
+            p, row = store.observe(
+                p.join(keep.hint("shuffle_hash"), ["x", "y"], "left_semi"),
+                "truss_pairs")
+            cur = row["n"]
             rounds += 1
             if cur == prev:  # shrink-only state: equal count ⇔ fixpoint
                 converged = True

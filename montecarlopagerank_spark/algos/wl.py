@@ -154,8 +154,7 @@ def wl_colors(
         prev_k = k
 
     d.unpersist()
-    out = colors.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
+    out = fill(colors.persist(StorageLevel.MEMORY_AND_DISK))
     return out, {
         "rounds": done,
         "stable": stable,

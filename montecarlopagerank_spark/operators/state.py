@@ -30,18 +30,30 @@ observed metrics. ``checkpoint.open_store`` picks the store for a run.
 Scratch and checkpoint roots may be plain paths or ``file:``/DFS URIs;
 Spark takes them as given, and every other file operation (manifests,
 listings, clears, the MC CSR blocks) resolves them via ``_resolve_fs``.
+
+The observed write (``observe``) is the one way a loop reads a scalar off
+its state. The metrics ride the write's one Spark job as a
+``DataFrame.observe`` observation, which always carries ``n``, the
+number of rows written; the row is read only after the write has run.
+A separate ``count()`` or aggregate per superstep would be a second job
+with its own fixed schedule and IO cost: the reference pays exactly that
+with a ``lookup(-1)`` driver action per superstep for its dangling mass
+(PowerIterationPageRank.scala:111; SURVEY.md §3.4). An empty relation
+still resolves: ``n`` is 0 and sums are None.
 """
 
 from __future__ import annotations
 
 import atexit
+import functools
 import os
 import shutil
 import tempfile
-from typing import Callable
+from typing import Any, Callable
 
 from pyarrow import fs as pafs
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 # scratch roots pending cleanup: results returned to callers may still scan
 # their scratch slot (the recompute source for a persisted-but-evicted
@@ -135,10 +147,35 @@ class StateStore:
         metrics: dict | Callable[[], dict],
     ) -> dict[str, DataFrame]:
         """Commit superstep ``step``: materialize each table under its
-        name and return the re-read frames. ``metrics`` (a dict, or a
-        zero-argument callable returning one once the write has run) is
-        what the durable subclass records; scratch keeps nothing."""
+        name and return the re-read frames. ``metrics`` (a dict, or from
+        ``observe`` a zero-argument callable returning one once the write
+        has run) is what the durable subclass records; scratch keeps
+        nothing."""
         return {name: self.materialize(df, name) for name, df in tables.items()}
+
+    def observe(
+        self, df: DataFrame, name: str, *metrics: Column,
+        keep: tuple[str, ...] | None = None,
+        step: int | None = None,
+        record: Callable[[dict], Any] | None = None,
+    ) -> tuple[DataFrame, Any]:
+        """The observed write (module docstring): ``df`` written as
+        ``name`` with ``n`` and ``metrics`` observed on its one job.
+        ``keep`` projects after the observation, so a metric may read a
+        column the state drops. With ``step`` the write commits that
+        superstep (``save_step``) and ``record(row)`` is the step's
+        manifest metrics. Returns the re-read frame and ``record(row)``,
+        or the row itself without ``record``."""
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("n"), *metrics)
+        if keep is not None:
+            df = df.select(*keep)
+        row = functools.cache(lambda: (record or (lambda r: r))(obs.get))
+        if step is None:
+            out = self.materialize(df, name)
+        else:
+            out = self.save_step(step, {name: df}, row)[name]
+        return out, row()
 
     def close(self) -> None:
         if self._own:

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from montecarlopagerank_spark.algos.pagerank_mc import pagerank_monte_carlo
 from montecarlopagerank_spark.algos.pagerank_power import pagerank_power
@@ -71,6 +72,115 @@ def test_state_reread_runs_no_job(spark, tmp_path, monkeypatch, durable):
     assert out.schema == inferred
     assert all(f.nullable for f in inferred) and not df.schema["v"].nullable
     assert sorted(out.collect()) == sorted(df.collect())
+
+
+def _jobs(spark, group, fn):
+    """``fn()``'s result and the Spark jobs it ran (job group + status
+    tracker)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("aqe", [True, False], ids=["aqe", "no-aqe"])
+def test_observe_runs_the_jobs_of_materialize(spark, tmp_path, aqe):
+    """An observed write runs exactly the Spark jobs of a plain
+    ``materialize`` of the same frame: its metrics ride the write."""
+    from montecarlopagerank_spark.operators.state import StateStore
+
+    key = "spark.sql.adaptive.enabled"
+    orig = spark.conf.get(key)
+    spark.conf.set(key, str(aqe).lower())
+    try:
+        df = spark.range(40).selectExpr("id % 7 AS k", "id AS v").groupBy(
+            "k").agg(F.sum("v").alias("s"))
+        store = StateStore(spark, str(tmp_path / "s"))
+        _, plain = _jobs(spark, f"mat-{aqe}", lambda: store.materialize(df, "a"))
+        (out, row), observed = _jobs(
+            spark, f"obs-{aqe}",
+            lambda: store.observe(df, "b", F.sum("s").alias("t")))
+    finally:
+        spark.conf.set(key, orig)
+    assert observed == plain >= 1
+    assert row == {"n": 7, "t": sum(range(40))}
+    assert out.count() == 7
+
+
+def test_observe_empty_frame(spark, tmp_path):
+    """An empty write still resolves its observation: ``n`` is 0 and a
+    sum is None."""
+    from montecarlopagerank_spark.operators.state import StateStore
+
+    store = StateStore(spark, str(tmp_path / "s"))
+    empty = spark.createDataFrame([], "v long, x double")
+    out, row = store.observe(empty, "e", F.sum("x").alias("s"))
+    assert row == {"n": 0, "s": None}
+    assert out.count() == 0
+
+
+def test_observe_keep_drops_observed_column(spark, tmp_path):
+    """With ``keep`` only the kept columns are written, while a metric
+    reads a column the state drops."""
+    from montecarlopagerank_spark.operators.state import StateStore
+
+    store = StateStore(spark, str(tmp_path / "s"))
+    df = spark.range(10).selectExpr("id AS v", "id % 2 = 0 AS changed")
+    out, row = store.observe(
+        df, "k", F.sum(F.col("changed").cast("long")).alias("nc"), keep=("v",))
+    assert row == {"n": 10, "nc": 5}
+    assert out.columns == ["v"]
+    assert spark.read.parquet(str(tmp_path / "s" / "k_0")).columns == ["v"]
+    assert sorted(r["v"] for r in out.collect()) == list(range(10))
+
+
+def test_observe_step_commits_record(spark, tmp_path):
+    """On a durable store with ``step``, the step's manifest metrics are
+    ``record(row)``, and ``observe`` returns that same dict."""
+    ck = CheckpointManager(spark, str(tmp_path / "ck"), {"algo": "t"})
+    df = spark.range(5).selectExpr("id AS v", "CAST(id AS double) AS x")
+    out, rec = ck.observe(
+        df, "state", F.sum("x").alias("s"), step=0,
+        record=lambda r: {"rows": r["n"], "total": r["s"], "done": r["n"] > 3})
+    assert rec == {"rows": 5, "total": 10.0, "done": True}
+    assert ck.manifest(0)["metrics"] == rec
+    assert ck.last_complete_step() == 0
+    assert sorted(r["v"] for r in out.collect()) == list(range(5))
+
+
+def _edgeless_runs():
+    from montecarlopagerank_spark.algos.densest import densest_subgraph
+    from montecarlopagerank_spark.algos.hyperanf import neighborhood_function
+    from montecarlopagerank_spark.algos.mis import luby_mis
+    from montecarlopagerank_spark.algos.scc import strongly_connected_components
+    from montecarlopagerank_spark.algos.toposort import kahn_peel
+    from montecarlopagerank_spark.algos.truss import k_truss
+    from montecarlopagerank_spark.algos.wl import wl_colors
+
+    # (run, info key, its value on an edgeless input)
+    return {
+        "k_truss": (lambda s, e: k_truss(s, e, k=3), "converged", True),
+        "luby_mis": (luby_mis, "converged", True),
+        "densest_subgraph": (densest_subgraph, "converged", True),
+        "scc": (strongly_connected_components, "converged", True),
+        "kahn_peel": (kahn_peel, "converged", True),
+        "neighborhood_function": (neighborhood_function, "reachable_pairs", 0),
+        "wl_colors": (wl_colors, "stable", True),
+    }
+
+
+@pytest.mark.parametrize("algo", sorted(_edgeless_runs()))
+def test_observed_fixpoint_on_edgeless_input(spark, algo):
+    """A fixpoint loop whose observed writes see an empty relation still
+    resolves every observation and returns its edgeless result."""
+    run, key, want = _edgeless_runs()[algo]
+    out, info = run(spark, spark.createDataFrame([], "src long, dst long"))
+    assert info[key] == want
+    if algo != "neighborhood_function":
+        assert out.count() == 0
 
 
 def test_pi_resume_identical(spark, gnutella_mini, tmp_path):
