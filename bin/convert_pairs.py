@@ -2,7 +2,9 @@
 
 Mirrors the reference's third job (`ConvertPairsToAdjacencyList`,
 ConvertNodeLinksToAdjacencyList.scala:26-47) Spark-first: SQL string
-functions + a partial-aggregable collect_list instead of groupByKey.
+functions parse the pairs, and the engine's adjacency builder
+(operators/adjacency.py ``build_adjacency``, a partial-aggregable
+collect_list instead of groupByKey) groups them.
 
     spark-submit --py-files dist/engine.zip bin/convert_pairs.py \
         --input pairs.txt [--output out_dir]
@@ -28,6 +30,7 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("convert-pairs").getOrCreate()
 
+    from montecarlopagerank_spark.operators.adjacency import build_adjacency
     from montecarlopagerank_spark.sources.adjacency_text import write_adjacency_text
 
     lines = spark.read.text(args.input)
@@ -36,10 +39,7 @@ def main() -> None:
         F.element_at(toks, 1).cast("long").alias("src"),
         F.element_at(toks, 2).cast("long").alias("dst"),
     )
-    adj = pairs.groupBy("src").agg(
-        F.sort_array(F.collect_list("dst")).alias("neighbours")
-    )
-    write_adjacency_text(adj, out)
+    write_adjacency_text(build_adjacency(pairs), out)
     print(out)
     spark.stop()
 

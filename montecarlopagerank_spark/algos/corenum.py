@@ -25,7 +25,7 @@ min(h, |{w : h_t(w) ≥ h}|). So the per-round shape is
 
 Scale shape: pair set exchanged once and pinned; per round the O(V)
 h-table moves twice (join + final groupBy); everything map-side-
-combinable is. ``fuse_rounds`` consecutive rounds compile into ONE Spark
+combinable is. ``FUSE_ROUNDS`` consecutive rounds compile into ONE Spark
 job between state materializations (StateStore, flat plans at segment
 granularity): the h-sequence is a monotone fixpoint iteration, so
 segment rounds past convergence recompute the identical h — results are
@@ -37,7 +37,7 @@ the deg≥1 vertices — every sym.u appears in every round's histogram),
 so no old⋈new reconciliation join is needed; a second consumer would
 double execution per fused round (the two consumers exchange by
 different keys, so ReusedExchange cannot dedup them — measured 5×
-worse at fuse_rounds=4 with the old-value join in the chain).
+worse at FUSE_ROUNDS=4 with the old-value join in the chain).
 Per-round convergence is detected exactly anyway: Σh rides each round
 as an observed metric, and h(v) is monotone non-increasing, so equal
 consecutive sums ⇔ a zero-change round. Rounds needed = H-index
@@ -57,20 +57,19 @@ from pyspark.storagelevel import StorageLevel
 from montecarlopagerank_spark.operators.propagate import both_ways, pairs, pin
 from montecarlopagerank_spark.operators.state import StateStore
 
+# H-index rounds per Spark job (module docstring); read at call time
+FUSE_ROUNDS = 2
+
 
 def core_numbers(
     spark: SparkSession,
     edges: DataFrame,
     max_rounds: int = 100,
-    fuse_rounds: int = 2,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` → (``cores(v, coreness:long)``, info) over the
     undirected simple closure (self-loops dropped). Isolated /
     self-loop-only vertices get coreness 0. ``info['converged']`` is
-    True iff a zero-change round happened within ``max_rounds``.
-    ``fuse_rounds`` H-index rounds run as ONE Spark job per state
-    materialization; any value ≥ 1 yields identical results (module
-    docstring — the iteration is a monotone fixpoint)."""
+    True iff a zero-change round happened within ``max_rounds``."""
     t0 = time.time()
     store = StateStore(spark)
 
@@ -98,7 +97,7 @@ def core_numbers(
     # node and the observation would never resolve.
     rounds, converged = 0, prev_sum == 0
     while rounds < max_rounds and not converged:
-        seg = min(fuse_rounds, max_rounds - rounds)
+        seg = min(FUSE_ROUNDS, max_rounds - rounds)
         obs_list: list[Observation] = []
         cur = h
         for j in range(seg):

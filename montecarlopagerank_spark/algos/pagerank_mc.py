@@ -23,7 +23,7 @@ one trial per occupied vertex per step) and exactly ``iterations``
 supersteps.
 
 Scale shape — ONE superstep loop, checkpointed or not: the loop runs in
-segments of ``fuse_steps`` supersteps, each compiled into ONE Spark job
+segments of ``FUSE_STEPS`` supersteps, each compiled into ONE Spark job
 with EXACTLY ONE shuffle per superstep:
 
 1. each superstep is ONE stage: [complete (block_id, rkey) coalescing
@@ -68,7 +68,7 @@ table: the segment's ζ accumulator (tag 1) and the carry-over coupon
 state (tag 0), committed by the run's one store as ``save_step(seg[-1],
 ...)``: a scratch slot without ``checkpoint_dir``, a durable step with
 it — so a resumable run commits once per SEGMENT (up to
-``fuse_steps`` supersteps), and ``resume=True`` reads the last committed
+``FUSE_STEPS`` supersteps), and ``resume=True`` reads the last committed
 table back and continues at ``seg[-1] + 1``. Segment boundaries never
 change the walks (the RNG is seeded per logical (block, step)), so
 checkpointed, scratch and resumed runs give byte-identical ranks.
@@ -152,6 +152,19 @@ EPS = 0.15
 # codegen-friendly; fall back to an interpreted array fold (O(B) per row
 # either way, but the WHEN chain compiles to straight-line comparisons)
 MAX_CHAINED_BOUNDS = 512
+
+# supersteps compiled into ONE Spark job (a segment) and, with
+# ``checkpoint_dir``, committed together: the resume granularity. It
+# bounds logical-plan size, not correctness: any value ≥ 1 gives
+# identical ranks (the RNG is seeded per logical (block, step), never
+# per job). The fused plan is a logical TREE, not a DAG: each step's
+# exchange is consumed by the next step's agg AND the segment's ζ
+# branch (×2/step); ReusedExchange dedups execution but the ANALYZER
+# walks the un-deduped tree, so DeduplicateRelations pays O(2^k) per
+# segment. k=6 is ~seconds of driver CPU at any data size (hub splits
+# add no plan branches: they happen inside the walk kernel). Read at
+# call time.
+FUSE_STEPS = 6
 
 
 def route_expr(
@@ -469,7 +482,6 @@ def pagerank_monte_carlo(
     checkpoint_dir: str | None = None,
     resume: bool = False,
     state_root: str | None = None,
-    fuse_steps: int = 6,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """Returns (``ranks(v:long, rank:double)``, info). Rank = ζ_v / Σζ.
 
@@ -479,20 +491,6 @@ def pagerank_monte_carlo(
     are ≈ 2 blocks per core slot (min 4k edges/block); the default
     therefore varies with cluster size — pass an explicit value when
     outputs must be identical across different clusters.
-
-    ``fuse_steps`` is how many supersteps are compiled into ONE Spark job
-    (a segment) before the superstep chain is materialized — and, with
-    ``checkpoint_dir``, committed, so it is also the resume granularity;
-    it bounds logical-plan size, not correctness — any value ≥ 1 produces
-    identical ranks (the RNG is seeded per logical (block, step), never
-    per job). The fused plan is a logical TREE, not a DAG: each step's
-    exchange is consumed by the next step's agg AND the segment's ζ
-    branch (×2/step) — ReusedExchange dedups execution but the ANALYZER
-    walks the un-deduped tree, so DeduplicateRelations pays O(2^k) per
-    segment. The default k=6 is ~seconds of driver CPU at any data size
-    (hub splits add no plan branches: they happen inside the walk
-    kernel). Raise it only for graphs whose per-step work dwarfs the
-    per-job fixed cost.
 
     ``state_root`` relocates the scratch state (CSR blocks + segment
     state tables). It may be a filesystem URI (``file://``, ``hdfs://``,
@@ -628,7 +626,7 @@ def pagerank_monte_carlo(
             df.unpersist()  # degree table, block assignment) end with
             # setup — the loop reads only the CSR blocks and bounds
         t_loop = time.time()
-        # WHOLE-LOOP FUSION: ``fuse_steps`` supersteps compile into ONE
+        # WHOLE-LOOP FUSION: ``FUSE_STEPS`` supersteps compile into ONE
         # Spark job. Per step the plan is [complete (block_id, rkey) agg →
         # sort → walk kernel (hub splits included) → expression route →
         # exchange by block_id] — a single stage, because the agg and the
@@ -654,7 +652,7 @@ def pagerank_monte_carlo(
         # no block files for the kernel to load)
         while step < iterations and block_ids:
             t_seg = time.time()
-            seg = list(range(step, min(step + fuse_steps, iterations)))
+            seg = list(range(step, min(step + FUSE_STEPS, iterations)))
             obs_by_step: dict[int, Observation] = {}
             branches = [z_acc]
             for s in seg:
@@ -756,7 +754,7 @@ def pagerank_monte_carlo(
         "loop_secs": round(t_loop_end - t_loop, 3),
         "step_secs": step_secs,
         "step_walk_totals": step_totals,
-        "fuse_steps": fuse_steps,
+        "fuse_steps": FUSE_STEPS,
         # setup breakdown: plan = the degree job (+ the replica totals
         # with hubs); csr_write = the pack job — edge shuffle, assign
         # kernel and Arrow pack writing the blocks (the O(E) part); warm

@@ -50,12 +50,15 @@ from pyspark.storagelevel import StorageLevel
 from montecarlopagerank_spark.operators.propagate import fill, pin
 from montecarlopagerank_spark.operators.state import StateStore
 
+# peel rounds fused into one Spark job per state write (module
+# docstring); read at call time
+ROUNDS_PER_JOB = 4
+
 
 def kahn_peel(
     spark: SparkSession,
     edges: DataFrame,
     max_rounds: int | None = None,
-    rounds_per_job: int = 4,
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``edges(src, dst)`` → (``layers(v, layer)``, info) over the directed
     simple graph (parallel edges deduped, self-loops kept — a self-loop
@@ -102,9 +105,9 @@ def kahn_peel(
     done, converged = 0, False
     while max_rounds is None or done < max_rounds:
         k = (
-            rounds_per_job
+            ROUNDS_PER_JOB
             if max_rounds is None
-            else min(rounds_per_job, max_rounds - done)
+            else min(ROUNDS_PER_JOB, max_rounds - done)
         )
         st = vstate
         for _ in range(k):

@@ -24,15 +24,20 @@ from pyspark.sql import functions as F
 from montecarlopagerank_spark.operators.propagate import pairs
 
 
-def _oriented(edges: DataFrame) -> DataFrame:
-    """Orient each undirected edge by (degree, vid) ascending → (lo, hi)."""
-    und = pairs(edges)
-    deg = (
+def _degree(und: DataFrame) -> DataFrame:
+    """``(v, d)``: the simple undirected degree over the pair set ``und``."""
+    return (
         und.select(F.col("x").alias("v"))
         .unionByName(und.select(F.col("y").alias("v")))
         .groupBy("v")
         .agg(F.count("*").alias("d"))
     )
+
+
+def _oriented(edges: DataFrame) -> DataFrame:
+    """Orient each undirected edge by (degree, vid) ascending → (lo, hi)."""
+    und = pairs(edges)
+    deg = _degree(und)
     dx = deg.select(F.col("v").alias("x"), F.col("d").alias("dx"))
     dy = deg.select(F.col("v").alias("y"), F.col("d").alias("dy"))
     j = und.join(dx, "x").join(dy, "y")
@@ -45,9 +50,9 @@ def _oriented(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count(spark: SparkSession, edges: DataFrame) -> int:
-    """Total triangle count (undirected closure)."""
-    o = _oriented(edges).persist()
+def _triangles(o: DataFrame) -> DataFrame:
+    """The closed triangles ``(b, c, apex)`` of the oriented edges ``o``,
+    each once: apex is the triangle's (degree, vid)-smallest vertex."""
     a = o.select(F.col("lo").alias("apex"), F.col("hi").alias("b"))
     b = o.select(F.col("lo").alias("apex"), F.col("hi").alias("c"))
     wedges = a.join(b, "apex").filter(F.col("b") < F.col("c"))
@@ -56,30 +61,27 @@ def triangle_count(spark: SparkSession, edges: DataFrame) -> int:
     closing = o.select(F.col("lo").alias("b"), F.col("hi").alias("c")).unionByName(
         o.select(F.col("hi").alias("b"), F.col("lo").alias("c"))
     )
-    n = wedges.join(closing, ["b", "c"], "left_semi").count()
+    return wedges.join(closing, ["b", "c"], "left_semi")
+
+
+def triangle_count(spark: SparkSession, edges: DataFrame) -> int:
+    """Total triangle count (undirected closure)."""
+    o = _oriented(edges).persist()
+    n = _triangles(o).count()
     o.unpersist()
     return n
 
 
 def triangles_per_vertex(spark: SparkSession, edges: DataFrame) -> DataFrame:
     """``(v:long, triangles:long)`` — per-vertex triangle participation."""
-    o = _oriented(edges).persist()
-    a = o.select(F.col("lo").alias("apex"), F.col("hi").alias("b"))
-    b2 = o.select(F.col("lo").alias("apex"), F.col("hi").alias("c"))
-    wedges = a.join(b2, "apex").filter(F.col("b") < F.col("c"))
-    closing = o.select(F.col("lo").alias("b"), F.col("hi").alias("c")).unionByName(
-        o.select(F.col("hi").alias("b"), F.col("lo").alias("c"))
-    )
-    tri = wedges.join(closing, ["b", "c"], "left_semi")
-    per_v = (
+    tri = _triangles(_oriented(edges))
+    return (
         tri.select(F.col("apex").alias("v"))
         .unionByName(tri.select(F.col("b").alias("v")))
         .unionByName(tri.select(F.col("c").alias("v")))
         .groupBy("v")
         .agg(F.count("*").alias("triangles"))
     )
-    o.unpersist()
-    return per_v
 
 
 def four_clique_count(spark: SparkSession, edges: DataFrame) -> int:
@@ -100,13 +102,7 @@ def four_clique_count(spark: SparkSession, edges: DataFrame) -> int:
     common neighbours; nothing ever squares a raw hub degree.
     """
     o = _oriented(edges).persist()
-    a = o.select(F.col("lo").alias("apex"), F.col("hi").alias("b"))
-    b2 = o.select(F.col("lo").alias("apex"), F.col("hi").alias("c"))
-    wedges = a.join(b2, "apex").filter(F.col("b") < F.col("c"))
-    closing = o.select(F.col("lo").alias("b"), F.col("hi").alias("c")).unionByName(
-        o.select(F.col("hi").alias("b"), F.col("lo").alias("c"))
-    )
-    tri = wedges.join(closing, ["b", "c"], "left_semi")
+    tri = _triangles(o)
     e1 = o.select(F.col("lo").alias("apex"), F.col("hi").alias("d"))
     e2 = o.select(F.col("lo").alias("b"), F.col("hi").alias("d"))
     e3 = o.select(F.col("lo").alias("c"), F.col("hi").alias("d"))
@@ -134,13 +130,7 @@ def clustering_coefficient(spark: SparkSession, edges: DataFrame) -> DataFrame:
     multiply+divide — bit-identical to any SQL twin computing
     ``2.0·T/(d·(d−1))``, so the value is hash-checkable.
     """
-    und = pairs(edges)
-    deg = (
-        und.select(F.col("x").alias("v"))
-        .unionByName(und.select(F.col("y").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("deg"))
-    )
+    deg = _degree(pairs(edges)).withColumnRenamed("d", "deg")
     tri = triangles_per_vertex(spark, edges)
     d = F.col("deg").cast("double")
     return (

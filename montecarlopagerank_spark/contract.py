@@ -26,7 +26,12 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from montecarlopagerank_spark.operators.edges import _typed_edges, transcript_edges
+from montecarlopagerank_spark.operators.edges import (
+    _typed_edges,
+    degrees,
+    transcript_edges,
+)
+from montecarlopagerank_spark.operators.propagate import both_ways, pairs
 from montecarlopagerank_spark.sources.transcripts import transcripts_from_events
 
 EPS = 0.15
@@ -1773,10 +1778,9 @@ WHERE rn <= {topk}"""
 # ---------------------------------------------------------------------------
 
 
-def _string_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typed edges with string vertex keys ``kind#key`` (oracle-comparable
-    without the vid dictionary)."""
-    ts = transcripts_from_events(spark, sf_dir)
+def _typed_string_edges_of(ts: DataFrame) -> DataFrame:
+    """Typed edges of transcripts ``ts`` with string vertex keys
+    ``kind#key`` (oracle-comparable without the vid dictionary)."""
     te = _typed_edges(ts)
     return te.select(
         F.concat("src_kind", F.lit("#"), "src_key").alias("src"),
@@ -1785,14 +1789,58 @@ def _string_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _vid_graph(spark: SparkSession, sf_dir: str):
-    """(edges, vertices) with dense long vids + the vid→string-key map."""
-    ts = transcripts_from_events(spark, sf_dir)
-    edges, vertices = transcript_edges(ts)
-    key = vertices.select(
+def _string_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The string-keyed typed edges of the transcripts in ``sf_dir``."""
+    return _typed_string_edges_of(transcripts_from_events(spark, sf_dir))
+
+
+def _vkey(vertices: DataFrame) -> DataFrame:
+    """The ``vid → vkey`` map (``kind#key``) of a vertex table."""
+    return vertices.select(
         "vid", F.concat("kind", F.lit("#"), "key").alias("vkey")
     )
-    return edges, vertices, key
+
+
+def _vid_graph(spark: SparkSession, sf_dir: str):
+    """(edges, vertices) with dense long vids + the vid→string-key map."""
+    edges, vertices = transcript_edges(transcripts_from_events(spark, sf_dir))
+    return edges, vertices, _vkey(vertices)
+
+
+def _scaled(ranks: DataFrame, key: DataFrame, n: int,
+            name: str = "rank_scaled") -> DataFrame:
+    """``(v = vkey, name = round(rank·n, 6))`` of a PageRank result."""
+    return ranks.join(key, ranks.v == key.vid).select(
+        F.col("vkey").alias("v"),
+        F.round(F.col("rank") * F.lit(float(n)), 6).alias(name),
+    )
+
+
+def _tool_sources(e: DataFrame) -> DataFrame:
+    """``(v)``: the tool vertex of every edge into one (a source set)."""
+    return e.filter(F.col("dst").startswith("tool#")).select(
+        F.col("dst").alias("v")
+    )
+
+
+def _tool_landmarks(e: DataFrame) -> DataFrame:
+    """``(v)``: the distinct tool vertices of ``e`` (a landmark set)."""
+    return (
+        e.select(F.col("src").alias("v"))
+        .unionByName(e.select(F.col("dst").alias("v")))
+        .filter(F.col("v").startswith("tool#"))
+        .distinct()
+    )
+
+
+def _size_hist(df: DataFrame, label: str, n_col: str) -> DataFrame:
+    """``(size, n_col)``: how many ``label`` groups of ``df`` have each size."""
+    sizes = df.groupBy(label).agg(F.count(F.lit(1)).alias("size"))
+    return (
+        sizes.groupBy("size")
+        .agg(F.count(F.lit(1)).alias(n_col))
+        .select(F.col("size").cast("long").alias("size"), n_col)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1964,15 +2012,6 @@ def q_edge_delta_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _typed_string_edges_of(ts: DataFrame) -> DataFrame:
-    te = _typed_edges(ts)
-    return te.select(
-        F.concat("src_kind", F.lit("#"), "src_key").alias("src"),
-        F.concat("dst_kind", F.lit("#"), "dst_key").alias("dst"),
-        "kind",
-    )
-
-
 def q_turn_chain_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _string_edges(spark, sf_dir)
@@ -2000,20 +2039,9 @@ def q_tool_usage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_degree_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _string_edges(spark, sf_dir)
-    out_d = e.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("out_deg"))
-    in_d = e.groupBy(F.col("dst").alias("v")).agg(F.count("*").alias("in_deg"))
-    verts = e.select(F.col("src").alias("v")).unionByName(
-        e.select(F.col("dst").alias("v"))
-    ).distinct()
     return (
-        verts.join(out_d, "v", "left")
-        .join(in_d, "v", "left")
-        .select(
-            "v",
-            F.coalesce("in_deg", F.lit(0)).alias("in_deg"),
-            F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-        )
+        degrees(_string_edges(spark, sf_dir))
+        .select("v", "in_deg", "out_deg")
         .orderBy(F.desc("in_deg"), F.asc("v"))
         .limit(20)
     )
@@ -2023,18 +2051,9 @@ def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Out-degree histogram of the directed multigraph (vertices with no
     out-edges appear as out_deg 0) — the first chart anyone draws on a
     link graph; single partial-aggregable two-level groupBy."""
-    e = _string_edges(spark, sf_dir)
-    verts = (
-        e.select(F.col("src").alias("v"))
-        .unionByName(e.select(F.col("dst").alias("v")))
-        .distinct()
-    )
-    outd = e.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("out_deg"))
-    full = verts.join(outd, "v", "left").select(
-        F.coalesce("out_deg", F.lit(0)).alias("out_deg")
-    )
     return (
-        full.groupBy("out_deg")
+        degrees(_string_edges(spark, sf_dir))
+        .groupBy("out_deg")
         .agg(F.count("*").alias("n_vertices"))
         .select(F.col("out_deg").cast("long").alias("out_deg"), "n_vertices")
     )
@@ -2051,18 +2070,10 @@ def q_degree_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     The at-scale path is ``approx_percentile`` (sketch-based, one pass,
     no global sort); tests/test_modularity.py pins it within 1% of the
     exact values on the same data."""
-    e = _string_edges(spark, sf_dir)
-    verts = (
-        e.select(F.col("src").alias("v"))
-        .unionByName(e.select(F.col("dst").alias("v")))
-        .distinct()
-    )
-    outd = e.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("out_deg"))
-    full = verts.join(outd, "v", "left").select(
-        F.coalesce("out_deg", F.lit(0)).alias("out_deg")
-    )
     ps = F.array(*[F.lit(p) for p in DEGREE_QUANTILE_PS])
-    qs = full.agg(F.percentile("out_deg", ps).alias("qs"))
+    qs = degrees(_string_edges(spark, sf_dir)).agg(
+        F.percentile("out_deg", ps).alias("qs")
+    )
     return qs.select(F.posexplode("qs").alias("i", "qv")).select(
         F.element_at(ps, F.col("i") + 1).alias("p"),
         F.round("qv", 6).alias("q_r6"),
@@ -2075,15 +2086,7 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     PRL 2002) — one number separating hub-attracts-hub graphs from
     hub-attracts-leaf graphs like this one. Pure aggregates (corr is
     sums/counts), rounded to 6 for the fp-stable hash."""
-    e = _string_edges(spark, sf_dir)
-    und = (
-        e.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("x"), F.greatest("src", "dst").alias("y"))
-        .distinct()
-    )
-    sym = und.select(F.col("x").alias("u"), F.col("y").alias("w")).unionByName(
-        und.select(F.col("y").alias("u"), F.col("x").alias("w"))
-    )
+    sym = both_ways(pairs(_string_edges(spark, sf_dir)), "u", "w")
     deg = sym.groupBy("u").agg(F.count("*").alias("d"))
     du = deg.withColumnRenamed("u", "a").withColumnRenamed("d", "du")
     dw = deg.withColumnRenamed("u", "b").withColumnRenamed("d", "dw")
@@ -2105,16 +2108,8 @@ def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-joined with the 4-row k list (broadcast); map-side-combined
     counts; φ rounded to 6 with the same operation order both engines
     (NULL when fewer than two rich vertices)."""
-    e = _string_edges(spark, sf_dir)
-    und = (
-        e.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("x"), F.greatest("src", "dst").alias("y"))
-        .distinct()
-    )
-    sym = und.select(F.col("x").alias("u"), F.col("y").alias("w")).unionByName(
-        und.select(F.col("y").alias("u"), F.col("x").alias("w"))
-    )
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+    und = pairs(_string_edges(spark, sf_dir))
+    deg = both_ways(und, "u", "w").groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     ks = spark.createDataFrame([(k,) for k in RICH_KS], "k long")
     nr = (
         deg.crossJoin(F.broadcast(ks))
@@ -2167,11 +2162,7 @@ def q_pagerank_power_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges, vertices, key = _vid_graph(spark, sf_dir)
     ranks, info = pagerank_power(spark, edges, vertices, tol=0.0, max_iters=5)
-    n = info["n"]
-    return ranks.join(key, ranks.v == key.vid).select(
-        F.col("vkey").alias("v"),
-        F.round(F.col("rank") * F.lit(float(n)), 6).alias("rank_scaled"),
-    )
+    return _scaled(ranks, key, info["n"])
 
 
 def q_pagerank_weighted_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2190,11 +2181,7 @@ def q_pagerank_weighted_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks, info = pagerank_power(
         spark, weighted, vertices, tol=0.0, max_iters=5, weight_col="weight"
     )
-    n = info["n"]
-    return ranks.join(key, ranks.v == key.vid).select(
-        F.col("vkey").alias("v"),
-        F.round(F.col("rank") * F.lit(float(n)), 6).alias("rank_scaled"),
-    )
+    return _scaled(ranks, key, info["n"])
 
 
 def q_pagerank_warm_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2221,9 +2208,7 @@ def q_pagerank_warm_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts").cast("timestamp")) <= cut
     )
     e_old, v_old = transcript_edges(transcripts_of_events(ev))
-    key_old = v_old.select(
-        "vid", F.concat("kind", F.lit("#"), "key").alias("vkey")
-    )
+    key_old = _vkey(v_old)
     stale, _ = pagerank_power(spark, e_old, v_old, tol=0.0, max_iters=5)
     stale_str = stale.join(key_old, stale.v == key_old.vid).select(
         "vkey", "rank"
@@ -2235,11 +2220,7 @@ def q_pagerank_warm_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks, info = pagerank_power(
         spark, edges, vertices, tol=0.0, max_iters=3, init_ranks=init
     )
-    n = info["n"]
-    return ranks.join(key, ranks.v == key.vid).select(
-        F.col("vkey").alias("v"),
-        F.round(F.col("rank") * F.lit(float(n)), 6).alias("rank_scaled"),
-    )
+    return _scaled(ranks, key, info["n"])
 
 
 def q_pagerank_power_top20(
@@ -2259,12 +2240,11 @@ def q_pagerank_power_top20(
     ranks, info = pagerank_power(spark, edges, vertices, tol=0.0, max_iters=steps)
     assert info["deltas"][-1] < 1e-6, \
         f"not converged by {steps}: {info['deltas'][-1]}"
-    n = info["n"]
-    scored = ranks.join(key, ranks.v == key.vid).select(
-        F.col("vkey").alias("v"),
-        F.round(F.col("rank") * F.lit(float(n)), 6).alias("rank_scaled"),
+    return (
+        _scaled(ranks, key, info["n"])
+        .orderBy(F.desc("rank_scaled"), F.asc("v"))
+        .limit(20)
     )
-    return scored.orderBy(F.desc("rank_scaled"), F.asc("v")).limit(20)
 
 
 def q_pagerank_mc_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2323,12 +2303,7 @@ def q_connected_components_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges, vertices, key = _vid_graph(spark, sf_dir)
     cc = connected_components(spark, edges, vertices)
-    sizes = cc.groupBy("component").agg(F.count("*").alias("size"))
-    return (
-        sizes.groupBy("size")
-        .agg(F.count("*").alias("n_components"))
-        .select(F.col("size").cast("long").alias("size"), "n_components")
-    )
+    return _size_hist(cc, "component", "n_components")
 
 
 def q_harmonic_centrality_tools(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2338,13 +2313,7 @@ def q_harmonic_centrality_tools(spark: SparkSession, sf_dir: str) -> DataFrame:
     from montecarlopagerank_spark.algos.bfs import harmonic_centrality
 
     e = _string_edges(spark, sf_dir).select("src", "dst")
-    lmk = (
-        e.select(F.col("src").alias("v"))
-        .unionByName(e.select(F.col("dst").alias("v")))
-        .filter(F.col("v").startswith("tool#"))
-        .distinct()
-    )
-    h, _info = harmonic_centrality(spark, e, lmk, max_hops=6)
+    h, _info = harmonic_centrality(spark, e, _tool_landmarks(e), max_hops=6)
     return h.select("v", F.round("harmonic", 6).alias("harmonic_r6"))
 
 
@@ -2355,13 +2324,7 @@ def q_closeness_centrality_tools(spark: SparkSession, sf_dir: str) -> DataFrame:
     from montecarlopagerank_spark.algos.bfs import closeness_centrality
 
     e = _string_edges(spark, sf_dir).select("src", "dst")
-    lmk = (
-        e.select(F.col("src").alias("v"))
-        .unionByName(e.select(F.col("dst").alias("v")))
-        .filter(F.col("v").startswith("tool#"))
-        .distinct()
-    )
-    c, _info = closeness_centrality(spark, e, lmk, max_hops=6)
+    c, _info = closeness_centrality(spark, e, _tool_landmarks(e), max_hops=6)
     return c.select(
         "v", F.round("closeness", 6).alias("closeness_r6"), "reached"
     )
@@ -2381,12 +2344,7 @@ def q_scc_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     scc, info = strongly_connected_components(spark, edges, vertices)
     if not info["converged"]:
         raise RuntimeError(f"scc did not converge: {info}")
-    sizes = scc.groupBy("scc").agg(F.count("*").alias("size"))
-    return (
-        sizes.groupBy("size")
-        .agg(F.count("*").alias("n_components"))
-        .select(F.col("size").cast("long").alias("size"), "n_components")
-    )
+    return _size_hist(scc, "scc", "n_components")
 
 
 def q_label_propagation_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2403,12 +2361,7 @@ def q_label_propagation_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _string_edges(spark, sf_dir).select("src", "dst")
     lp = label_propagation(spark, e, max_iters=10)
-    sizes = lp.groupBy("label").agg(F.count("*").alias("size"))
-    return (
-        sizes.groupBy("size")
-        .agg(F.count("*").alias("n_labels"))
-        .select(F.col("size").cast("long").alias("size"), "n_labels")
-    )
+    return _size_hist(lp, "label", "n_labels")
 
 
 def q_label_propagation_fixed2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2419,31 +2372,16 @@ def q_label_propagation_fixed2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _string_edges(spark, sf_dir).select("src", "dst")
     lp = label_propagation(spark, e, max_iters=2)
-    sizes = lp.groupBy("label").agg(F.count("*").alias("size"))
-    return (
-        sizes.groupBy("size")
-        .agg(F.count("*").alias("n_labels"))
-        .select(F.col("size").cast("long").alias("size"), "n_labels")
-    )
+    return _size_hist(lp, "label", "n_labels")
 
 
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Total triangles in the undirected closure — SQL twin is the classic
     x<y<z three-way join."""
-    from montecarlopagerank_spark.algos.triangles import _oriented
+    from montecarlopagerank_spark.algos.triangles import triangle_count
 
-    e = _string_edges(spark, sf_dir).select("src", "dst")
-    o = _oriented(e)
-    a = o.select(F.col("lo").alias("apex"), F.col("hi").alias("b"))
-    b = o.select(F.col("lo").alias("apex"), F.col("hi").alias("c"))
-    wedges = a.join(b, "apex").filter(F.col("b") < F.col("c"))
-    closing = o.select(F.col("lo").alias("b"), F.col("hi").alias("c")).unionByName(
-        o.select(F.col("hi").alias("b"), F.col("lo").alias("c"))
-    )
-    return (
-        wedges.join(closing, ["b", "c"], "left_semi")
-        .agg(F.count("*").alias("triangles"))
-    )
+    n = triangle_count(spark, _string_edges(spark, sf_dir).select("src", "dst"))
+    return spark.createDataFrame([(n,)], "triangles long")
 
 
 def q_null_model_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2453,22 +2391,13 @@ def q_null_model_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the degree sequence forces; Maslov-Sneppen 2002). Composes
     operators/nullmodel.py with the degree-oriented counter; twin
     composes the two verified SQL fragments."""
-    from montecarlopagerank_spark.algos.triangles import _oriented
+    from montecarlopagerank_spark.algos.triangles import triangle_count
     from montecarlopagerank_spark.operators.nullmodel import rewire_configuration
 
     e = rewire_configuration(
         _string_edges(spark, sf_dir).select("src", "dst")
     ).select("src", "dst")
-    o = _oriented(e)
-    a = o.select(F.col("lo").alias("apex"), F.col("hi").alias("b"))
-    b = o.select(F.col("lo").alias("apex"), F.col("hi").alias("c"))
-    wedges = a.join(b, "apex").filter(F.col("b") < F.col("c"))
-    closing = o.select(F.col("lo").alias("b"), F.col("hi").alias("c")).unionByName(
-        o.select(F.col("hi").alias("b"), F.col("lo").alias("c"))
-    )
-    return wedges.join(closing, ["b", "c"], "left_semi").agg(
-        F.count("*").alias("triangles")
-    )
+    return spark.createDataFrame([(triangle_count(spark, e),)], "triangles long")
 
 
 def q_four_clique_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2543,11 +2472,7 @@ def q_pagerank_personalized_fixed(spark: SparkSession, sf_dir: str) -> DataFrame
     ranks, info = pagerank_power(
         spark, edges, vertices, tol=0.0, max_iters=5, sources=srcs
     )
-    n = info["n"]
-    return ranks.join(key, ranks.v == key.vid).select(
-        F.col("vkey").alias("v"),
-        F.round(F.col("rank") * F.lit(float(n)), 6).alias("ppr_scaled"),
-    )
+    return _scaled(ranks, key, info["n"], "ppr_scaled")
 
 
 def q_hits_fixed5(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2635,9 +2560,7 @@ def q_bfs_hops_tools(spark: SparkSession, sf_dir: str) -> DataFrame:
     from montecarlopagerank_spark.algos.bfs import bfs_hops
 
     e = _string_edges(spark, sf_dir).select("src", "dst")
-    srcs = e.filter(F.col("dst").startswith("tool#")).select(
-        F.col("dst").alias("v")
-    )
+    srcs = _tool_sources(e)
     dist, _ = bfs_hops(spark, e, srcs, max_hops=6, directed=False)
     return dist.select("v", F.col("hops").cast("int").alias("hops"))
 
@@ -2655,9 +2578,7 @@ def q_sssp_from_tools(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dst",
         (F.length("src") + F.length("dst")).cast("long").alias("wt"),
     )
-    srcs = e.filter(F.col("dst").startswith("tool#")).select(
-        F.col("dst").alias("v")
-    )
+    srcs = _tool_sources(e)
     dist, _ = sssp(spark, e, srcs, weight_col="wt", max_rounds=24, directed=False)
     return dist.select("v", F.col("d").cast("long").alias("d"))
 
@@ -2700,9 +2621,7 @@ def q_betweenness_tools(spark: SparkSession, sf_dir: str) -> DataFrame:
     from montecarlopagerank_spark.algos.betweenness import landmark_betweenness
 
     e = _string_edges(spark, sf_dir).select("src", "dst")
-    srcs = e.filter(F.col("dst").startswith("tool#")).select(
-        F.col("dst").alias("v")
-    )
+    srcs = _tool_sources(e)
     bc, _ = landmark_betweenness(spark, e, srcs, max_hops=6, directed=False)
     return bc.select("v", F.round("btw", 6).alias("btw_r6"))
 
@@ -2729,9 +2648,7 @@ def q_random_walks_tools(spark: SparkSession, sf_dir: str) -> DataFrame:
     from montecarlopagerank_spark.algos.walks import random_walks
 
     e = _string_edges(spark, sf_dir).select("src", "dst")
-    srcs = e.filter(F.col("dst").startswith("tool#")).select(
-        F.col("dst").alias("v")
-    )
+    srcs = _tool_sources(e)
     walks, _ = random_walks(
         spark, e, srcs, walk_length=6, walks_per_vertex=2, chooser="lcg"
     )
@@ -2752,9 +2669,7 @@ def q_node2vec_walks_tools(spark: SparkSession, sf_dir: str) -> DataFrame:
     from montecarlopagerank_spark.algos.node2vec import node2vec_walks
 
     e = _string_edges(spark, sf_dir).select("src", "dst")
-    srcs = e.filter(F.col("dst").startswith("tool#")).select(
-        F.col("dst").alias("v")
-    )
+    srcs = _tool_sources(e)
     walks, _ = node2vec_walks(
         spark, e, srcs, walk_length=6, walks_per_vertex=2, p=0.5, q=2.0
     )
@@ -3553,15 +3468,6 @@ def q_katz_fixed6(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scores.select("v", F.round("katz_norm", 6).alias("katz_n6"))
 
 
-def _community_size_hist(assign: DataFrame) -> DataFrame:
-    sizes = assign.groupBy("community").agg(F.count(F.lit(1)).alias("size"))
-    return (
-        sizes.groupBy("size")
-        .agg(F.count(F.lit(1)).alias("n_communities"))
-        .select(F.col("size").cast("long").alias("size"), "n_communities")
-    )
-
-
 def q_louvain_level1_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community size histogram after ONE Louvain level (6 synchronous
     direction-alternating local-move rounds, no contraction,
@@ -3571,7 +3477,7 @@ def q_louvain_level1_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _string_edges(spark, sf_dir).select("src", "dst")
     assign, _ = louvain(spark, e, rounds_per_level=6, max_levels=1)
-    return _community_size_hist(assign)
+    return _size_hist(assign, "community", "n_communities")
 
 
 def q_louvain_communities_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3587,7 +3493,7 @@ def q_louvain_communities_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _string_edges(spark, sf_dir).select("src", "dst")
     assign, _ = louvain(spark, e, rounds_per_level=6, max_levels=3)
-    return _community_size_hist(assign)
+    return _size_hist(assign, "community", "n_communities")
 
 
 def q_greedy_coloring(spark: SparkSession, sf_dir: str) -> DataFrame:

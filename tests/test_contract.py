@@ -172,3 +172,38 @@ def test_pca_project_embeddings_scalar_rows(spark):
     n_vecs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()
     assert len(per_vec) == n_vecs > 0
     assert {(r.n, r.dims, r.lo, r.hi) for r in per_vec} == {(8, 8, 0, 7)}
+
+
+TRIANGLES = "montecarlopagerank_spark.algos.triangles"
+CONTRACT = "montecarlopagerank_spark.contract"
+
+
+@pytest.mark.parametrize("name, module, attr", [
+    pytest.param(q, m, a, id=q) for q, m, a in [
+        ("triangle_count", TRIANGLES, "triangle_count"),
+        ("null_model_triangles", TRIANGLES, "triangle_count"),
+        ("degree_top20", CONTRACT, "degrees"),
+        ("degree_distribution", CONTRACT, "degrees"),
+        ("degree_quantiles", CONTRACT, "degrees"),
+        ("degree_assortativity", CONTRACT, "pairs"),
+        ("rich_club", CONTRACT, "pairs"),
+    ]
+])
+def test_registry_query_runs_the_engine(spark, monkeypatch, name, module, attr):
+    """A registry graph query computes through its engine operator, not a
+    copy of it: with the operator replaced, where the query resolves it,
+    by a spy that raises, the query raises."""
+    import importlib
+
+    from montecarlopagerank_spark.contract import QUERIES
+
+    class Reached(Exception):
+        pass
+
+    def spy(*args, **kwargs):
+        raise Reached(attr)
+
+    monkeypatch.setattr(importlib.import_module(module), attr, spy,
+                        raising=False)
+    with pytest.raises(Reached):
+        QUERIES[name](spark, SF_DIR)

@@ -342,17 +342,19 @@ def test_publish_block_race_loser_discards(tmp_path):
     assert leftovers == []
 
 
-def test_mc_fuse_invariance(spark, gnutella_mini):
-    """fuse_steps only changes how many supersteps compile into one Spark
+def test_mc_fuse_invariance(spark, gnutella_mini, monkeypatch):
+    """FUSE_STEPS only changes how many supersteps compile into one Spark
     job — never the walks (RNG is seeded per logical (block, step)).
     Byte-identical ranks at segment lengths 1 (per-step jobs), 3
     (mid-loop segment boundary), and 8 (whole loop in one job)."""
-    outs = [
-        ranks_dict(pagerank_monte_carlo(
+    import montecarlopagerank_spark.algos.pagerank_mc as mc
+
+    outs = []
+    for fs in (1, 3, 8):
+        monkeypatch.setattr(mc, "FUSE_STEPS", fs)
+        outs.append(ranks_dict(pagerank_monte_carlo(
             spark, gnutella_mini, walks_per_vertex=20, iterations=5,
-            seed=7, fuse_steps=fs)[0])
-        for fs in (1, 3, 8)
-    ]
+            seed=7)[0]))
     assert outs[0] == outs[1] == outs[2]
 
 
@@ -385,9 +387,10 @@ def test_mc_fused_kernel_runs_once_per_step(spark, gnutella_mini,
     monkeypatch.setattr(mc, "_walk_kernel", counting)
     for epb, fuse in ((64, 3), (8, 2)):
         log = tmp_path / f"kernel_calls_{epb}.jsonl"
+        monkeypatch.setattr(mc, "FUSE_STEPS", fuse)
         _, info = mc.pagerank_monte_carlo(
             spark, gnutella_mini, walks_per_vertex=4, iterations=4, seed=3,
-            edges_per_block=epb, fuse_steps=fuse)
+            edges_per_block=epb)
         assert info["has_hub_splits"] == (epb == 8)
         calls = [tuple(json.loads(line)) for line in log.open()]
         per_step = {}
@@ -504,7 +507,8 @@ def test_mc_pack_time_publication(spark, gnutella_mini, tmp_path):
                          recursive=True)
 
 
-def test_mc_reused_state_root_walks_its_own_graph(spark, tmp_path):
+def test_mc_reused_state_root_walks_its_own_graph(spark, tmp_path,
+                                                 monkeypatch):
     """A second call on the same ``state_root`` walks its own graph, not
     the first call's, although pooled Python workers still hold the first
     call's block 0. Graph A is a 10-cycle; graph B sends 1..9 to 0 and 0
@@ -520,8 +524,12 @@ def test_mc_reused_state_root_walks_its_own_graph(spark, tmp_path):
     shared = str(tmp_path / "shared")
     # one superstep per job, many jobs: every pooled worker serves A's
     # only block
-    pagerank_monte_carlo(
-        spark, a, iterations=16, fuse_steps=1, state_root=shared, **kw)
+    import montecarlopagerank_spark.algos.pagerank_mc as mc
+
+    with monkeypatch.context() as m:
+        m.setattr(mc, "FUSE_STEPS", 1)
+        pagerank_monte_carlo(
+            spark, a, iterations=16, state_root=shared, **kw)
     on_a, info_a = pagerank_monte_carlo(
         spark, b, iterations=4, state_root=shared, **kw)
     fresh, info_f = pagerank_monte_carlo(
